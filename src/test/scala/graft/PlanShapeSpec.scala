@@ -1,5 +1,11 @@
 package graft
 
+import java.io.File
+import java.nio.file.{Files, StandardCopyOption}
+
+import scala.sys.process.{Process, ProcessLogger}
+import scala.util.Try
+
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.SparkPlan
@@ -162,6 +168,39 @@ class PlanShapeSpec extends AnyFunSuite {
         s"\n=== current budgets (for regeneration) ===\n${newBudgets.mkString("\n")}")
   }
 
+  /** The sf1 fixture: `localdata/sf1` when it exists, else generated
+    * once into `target/sf1` with `tools/gen_sf.py 1` (about 10 s). Both
+    * are anchored to the repo root (found by walking up from the compiled
+    * test classes to build.sbt), NOT the CWD, so a forked test JVM
+    * launched from elsewhere still finds them. The leg cancels only when
+    * the generator cannot run: no python3 with numpy and pyarrow, or no
+    * sf0.1 fixture for it to copy nation/region from.
+    */
+  private def sf1Dir(): String = {
+    val local = new File(RepoRoot.dir, "localdata/sf1")
+    val generated = new File(RepoRoot.dir, "target/sf1")
+    if (new File(local, "lineitem.parquet").exists()) local.getPath
+    else if (generated.isDirectory) generated.getPath
+    else {
+      val hasPython = Try(Process(Seq("python3", "-c", "import numpy, pyarrow"))
+        .!(ProcessLogger(_ => ()))).toOption.contains(0)
+      assume(hasPython, "python3 with numpy and pyarrow is needed to " +
+        s"generate the sf1 fixture (tools/gen_sf.py 1 $generated)")
+      val sf01 = new File(new File(dir).getParentFile, "sf0.1")
+      assume(new File(sf01, "nation.parquet").exists(),
+        s"$sf01 absent — tools/gen_sf.py copies nation/region from it")
+      // generated beside the target and moved into place whole, so an
+      // interrupted run never leaves a partial fixture behind
+      val tmp = new File(RepoRoot.dir, s"target/sf1.tmp-${ProcessHandle.current.pid}")
+      val log = new StringBuilder
+      val rc = Process(Seq("python3", "tools/gen_sf.py", "1", tmp.getPath),
+        RepoRoot.dir).!(ProcessLogger(l => log.append(l).append('\n')))
+      assert(rc == 0, s"tools/gen_sf.py 1 $tmp exited $rc:\n$log")
+      Files.move(tmp.toPath, generated.toPath, StandardCopyOption.ATOMIC_MOVE)
+      generated.getPath
+    }
+  }
+
   test("every query: no cartesian, no unjustified nested-loop join, " +
       "no single-partition shuffle of un-reduced rows, scan budget held") {
     gateAll(dir)
@@ -169,13 +208,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("the same ceilings hold on the 10x fixture's plans (r9 judge #5: " +
       "stats-driven planner choices must not break the gate at scale)") {
-    // anchored to the repo root (found by walking up from the compiled
-    // test classes to build.sbt), NOT the CWD: a forked test JVM launched
-    // from elsewhere must still find — or loudly miss — the fixture
-    // instead of silently assume-skipping the scale gate
-    val sf1 = new java.io.File(RepoRoot.dir, "localdata/sf1").getPath
-    assume(new java.io.File(s"$sf1/lineitem.parquet").exists(),
-      s"$sf1 absent — regenerate with tools/gen_sf.py 1 $sf1")
+    val sf1 = sf1Dir()
     try gateAll(sf1)
     finally GraftSession.release(spark, Some(sf1))
   }
