@@ -1,13 +1,36 @@
 package graft.operators
 
 import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
+  StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables.t
 import graft.functions.TextFunctions._
+
+/** A held-out bigram's domain, occurrence count and sparse per-domain
+  * train counts for (w1, w2), w1 and w2 (null: absent from train). */
+private[operators] final case class DoremiHeldOut(d: Int, nOcc: Long,
+    cb: DoremiCounts, u1: DoremiCounts, u2: DoremiCounts)
+
+/** Sparse per-domain counts: `cnt(i)` occurrences in domain `src(i)`. */
+private[operators] final case class DoremiCounts(src: Array[Int],
+    cnt: Array[Long]) {
+  /** Σ count·α(domain), the α-weighted count. */
+  def dot(alpha: Array[Long]): Long = {
+    var s = 0L
+    var i = 0
+    while (i < src.length) { s += cnt(i) * alpha(src(i)); i += 1 }
+    s
+  }
+}
 
 private[operators] case class PackIn(shard: Int, doc_id: Long, n_tokens: Int)
 private[operators] case class PackOut(doc_id: Long, shard: Int, pack_id: Int,
@@ -19,8 +42,8 @@ private[operators] case class PackOut(doc_id: Long, shard: Int, pack_id: Int,
   *
   * Scale design:
   *  - CLUSTERS is hash-min label propagation over the LSH pair set — each
-  *    iteration is one O(E) shuffle join plus an O(components) aggregate;
-  *    it converges in O(graph diameter) rounds. The pair set comes from
+  *    round is one O(E) message pass over the [[PairGraph]] edge list plus
+  *    one `reduceByKey`; it converges in O(graph diameter) rounds. The pair set comes from
   *    [[Dedup.minhashPairs]], whose hot-bucket anchor-star guard already
   *    collapses giant clusters into stars (diameter 2), so the diameter is
   *    bounded by the CHAIN length of genuine near-dup overlaps, not by
@@ -48,6 +71,7 @@ object Curation {
     clusterCache.keys.toSeq
       .filter { case (s, d) => s == sid && dir.forall(_ == d) }
       .foreach(clusterCache.remove(_).foreach(freeCheckpoint))
+    PairGraph.release(spark, dir)
   }
 
   /** Unpersist a localCheckpoint-backed frame's storage: the blocks live
@@ -65,61 +89,54 @@ object Curation {
 
   /** Converged (doc_id, cluster_id) labels: every document labeled with the
     * minimum doc_id reachable through the near-dup pair graph
-    * (singletons keep their own id). Hash-min propagation to fixpoint; the
-    * per-iteration convergence check is a count on the persisted join
-    * frame, not a second pass over the graph.
+    * (singletons keep their own id). Hash-min propagation to fixpoint.
+    *
+    * Scale shape: the loop runs over PAIR-GRAPH NODES only — docs in at
+    * least one near-dup pair. Singletons (the overwhelming majority of
+    * any corpus) never change labels, so they stay out of the iteration
+    * and rejoin once at the end via a left join. Each round is one
+    * [[PairGraph]] message pass — every node sends its label to itself
+    * and along its edges — folded by one `reduceByKey(min)`, and the
+    * round's single job also counts the labels that fell (the
+    * convergence check). O(|E|) per round, O(graph diameter) rounds.
     */
-  private def clusterLabels(spark: SparkSession, dir: String,
+  private[operators] def clusterLabels(spark: SparkSession, dir: String,
       maxIter: Int = 20): DataFrame =
     clusterCache.getOrElseUpdate(
-        (graft.GraftSession.sessionId(spark), dir), {
-      val pairs = Dedup.dedupMinhashLsh(spark, dir).select(col("da"), col("db"))
-      // The loop runs over PAIR-GRAPH NODES only — docs that appear in at
-      // least one near-dup pair. Singletons (the overwhelming majority of
-      // any corpus) never change labels, so keeping them out of the
-      // iteration shrinks every per-round frame from O(corpus) to
-      // O(near-dup docs); they rejoin once at the end via a left join.
-      // LINEAGE TRUNCATION: every iteration ends in localCheckpoint, which
-      // materializes the frame AND replaces its logical plan with a flat
-      // LogicalRDD. Without it each round's plan NESTS the previous
-      // round's (InMemoryRelation embeds the full child plan), and
-      // analysis/canonicalization of that tower comes to dominate — the
-      // measured loop went 3-4× slower on pure driver-side planning. On a
-      // cluster the same role is played by reliable checkpointing; the
-      // blocks are freed by the ContextCleaner when the memo is released.
-      val scratch = scala.collection.mutable.Buffer.empty[DataFrame]
-      def ckpt(df: DataFrame): DataFrame = {
-        val c = df.localCheckpoint(); scratch += c; c
-      }
-      val edges = ckpt(pairs.select(col("da").as("src"), col("db").as("dst"))
-        .union(pairs.select(col("db").as("src"), col("da").as("dst"))))
-      var labels = ckpt(edges.select(col("src").as("node")).distinct()
-        .select(col("node"), col("node").as("lbl")))
+        (graft.GraftSession.sessionId(spark), dir),
+        PairGraph.run(spark, dir) { g =>
+      var labels: RDD[(Long, Long)] = g.degrees
+        .mapPartitions(_.map { case (n, _) => (n, n) },
+          preservesPartitioning = true)
       var iter = 0
       var converged = false
       while (!converged && iter < maxIter) {
-        val nbrMin = edges.join(labels, col("src") === col("node"))
-          .groupBy(col("dst")).agg(min(col("lbl")).as("nbr_min"))
-        val joined = ckpt(labels.join(nbrMin, labels("node") === nbrMin("dst"))
-          .select(labels("node"), col("lbl"),
-            least(col("lbl"), col("nbr_min")).as("nxt")))
-        val changed = joined.filter(col("nxt") < col("lbl")).count()
-        labels = joined.select(col("node"), col("nxt").as("lbl"))
+        // (smallest label seen, own label): a node's own message carries
+        // its current label in both slots, a neighbor's only in the first
+        val next = g.messages(labels)(l => Some((l, l)),
+            l => Some((l, Long.MaxValue)))
+          .reduceByKey(g.part,
+            (a, b) => (math.min(a._1, b._1), math.min(a._2, b._2)))
+        val changed = g.advance(next) {
+          next.filter { case (_, (nxt, lbl)) => nxt < lbl }.count()
+        }
+        labels = next.mapValues(_._1)
         converged = changed == 0
         iter += 1
       }
       require(converged,
         s"cluster propagation did not converge in $maxIter iterations — " +
           "pair graph diameter exceeds the bound; raise maxIter")
-      // Every node in an edge has a neighbor, so the inner join above never
-      // drops nodes; singletons get their own id back here.
-      val memo = t(spark, dir, "documents").select(col("doc_id"))
-        .join(labels, col("doc_id") === col("node"), "left")
+      val lbl = spark.createDataFrame(
+        labels.map { case (n, l) => Row(n, l) },
+        StructType(Seq(StructField("node", LongType),
+          StructField("lbl", LongType))))
+      // eager: the labels' persisted rounds are freed when run() returns
+      t(spark, dir, "documents").select(col("doc_id"))
+        .join(lbl, col("doc_id") === col("node"), "left")
         .select(col("doc_id"),
           coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
-        .localCheckpoint() // eager: safe to drop the scratch frames now
-      scratch.foreach(freeCheckpoint)
-      memo
+        .localCheckpoint()
     })
 
   /** Duplicate clustering: (doc_id, cluster_id, cluster_size) for every
@@ -292,13 +309,13 @@ object Curation {
     *
     * Scale shape: the iteration runs over PAIR-GRAPH NODES only (docs in
     * ≥1 near-dup pair — orders of magnitude below corpus size), never
-    * the corpus. Edges and degrees come from the memoized candidate-pair
-    * index (no re-pairing), are localCheckpoint'd once, and every
-    * iteration is exactly one shuffle: edges ⋈ ranks (map-side on the
-    * checkpointed edge frame) then groupBy(dst) with partial aggregation.
-    * Per-iteration lineage is truncated the same way [[clusterLabels]]
-    * does (nested plan towers dominate otherwise); on a cluster the same
-    * role is played by reliable checkpointing.
+    * the corpus. Edges come from the memoized candidate-pair index (no
+    * re-pairing) as the shared [[PairGraph]] edge list; degrees are
+    * counted where each node's edges live. Every iteration is one small
+    * RDD job: one co-partitioned message pass (rank/deg along each edge)
+    * folded by one `reduceByKey` on the same partitioner, so exactly one
+    * shuffle per round and no per-round Catalyst planning. The previous
+    * round's state is unpersisted as soon as the next is materialized.
     *
     * Cross-engine determinism: each iteration's rank is rounded to 9
     * decimals in BOTH engines, so IEEE summation-order drift (~1e-15)
@@ -317,34 +334,27 @@ object Curation {
 
   def graphPagerank(spark: SparkSession, dir: String,
       iters: Int = PagerankIters,
-      damping: Double = PagerankDamping): DataFrame = {
-    val pairs = Dedup.dedupMinhashLsh(spark, dir).select(col("da"), col("db"))
-    val scratch = scala.collection.mutable.Buffer.empty[DataFrame]
-    def ckpt(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); scratch += c; c
+      damping: Double = PagerankDamping): DataFrame =
+    PairGraph.run(spark, dir) { g =>
+      // state (rank, degree); a node's own message carries its degree
+      // into the next round, each edge carries rank/deg to its dst
+      var ranks: RDD[(Long, (Double, Long))] = g.degrees.mapValues((1.0, _))
+      for (_ <- 1 to iters) {
+        val next = g.messages(ranks)({ case (_, d) => Some((0.0, d)) },
+            { case (r, d) => Some((r / d, 0L)) })
+          .reduceByKey(g.part, (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+          .mapValues { case (sum, d) =>
+            (PairGraph.roundHalfUp((1.0 - damping) + damping * sum, 9), d) }
+        g.advance(next)(next.count())
+        ranks = next
+      }
+      g.result(ranks.map { case (n, (r, d)) =>
+          Row(n, PairGraph.roundHalfUp(r, 6), d) },
+        StructType(Seq(StructField("doc_id", LongType),
+          StructField("pagerank", DoubleType),
+          StructField("degree", LongType, nullable = false))))(
+        _.orderBy(col("pagerank").desc, col("doc_id").asc))
     }
-    val edges = ckpt(pairs.select(col("da").as("src"), col("db").as("dst"))
-      .union(pairs.select(col("db").as("src"), col("da").as("dst"))))
-    val deg = ckpt(edges.groupBy(col("src")).agg(count(lit(1)).as("deg")))
-      .select(col("src").as("dn"), col("deg"))
-    var ranks = deg.select(col("dn").as("node"), lit(1.0).as("rank"))
-    for (_ <- 1 to iters) {
-      ranks = ckpt(edges
-        .join(ranks, col("src") === col("node"))
-        .join(deg, col("src") === col("dn"))
-        .groupBy(col("dst"))
-        .agg(round(lit(1.0 - damping) +
-          lit(damping) * sum(col("rank") / col("deg")), 9).as("rank"))
-        .select(col("dst").as("node"), col("rank")))
-    }
-    val out = ranks.join(deg, col("node") === col("dn"))
-      .select(col("node").as("doc_id"), round(col("rank"), 6).as("pagerank"),
-        col("deg").cast("long").as("degree"))
-      .orderBy(col("pagerank").desc, col("doc_id").asc)
-      .localCheckpoint() // eager: safe to drop the per-iteration frames
-    scratch.foreach(freeCheckpoint)
-    out
-  }
 
   /** Triangle census over the near-dup pair graph — the closure signal
     * PageRank misses. A doc whose neighbors are ALSO pairwise near-dups
@@ -433,44 +443,51 @@ object Curation {
     * visit order — so DuckDB replays it as k chained CTEs bit-for-bit.
     *
     * Scale shape: edges come from the memoized MinHash candidate index
-    * (no re-pairing of the corpus). Each round is ONE shuffle on dst
-    * (the count aggregate) and the per-node argmax window runs on the
-    * already-reduced (node, label, count) frame — partitioned by node,
-    * never global. Per-round `localCheckpoint` truncates lineage exactly
-    * like PageRank; k is a constant, so total work is O(k·|E|).
+    * (no re-pairing of the corpus) as the shared [[PairGraph]] edge
+    * list. Each round is one small RDD job: a co-partitioned message
+    * pass (each edge votes its src's label) and ONE `combineByKey` on
+    * dst that builds each node's per-label vote counts map-side first,
+    * then takes the argmax per node — never global. k is a constant, so
+    * total work is O(k·|E|).
     */
   def graphLabelProp(spark: SparkSession, dir: String,
-      iters: Int = LabelPropIters): DataFrame = {
-    val pairs = Dedup.dedupMinhashLsh(spark, dir).select(col("da"), col("db"))
-    val scratch = scala.collection.mutable.Buffer.empty[DataFrame]
-    def ckpt(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); scratch += c; c
+      iters: Int = LabelPropIters): DataFrame =
+    PairGraph.run(spark, dir) { g =>
+      var labels: RDD[(Long, Long)] = g.degrees
+        .mapPartitions(_.map { case (n, _) => (n, n) },
+          preservesPartitioning = true)
+      for (_ <- 1 to iters) {
+        // each edge votes its src's label to dst; a node adopts the
+        // (count desc, label asc) winner of its per-label vote counts
+        val next = g.messages(labels)(_ => None, l => Some(l))
+          .combineByKey[mutable.HashMap[Long, Long]](
+            l => mutable.HashMap(l -> 1L),
+            (m, l) => { m(l) = m.getOrElse(l, 0L) + 1L; m },
+            (a, b) => {
+              b.foreach { case (l, c) => a(l) = a.getOrElse(l, 0L) + c }; a
+            },
+            g.part)
+          .mapValues { votes =>
+            var (best, bestC) = (Long.MaxValue, -1L)
+            votes.foreach { case (l, c) =>
+              if (c > bestC || (c == bestC && l < best)) { best = l; bestC = c }
+            }
+            best
+          }
+        g.advance(next)(next.count())
+        labels = next
+      }
+      g.result(labels.map { case (n, l) => Row(n, l) },
+        StructType(Seq(StructField("node", LongType),
+          StructField("label", LongType)))) { lab =>
+        val sizes = lab.groupBy(col("label"))
+          .agg(count(lit(1)).as("community_size"))
+        lab.join(sizes, "label")
+          .select(col("node").as("doc_id"), col("label").as("community"),
+            col("community_size"))
+          .orderBy(col("community"), col("doc_id"))
+      }
     }
-    val edges = ckpt(pairs.select(col("da").as("src"), col("db").as("dst"))
-      .union(pairs.select(col("db").as("src"), col("da").as("dst"))))
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node"))
-    for (_ <- 1 to iters) {
-      val counted = edges.join(labels, col("src") === col("node"))
-        .groupBy(col("dst"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      val wl = Window.partitionBy(col("dst"))
-        .orderBy(col("c").desc, col("label").asc)
-      labels = ckpt(counted
-        .withColumn("rn", row_number().over(wl))
-        .filter(col("rn") === 1)
-        .select(col("dst").as("node"), col("label")))
-    }
-    val sizes = labels.groupBy(col("label"))
-      .agg(count(lit(1)).as("community_size"))
-    val out = labels.join(sizes, "label")
-      .select(col("node").as("doc_id"), col("label").as("community"),
-        col("community_size"))
-      .orderBy(col("community"), col("doc_id"))
-      .localCheckpoint() // eager: safe to drop the per-round frames
-    scratch.foreach(freeCheckpoint)
-    out
-  }
 
   /** BFS rounds / seed count — the oracle's unrolled CTE chain is
     * GENERATED from these, so the schedule cannot drift between engines.
@@ -498,41 +515,34 @@ object Curation {
     * nothing here touches the corpus itself (edges come from the
     * memoized MinHash candidate index, no re-pairing). BFS level order
     * IS min-hop order, so a node's first discovery level is its
-    * distance; per-round `localCheckpoint` truncates lineage like the
-    * PageRank loop.
+    * distance. Each round is one small RDD job over the shared
+    * [[PairGraph]] edge list: only the last round's frontier sends along
+    * its edges, visited nodes keep their hop, and one `reduceByKey(min)`
+    * on the same partitioner keeps each node's first discovery.
     */
   def graphKhop(spark: SparkSession, dir: String,
-      iters: Int = KhopIters, nSeeds: Int = KhopSeeds): DataFrame = {
-    val pairs = Dedup.dedupMinhashLsh(spark, dir).select(col("da"), col("db"))
-    val scratch = scala.collection.mutable.Buffer.empty[DataFrame]
-    def ckpt(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); scratch += c; c
+      iters: Int = KhopIters, nSeeds: Int = KhopSeeds): DataFrame =
+    PairGraph.run(spark, dir) { g =>
+      // seed = the nSeeds smallest node ids, a total order every engine
+      // reproduces (takeOrdered: per-partition top-n, driver merge)
+      val seeds = g.degrees.keys.takeOrdered(nSeeds).toSet
+      var dist: RDD[(Long, Int)] = g.degrees
+        .mapPartitions(_.collect { case (n, _) if seeds(n) => (n, 0) },
+          preservesPartitioning = true)
+      for (i <- 1 to iters) {
+        // visited nodes keep their hop; only last round's frontier
+        // (hop = i - 1) expands; min keeps a node's first discovery
+        val next = g.messages(dist)(h => Some(h),
+            h => if (h == i - 1) Some(i) else None)
+          .reduceByKey(g.part, math.min(_, _))
+        g.advance(next)(next.count())
+        dist = next
+      }
+      g.result(dist.map { case (n, h) => Row(n, h) },
+        StructType(Seq(StructField("doc_id", LongType),
+          StructField("hop", IntegerType, nullable = false))))(
+        _.orderBy(col("hop"), col("doc_id")))
     }
-    val edges = ckpt(pairs.select(col("da").as("src"), col("db").as("dst"))
-      .union(pairs.select(col("db").as("src"), col("da").as("dst"))))
-    // seed = the nSeeds smallest node ids: TakeOrderedAndProject on the
-    // (tiny) distinct node set, a total order every engine reproduces
-    val seeds = ckpt(edges.select(col("src").as("node")).distinct()
-      .orderBy(col("node").asc).limit(nSeeds)
-      .select(col("node"), lit(0).as("hop")))
-    var dist = seeds
-    var frontier = seeds
-    for (i <- 1 to iters) {
-      val nbrs = frontier
-        .join(edges, col("node") === col("src"))
-        .select(col("dst").as("node"), lit(i).as("hop"))
-        .distinct()
-      frontier = ckpt(nbrs.join(dist.select(col("node").as("vn")),
-          col("node") === col("vn"), "left_anti"))
-      dist = ckpt(dist.unionAll(frontier))
-    }
-    val out = dist
-      .select(col("node").as("doc_id"), col("hop").cast("int").as("hop"))
-      .orderBy(col("hop"), col("doc_id"))
-      .localCheckpoint() // eager: safe to drop the per-round frames
-    scratch.foreach(freeCheckpoint)
-    out
-  }
 
   /** k-core defaults; the oracle's unrolled CTE chain is GENERATED from
     * these (the PagerankIters pattern), so k and the peel-round count
@@ -561,50 +571,36 @@ object Curation {
     *
     * Scale shape: peeling runs over PAIR-GRAPH NODES only, never the
     * corpus. Edges come from the memoized candidate-pair index
-    * (no re-pairing) and are checkpointed once; each peel round is two
-    * broadcast-able equi-joins of the edge frame against the shrinking
-    * alive set plus one partial+final degree aggregation, with
-    * per-round lineage truncation (the PageRank convention). Output is
+    * (no re-pairing) as the shared [[PairGraph]] edge list. Each peel
+    * round is one small RDD job: every alive node messages its
+    * neighbors, and one `reduceByKey` on the same partitioner sums each
+    * node's alive-neighbor count (the edge list is symmetric, so that IS
+    * its degree among survivors) and peels the nodes under k. Output is
     * one row per pair-graph node.
     */
   def graphKcore(spark: SparkSession, dir: String,
-      k: Int = KCoreK, rounds: Int = KCoreRounds): DataFrame = {
-    val pairs = Dedup.dedupMinhashLsh(spark, dir).select(col("da"), col("db"))
-    val scratch = scala.collection.mutable.Buffer.empty[DataFrame]
-    def ckpt(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); scratch += c; c
+      k: Int = KCoreK, rounds: Int = KCoreRounds): DataFrame =
+    PairGraph.run(spark, dir) { g =>
+      // state (degree, peel round; 0 = still alive). Edges are
+      // symmetric, so the alive srcs messaging a node count exactly its
+      // edges to alive neighbors — its degree among survivors.
+      var st: RDD[(Long, (Long, Int))] = g.degrees.mapValues((_, 0))
+      for (i <- 1 to rounds) {
+        val next = g.messages(st)(s => Some((s._1, s._2, 0L)),
+            s => if (s._2 == 0) Some((-1L, 0, 1L)) else None)
+          .reduceByKey(g.part, (a, b) =>
+            (math.max(a._1, b._1), math.max(a._2, b._2), a._3 + b._3))
+          .mapValues { case (d, p, alive) =>
+            (d, if (p == 0 && alive < k) i else p) }
+        g.advance(next)(next.count())
+        st = next
+      }
+      g.result(st.map { case (n, (d, p)) => Row(n, d, p) },
+        StructType(Seq(StructField("doc_id", LongType),
+          StructField("degree", LongType, nullable = false),
+          StructField("peel_round", IntegerType, nullable = false))))(
+        _.orderBy(col("doc_id")))
     }
-    val edges = ckpt(pairs.select(col("da").as("src"), col("db").as("dst"))
-      .union(pairs.select(col("db").as("src"), col("da").as("dst"))))
-    val deg0 = ckpt(edges.groupBy(col("src")).agg(count(lit(1)).as("degree"))
-      .select(col("src").as("node"), col("degree")))
-    var alive = deg0.select(col("node"))
-    var peeled = Seq.empty[DataFrame]
-    for (i <- 1 to rounds) {
-      val degI = edges
-        .join(alive.select(col("node").as("sn")), col("src") === col("sn"))
-        .join(alive.select(col("node").as("dn")), col("dst") === col("dn"))
-        .groupBy(col("src")).agg(count(lit(1)).as("d"))
-      val next = ckpt(degI.where(col("d") >= k)
-        .select(col("src").as("node")))
-      peeled = peeled :+ ckpt(alive
-        .join(next.select(col("node").as("kn")),
-          col("node") === col("kn"), "left_anti")
-        .select(col("node"), lit(i).as("peel_round")))
-      alive = next
-    }
-    val out = peeled
-      .reduce(_ unionByName _)
-      .unionByName(alive.select(col("node"), lit(0).as("peel_round")))
-      .join(deg0.select(col("node").as("gn"), col("degree")),
-        col("node") === col("gn"))
-      .select(col("node").as("doc_id"), col("degree"),
-        col("peel_round").cast("int").as("peel_round"))
-      .orderBy(col("doc_id"))
-      .localCheckpoint() // eager: safe to drop the per-round frames
-    scratch.foreach(freeCheckpoint)
-    out
-  }
 
   /** SOFT deduplication — duplicate-aware DOWN-WEIGHTING instead of
     * dropping: every doc in a near-dup cluster of size c gets sampling
@@ -1447,150 +1443,160 @@ object Curation {
     * ([[graphKhop]]'s convention) and every rank and weight matches
     * bit-for-bit.
     *
-    * Scale shape: per round, the train token/bigram streams aggregate
-    * partial+final into VOCABULARY-sized weighted count tables
-    * (broadcast, the trained-artifact convention), the held-out stream
-    * joins them map-side and reduces to |domains| rows, and the driver
-    * holds only the |domains|-sized weight vector (bounded-codebook
-    * collect, k-means convention). Nothing O(corpus) ever reaches the
-    * driver; rounds are a fixed small constant.
+    * Scale shape: Catalyst plans the α-INDEPENDENT input once. One scan
+    * of `documents` tags every train token, train bigram, held-out bigram
+    * and train doc, and one aggregate collapses them into a
+    * VOCABULARY-sized count table (eagerly localCheckpointed). From it a
+    * second plan pre-joins each distinct held-out bigram with sparse
+    * per-domain count vectors for (w1, w2), w1 and w2, cached as an RDD.
+    * The weighted counts factor through those vectors —
+    * cu(tok) = Σ_src α(src)·count(tok, src) — so every round is ONE
+    * `treeAggregate` of a 2·|domains| `Long` array over the cached rows,
+    * with the current weights in the closure: no per-round DataFrame,
+    * no per-round Catalyst. The driver holds only |domains|-sized
+    * vectors (bounded-codebook convention, k-means); nothing O(corpus)
+    * reaches it, and rounds are a fixed small constant.
     */
   def curDoremiMix(spark: SparkSession, dir: String,
       rounds: Int = DoremiRounds): DataFrame = {
-    val docs = t(spark, dir, "documents")
-      .select(col("doc_id"), col("source"), tokens(col("text")).as("w"))
     // content-addressed train/test split (the [[textVocabDrift]] md5
     // convention) — doc_id PARITY is correlated with `source` in the
     // fixture (ids are dealt round-robin across sources), which would
     // leave every train domain with zero held-out bigrams
     val half = conv(substring(md5(col("doc_id").cast("string")), 1, 1),
       16, 10).cast("int") < 8
-    val train = docs.filter(half)
-    val test = docs.filter(!half)
-    def bigrams(df: DataFrame): DataFrame = df.select(col("source"),
-      explode(expr(
-        """CASE WHEN size(w) >= 2
-           THEN transform(sequence(0, size(w) - 2),
-                  i -> named_struct('w1', w[i], 'w2', w[i + 1]))
-           ELSE CAST(array() AS array<struct<w1: string, w2: string>>)
-           END""")).as("b"))
-      .select(col("source"), col("b.w1"), col("b.w2"))
-    val trainBg = bigrams(train)
-    val testBg = bigrams(test)
-
-    // |domains| rows — the mixture vector's index, not corpus data
-    val domains: Seq[String] = train.select(col("source")).distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
-
-    // r18 optimization round: the α-weighted count tables factor through
-    // α-INDEPENDENT per-(token, source) counts — cu(tok) = Σ_src
-    // α(src)·count(tok, src) — so the corpus is tokenized/exploded ONCE
-    // into three vocabulary-sized count tables (eagerly materialized,
-    // GC-cleanable localCheckpoint like dedupContainment's indexes), and
-    // each of the rounds+1 eval passes re-aggregates those tables instead
-    // of re-scanning the corpus. Exact Long sums in a different grouping
-    // order: bit-identical values (the former per-occurrence Σ α(src) IS
-    // Σ_src count·α(src); per-occurrence ll_u is constant per bigram, so
-    // Σ ll_u = Σ n_occ·ll_u). Before: 4 evals × (2 corpus tokenizations +
-    // 1 held-out pass); after: 1 tokenization pass total.
-    val uniSrc = train
-      .select(col("source"), explode(col("w")).as("tok"))
-      .groupBy(col("tok"), col("source")).agg(count(lit(1)).as("cn"))
+    val w = col("w")
+    def row(kind: Int, k1: Column, k2: Column, ntok: Column) =
+      struct(lit(kind).as("kind"), k1.cast("string").as("k1"),
+        k2.cast("string").as("k2"), ntok.as("ntok"))
+    def bigrams(kind: Int) = transform(
+      when(size(w) >= 2, sequence(lit(0), size(w) - 2))
+        .otherwise(lit(Array.empty[Int])),
+      i => row(kind, element_at(w, i + 1), element_at(w, i + 2), lit(0)))
+    // kind 0 train token, 1 train bigram, 2 held-out bigram, 3 train doc
+    val counts = t(spark, dir, "documents")
+      .select(col("source"), half.as("tr"),
+        coalesce(tokens(col("text")), lit(Array.empty[String])).as("w"))
+      .select(col("source"), explode(
+        when(col("tr"), concat(transform(w, x => row(0, x, lit(null), lit(0))),
+            bigrams(1), array(row(3, lit(null), lit(null), size(w)))))
+          .when(!col("tr"), bigrams(2))).as("r"))
+      .groupBy(col("r.kind").as("kind"), col("source"),
+        col("r.k1").as("k1"), col("r.k2").as("k2"))
+      .agg(count(lit(1)).as("cn"), sum(col("r.ntok")).as("toks"))
       .localCheckpoint()
-    val cbSrc = trainBg
-      .groupBy(col("w1"), col("w2"), col("source"))
-      .agg(count(lit(1)).as("cn"))
-      .localCheckpoint()
-    val testAgg = testBg
-      .groupBy(col("source"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("n_occ"))
-      .localCheckpoint()
+    var held: RDD[DoremiHeldOut] = null
+    try {
+      // |domains| rows: the mixture vector's index and each domain's
+      // train doc and token counts, not corpus data
+      val perDomain = counts.filter(col("kind") === 3)
+        .select(col("source"), col("cn"), col("toks")).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        .sortBy(_._1)
+      val domains = perDomain.map(_._1)
+      val nDom = domains.length
+      val schema = StructType(Seq(StructField("source", StringType),
+        StructField("n_train_docs", LongType, nullable = false),
+        StructField("n_bigrams", LongType, nullable = false),
+        StructField("nll0_micro", LongType),
+        StructField("nll_micro", LongType),
+        StructField("alpha_ppm", LongType)))
+      if (nDom == 0)
+        return spark.createDataFrame(Seq.empty[Row].asJava, schema)
+      val dIdx = domains.zipWithIndex.toMap
+      val trainToks = perDomain.map(_._3)
 
-    // held-out per-domain nll (integer micro-nats) under the α-weighted
-    // bigram LM; count tables are vocabulary-sized -> broadcast
-    def evalDf(alpha: Map[String, Long]): DataFrame = {
-      val aLit = typedLit(alpha)
-      val uni = uniSrc
-        .select(col("tok"),
-          (col("cn") * element_at(aLit, col("source"))).as("ap"))
-        .groupBy(col("tok")).agg(sum(col("ap")).as("cu"))
-      val tot = uni.agg(sum(col("cu")).as("t_w"))
-      val cb = cbSrc
-        .select(col("w1"), col("w2"),
-          (col("cn") * element_at(aLit, col("source"))).as("ap"))
-        .groupBy(col("w1"), col("w2")).agg(sum(col("ap")).as("cb"))
-      testAgg
-        .join(broadcast(cb), Seq("w1", "w2"), "left_outer")
-        .join(broadcast(uni.select(col("tok").as("w1"),
-          col("cu").as("c1"))), Seq("w1"), "left_outer")
-        .join(broadcast(uni.select(col("tok").as("w2"),
-          col("cu").as("c2"))), Seq("w2"), "left_outer")
-        .join(broadcast(tot))
-        .withColumn("p", greatest(
-          lit(TextAnalysis.LmLambda) *
-            (coalesce(col("cb"), lit(0L)).cast("double") /
-              coalesce(col("c1"), lit(1L))) +
-          lit(1 - TextAnalysis.LmLambda) *
-            (coalesce(col("c2"), lit(0L)).cast("double") / col("t_w")),
-          lit(TextAnalysis.LmFloor)))
-        .withColumn("ll_u", round(log(col("p")) * 1e6).cast("long"))
-        .groupBy(col("source"))
-        .agg(sum(col("n_occ")).as("n"),
-          sum(col("ll_u") * col("n_occ")).as("llu"))
-        .withColumn("nll_micro",
-          (-round(col("llu").cast("double") / col("n"))).cast("long"))
-    }
-
-    var alpha: Map[String, Long] =
-      domains.map(_ -> 1000000L / math.max(domains.length, 1)).toMap
-    var nll0: Map[String, Long] = Map.empty
-    for (r <- 1 to rounds if domains.nonEmpty) {
-      // |domains|-row collect: the weight vector's gradient signal
-      val cur = evalDf(alpha).collect()
-        .map(rw => rw.getString(0) -> rw.getAs[Long]("nll_micro")).toMap
-        .filter { case (s, _) => alpha.contains(s) }
-      if (r == 1) nll0 = cur
-      val ex: Map[String, Long] =
-        if (cur.isEmpty) domains.map(_ -> 0L).toMap
-        else {
-          val m = cur.values.sum / cur.size
-          domains.map(d => d -> cur.get(d).map(_ - m).getOrElse(0L)).toMap
+      def vec(kind: Int, keys: String*): DataFrame =
+        counts.filter(col("kind") === kind)
+          .groupBy(keys.map(col): _*)
+          .agg(collect_list(struct(col("source"), col("cn"))).as("v"))
+      val uni = vec(0, "k1")
+      held = counts.filter(col("kind") === 2)
+        .select(col("source"), col("k1"), col("k2"), col("cn").as("n_occ"))
+        .join(vec(1, "k1", "k2").withColumnRenamed("v", "cb"),
+          Seq("k1", "k2"), "left_outer")
+        .join(uni.withColumnRenamed("v", "u1"), Seq("k1"), "left_outer")
+        .join(uni.select(col("k1").as("k2"), col("v").as("u2")), Seq("k2"),
+          "left_outer")
+        .select(col("source"), col("n_occ"), col("cb"), col("u1"), col("u2"))
+        .rdd
+        .flatMap { r =>
+          def sparse(i: Int): DoremiCounts =
+            if (r.isNullAt(i)) null
+            else {
+              val es = r.getSeq[Row](i)
+              DoremiCounts(es.map(e => dIdx(e.getString(0))).toArray,
+                es.map(_.getLong(1)).toArray)
+            }
+          dIdx.get(r.getString(0)).map(d =>
+            DoremiHeldOut(d, r.getLong(1), sparse(2), sparse(3), sparse(4)))
         }
-      // EG multiplier quantized to integer micro-units straight after
-      // the exp — everything downstream is exact integer division. The
-      // positive excess is clamped at DoremiExClampMicro first so
-      // alpha·mult cannot wrap Long (the oracle mirrors the clamp).
-      val raw = domains.map { d =>
-        val exd = math.min(ex(d), DoremiExClampMicro)
-        val mult = BigDecimal(math.exp(exd.toDouble / 1e6) * 1e6)
-          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
-        d -> alpha(d) * mult / 1000000L
+        .persist()
+
+      // per-domain (n, llu) under `alpha`: ONE treeAggregate over the
+      // cached held-out rows — [[TextAnalysis.textLmHeldout]]'s fixed
+      // IEEE chain, each bigram's log-prob rounded to integer micro-nats
+      def evalRound(alpha: Array[Long]): Array[Long] = {
+        val tw = alpha.indices.map(d => alpha(d) * trainToks(d)).sum
+        val (lam, floor) = (TextAnalysis.LmLambda, TextAnalysis.LmFloor)
+        held.treeAggregate(new Array[Long](2 * nDom))({ (acc, h) =>
+          val cb = if (h.cb == null) 0L else h.cb.dot(alpha)
+          val c1 = if (h.u1 == null) 1L else h.u1.dot(alpha)
+          val c2 = if (h.u2 == null) 0L else h.u2.dot(alpha)
+          val p = math.max(lam * (cb.toDouble / c1) +
+            (1 - lam) * (c2.toDouble / tw), floor)
+          val llU = PairGraph.roundHalfUp(math.log(p) * 1e6, 0).toLong
+          acc(h.d) += h.nOcc
+          acc(nDom + h.d) += llU * h.nOcc
+          acc
+        }, { (a, b) => for (i <- a.indices) a(i) += b(i); a })
       }
-      val s = raw.map(_._2).sum
-      alpha = raw.map { case (d, v) =>
-        d -> ((v * 1000000L / s) * (1000000L - DoremiEpsPpm) / 1000000L
-          + DoremiEpsPpm / domains.length)
-      }.toMap
+      // domain -> nll_micro, for the domains with held-out bigrams
+      def nll(acc: Array[Long]): Map[Int, Long] =
+        (0 until nDom).filter(acc(_) > 0).map(d =>
+          d -> (-PairGraph.roundHalfUp(
+            acc(nDom + d).toDouble / acc(d), 0)).toLong).toMap
+
+      var alpha = Array.fill(nDom)(1000000L / nDom)
+      var nll0: Map[Int, Long] = Map.empty
+      for (r <- 1 to rounds) {
+        val cur = nll(evalRound(alpha))
+        if (r == 1) nll0 = cur
+        val ex: Array[Long] =
+          if (cur.isEmpty) Array.fill(nDom)(0L)
+          else {
+            val m = cur.values.sum / cur.size
+            Array.tabulate(nDom)(d => cur.get(d).map(_ - m).getOrElse(0L))
+          }
+        // EG multiplier quantized to integer micro-units straight after
+        // the exp — everything downstream is exact integer division. The
+        // positive excess is clamped at DoremiExClampMicro first so
+        // alpha·mult cannot wrap Long (the oracle mirrors the clamp).
+        val raw = Array.tabulate(nDom) { d =>
+          val exd = math.min(ex(d), DoremiExClampMicro)
+          val mult = BigDecimal(math.exp(exd.toDouble / 1e6) * 1e6)
+            .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+          alpha(d) * mult / 1000000L
+        }
+        val s = raw.sum
+        alpha = raw.map(v => (v * 1000000L / s) * (1000000L - DoremiEpsPpm) /
+          1000000L + DoremiEpsPpm / nDom)
+      }
+      val fin = evalRound(alpha)
+      val nllF = nll(fin)
+      // |domains| rows, ordered as Spark orders `source`
+      val out = domains.indices
+        .sortBy(d => UTF8String.fromString(domains(d)))
+        .map { d =>
+          def opt(v: Option[Long]): java.lang.Long = v.map(Long.box).orNull
+          Row(domains(d), perDomain(d)._2, fin(d), opt(nll0.get(d)),
+            opt(nllF.get(d)), alpha(d))
+        }
+      spark.createDataFrame(out.asJava, schema)
+    } finally {
+      if (held != null) held.unpersist()
+      freeCheckpoint(counts)
     }
-    val nll0Lit = typedLit(nll0)
-    val aLit = typedLit(alpha)
-    val ntrain = train.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_train_docs"))
-    // eager |domains|-row checkpoint of the readout, then drop the three
-    // count-table checkpoints deterministically (graphKcore's scratch
-    // discipline) — repeated invocations must not accumulate pinned RDDs
-    val out = ntrain
-      .join(evalDf(alpha).select(col("source"), col("n"),
-        col("nll_micro")), Seq("source"), "left_outer")
-      .select(col("source"), col("n_train_docs"),
-        coalesce(col("n"), lit(0L)).as("n_bigrams"),
-        element_at(nll0Lit, col("source")).as("nll0_micro"),
-        col("nll_micro"),
-        element_at(aLit, col("source")).as("alpha_ppm"))
-      .orderBy(col("source"))
-      .localCheckpoint()
-    Seq(uniSrc, cbSrc, testAgg).foreach(freeCheckpoint)
-    out
   }
 
   /** The [[curDoremiMix]] oracle: the R-round EG loop unrolled as a

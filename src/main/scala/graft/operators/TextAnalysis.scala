@@ -1,11 +1,44 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables.t
 import graft.functions.TextFunctions._
+
+/** One document's packed classifier features: bucket, x and label
+  * (micro-units) per (doc, bucket) row of the feature table. */
+private[operators] final case class ClassifierDoc(b: Array[Int],
+    xm: Array[Long], ym: Array[Long]) {
+
+  /** Add this document's gradient under weights `wm` into `g` (slot 66
+    * counts documents) — the integer-micro arithmetic of
+    * [[TextAnalysis.textClassifierTrain]] and its oracle. */
+  def addGradient(wm: Array[Long], g: Array[Long]): Array[Long] = {
+    // offset-shifted floor((wm·xm)/10^6): the 4·10^6 offset keeps the
+    // dividend non-negative for any |w| < 4 (far above the ~0.4 the
+    // 1/2-rate rounds can reach), and 4·10^6·xm / 10^6 = 4·xm is an
+    // exact shift
+    var z = 0L
+    var i = 0
+    while (i < b.length) {
+      z += (wm(b(i)) + 4000000L) * xm(i) / 1000000L - 4L * xm(i)
+      i += 1
+    }
+    // hard sigmoid in micro-units: floor(z/5) + 500000, clipped
+    val pm = math.min(math.max((z + 40000000L) / 5L - 8000000L + 500000L,
+      10000L), 990000L)
+    i = 0
+    while (i < b.length) {
+      g(b(i)) += (ym(i) - pm + 1000000L) * xm(i) / 1000000L - xm(i)
+      i += 1
+    }
+    g(66) += 1L
+    g
+  }
+}
 
 /** Text-analysis operators over the `documents` table: token counting,
   * quality scoring, language-ID heuristic, document fingerprinting — the
@@ -99,12 +132,13 @@ object TextAnalysis {
     * identical under any partitioning — the oracle replays the rounds
     * bit-for-bit.
     *
-    * Scale shape: the corpus collapses once to the (doc, bucket, x)
-    * feature table (persisted across rounds); each round is one
-    * per-doc aggregate + one per-bucket aggregate (64 rows collected —
-    * the bounded codebook convention, like k-means). The weight vector
-    * rides into the next round as a 64-entry literal map: train small
-    * state, scan-free apply.
+    * Scale shape: Catalyst plans the corpus's collapse to the (doc,
+    * bucket, x) feature table once, and each document's <= 66 features
+    * pack into ONE cached row. Every round is then one `treeAggregate`
+    * of a 66-entry `Long` gradient array over the cached rows, with the
+    * current weights in the closure — no per-round DataFrame, no
+    * per-round Catalyst, no shuffle (the bounded codebook convention,
+    * like k-means): train small state, scan-free apply.
     */
   def textClassifierTrain(spark: SparkSession, dir: String,
       rounds: Int = ClassifierTrainRounds): DataFrame = {
@@ -118,10 +152,6 @@ object TextAnalysis {
     * training and eval — buckets 0..63 hashed tokens, 64 the length
     * feature, 65 the intercept.
     */
-  // test-scoped attribution probe (ClsAb) reads the feature table alone
-  private[graft] def classifierFeaturesForProbe(spark: SparkSession,
-      dir: String): DataFrame = classifierFeatures(spark, dir)
-
   private def classifierFeatures(spark: SparkSession,
       dir: String): DataFrame = {
     // Label threshold 0.75 ~ the corpus quality median, so classes are
@@ -173,59 +203,35 @@ object TextAnalysis {
   /** The integer-micro gradient fold (see [[textClassifierTrain]]). */
   private def classifierWeights(spark: SparkSession, dir: String,
       rounds: Int): Array[Long] = {
-    // persist PRE-PARTITIONED on doc_id: every round's per-doc z window
-    // requires ClusteredDistribution(doc_id), so caching the frame
-    // already hash-partitioned on it elides the per-round Exchange —
-    // one shuffle at materialization instead of one per round (r16;
-    // 10 rounds paid it 10x). NOTE r17: this fix originally landed as
-    // df17de4 and was silently REVERTED by the r16 end-of-round
-    // snapshot commit (the session's tree had it backed out at
-    // timeout); restored after the r17 isolated probe read the
-    // pre-fix 6.2 s where the r16 quiet leg had measured 3.69 s.
-    // ... and pre-SORTED within partitions (r18 optimization round):
-    // the per-round z window needs its input ordered by doc_id inside
-    // each partition, and InMemoryTableScan preserves the cached plan's
-    // outputOrdering — so sorting ONCE at materialization elides the
-    // per-round Sort the same way the repartition elides the per-round
-    // Exchange (10 rounds paid 10 full-table sorts; now one).
-    val allFeats = classifierFeatures(spark, dir)
-      .repartition(col("doc_id")).sortWithinPartitions(col("doc_id"))
+    val docs = classifierFeatures(spark, dir)
+      .groupBy(col("doc_id"))
+      .agg(collect_list(struct(col("b"), col("xm"), col("ym"))).as("f"))
+      .rdd
+      .map { r =>
+        val f = r.getSeq[Row](1)
+        ClassifierDoc(f.map(_.getInt(0)).toArray, f.map(_.getLong(1)).toArray,
+          f.map(_.getLong(2)).toArray)
+      }
       .persist()
-    val nDocs = allFeats.select(col("doc_id")).distinct().count()
-    var wm = Array.fill(66)(0L)
-    // empty-corpus contract (EdgeCaseSpec): zero documents -> the
-    // untrained zero-weight model, never a /0 in the update
-    if (nDocs == 0) { allFeats.unpersist(); return wm }
-    val wDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"))
-    for (_ <- 1 to rounds) {
-      val wmap = typedLit(wm.zipWithIndex.map { case (v, i) => i -> v }.toMap)
-      // one pass per round: the per-doc z rides a doc-partitioned window
-      // (<= 66 rows per key) instead of an aggregate + self-join, so a
-      // round is ONE exchange on doc_id plus the 66-row gradient agg
-      val grads = allFeats
-        .withColumn("wmc", coalesce(element_at(wmap, col("b")), lit(0L)))
-        // offset-shifted floor((wm·xm)/10^6): the 4·10^6 offset keeps the
-        // dividend non-negative for any |w| < 4 (far above the ~0.4 the
-        // 1/2-rate rounds can reach), and 4·10^6·xm div 10^6 = 4·xm is an
-        // exact shift
-        .withColumn("tz", expr("((wmc + 4000000) * xm) div 1000000 - 4 * xm"))
-        .withColumn("z", sum(col("tz")).over(wDoc))
-        // hard sigmoid in micro-units: floor(z/5) + 500000, clipped
-        .withColumn("pm", least(greatest(
-          expr("(z + 40000000) div 5 - 8000000 + 500000"),
-          lit(10000L)), lit(990000L)))
-        .withColumn("g", expr("((ym - pm + 1000000) * xm) div 1000000 - xm"))
-        .groupBy(col("b")).agg(sum(col("g")).as("gsum"))
-        .collect().map(r => r.getAs[Int]("b") -> r.getAs[Long]("gsum")).toMap
-      // plain truncating division: Spark SQL `div`, DuckDB `//`, and
-      // Scala Long `/` all round toward zero, so the three agree on
-      // negative gradients (measured: DuckDB -7 // 2 = -3, NOT floor)
-      wm = wm.zipWithIndex.map { case (v, i) =>
-        v + grads.getOrElse(i, 0L) / (2L * nDocs) }
-    }
-    allFeats.unpersist()
-    wm
+    try {
+      var wm = Array.fill(66)(0L)
+      for (_ <- 1 to rounds) {
+        val w = wm
+        // slots 0..65 the per-bucket gradient sums, slot 66 the doc count
+        val grads = docs.treeAggregate(new Array[Long](67))(
+          (g, d) => d.addGradient(w, g),
+          (a, b) => { for (i <- a.indices) a(i) += b(i); a })
+        val nDocs = grads(66)
+        // empty-corpus contract (EdgeCaseSpec): zero documents -> the
+        // untrained zero-weight model, never a /0 in the update
+        if (nDocs == 0) return wm
+        // plain truncating division: Spark SQL `div`, DuckDB `//`, and
+        // Scala Long `/` all round toward zero, so the three agree on
+        // negative gradients (measured: DuckDB -7 // 2 = -3, NOT floor)
+        wm = wm.zipWithIndex.map { case (v, i) => v + grads(i) / (2L * nDocs) }
+      }
+      wm
+    } finally docs.unpersist()
   }
 
   /** EVAL the trained classifier on its corpus — the accuracy readout
@@ -1028,11 +1034,15 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
     * so single-pass replace IS the greedy left-to-right merge.
     *
     * Scale shape: the corpus collapses once to the word-frequency table
-    * (map-side partial counts on the token key); every round then runs
-    * over the VOCABULARY — tens of thousands of rows at any corpus
-    * size — localCheckpointed per round to truncate lineage (the
-    * simIvfKmeansAnn round structure). The per-round argmax is a 1-row
-    * collect, bounded by design.
+    * (map-side partial counts on the token key), and that table — the
+    * VOCABULARY, tens of thousands of rows at any corpus size, never the
+    * corpus — is collected to the driver once. Every round (count pairs,
+    * take the argmax, apply the merge) then runs on the driver over it:
+    * zero jobs per round. The driver's memory bound is the vocabulary's
+    * size, the same bound the per-round 1-row argmax collect already
+    * relied on. The rounds replay Spark's `split` / `replace` semantics
+    * and `UTF8String` ordering, so the merge list is identical to the
+    * SQL formulation the oracle replays.
     */
   def textBpeTrain(spark: SparkSession, dir: String,
       nMerges: Int = BpeMerges): DataFrame = {
@@ -1052,43 +1062,50 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
       .select(explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
-    var vocab = wc
-      .select(col("c"), expr("""concat_ws('', transform(
-          sequence(1, length(w)),
-          i -> concat(char(1), substring(w, i, 1), char(2))))""")
-        .as("s"))
-      .localCheckpoint(true)
+      .collect()
+    val counts = wc.map(_.getLong(1))
+    // every code point wrapped as chr(1)+cp+chr(2)
+    val vocab = wc.map { r =>
+      val sb = new StringBuilder
+      r.getString(0).codePoints().forEach { cp =>
+        sb.append(s1).appendAll(Character.toChars(cp)).append(s2)
+      }
+      sb.toString
+    }
+    // SQL `split(s, chr(2))` minus empties, each part minus its leading
+    // code point (the chr(1) marker)
+    def symbols(v: String): Array[String] =
+      v.split(s2, -1).filter(_.nonEmpty)
+        .map(x => x.substring(x.offsetByCodePoints(0, 1)))
+    def before(a: ((String, String), Long), b: ((String, String), Long)) = {
+      val ((al, ar), af) = a
+      val ((bl, br), bf) = b
+      if (af != bf) af > bf
+      else {
+        val c = UTF8String.fromString(al).compareTo(UTF8String.fromString(bl))
+        if (c != 0) c < 0
+        else UTF8String.fromString(ar).compareTo(UTF8String.fromString(br)) < 0
+      }
+    }
     val merges =
       scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
     for (rank <- 1 to nMerges) {
-      val best = vocab
-        .select(col("c"), expr("""transform(
-            filter(split(s, '\u0002'), x -> x <> ''),
-            x -> substring(x, 2, length(x)))""").as("a"))
-        .filter(size(col("a")) >= 2)
-        .select(col("c"), explode(expr(
-          """transform(sequence(1, size(a) - 1), j ->
-             named_struct('l', element_at(a, j), 'r', element_at(a, j + 1)))"""))
-          .as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("c")).as("freq"))
-        .orderBy(col("freq").desc, col("l").asc, col("r").asc)
-        .limit(1).collect()
-      if (best.nonEmpty) {
-        val (l, r, cnt) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+      val freq = scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for (i <- vocab.indices) {
+        val a = symbols(vocab(i))
+        for (j <- 0 until a.length - 1) {
+          val k = (a(j), a(j + 1))
+          freq(k) = freq.getOrElse(k, 0L) + counts(i)
+        }
+      }
+      if (freq.nonEmpty) {
+        val ((l, r), cnt) = freq.reduce((a, b) => if (before(a, b)) a else b)
         merges += ((rank, l, r, cnt))
-        val prev = vocab
-        // merge literals flow in as Columns, never string-interpolated
-        // into SQL (corpus content may contain quotes)
-        vocab = vocab.withColumn("s",
-            replace(col("s"), lit(s1 + l + s2 + s1 + r + s2),
-              lit(s1 + l + r + s2)))
-          .localCheckpoint(true)
-        prev.unpersist()
+        // SQL `replace`: leftmost non-overlapping, like String.replace
+        val (from, to) = (s1 + l + s2 + s1 + r + s2, s1 + l + r + s2)
+        for (i <- vocab.indices) vocab(i) = vocab(i).replace(from, to)
       }
     }
-    vocab.unpersist()
     merges.toSeq
   }
 

@@ -76,32 +76,6 @@ class Opt18Spec extends AnyFunSuite {
       s"native BPE kernel diverged on adversarial tokens:\n$fast\nvs\n$ref")
   }
 
-  test("classifier feature cache is pre-sorted: no per-round Sort " +
-      "below the doc_id window (the r18 sort-once pin)") {
-    import spark.implicits._
-    // the classifierWeights shape: repartition+sortWithinPartitions
-    // persist, then a window over doc_id — the executed plan must read
-    // the cache with NO Sort and NO Exchange between window and scan
-    val df = spark.range(0, 1000)
-      .select((col("id") % 50).as("doc_id"), col("id").as("xm"))
-      .repartition(col("doc_id")).sortWithinPartitions(col("doc_id"))
-      .persist()
-    df.count()
-    try {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id"))
-      val q = df.withColumn("z", sum(col("xm")).over(w))
-      q.write.format("noop").mode("overwrite").save()
-      val plan = q.queryExecution.executedPlan.toString
-      val winIdx = plan.indexOf("Window")
-      val scanIdx = plan.indexOf("InMemoryTableScan")
-      assert(winIdx >= 0 && scanIdx > winIdx, s"unexpected plan: $plan")
-      val between = plan.substring(winIdx, scanIdx)
-      assert(!between.contains("Sort ") && !between.contains("Exchange"),
-        s"window re-sorts/re-shuffles the pre-sorted cache: $between")
-    } finally df.unpersist()
-  }
-
   test("codec kernels after the bulk-raster rewrite: encodePng bytes and " +
       "decoded pixels are identical to the per-pixel reference") {
     // per-pixel reference forms, inlined (the pre-r18 kernels)
