@@ -475,7 +475,7 @@ object Bench {
               // condition a fresh ingest JVM would see. Evidence status
               // (r18): the original r17 "6.9 vs 3.7 s on GC state" probe
               // phase was mislabeled (gcFirst was never passed — ADVICE
-              // r17); the CORRECTED DhashContextAb re-run on the
+              // r17); the CORRECTED probe re-run on the
               // post-ImageIO-fix build measures gc-before-build at
               // PARITY with no-gc (B 2.468 vs C 2.500 min), so this
               // System.gc() is kept as a harmless condition-pin, not a

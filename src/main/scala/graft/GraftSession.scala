@@ -26,8 +26,28 @@ import org.apache.spark.sql.SparkSession
   *    is a no-op for fixtures that store plain micros TIMESTAMP (the
   *    current generation) — normalizeEventTs branches on the physical
   *    type, so both encodings work under one session contract.
+  *
+  * One more setting belongs to the contract but cannot go through `tune`,
+  * because it must be in place when the session is BUILT: [[buildConf]],
+  * the no-fork `file:` filesystem ([[graft.io.NoForkLocalFileSystem]] and
+  * its FileContext twin [[graft.io.NoForkLocalFs]]). Hadoop's filesystem
+  * cache keeps the first `file:` instance a JVM creates, so a later
+  * `spark.conf.set` never reaches it. Every builder the repo owns
+  * (`local`, `Main`, the test harness) passes `buildConf`.
   */
 object GraftSession {
+
+  /** Build-time confs: local (`file:`) reads and writes go through the
+    * stock checksummed local filesystem, except that permission changes
+    * and link-status lookups run in-process instead of forking `chmod`
+    * or `readlink`. Only the `file:` scheme is affected; HDFS, S3 and
+    * every other scheme keep their own filesystems.
+    */
+  val buildConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" ->
+      classOf[graft.io.NoForkLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[graft.io.NoForkLocalFs].getName)
 
   /** Stable per-session identity for the operator caches' keys.
     * `System.identityHashCode(spark)` (the old key) can COLLIDE: after a
@@ -74,11 +94,11 @@ object GraftSession {
   }
 
   /** Restore the persisted dedup + IVF index artifacts for `dir`.
-    * Sequential on purpose: an r18 A/B (IndexLoadAb phase A vs S) found
-    * Future-based concurrent restore NO faster than back-to-back calls —
-    * at restore scale the wall clock is bound by the driver's
-    * single-threaded scheduling of tiny jobs, which concurrency cannot
-    * overlap — so the simple form is the honest one.
+    * Sequential on purpose: an r18 A/B (phases A vs S of a since-deleted
+    * probe) found Future-based concurrent restore NO faster than
+    * back-to-back calls — at restore scale the wall clock is bound by
+    * the driver's single-threaded scheduling of tiny jobs, which
+    * concurrency cannot overlap — so the simple form is the honest one.
     */
   def loadIndexes(spark: SparkSession, dir: String, dedupPath: String,
       ivfPath: String): Unit = {
@@ -112,6 +132,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(buildConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     tune(s)

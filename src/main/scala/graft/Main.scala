@@ -49,6 +49,7 @@ object Main {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.buildConf)
       .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
 

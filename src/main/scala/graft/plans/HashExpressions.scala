@@ -218,7 +218,7 @@ case class SetMemberCount(left: Expression, right: Expression)
   * expression carries only the broadcast HANDLE (~100 bytes); the set
   * ships via broadcast blocks ONCE per executor and the probe hashset
   * builds once per deserialized instance — per-row cost identical to
-  * the literal form (SetProbeAb A/B: hash-identical output, and at a
+  * the literal form (an r16 A/B: hash-identical output, and at a
   * 3·10⁵-shingle synthetic artifact the literal plan serializes MBs
   * per job where this stays constant). Streaming-safe: deterministic
   * scalar, handle created once at query construction, micro-batches

@@ -11,7 +11,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan, SQLExecution}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -100,37 +100,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(fr.map(_.getAs[String]("club")).toSet == Set("Lyon", "Nice"))
   }
 
-  private val leagues = Seq("england", "spain", "germany", "italy", "france",
-    "netherlands", "portugal", "belgium", "scotland")
+  private val leagues = PipelineSpec.leagues
 
-  /** A generated season in scraped shape, written to parquet so the
-    * pipeline reads it through a file scan: per league, a double round
-    * robin of 6 clubs spread over Aug–Jan, one junk row, and one unplayed
-    * match two days after `asOf` (future now, kept by a later run).
-    */
-  private def writeSeason(leagues: Seq[String]): String = {
-    import spark.implicits._
-    def scraped(d: LocalDate) =
-      s"${d.getDayOfWeek.getDisplayName(TextStyle.SHORT, Locale.ENGLISH).take(2)} " +
-        s"${d.getDayOfMonth} ${d.getMonth.getDisplayName(TextStyle.SHORT, Locale.ENGLISH)}"
-    val rows = leagues.flatMap { lg =>
-      val clubs = (1 to 6).map(i => s"$lg-fc$i")
-      val played = (for (h <- clubs; a <- clubs if h != a) yield (h, a))
-        .zipWithIndex.map { case ((h, a), i) =>
-          (scraped(LocalDate.of(2024, 8, 3).plusDays(6L * i)), h,
-            s"${i % 4} - ${(i / 2) % 3}", a)
-        }
-      val extra = Seq(("Averages", "x", "-", "y"),
-        (scraped(asOf.plusDays(2)), clubs(0), "", clubs(1)))
-      (played ++ extra).zipWithIndex.map { case ((d, h, s, a), i) =>
-        (i + 1, d, h, s, a, lg)
-      }
-    }
-    val path = Files.createTempDirectory("graft_season").resolve("raw.parquet").toString
-    rows.toDF("ordinal", "date", "home_team", "score", "away_team", "league")
-      .write.parquet(path)
-    path
-  }
+  private def writeSeason(leagues: Seq[String]): String =
+    PipelineSpec.writeSeason(spark, asOf, leagues)
 
   /** What a run does, seen by the spec's own listeners: the SQL execution
     * id of every job (None outside any SQL action) and the
@@ -293,5 +266,40 @@ class PipelineSpec extends AnyFunSuite {
     assert(r0.getAs[java.sql.Date]("InvoiceDate").toString == "2010-12-01")
     assert(rows(1).isNullAt(rows(1).fieldIndex("Description"))) // nullable
     assert(rows(1).getAs[Int]("Quantity") == -2) // returns
+  }
+}
+
+object PipelineSpec {
+  val leagues = Seq("england", "spain", "germany", "italy", "france",
+    "netherlands", "portugal", "belgium", "scotland")
+
+  /** A generated season in scraped shape, written to parquet so the
+    * pipeline reads it through a file scan: per league, a double round
+    * robin of 6 clubs spread over Aug–Jan, one junk row, and one unplayed
+    * match two days after `asOf` (future now, kept by a later run).
+    */
+  def writeSeason(spark: SparkSession, asOf: LocalDate,
+      leagues: Seq[String] = leagues): String = {
+    import spark.implicits._
+    def scraped(d: LocalDate) =
+      s"${d.getDayOfWeek.getDisplayName(TextStyle.SHORT, Locale.ENGLISH).take(2)} " +
+        s"${d.getDayOfMonth} ${d.getMonth.getDisplayName(TextStyle.SHORT, Locale.ENGLISH)}"
+    val rows = leagues.flatMap { lg =>
+      val clubs = (1 to 6).map(i => s"$lg-fc$i")
+      val played = (for (h <- clubs; a <- clubs if h != a) yield (h, a))
+        .zipWithIndex.map { case ((h, a), i) =>
+          (scraped(LocalDate.of(2024, 8, 3).plusDays(6L * i)), h,
+            s"${i % 4} - ${(i / 2) % 3}", a)
+        }
+      val extra = Seq(("Averages", "x", "-", "y"),
+        (scraped(asOf.plusDays(2)), clubs(0), "", clubs(1)))
+      (played ++ extra).zipWithIndex.map { case ((d, h, s, a), i) =>
+        (i + 1, d, h, s, a, lg)
+      }
+    }
+    val path = Files.createTempDirectory("graft_season").resolve("raw.parquet").toString
+    rows.toDF("ordinal", "date", "home_team", "score", "away_team", "league")
+      .write.parquet(path)
+    path
   }
 }

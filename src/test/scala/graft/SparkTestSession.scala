@@ -11,6 +11,7 @@ object SparkTestSession {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.buildConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     GraftSession.tune(s)
