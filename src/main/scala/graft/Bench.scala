@@ -401,17 +401,22 @@ object Bench {
     // per-rep eviction for rows that memoize their own result
     val resetBeforeRep: Map[String, () => Unit] = Map(
       "index_build_dedup" -> (() =>
-        graft.operators.Dedup.release(spark, Some(sfDir))),
+        SessionArtifacts.release(spark, Some(sfDir),
+          Some(graft.operators.Dedup.Owner))),
       "index_build_ivf" -> (() =>
-        graft.operators.Similarity.release(spark, Some(sfDir))),
+        SessionArtifacts.release(spark, Some(sfDir),
+          Some(graft.operators.Similarity.Owner))),
       "index_build_dhash" -> (() =>
-        graft.operators.Multimodal.release(spark, Some(sfDir))),
+        SessionArtifacts.release(spark, Some(sfDir),
+          Some(graft.operators.Multimodal.Owner))),
       "corpus_clean" -> (() =>
-        graft.operators.CorpusPipeline.release(spark, Some(sfDir))),
+        SessionArtifacts.release(spark, Some(sfDir),
+          Some(graft.operators.CorpusPipeline.Owner))),
       // each rep measures the propagation loop against the built pair
       // index, not a read of the memoized converged labels
       "cur_dedup_clusters" -> (() =>
-        graft.operators.Curation.release(spark, Some(sfDir))),
+        SessionArtifacts.release(spark, Some(sfDir),
+          Some(graft.operators.Curation.Owner))),
     )
 
     def loadavg1: Double =
@@ -655,10 +660,12 @@ object Bench {
           // targeted eviction only (ADVICE r14): a blanket clearCache()
           // here unpersisted EVERY session cache — other families' memo
           // maps still held references to now-uncached frames, so later
-          // shuffle-evidence rows executed recompute-inflated plans. The
-          // two release calls drop exactly the indexes this leg reloads.
-          graft.operators.Dedup.release(spark, Some(sfDir))
-          graft.operators.Similarity.release(spark, Some(sfDir))
+          // shuffle-evidence rows executed recompute-inflated plans.
+          // Releasing the two owners drops exactly the indexes this leg
+          // reloads.
+          for (owner <- Seq(graft.operators.Dedup.Owner,
+              graft.operators.Similarity.Owner))
+            SessionArtifacts.release(spark, Some(sfDir), Some(owner))
           val steps: Seq[(String, () => Unit)] = Seq(
             "index_load" -> (() =>
               graft.GraftSession.loadIndexes(spark, sfDir,

@@ -37,19 +37,29 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Build-time confs: local (`file:`) reads and writes go through the
-    * stock checksummed local filesystem, except that permission changes
-    * and link-status lookups run in-process instead of forking `chmod`
-    * or `readlink`. Only the `file:` scheme is affected; HDFS, S3 and
-    * every other scheme keep their own filesystems.
+  /** Build-time confs.
+    *
+    *  - Local (`file:`) reads and writes go through the stock checksummed
+    *    local filesystem, except that permission changes and link-status
+    *    lookups run in-process instead of forking `chmod` or `readlink`.
+    *    Only the `file:` scheme is affected; HDFS, S3 and every other
+    *    scheme keep their own filesystems.
+    *  - Spark's status store keeps only the last SQL execution, job and
+    *    stage. At its defaults (1000 of each) a long-lived session holds
+    *    every run's plans and task data in driver heap, and nothing in
+    *    the library reads them. `spark.sql.ui.retainedExecutions` is a
+    *    static SQL conf, so it must be set when the session is built.
     */
   val buildConf: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" ->
       classOf[graft.io.NoForkLocalFileSystem].getName,
     "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
-      classOf[graft.io.NoForkLocalFs].getName)
+      classOf[graft.io.NoForkLocalFs].getName,
+    "spark.sql.ui.retainedExecutions" -> "1",
+    "spark.ui.retainedJobs" -> "1",
+    "spark.ui.retainedStages" -> "1")
 
-  /** Stable per-session identity for the operator caches' keys.
+  /** Stable per-session identity for [[SessionArtifacts]]' keys.
     * `System.identityHashCode(spark)` (the old key) can COLLIDE: after a
     * session is GC'd its hash value can be reissued to a new session,
     * which would then silently read the dead session's cache entries.
@@ -68,30 +78,21 @@ object GraftSession {
       }
     }
 
-  /** Release every frame the graft operator caches have pinned for
-    * `spark` — the Dedup signature index + candidate-pair indexes and the
-    * CorpusPipeline cleaned corpus: unpersists their storage blocks
-    * (blocking, so executor memory is free on return) and evicts the
-    * cache entries. Pass `dir` to release a single corpus only. Queries
-    * stay valid afterwards — the next consumer rebuilds the index.
-    * Bench and Verify call this at teardown; long-lived sessions should
-    * call it between corpora.
+  /** Release every artifact the graft operators have memoized for
+    * `spark` in [[SessionArtifacts]]: the Dedup signature and pair
+    * indexes, the IVF index, the image indexes, the cleaned corpus, the
+    * cluster labels and graph-loop results, the daily event aggregate,
+    * the replayed Kafka logs, the eval shingles and the probe-set
+    * broadcasts. Each goes by its own policy: persisted frames are
+    * unpersisted (blocking, so executor memory is free on return),
+    * checkpoints freed, broadcasts destroyed, driver-heap values evicted.
+    * Pass `dir` to release a single corpus only. Queries stay valid
+    * afterwards — the next consumer rebuilds the index. Bench and Verify
+    * call this at teardown; long-lived sessions should call it between
+    * corpora.
     */
-  def release(spark: SparkSession, dir: Option[String] = None): Unit = {
-    graft.operators.Dedup.release(spark, dir)
-    graft.operators.Similarity.release(spark, dir)
-    graft.operators.CorpusPipeline.release(spark, dir)
-    graft.operators.Curation.release(spark, dir)
-    graft.operators.EventAnalytics.release(spark, dir)
-    graft.operators.Multimodal.release(spark, dir)
-    graft.streaming.KafkaReplay.release(spark, dir)
-    graft.streaming.DocStream.release(spark, dir)
-    // full-session teardown also sweeps probe-set broadcasts cached from
-    // non-DocStream call sites (per-dir release is handled by DocStream,
-    // which knows the dir → artifact mapping)
-    if (dir.isEmpty)
-      graft.plans.SetMemberCountBc.release(spark, None)
-  }
+  def release(spark: SparkSession, dir: Option[String] = None): Unit =
+    SessionArtifacts.release(spark, dir)
 
   /** Restore the persisted dedup + IVF index artifacts for `dir`.
     * Sequential on purpose: an r18 A/B (phases A vs S of a since-deleted

@@ -1,10 +1,10 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+
+import graft.SessionArtifacts
 
 /** The end-to-end training-data preparation pipeline — the composition the
   * individual operator families exist for: quality-score every document,
@@ -22,21 +22,13 @@ import org.apache.spark.storage.StorageLevel
   */
 object CorpusPipeline {
 
-  private val cleanCache = TrieMap.empty[(String, String, Double), DataFrame]
-
-  /** Unpersist + evict this session's cleaned-corpus frames (all corpora,
-    * or just `dir`). Called via GraftSession.release.
-    */
-  private[graft] def release(spark: SparkSession, dir: Option[String]): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    cleanCache.keys.toSeq
-      .filter { case (s, d, _) => s == sid && dir.forall(_ == d) }
-      .foreach(cleanCache.remove(_).foreach(_.unpersist(blocking = true)))
-  }
+  /** Owner of the cleaned corpus in [[graft.SessionArtifacts]]. */
+  private[graft] final val Owner = "corpus-pipeline"
 
   def corpusClean(spark: SparkSession, dir: String,
       minQuality: Double = 0.7): DataFrame =
-    cleanCache.getOrElseUpdate((graft.GraftSession.sessionId(spark), dir, minQuality), {
+    SessionArtifacts.getOrBuild(spark, dir,
+        SessionArtifacts.Kind(Owner, s"clean-$minQuality")) {
       val quality = TextAnalysis.textQuality(spark, dir)
         .select(col("doc_id"), col("quality"))
       val losers = Dedup.minhashPairs(spark, dir)
@@ -50,7 +42,7 @@ object CorpusPipeline {
         .persist(StorageLevel.MEMORY_AND_DISK)
       cleaned.count() // materialize once per (session, corpus, threshold)
       cleaned
-    })
+    }(SessionArtifacts.unpersist)
 
   /** Per-language summary of the cleaned corpus (the report a pipeline
     * operator watches) — reads the memoized cleaned corpus, does not

@@ -1,6 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
@@ -12,6 +11,7 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
   StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.SessionArtifacts
 import graft.Tables.t
 import graft.functions.TextFunctions._
 
@@ -59,20 +59,16 @@ private[operators] case class PackOut(doc_id: Long, shard: Int, pack_id: Int,
   */
 object Curation {
 
+  /** Owner in [[graft.SessionArtifacts]] of the converged cluster labels
+    * and of the graph loops' result checkpoints ([[PairGraph]]). */
+  private[graft] final val Owner = "curation"
+
   /** Session-memoized converged cluster labels per (session, corpus) —
     * the propagation loop runs driver-side actions, so its result is
     * materialized once and reread by every consumer (same lifecycle as
     * Dedup's signature index; released via [[graft.GraftSession.release]]).
     */
-  private val clusterCache = TrieMap.empty[(String, String), DataFrame]
-
-  private[graft] def release(spark: SparkSession, dir: Option[String]): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    clusterCache.keys.toSeq
-      .filter { case (s, d) => s == sid && dir.forall(_ == d) }
-      .foreach(clusterCache.remove(_).foreach(freeCheckpoint))
-    PairGraph.release(spark, dir)
-  }
+  private val ClusterKind = SessionArtifacts.Kind(Owner, "cluster-labels")
 
   /** Unpersist a localCheckpoint-backed frame's storage: the blocks live
     * on the checkpoint RDD inside the LogicalRDD leaf, not in the SQL
@@ -102,8 +98,7 @@ object Curation {
     */
   private[operators] def clusterLabels(spark: SparkSession, dir: String,
       maxIter: Int = 20): DataFrame =
-    clusterCache.getOrElseUpdate(
-        (graft.GraftSession.sessionId(spark), dir),
+    SessionArtifacts.getOrBuild(spark, dir, ClusterKind)(
         PairGraph.run(spark, dir) { g =>
       var labels: RDD[(Long, Long)] = g.degrees
         .mapPartitions(_.map { case (n, _) => (n, n) },
@@ -137,7 +132,7 @@ object Curation {
         .select(col("doc_id"),
           coalesce(col("lbl"), col("doc_id")).as("cluster_id"))
         .localCheckpoint()
-    })
+    })(freeCheckpoint)
 
   /** Duplicate clustering: (doc_id, cluster_id, cluster_size) for every
     * document, cluster_id = min doc_id of its connected near-dup component

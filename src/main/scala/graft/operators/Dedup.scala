@@ -1,12 +1,11 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.SessionArtifacts
 import graft.Tables.t
 import graft.functions.TextFunctions._
 
@@ -31,8 +30,22 @@ import graft.functions.TextFunctions._
   */
 object Dedup {
 
+  /** Owner of Dedup's session artifacts in [[graft.SessionArtifacts]]. */
+  private[graft] final val Owner = "dedup"
+
+  /** The SIGNATURE INDEX itself: (doc_id, sig: array<bigint>,
+    * simhash: string), BOTH sketches computed in ONE pass over the
+    * tokenize→shingle subtree (which is ~all the cost — the sketch folds
+    * are marginal next to it), persisted for the session. Every LSH
+    * consumer derives its band relation from this frame, so the corpus is
+    * scanned and shingled exactly once no matter how many dedup flavors
+    * run. In a production deployment this frame is the bucketed signature
+    * TABLE written at ingest; the session artifact is its in-process twin.
+    */
+  private val SketchKind = SessionArtifacts.Kind(Owner, "sketches")
+
   /** Session-scoped memoized "signature index": verified LSH candidate
-    * pairs per (session, corpus dir, sketch kind), persisted
+    * pairs per (session, corpus dir, hot-bucket cap), persisted
     * MEMORY_AND_DISK and materialized once.
     *
     * This is the production shape: the sketch (shingle → minhash/simhash)
@@ -42,39 +55,7 @@ object Dedup {
     * recomputing the sketch subtree on both sides of the band self-join.
     * Frames are O(candidate pairs), far smaller than the corpus.
     */
-  private val pairCache = TrieMap.empty[(String, String, String), DataFrame]
-
-  private def cachedIndex(spark: SparkSession, dir: String, kind: String)(
-      build: => DataFrame): DataFrame =
-    pairCache.getOrElseUpdate((graft.GraftSession.sessionId(spark), dir, kind), {
-      val p = build.persist(StorageLevel.MEMORY_AND_DISK)
-      p.count() // materialize: the candidate join runs exactly once
-      p
-    })
-
-  /** The SIGNATURE INDEX itself: (doc_id, sig: array<bigint>,
-    * simhash: string), BOTH sketches computed in ONE pass over the
-    * tokenize→shingle subtree (which is ~all the cost — the sketch folds
-    * are marginal next to it), persisted for the session. Every LSH
-    * consumer derives its band relation from this frame, so the corpus is
-    * scanned and shingled exactly once no matter how many dedup flavors
-    * run. In a production deployment this frame is the bucketed signature
-    * TABLE written at ingest; the session cache is its in-process twin.
-    */
-  private val sketchCache = TrieMap.empty[(String, String), DataFrame]
-
-  /** Unpersist + evict this session's cached indexes (all corpora, or
-    * just `dir`). Called via GraftSession.release.
-    */
-  private[graft] def release(spark: SparkSession, dir: Option[String]): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    pairCache.keys.toSeq
-      .filter { case (s, d, _) => s == sid && dir.forall(_ == d) }
-      .foreach(pairCache.remove(_).foreach(_.unpersist(blocking = true)))
-    sketchCache.keys.toSeq
-      .filter { case (s, d) => s == sid && dir.forall(_ == d) }
-      .foreach(sketchCache.remove(_).foreach(_.unpersist(blocking = true)))
-  }
+  private def pairsKind(cap: Int) = SessionArtifacts.Kind(Owner, s"pairs-$cap")
 
   /** Materialize the session's signature sketch + both candidate-pair
     * indexes for `dir`. In production this is INGEST-time cost (the
@@ -107,15 +88,17 @@ object Dedup {
     * artifact — identical results, zero corpus passes (spec-pinned).
     */
   def loadDedupIndex(spark: SparkSession, dir: String, path: String): Unit = {
-    release(spark, Some(dir))
-    val sid = graft.GraftSession.sessionId(spark)
-    val sk = spark.read.parquet(s"$path/sketches")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sketchCache.put((sid, dir), sk)
-    val pr = spark.read.parquet(s"$path/pairs")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    pr.count()
-    pairCache.put((sid, dir, "pairs-64"), pr)
+    // pair indexes at other caps derive from the sketches being replaced
+    SessionArtifacts.release(spark, Some(dir), Some(Owner))
+    SessionArtifacts.install(spark, dir, SketchKind)(
+      spark.read.parquet(s"$path/sketches")
+        .persist(StorageLevel.MEMORY_AND_DISK))(SessionArtifacts.unpersist)
+    SessionArtifacts.install(spark, dir, pairsKind(64)) {
+      val pr = spark.read.parquet(s"$path/pairs")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      pr.count()
+      pr
+    }(SessionArtifacts.unpersist)
     ()
   }
 
@@ -202,7 +185,7 @@ object Dedup {
   }
 
   private[operators] def sketches(spark: SparkSession, dir: String): DataFrame =
-    sketchCache.getOrElseUpdate((graft.GraftSession.sessionId(spark), dir), {
+    SessionArtifacts.getOrBuild(spark, dir, SketchKind) {
       graft.plans.GraftFunctions.register(spark)
       // no eager count: the first consumer's own map stage computes and
       // caches the partitions (one pass — saves a whole extra action)
@@ -211,7 +194,7 @@ object Dedup {
           call_function("graft_minhash8", col("sh")).as("sig"),
           call_function("graft_simhash64", col("sh")).as("simhash"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
+    }(SessionArtifacts.unpersist)
 
   /** Candidate pairs from a banded signature relation, with a hot-bucket
     * guard. `bands` must have columns (doc_id, `payload`, band, key);
@@ -682,10 +665,13 @@ object Dedup {
 
   private def combinedPairs(spark: SparkSession, dir: String,
       cap: Int): DataFrame =
-    cachedIndex(spark, dir, s"pairs-$cap") {
+    SessionArtifacts.getOrBuild(spark, dir, pairsKind(cap)) {
       val sk = sketches(spark, dir)
-      pairsFromBands(mBandsOf(sk), sBandsOf(sk), cap)
-    }
+      val p = pairsFromBands(mBandsOf(sk), sBandsOf(sk), cap)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      p.count() // materialize: the candidate join runs exactly once
+      p
+    }(SessionArtifacts.unpersist)
 
   /** Verified MinHash candidate index: ALL candidate pairs with their
     * estimated similarity (no threshold), memoized per (session, corpus).

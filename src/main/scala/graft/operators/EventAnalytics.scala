@@ -159,11 +159,11 @@ object EventAnalytics {
     * persisted per (session, corpus) like the Dedup signature index, and
     * released through the same lifecycle (`GraftSession.release`).
     */
-  private val dailyCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+  private val DailyKind =
+    graft.SessionArtifacts.Kind("event-analytics", "daily-aggregate")
 
   private def dailyAgg(spark: SparkSession, dir: String): DataFrame =
-    dailyCache.getOrElseUpdate((graft.GraftSession.sessionId(spark), dir), {
+    graft.SessionArtifacts.getOrBuild(spark, dir, DailyKind) {
       val d = Tables.t(spark, dir, "events")
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n_events"),
@@ -172,14 +172,7 @@ object EventAnalytics {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       d.count() // materialize so both consumers read the cache
       d
-    })
-
-  private[graft] def release(spark: SparkSession, dir: Option[String]): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    dailyCache.keys.toSeq
-      .filter { case (s, d) => s == sid && dir.forall(_ == d) }
-      .foreach(dailyCache.remove(_).foreach(_.unpersist(blocking = true)))
-  }
+    }(graft.SessionArtifacts.unpersist)
 
   /** EV2 — time-series gap-fill + forward-fill: regularize the daily
     * per-type series onto a dense date spine (absent days appear with

@@ -1,11 +1,10 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.SessionArtifacts
 import graft.Tables.t
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary` columns
@@ -24,6 +23,9 @@ import graft.Tables.t
   * rows AFTER metadata projection (columns pruned before the explode).
   */
 object Multimodal {
+
+  /** Owner of the image indexes in [[graft.SessionArtifacts]]. */
+  private[graft] final val Owner = "multimodal"
 
   /** Typed row for the decoded-media contract. */
   case class MediaMeta(doc_id: Long, byte_len: Int, width: Int, height: Int,
@@ -319,15 +321,20 @@ object Multimodal {
     * mm_audio_* / mm_shot_boundary (each still crosses encode→decode
     * inside the query, by design).
     */
-  private val pixelCache = TrieMap.empty[(String, String), DataFrame]
+  private val PixelKind = SessionArtifacts.Kind(Owner, "pixels")
 
   private[operators] def pixelIndex(spark: SparkSession,
       dir: String): DataFrame =
-    pixelCache.getOrElseUpdate((graft.GraftSession.sessionId(spark), dir), {
-      val p = decodePixels(spark, dir).persist(StorageLevel.MEMORY_AND_DISK)
-      p.count() // materialize: render+decode runs exactly once
-      p
-    })
+    SessionArtifacts.getOrBuild(spark, dir, PixelKind)(
+      persisted(decodePixels(spark, dir)))(SessionArtifacts.unpersist)
+
+  /** `df` persisted MEMORY_AND_DISK and materialized: the render+decode
+    * under an image index runs exactly once. */
+  private def persisted(df: DataFrame): DataFrame = {
+    val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+    p.count()
+    p
+  }
 
   /** The single render→decode pass behind [[pixelIndex]] — mapPartitions
     * is the justified codec seam (ImageIO is not a Catalyst expression).
@@ -495,14 +502,11 @@ object Multimodal {
     * KBs per million images; Bench times the build in its `index_build`
     * row (evicted per rep) and [[graft.GraftSession.release]] unpins it.
     */
-  private val dhashCache = TrieMap.empty[(String, String), DataFrame]
+  private val DhashKind = SessionArtifacts.Kind(Owner, "dhash")
 
   private[operators] def dhashSketch(spark: SparkSession, dir: String): DataFrame =
-    dhashCache.getOrElseUpdate((graft.GraftSession.sessionId(spark), dir), {
-      val p = mmDhash(spark, dir).persist(StorageLevel.MEMORY_AND_DISK)
-      p.count() // materialize: render+decode runs exactly once
-      p
-    })
+    SessionArtifacts.getOrBuild(spark, dir, DhashKind)(
+      persisted(mmDhash(spark, dir)))(SessionArtifacts.unpersist)
 
   /** Ingest-time build hook — Bench's `index_build_dhash` row: the one
     * codec pass into [[pixelIndex]], then the dHash sketch sampled from
@@ -511,20 +515,6 @@ object Multimodal {
   def buildDhashSketch(spark: SparkSession, dir: String): Unit = {
     pixelIndex(spark, dir)
     dhashSketch(spark, dir); ()
-  }
-
-  /** Unpersist + evict this session's cached dhash sketches and pixel
-    * indexes (all corpora, or just `dir`). Called via
-    * GraftSession.release.
-    */
-  private[graft] def release(spark: SparkSession, dir: Option[String]): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    dhashCache.keys.toSeq
-      .filter { case (s, d) => s == sid && dir.forall(_ == d) }
-      .foreach(dhashCache.remove(_).foreach(_.unpersist(blocking = true)))
-    pixelCache.keys.toSeq
-      .filter { case (s, d) => s == sid && dir.forall(_ == d) }
-      .foreach(pixelCache.remove(_).foreach(_.unpersist(blocking = true)))
   }
 
   /** PERSIST the multimodal ingest artifacts — the decoded-pixel index
@@ -543,16 +533,10 @@ object Multimodal {
     * (spec-pinned in Round15Spec).
     */
   def loadMmIndex(spark: SparkSession, dir: String, path: String): Unit = {
-    release(spark, Some(dir))
-    val sid = graft.GraftSession.sessionId(spark)
-    val px = spark.read.parquet(s"$path/pixels")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    px.count()
-    pixelCache.put((sid, dir), px)
-    val dh = spark.read.parquet(s"$path/dhash")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    dh.count()
-    dhashCache.put((sid, dir), dh)
+    SessionArtifacts.install(spark, dir, PixelKind)(persisted(
+      spark.read.parquet(s"$path/pixels")))(SessionArtifacts.unpersist)
+    SessionArtifacts.install(spark, dir, DhashKind)(persisted(
+      spark.read.parquet(s"$path/dhash")))(SessionArtifacts.unpersist)
     ()
   }
 

@@ -1,8 +1,8 @@
 package graft.operators
 
 import java.lang.ref.WeakReference
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 import scala.reflect.ClassTag
 
@@ -12,6 +12,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
+
+import graft.SessionArtifacts
 
 /** The undirected near-dup pair graph the round loops in [[Curation]]
   * iterate over, and the persisted per-round state they keep on it.
@@ -30,8 +32,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Every RDD persisted through [[keep]] is unpersisted by [[run]] when
   * the loop returns or throws, so a loop leaves no cached blocks behind
-  * except its eager result, which [[PairGraph.release]] (through
-  * `GraftSession.release`) frees if the caller has not.
+  * except its eager result, which `GraftSession.release` frees if the
+  * caller has not.
   */
 private[operators] final class PairGraph private (spark: SparkSession,
     dir: String) {
@@ -102,22 +104,20 @@ private[operators] object PairGraph {
 
   /** Result checkpoints per (session, corpus), held weakly: a result the
     * caller dropped is cleaned by Spark's ContextCleaner after GC, one it
-    * still holds is freed by [[release]]. */
-  private val results =
-    TrieMap.empty[(String, String), List[WeakReference[RDD[_]]]]
+    * still holds is freed when the session releases Curation's
+    * artifacts. */
+  private val ResultsKind =
+    SessionArtifacts.Kind(Curation.Owner, "graph-results")
 
-  private def pin(spark: SparkSession, dir: String, rdd: RDD[_]): Unit =
-    results.updateWith((graft.GraftSession.sessionId(spark), dir)) { refs =>
-      Some(new WeakReference[RDD[_]](rdd) ::
-        refs.getOrElse(Nil).filter(_.get != null))
+  private type Results = ConcurrentLinkedQueue[WeakReference[RDD[_]]]
+
+  private def pin(spark: SparkSession, dir: String, rdd: RDD[_]): Unit = {
+    val refs = SessionArtifacts.getOrBuild(spark, dir, ResultsKind)(
+        new Results) { (refs: Results) =>
+      refs.forEach(r => Option(r.get).foreach(_.unpersist(blocking = true)))
     }
-
-  private[graft] def release(spark: SparkSession, dir: Option[String]): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    results.keys.toSeq
-      .filter { case (s, d) => s == sid && dir.forall(_ == d) }
-      .foreach(results.remove(_).foreach(_.foreach(r =>
-        Option(r.get).foreach(_.unpersist(blocking = true)))))
+    refs.removeIf(_.get == null)
+    refs.add(new WeakReference[RDD[_]](rdd))
   }
 
   /** Build the pair graph of `dir`, run `loop` over it, and unpersist

@@ -1,12 +1,11 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.SessionArtifacts
 import graft.Tables.t
 import graft.functions.CentroidAggregator
 
@@ -232,6 +231,9 @@ object Similarity {
         (n * element_at(cNrms, p + 1)))
   }
 
+  /** Owner of Similarity's session artifacts in [[graft.SessionArtifacts]]. */
+  private[graft] final val Owner = "similarity"
+
   /** Session-memoized IVF CORPUS INDEX per (session, corpus dir): the
     * seeded codebook, the cid-ASSIGNED corpus (vec_id, label, embedding,
     * nrm, cid, ccos — one argmax of 16 centroid cosines per vector, the
@@ -247,19 +249,10 @@ object Similarity {
     * verdict's top cost finding). Bench times the build as its
     * `index_build` row; [[graft.GraftSession.release]] unpins it.
     */
-  private val ivfCache =
-    TrieMap.empty[(String, String), (Codebook, DataFrame, DataFrame)]
+  private val IvfKind = SessionArtifacts.Kind(Owner, "ivf")
 
-  /** Unpersist + evict this session's cached IVF index (all corpora, or
-    * just `dir`). Called via GraftSession.release.
-    */
-  private[graft] def release(spark: SparkSession, dir: Option[String]): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    ivfCache.keys.toSeq
-      .filter { case (s, d) => s == sid && dir.forall(_ == d) }
-      .foreach(ivfCache.remove(_).foreach { case (_, a, r) =>
-        a.unpersist(blocking = true); r.unpersist(blocking = true)
-      })
+  private val freeIvf: ((Codebook, DataFrame, DataFrame)) => Unit = {
+    case (_, a, r) => a.unpersist(blocking = true); r.unpersist(blocking = true)
   }
 
   /** Materialize the session's IVF index for `dir` (ingest-time cost —
@@ -305,19 +298,18 @@ object Similarity {
       .sortBy(_._1).toSeq
 
   def loadIvfIndex(spark: SparkSession, dir: String, path: String): Unit = {
-    val code: Codebook = readCodebook(spark, path)
-    val assigned = spark.read.parquet(s"$path/assigned")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    assigned.count()
-    // radii stays LAZY: it is |codebook| rows — its first consumer
-    // materializes it for pennies, while an eager count here is a whole
-    // extra driver job on the restart path (r18 index_load attribution:
-    // at restore time job COUNT, not bytes, dominates)
-    val radii = spark.read.parquet(s"$path/radii")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    release(spark, Some(dir))
-    ivfCache.put((graft.GraftSession.sessionId(spark), dir),
-      (code, assigned, radii))
+    SessionArtifacts.install(spark, dir, IvfKind) {
+      val assigned = spark.read.parquet(s"$path/assigned")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      assigned.count()
+      // radii stays LAZY: it is |codebook| rows — its first consumer
+      // materializes it for pennies, while an eager count here is a whole
+      // extra driver job on the restart path (r18 index_load attribution:
+      // at restore time job COUNT, not bytes, dominates)
+      val radii = spark.read.parquet(s"$path/radii")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      (readCodebook(spark, path), assigned, radii)
+    }(freeIvf)
     ()
   }
 
@@ -462,7 +454,7 @@ object Similarity {
 
   private[operators] def ivfIndex(spark: SparkSession, dir: String)
       : (Codebook, DataFrame, DataFrame) =
-    ivfCache.getOrElseUpdate((graft.GraftSession.sessionId(spark), dir), {
+    SessionArtifacts.getOrBuild(spark, dir, IvfKind) {
       val emb = withNorm(t(spark, dir, "embeddings"))
       val sorted = seededCodebook(emb).sortBy(_._1)
       val assigned = assignSeeded(emb, sorted)
@@ -472,7 +464,7 @@ object Similarity {
         .persist(StorageLevel.MEMORY_AND_DISK)
       radii.count()
       (sorted, assigned, radii)
-    })
+    }(freeIvf)
 
   /** The IVF search stage over a given codebook: map-side list assignment
     * (argmax of rounded cosine, ties to the lowest cid), 4-list probing

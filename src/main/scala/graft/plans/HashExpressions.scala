@@ -271,51 +271,40 @@ object SetMemberCountBc {
   /** One broadcast per (session, probe-set instance): repeated query
     * construction over the same cached artifact (bench reps,
     * per-micro-batch restarts) must not re-broadcast it. Entries are
-    * evicted and DESTROYED explicitly via [[release]] (wired into
-    * [[graft.GraftSession.release]] and [[graft.streaming.DocStream]]'s
-    * artifact eviction) — the previous WeakHashMap self-cleanup never
-    * fired, because TorrentBroadcast pins the broadcast value (the same
-    * array used as the weak key) strongly in the driver BlockManager, so
-    * the weak entry stayed reachable and stale broadcasts accumulated
-    * per regenerated artifact (ADVICE r17). Session-scoping also stops a
+    * evicted and DESTROYED explicitly by a full `GraftSession.release` or
+    * by [[destroy]] from [[graft.streaming.DocStream]]'s artifact
+    * eviction — the previous WeakHashMap self-cleanup never fired,
+    * because TorrentBroadcast pins the broadcast value (the same array
+    * used as the weak key) strongly in the driver BlockManager, so the
+    * weak entry stayed reachable and stale broadcasts accumulated per
+    * regenerated artifact (ADVICE r17). Session-scoping also stops a
     * dead session's Broadcast from being served to a new SparkContext.
+    * A broadcast belongs to no corpus, so its entry's dir is empty.
     */
-  private val bcCache = scala.collection.concurrent.TrieMap
-    .empty[(String, IdKey),
-      org.apache.spark.broadcast.Broadcast[Array[String]]]
+  private[graft] final val Owner = "probe-broadcast"
+
+  private def kind(set: Array[String]) =
+    graft.SessionArtifacts.Kind(Owner, new IdKey(set))
 
   /** Live cache entries for `spark` — test seam for the release
     * lifecycle.
     */
-  private[graft] def cachedCount(spark: SparkSession): Int = {
-    val sid = graft.GraftSession.sessionId(spark)
-    bcCache.keys.count(_._1 == sid)
-  }
+  private[graft] def cachedCount(spark: SparkSession): Int =
+    graft.SessionArtifacts.count(spark, Owner)
 
-  /** Destroy this session's cached broadcasts — those backing `arrs`
-    * only, or every entry of the session when `arrs` is None.
-    */
-  private[graft] def release(spark: SparkSession,
-      arrs: Option[Seq[Array[String]]] = None): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    bcCache.keys.toSeq
-      .filter { case (s, k) =>
-        s == sid && arrs.forall(_.exists(_ eq k.arr)) }
-      .foreach { key =>
-        bcCache.remove(key).foreach { b =>
-          try b.destroy() catch { case _: Throwable => () }
-        }
-      }
-  }
+  /** Destroy the broadcast backing `set`, if one is cached. */
+  private[graft] def destroy(spark: SparkSession, set: Array[String]): Unit =
+    graft.SessionArtifacts.evict(spark, "", kind(set))
 
   /** `graft_leak_count(arr, set)` as a Column, with the set riding a
     * broadcast variable instead of a plan literal.
     */
   def column(spark: SparkSession, arrCol: org.apache.spark.sql.Column,
       set: Array[String]): org.apache.spark.sql.Column = {
-    val bc = bcCache.getOrElseUpdate(
-      (graft.GraftSession.sessionId(spark), new IdKey(set)),
-      spark.sparkContext.broadcast(set))
+    val bc = graft.SessionArtifacts.getOrBuild(spark, "", kind(set))(
+      spark.sparkContext.broadcast(set)) { b =>
+      try b.destroy() catch { case _: Throwable => () }
+    }
     org.apache.spark.sql.GraftColumnBridge.column(
       SetMemberCountBc(
         org.apache.spark.sql.GraftColumnBridge.expression(arrCol), bc))
@@ -494,8 +483,50 @@ case class BpeEncodeStats(first: Expression, second: Expression,
     copy(first = f, second = s, third = t)
 }
 
-/** Session registration for the custom expressions (idempotent). */
+/** The graft SQL functions, optimizer rules and planner strategy, listed
+  * once. The table drives both installation paths: [[register]] for an
+  * existing session and [[GraftExtensions]] for a session builder.
+  */
 object GraftFunctions {
+  import org.apache.spark.sql.catalyst.FunctionIdentifier
+  import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain,
+    ExpressionInfo}
+
+  /** (name, expression class, builder) of every graft SQL function. */
+  private[plans] val functions
+      : Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("graft_simhash64", classOf[SimHash64], e => SimHash64(e.head)),
+    ("graft_minhash8", classOf[MinHashSig], e => MinHashSig(e.head, 8)),
+    ("graft_shingles3", classOf[Shingles3Distinct],
+      e => Shingles3Distinct(e.head)),
+    ("graft_leak_count", classOf[SetMemberCount],
+      e => SetMemberCount(e(0), e(1))),
+    ("graft_lsh_match", classOf[LshMatch], e => LshMatch(e(0), e(1), e(2))),
+    ("graft_cosine", classOf[CosineSim], e => CosineSim(e(0), e(1))),
+    ("graft_hamming", classOf[HammingDist], e => HammingDist(e(0), e(1))),
+    ("graft_fppoly", classOf[FingerprintPoly], e => FingerprintPoly(e.head)),
+    ("graft_dot_fd", classOf[DotFloatDouble], e => DotFloatDouble(e(0), e(1))),
+    ("graft_winnow", classOf[WinnowFingerprints],
+      e => WinnowFingerprints(e.head)),
+    ("graft_topk", classOf[TopKMarker], e => TopKMarker(e)),
+    ("graft_mg_candidates", classOf[MisraGriesCandidates],
+      e => MisraGriesCandidates.fromArgs(e)),
+    ("graft_bpe_stats", classOf[BpeEncodeStats],
+      e => BpeEncodeStats(e(0), e(1), e(2))),
+    // Spark's own runtime-filter predicate, exposed for the explicit
+    // bloom-pruned join (Relational.bloomPrunedSemiJoin): codegen'd, and
+    // the serialized sketch rides along as a foldable binary literal —
+    // no side-channel broadcast needed.
+    ("graft_might_contain", classOf[BloomFilterMightContain],
+      e => BloomFilterMightContain(e(0), e(1))))
+
+  private[plans] val rules = Seq(LshJoinRewrite, TopKRewrite)
+
+  private[plans] val strategies = Seq(TopKStrategy)
+
+  private[plans] def info(name: String, cls: Class[_]): ExpressionInfo =
+    new ExpressionInfo(cls.getName, name)
+
   /** Sessions already registered — registration now runs ONCE per
     * SparkSession (r14 judge #6): the per-query register() calls used to
     * re-`createOrReplaceTempFunction` every graft_* name, logging ~19
@@ -509,54 +540,12 @@ object GraftFunctions {
   def register(spark: SparkSession): Unit = {
     if (registered.putIfAbsent(spark, java.lang.Boolean.TRUE) != null) return
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_simhash64", exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash8", exprs => MinHashSig(exprs.head, 8), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_shingles3", exprs => Shingles3Distinct(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_leak_count", exprs => SetMemberCount(exprs(0), exprs(1)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_lsh_match", exprs => LshMatch(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_hamming", exprs => HammingDist(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_fppoly", exprs => FingerprintPoly(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_dot_fd", exprs => DotFloatDouble(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_winnow", exprs => WinnowFingerprints(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_topk", exprs => TopKMarker(exprs), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_mg_candidates",
-      exprs => MisraGriesCandidates.fromArgs(exprs), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bpe_stats",
-      exprs => BpeEncodeStats(exprs(0), exprs(1), exprs(2)), "built-in")
-    // Spark's own runtime-filter predicate, exposed for the explicit
-    // bloom-pruned join (Relational.bloomPrunedSemiJoin): codegen'd, and
-    // the serialized sketch rides along as a foldable binary literal —
-    // no side-channel broadcast needed.
-    reg.createOrReplaceTempFunction(
-      "graft_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-    // the rewrite rules are idempotent; adding twice is harmless
-    if (!spark.experimental.extraOptimizations.contains(LshJoinRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ LshJoinRewrite
-    if (!spark.experimental.extraOptimizations.contains(TopKRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKRewrite
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
+    for ((name, cls, build) <- functions)
+      reg.registerFunction(FunctionIdentifier(name), info(name, cls), build)
+    // a session built with GraftExtensions already has the rules
+    val x = spark.experimental
+    x.extraOptimizations ++= rules.filterNot(x.extraOptimizations.contains)
+    x.extraStrategies ++= strategies.filterNot(x.extraStrategies.contains)
   }
 }
 
@@ -569,57 +558,11 @@ object GraftFunctions {
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    e.injectFunction((FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_minhash8"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash8"),
-      (exprs: Seq[Expression]) => MinHashSig(exprs.head, 8)))
-    e.injectFunction((FunctionIdentifier("graft_shingles3"),
-      new ExpressionInfo(classOf[Shingles3Distinct].getName, "graft_shingles3"),
-      (exprs: Seq[Expression]) => Shingles3Distinct(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_leak_count"),
-      new ExpressionInfo(classOf[SetMemberCount].getName, "graft_leak_count"),
-      (exprs: Seq[Expression]) => SetMemberCount(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_lsh_match"),
-      new ExpressionInfo(classOf[LshMatch].getName, "graft_lsh_match"),
-      (exprs: Seq[Expression]) => LshMatch(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSim].getName, "graft_cosine"),
-      (exprs: Seq[Expression]) => CosineSim(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_hamming"),
-      new ExpressionInfo(classOf[HammingDist].getName, "graft_hamming"),
-      (exprs: Seq[Expression]) => HammingDist(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_fppoly"),
-      new ExpressionInfo(classOf[FingerprintPoly].getName, "graft_fppoly"),
-      (exprs: Seq[Expression]) => FingerprintPoly(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_dot_fd"),
-      new ExpressionInfo(classOf[DotFloatDouble].getName, "graft_dot_fd"),
-      (exprs: Seq[Expression]) => DotFloatDouble(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName, "graft_winnow"),
-      (exprs: Seq[Expression]) => WinnowFingerprints(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKMarker].getName, "graft_topk"),
-      (exprs: Seq[Expression]) => TopKMarker(exprs)))
-    e.injectFunction((FunctionIdentifier("graft_mg_candidates"),
-      new ExpressionInfo(classOf[MisraGriesCandidates].getName,
-        "graft_mg_candidates"),
-      (exprs: Seq[Expression]) => MisraGriesCandidates.fromArgs(exprs)))
-    e.injectFunction((FunctionIdentifier("graft_bpe_stats"),
-      new ExpressionInfo(classOf[BpeEncodeStats].getName, "graft_bpe_stats"),
-      (exprs: Seq[Expression]) =>
-        BpeEncodeStats(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      (exprs: Seq[Expression]) => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1))))
-    e.injectOptimizerRule(_ => LshJoinRewrite)
-    e.injectOptimizerRule(_ => TopKRewrite)
-    e.injectPlannerStrategy(_ => TopKStrategy)
+    import GraftFunctions._
+    for ((name, cls, build) <- functions)
+      e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        info(name, cls), build))
+    rules.foreach(r => e.injectOptimizerRule(_ => r))
+    strategies.foreach(s => e.injectPlannerStrategy(_ => s))
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.SessionArtifacts
+
 /** Document-ingest streaming: stateful exact dedup — the streaming twin of
   * [[graft.operators.Dedup.dedupExact]], for the pipeline that ingests a
   * document FEED rather than a landed corpus.
@@ -159,42 +161,23 @@ object DocStream {
     */
   private[graft] val CurateTau = 0.8
 
+  /** Owner of the eval shingle artifacts in [[graft.SessionArtifacts]]. */
+  private[graft] final val Owner = "doc-stream"
+
   /** The BROADCAST decontamination artifact: every distinct word-3-gram
     * in the eval source's raw text. Bounded by the benchmark suite —
     * the protected set is small by construction (the decontaminate
     * broadcast argument), so collecting it once and shipping it inside
     * the plan IS the production shape: a streaming ingest screens each
     * arriving doc against this set map-side, and the 100 TB train side
-    * never shuffles for contamination.
+    * never shuffles for contamination. Memoized per (session, corpus,
+    * eval source); evicting it destroys the probe kernel's broadcast of
+    * it too (ADVICE r17: that cache does not self-clean via GC).
     */
-  private val evalShCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(String, String, String), Array[String]]
-
-  /** Evict this session's cached eval shingle artifacts (all corpora, or
-    * just `dir`) — wired into [[graft.GraftSession.release]] like every
-    * other operator cache (ADVICE r16: without this, a corpus regenerated
-    * under the same dir served a stale artifact to st14/batchCurateIngest,
-    * and entries for stopped sessions leaked forever).
-    */
-  private[graft] def release(spark: SparkSession,
-      dir: Option[String]): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    val evicted = evalShCache.keys.toSeq
-      .filter { case (s, d, _) => s == sid && dir.forall(_ == d) }
-    // destroy the broadcasts backing the evicted artifacts too (ADVICE
-    // r17): the probe kernel's cache no longer self-cleans via GC, so
-    // the artifact's eviction must carry its broadcast's destruction
-    val arrs = evicted.flatMap(evalShCache.get)
-    evicted.foreach(evalShCache.remove)
-    if (arrs.nonEmpty)
-      graft.plans.SetMemberCountBc.release(spark, Some(arrs))
-  }
-
   def evalShingleSet(spark: SparkSession, dir: String,
       evalSource: String = "src0"): Array[String] =
-    evalShCache.getOrElseUpdate(
-        (graft.GraftSession.sessionId(spark), dir, evalSource), {
+    SessionArtifacts.getOrBuild(spark, dir,
+        SessionArtifacts.Kind(Owner, s"eval-shingles-$evalSource")) {
       graft.plans.GraftFunctions.register(spark)
       graft.Tables.t(spark, dir, "documents")
         .filter(col("source") === evalSource)
@@ -202,7 +185,7 @@ object DocStream {
           split(col("text"), " "))).as("s"))
         .distinct().orderBy(col("s"))
         .collect().map(_.getString(0))
-    })
+    }(graft.plans.SetMemberCountBc.destroy(spark, _))
 
   /** The shared admit → scrub → decontaminate stage of the curated
     * ingest — the [[graft.operators.Curation.corpusCurate]] prefix a

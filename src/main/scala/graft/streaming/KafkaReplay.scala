@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.util
 
-import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -20,6 +19,8 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType,
   StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.SessionArtifacts
 
 /** Kafka-SHAPED DataSource V2 micro-batch source that replays the
   * `events` fixture as a broker would serve it (round-8 judge #4: the
@@ -85,26 +86,15 @@ object KafkaReplay {
 
   /** (key bytes, value bytes, event-time micros) per Kafka partition. */
   private type PartitionLog = Array[Array[(Array[Byte], Array[Byte], Long)]]
-  private val cache = TrieMap.empty[(String, String, String, Int), PartitionLog]
 
-  /** Evict the replayed logs pinned for `spark` (one full event log per
-    * (path, table, partitions) — driver heap, not executor blocks). Pass
-    * `dir` to evict a single fixture path only. Wired into
-    * [[graft.GraftSession.release]] so a cycled bench/test session can't
-    * leak its replay log into the long-lived JVM.
-    */
-  def release(spark: SparkSession, dir: Option[String] = None): Unit = {
-    val sid = graft.GraftSession.sessionId(spark)
-    cache.keys
-      .filter(k => k._1 == sid && dir.forall(_ == k._2))
-      .foreach(cache.remove)
-  }
+  /** Owner of the replayed logs in [[graft.SessionArtifacts]]: one full
+    * event log per (path, table, partitions), held in driver heap, not
+    * executor blocks, so releasing one only evicts it. */
+  private[graft] final val Owner = "kafka-replay"
 
   /** Test hook: does any replay log remain cached for `spark`? */
-  private[graft] def isCachedFor(spark: SparkSession): Boolean = {
-    val sid = graft.GraftSession.sessionId(spark)
-    cache.keys.exists(_._1 == sid)
-  }
+  private[graft] def isCachedFor(spark: SparkSession): Boolean =
+    SessionArtifacts.count(spark, Owner) > 0
 
   /** Materialize the fixture as partitioned, offset-ordered logs —
     * memoized per (session, path, partitions) so every micro-batch plans
@@ -116,8 +106,8 @@ object KafkaReplay {
   private[graft] def load(path: String, nParts: Int,
       table: String = "events"): PartitionLog = {
     val spark = SparkSession.active
-    val sid = graft.GraftSession.sessionId(spark)
-    cache.getOrElseUpdate((sid, path, table, nParts), {
+    SessionArtifacts.getOrBuild(spark, path,
+        SessionArtifacts.Kind(Owner, (table, nParts))) {
       // each row of the wire log is (key id, value json, event micros)
       val rows: Array[(Long, String, Long)] = table match {
         case "documents" =>
@@ -168,7 +158,7 @@ object KafkaReplay {
           us))
       }
       parts.map(_.result())
-    })
+    }((_: PartitionLog) => ())
   }
 }
 

@@ -4,11 +4,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{CorpusPipeline, Dedup, Multimodal}
 
-/** GraftSession.release: the session-scoped operator caches (Dedup
-  * signature/pair indexes, CorpusPipeline cleaned corpus) must unpersist
-  * their storage blocks and evict their entries on release — a long-lived
-  * session must not pin executor memory forever — and every query must
-  * still be correct afterwards (the next consumer rebuilds).
+/** GraftSession.release: the session's operator artifacts (Dedup
+  * signature/pair indexes, CorpusPipeline cleaned corpus and the rest of
+  * [[SessionArtifacts]]) must unpersist their storage blocks and evict
+  * their entries on release — a long-lived session must not pin executor
+  * memory forever — and every query must still be correct afterwards
+  * (the next consumer rebuilds). Nor may the session's status store keep
+  * every run's plans.
   */
 class CacheLifecycleSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -95,6 +97,18 @@ class CacheLifecycleSpec extends AnyFunSuite {
     KafkaReplay.load(dir, 2)
     GraftSession.release(spark) // the release-everything flavor
     assert(!KafkaReplay.isCachedFor(spark))
+  }
+
+  test("a long-lived session's status store keeps at most one SQL " +
+      "execution") {
+    import spark.implicits._
+    for (n <- 1 to 3) Seq(n).toDF("n").collect()
+    org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+    // the store trims itself asynchronously once the events are in
+    def retained = org.apache.spark.sql.StatusStoreProbe.sqlExecutions(spark)
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (retained > 1 && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(retained <= 1, s"$retained SQL executions retained")
   }
 
   test("session ids are stable per session and distinct across sessions") {

@@ -56,7 +56,7 @@ class DedupSpec extends AnyFunSuite {
     val freshI = canon(Dedup.dedupIncremental(spark, dir))
     val path = java.nio.file.Files.createTempDirectory("graft_dix").toString
     Dedup.saveDedupIndex(spark, dir, path)
-    Dedup.release(spark, Some(dir))
+    graft.SessionArtifacts.release(spark, Some(dir), Some(Dedup.Owner))
     Dedup.loadDedupIndex(spark, dir, path)
     assert(canon(Dedup.dedupMinhashLsh(spark, dir)) == freshM)
     assert(canon(Dedup.dedupSimhash(spark, dir)) == freshS)

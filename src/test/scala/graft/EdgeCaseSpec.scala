@@ -8,8 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * that produced nothing), and a library operator must either return a
   * typed empty result or fail with a NAMED IllegalArgumentException —
   * never an NPE, a schema-inference crash, or a null-unboxing error
-  * three operators downstream. EmptyCorpusProbe (test-scoped main) is
-  * the dev tool this contract was derived with.
+  * three operators downstream.
   *
   * A small NAMED set of operators is ALLOWED to reject an empty corpus,
   * each with a message naming the cause: the PQ variants and their

@@ -193,7 +193,7 @@ class SimilaritySpec extends AnyFunSuite {
     Similarity.saveIvfIndex(spark, dir, path)
     // evict the in-session index entirely, then restore from parquet —
     // the restart a memoized cache can't survive
-    Similarity.release(spark, Some(dir))
+    graft.SessionArtifacts.release(spark, Some(dir), Some(Similarity.Owner))
     Similarity.loadIvfIndex(spark, dir, path)
     assert(canon(Similarity.simIvfAnn(spark, dir).collect()) == fresh)
     assert(canon(Similarity.simSemanticPrune(spark, dir).collect())

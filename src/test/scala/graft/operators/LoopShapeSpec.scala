@@ -103,12 +103,13 @@ class LoopShapeSpec extends AnyFunSuite {
   test("cur_dedup_clusters: the converging label loop stays within its " +
       "job ceiling and release frees its labels") {
     warm()
-    Curation.release(spark, Some(dir))
+    graft.SessionArtifacts.release(spark, Some(dir), Some(Curation.Owner))
     val before = persisted
     // shape() frees the memoized labels' blocks: drop the memo after it
     val (jobs, _) = try shape("cur_dedup_clusters")(
       Curation.dedupClusters(spark, dir))
-      finally Curation.release(spark, Some(dir))
+      finally graft.SessionArtifacts.release(spark, Some(dir),
+        Some(Curation.Owner))
     info(s"cur_dedup_clusters: $jobs jobs")
     assert(jobs <= 11, s"cur_dedup_clusters: $jobs jobs, ceiling 11")
     assert(leaked(before).isEmpty,
@@ -120,7 +121,7 @@ class LoopShapeSpec extends AnyFunSuite {
     val before = persisted
     val held = Curation.graphKcore(spark, dir)
     assert(leaked(before).size == 1)
-    Curation.release(spark, Some(dir))
+    graft.SessionArtifacts.release(spark, Some(dir), Some(Curation.Owner))
     assert(leaked(before).isEmpty, "release left a held graph result pinned")
     assert(held.columns.nonEmpty)
   }
@@ -138,7 +139,7 @@ class LoopShapeSpec extends AnyFunSuite {
     assert(clusters.exists(ms => ms.exists(a => ms.exists(b =>
       a < b && !edges((a, b)) && !edges((b, a))))),
       "the fixture's pair graph has diameter <= 1")
-    Curation.release(spark, Some(big))
+    graft.SessionArtifacts.release(spark, Some(big), Some(Curation.Owner))
     val before = persisted
     val e = intercept[IllegalArgumentException](
       Curation.clusterLabels(spark, big, maxIter = 1))

@@ -200,7 +200,7 @@ class Round15Spec extends AnyFunSuite {
     val (dh0, ph0) = (dh(), ph())
     val tmp = java.nio.file.Files.createTempDirectory("mm-idx").toString
     Multimodal.saveMmIndex(spark, dir, tmp)
-    Multimodal.release(spark, Some(dir))
+    graft.SessionArtifacts.release(spark, Some(dir), Some(Multimodal.Owner))
     Multimodal.loadMmIndex(spark, dir, tmp)
     assert(dh() == dh0, "reloaded pixel artifact changed the dhash")
     assert(ph() == ph0, "reloaded pixel artifact changed the phash")

@@ -36,7 +36,7 @@ class Round18Spec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
 
     // fresh full rebuild over base+batch in one pass
-    Similarity.release(spark, Some(dir))
+    graft.SessionArtifacts.release(spark, Some(dir), Some(Similarity.Owner))
     val (_, assignedFull, radiiFull) = Similarity.ivfIndex(spark, dir)
     val annFull = Similarity.simIvfAnn(spark, dir)
       .collect().map(_.toSeq).toSet
@@ -97,7 +97,7 @@ class Round18Spec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
 
     // fresh full rebuild over base+batch, persisted for the raw compare
-    Dedup.release(spark, Some(dir))
+    graft.SessionArtifacts.release(spark, Some(dir), Some(Dedup.Owner))
     val tmpFull = java.nio.file.Files.createTempDirectory("dedup_full").toString
     Dedup.saveDedupIndex(spark, dir, tmpFull)
     val skFull = spark.read.parquet(s"$tmpFull/sketches")
