@@ -464,6 +464,12 @@ object Bench {
       allRows.map(n => n -> mutable.ArrayBuffer.empty[Double]): _*)
     val loadBuf = mutable.LinkedHashMap(
       allRows.map(n => n -> mutable.ArrayBuffer.empty[Double]): _*)
+    // per row, summed over its timed reps: classes compiled (codegen
+    // cache misses) and nanoseconds spent compiling them
+    val codegenBuf = mutable.LinkedHashMap(allRows.map(n => n -> (0L, 0L)): _*)
+    def codegenNow: (Long, Long) =
+      (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+        org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
     // One timed rep of one row — shared by the interleaved passes and the
     // dispersion tiebreak below. `recordFailure=false` (tiebreak only)
     // logs a throw without appending -1: the tiebreak refines timing, it
@@ -471,6 +477,7 @@ object Bench {
     def runRep(name: String, recordFailure: Boolean = true): Unit = {
       resetBeforeRep.get(name).foreach(_.apply())
       val la = loadavg1 // sampled BEFORE the rep (diagnosable artifact)
+      val (compiles0, compileNs0) = codegenNow
       val sample =
         try {
           familyBuild.get(name) match {
@@ -507,6 +514,10 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
         }
+      val (compiles1, compileNs1) = codegenNow
+      val (compiles, compileNs) = codegenBuf(name)
+      codegenBuf(name) =
+        (compiles + compiles1 - compiles0, compileNs + compileNs1 - compileNs0)
       if (sample >= 0 || recordFailure) {
         loadBuf(name) += la
         sampleBuf(name) += sample
@@ -871,6 +882,9 @@ object Bench {
           "\"" + k + "\":{\"read\":" + mb(r) + ",\"write\":" + mb(w) +
             ",\"spill\":" + mb(sp) + "}"
         }.mkString("{", ",", "}")
+      val codegenPart = "," + "\"codegen\":" + codegenBuf.map { case (k, (n, ns)) =>
+        "\"" + k + "\":{\"compiles\":" + n + ",\"compile_s\":" + fmt(ns / 1e9) + "}"
+      }.mkString("{", ",", "}")
       val tiebreakPart = "\"tiebreak_rows\":" +
         tiebroken.toSeq.map("\"" + _ + "\"").mkString("[", ",", "]")
       // Sidecar self-description for the commit gate (r17 judge #2): a
@@ -893,7 +907,7 @@ object Bench {
           .map { case (k, ss) =>
             "\"" + k + "\":" + ss.map(fmt).mkString("[", ",", "]") }
           .mkString("{", ",", "}")
-      val side = s"""{"samples":$samplesJson,"medians":$mediansJson,"loadavg":$loadJson,"reps":$reps,"interleaved":true,"shuffled_passes":true,$tiebreakPart,"headline_stat":"min"$provenancePart$nogcPart,"cal_st_sec":${fmt(calSt)},"cal_mt_sec":${fmt(calMt)},"cal_threads":$cpus$oraclePart$ratioMapPart$vsbMapPart$shufflePart,"sf":"$sfDir"}"""
+      val side = s"""{"samples":$samplesJson,"medians":$mediansJson,"loadavg":$loadJson,"reps":$reps,"interleaved":true,"shuffled_passes":true,$tiebreakPart,"headline_stat":"min"$provenancePart$nogcPart,"cal_st_sec":${fmt(calSt)},"cal_mt_sec":${fmt(calMt)},"cal_threads":$cpus$oraclePart$ratioMapPart$vsbMapPart$shufflePart$codegenPart,"sf":"$sfDir"}"""
       val w = new java.io.PrintWriter("bench_samples.json"); w.println(side); w.close()
     } catch { case e: Exception =>
       System.err.println(s"[bench] sidecar write failed: ${e.getMessage}")

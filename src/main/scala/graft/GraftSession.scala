@@ -27,15 +27,35 @@ import org.apache.spark.sql.SparkSession
   *    current generation) — normalizeEventTs branches on the physical
   *    type, so both encodings work under one session contract.
   *
-  * One more setting belongs to the contract but cannot go through `tune`,
-  * because it must be in place when the session is BUILT: [[buildConf]],
-  * the no-fork `file:` filesystem ([[graft.io.NoForkLocalFileSystem]] and
-  * its FileContext twin [[graft.io.NoForkLocalFs]]). Hadoop's filesystem
+  * The rest of the contract cannot go through `tune`, because it must be
+  * in place when the session is BUILT: [[buildConf]]. It holds the no-fork
+  * `file:` filesystem ([[graft.io.NoForkLocalFileSystem]] and its
+  * FileContext twin [[graft.io.NoForkLocalFs]]); Hadoop's filesystem
   * cache keeps the first `file:` instance a JVM creates, so a later
-  * `spark.conf.set` never reaches it. Every builder the repo owns
-  * (`local`, `Main`, the test harness) passes `buildConf`.
+  * `spark.conf.set` never reaches it. It also holds the codegen cache
+  * size ([[CodegenCacheEntries]]), which Spark fixes, JVM-wide, at the
+  * first code generation. Every builder the repo owns (`local`, `Main`,
+  * the test harness) passes `buildConf`.
   */
 object GraftSession {
+
+  /** Size of Spark's codegen cache, which keeps compiled generated
+    * classes keyed by their source. Spark's default is 100, but one
+    * cycle of the corpus index ingest, consumers and round loops (sf0.03)
+    * generates about 290 distinct classes, touched in the same order
+    * every cycle. At 100 the LRU cache evicted each class before its
+    * reuse, so every cycle compiled everything again: about 336 Janino
+    * compiles, 6-6.5 s of compile time in a 13 s cycle. 1024 holds that
+    * working set three times over; the retained classes cost about 5 MB
+    * of heap. The cache is JVM-wide, and Spark sizes it from the active
+    * session's conf at the first code generation in the JVM
+    * (`spark.sql.codegen.cache.maxEntries` is a static conf), so it is
+    * set here, when the session is built; later sessions in the same
+    * JVM share that cache. Per-run values such as the pipeline's `asOf`
+    * enter plans as [[graft.plans.BoundValue]]s, so daily runs reuse
+    * their classes instead of filling the cache.
+    */
+  val CodegenCacheEntries = 1024
 
   /** Build-time confs.
     *
@@ -49,6 +69,14 @@ object GraftSession {
     *    every run's plans and task data in driver heap, and nothing in
     *    the library reads them. `spark.sql.ui.retainedExecutions` is a
     *    static SQL conf, so it must be set when the session is built.
+    *  - Spark's codegen cache holds [[CodegenCacheEntries]] compiled
+    *    classes instead of 100 (see there).
+    *  - Generated whole-stage classes are not named after their stage id.
+    *    AQE numbers codegen stages in the order their query stages
+    *    materialize, so the same stage got a different class name, hence
+    *    different source and a fresh compile, from one run to the next:
+    *    26-34 of a corpus pass's ~240 classes compiled again on every
+    *    pass. Plans and `explain` output still show the ids.
     */
   val buildConf: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" ->
@@ -57,7 +85,9 @@ object GraftSession {
       classOf[graft.io.NoForkLocalFs].getName,
     "spark.sql.ui.retainedExecutions" -> "1",
     "spark.ui.retainedJobs" -> "1",
-    "spark.ui.retainedStages" -> "1")
+    "spark.ui.retainedStages" -> "1",
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.sql.codegen.useIdInClassName" -> "false")
 
   /** Stable per-session identity for [[SessionArtifacts]]' keys.
     * `System.identityHashCode(spark)` (the old key) can COLLIDE: after a

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.BoundValue
+
 /** The reference's match-cleaning semantics (dags/projectde_dag.py:61-131)
   * as pure Column expressions over the `matches_raw` shape
   * (FIXTURES.md §A): junk filters, day-name lookup, year-inferred date
@@ -47,8 +49,11 @@ object MatchExprs {
     val monTok = element_at(split(rest, " "), 2)
     // X5 year inference: Jan–Jul → season-end year (asOf's), else prior
     // (ref hardcodes 2025/2024 at dags/projectde_dag.py:82-83).
-    val year = when(monTok.isin(monthsH1: _*), lit(asOf.getYear))
-      .otherwise(lit(asOf.getYear - 1))
+    // `asOf` and the years derived from it change every run, so they
+    // enter the plan as bound values: inlined literals would make each
+    // run generate, and compile, its own code.
+    val year = when(monTok.isin(monthsH1: _*), BoundValue(asOf.getYear))
+      .otherwise(BoundValue(asOf.getYear - 1))
     val scoreArr = split(col("score"), " - ")
     val cleaned = raw
       // F1 junk rows (ref :46-47)
@@ -63,13 +68,15 @@ object MatchExprs {
       // daily 09:00 run drops match_date >= now-1day, and yesterday's
       // date-at-midnight sorts before yesterday-09:00 — so the most recent
       // full day stays in). `< asOf`, not `< asOf-1day`.
-      .filter(col("match_date") < lit(asOf))
+      .filter(col("match_date") < BoundValue(asOf))
       // X2 null-safe score split (ref :100-102)
       .withColumn("home_score",
         when(size(scoreArr) >= 2, expr("try_cast(trim(split(score, ' - ')[0]) AS INT)")))
       .withColumn("away_score",
         when(size(scoreArr) >= 2, expr("try_cast(trim(split(score, ' - ')[1]) AS INT)")))
-      // X8 batch timestamp rendered in Asia/Jakarta (ref :120-122)
+      // X8 batch timestamp rendered in Asia/Jakarta (ref :120-122). It
+      // folds to a string literal, which generated code already reads
+      // through a reference, so `runTs` needs no bound value.
       .withColumn("created_at",
         date_format(from_utc_timestamp(lit(runTs).cast("timestamp"),
           "Asia/Jakarta"), "yyyy-MM-dd HH:mm:ss"))
