@@ -53,5 +53,5 @@ object SparkEntry {
     * the result — exactly what Round16Spec's hygiene tests do.
     */
   val callerOwnedCheckpoints: Set[String] =
-    Set("mm_audio_neardup", "dq_k_anonymize")
+    Set("dq_k_anonymize")
 }

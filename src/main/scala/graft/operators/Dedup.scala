@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.SessionArtifacts
@@ -21,8 +22,9 @@ import graft.functions.TextFunctions._
   *    100 TB. It exists to validate the LSH variants below.
   *  - MINHASH+LSH is the scale path: signatures are computed map-side per
   *    row (higher-order functions, no explode), only (doc, band, key)
-  *    tuples shuffle, and the band bucket-join touches candidate pairs
-  *    only. Tuning k/bands trades recall vs cost without changing shape.
+  *    tuples shuffle, and the band-bucket kernel (one shuffle, one walk
+  *    per bucket) touches candidate pairs only. Tuning k/bands trades
+  *    recall vs cost without changing shape.
   *  - SIMHASH likewise: one 64-bit-string signature per doc map-side, then
   *    16-char-prefix band buckets; hamming verify on candidates only.
   *  - EMBEDDING cosine all-pairs is the baseline for Similarity's
@@ -196,10 +198,21 @@ object Dedup {
         .persist(StorageLevel.MEMORY_AND_DISK)
     }(SessionArtifacts.unpersist)
 
+  /** Anchor-star hot-bucket cap, interpolated into every oracle that
+    * mirrors the banded join (mm_dhash_neardup) so the two sides cannot
+    * drift — a bucket crossing the cap switches BOTH engines to
+    * anchor-star pairs.
+    */
+  private[graft] val BandBucketCap = 64
+
   /** Candidate pairs from a banded signature relation, with a hot-bucket
-    * guard. `bands` must have columns (doc_id, `payload`, band, key);
-    * returns (da, db, sa, sb) with da < db, one row PER SHARED BAND (see
-    * the dedup note at the end — callers dedupe after verification).
+    * guard. `bands` must have columns (doc_id, `payload`, band, key), with
+    * a doc_id at most once per (band, key); returns (da, db, sa, sb) with
+    * da < db, one row PER SHARED BAND, in no order (callers dedupe after
+    * verification). Rows with a null doc_id, band or key pair with
+    * nothing, as in an equi-join. Any orderable doc_id type, any key type
+    * and any payload type work (minhash arrays, simhash/dhash strings,
+    * the audio bands' long keys and payloads).
     *
     * The guard: an LSH band join is quadratic WITHIN a bucket, and a real
     * crawl has giant near-identical clusters (site boilerplate) that drop
@@ -212,47 +225,109 @@ object Dedup {
     * outcome (keep one representative). Buckets ≤ cap stay exhaustive, so
     * results are IDENTICAL to the unguarded join whenever no bucket
     * exceeds cap (observed max bucket on the test corpora is 16 at sf0.1;
-    * DedupSpec pins both the parity and the bound).
+    * DedupSpec and HotBucketSpec pin the parity and the bound).
+    *
+    * The kernel is ONE shuffle and one streaming pass: hash-partition the
+    * rows by (band, key), sort each partition by (band, key, doc_id), and
+    * walk every bucket once ([[BucketPairs]]). Memory is O(cap) per task:
+    * a bucket's first `cap` rows are buffered, and a longer bucket streams
+    * its remaining rows straight to star pairs. It is a `mapPartitions`
+    * over `Encoders.row` rather than `groupByKey(...).flatMapSortedGroups`
+    * because the key and payload types vary per caller: a row encoder
+    * takes the input schema as it comes, with no typed key to declare,
+    * and the stage stays a lazy DataFrame (no job while the plan is
+    * built). One shuffle matters because AQE runs every exchange as a
+    * job of its own: a stats aggregate joined back to the bands, a
+    * self-join and an anchor join ran 42-43 jobs per index build at
+    * sf0.001 where this kernel runs 11 (IndexBuildJobsSpec).
     *
     * No persists in here: `bands` should derive from a cached signature
     * frame (the sketch is the expensive part; the explode is marginal),
-    * and the (band, key) exchange under `stats` and under each join side
-    * is identical, so Spark's ReuseExchange computes it once. Caching the
-    * exploded/sized intermediates instead costs more in materialization
-    * than the explode saves (measured: 8.1 s vs 4 s at sf0.1).
+    * and the kernel reads it once.
     */
-  /** Anchor-star hot-bucket cap, interpolated into every oracle that
-    * mirrors the banded join (mm_dhash_neardup) so the two sides cannot
-    * drift — a bucket crossing the cap switches BOTH engines to
-    * anchor-star pairs.
-    */
-  private[graft] val BandBucketCap = 64
-
   private[operators] def bandedCandidates(bands: DataFrame, payload: String,
       cap: Int = BandBucketCap): DataFrame = {
-    val stats = bands.groupBy(col("band"), col("key"))
-      .agg(count(lit(1)).as("bn"), min(col("doc_id")).as("anchor"))
-    // same shuffle key (band, key) as the pair joins below
-    val sized = bands.join(stats, Seq("band", "key"))
-    val small = sized.filter(col("bn") <= cap)
-    val smallPairs = small.as("a").join(small.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
-        col(s"a.$payload").as("sa"), col(s"b.$payload").as("sb"))
-    val big = sized.filter(col("bn") > cap)
-    val anchors = big.filter(col("doc_id") === col("anchor"))
-      .select(col("band"), col("key"), col("doc_id").as("da"),
-        col(payload).as("sa"))
-    val bigPairs = big.filter(col("doc_id") =!= col("anchor"))
-      .join(anchors, Seq("band", "key"))
-      .select(col("da"), col("doc_id").as("db"), col("sa"),
-        col(payload).as("sb"))
-    // NOT distinct: the same pair surfaces from every band both docs share.
-    // Callers compute their verify metric FIRST (cheap, map-side) and
-    // dedupe on the small (da, db, metric) projection — so the distinct
-    // shuffle never carries signature payloads.
-    smallPairs.unionByName(bigPairs)
+    require(cap >= 1, s"hot-bucket cap must be positive: $cap")
+    val in = bands.select(col("doc_id"), col(payload), col("band"), col("key"))
+      .filter(col("doc_id").isNotNull && col("band").isNotNull &&
+        col("key").isNotNull)
+    val Array(id, pay, _, _) = in.schema.fields
+    val out = StructType(Seq(
+      StructField("da", id.dataType, nullable = false),
+      StructField("db", id.dataType, nullable = false),
+      StructField("sa", pay.dataType, pay.nullable),
+      StructField("sb", pay.dataType, pay.nullable)))
+    in.repartition(col("band"), col("key"))
+      .sortWithinPartitions(col("band"), col("key"), col("doc_id"))
+      .mapPartitions((rows: Iterator[Row]) => new BucketPairs(rows, cap))(
+        Encoders.row(out))
+  }
+
+  /** The streaming walk behind [[bandedCandidates]] over rows
+    * (doc_id, payload, band, key) sorted by (band, key, doc_id): per
+    * bucket, up to `cap` rows give every pair with a.doc_id < b.doc_id;
+    * past `cap`, each row pairs with the bucket's first row (its minimum
+    * doc_id). Holds at most `cap` rows of one bucket at a time.
+    */
+  private final class BucketPairs(rows: Iterator[Row], cap: Int)
+      extends Iterator[Row] {
+    private val in = rows.buffered
+    private var buf = new Array[Row](math.min(cap, 16)) // grows up to cap
+    private var n = 0          // rows of the current bucket held in buf
+    private var star = false   // the current bucket is longer than cap
+    private var i = 0          // next pair (buf(i), buf(j)); star: (buf(0), buf(i))
+    private var j = 1
+    private var nextOut: Row = null
+
+    private def sameKey(x: Any, y: Any): Boolean = (x, y) match {
+      case (a: Array[Byte], b: Array[Byte]) => java.util.Arrays.equals(a, b)
+      case _ => x == y
+    }
+    private def sameBucket(a: Row, b: Row): Boolean =
+      sameKey(a.get(2), b.get(2)) && sameKey(a.get(3), b.get(3))
+    private def pair(a: Row, b: Row): Row =
+      Row(a.get(0), b.get(0), a.get(1), b.get(1))
+
+    /** Read the next bucket's first `cap` rows; star mode if it has more. */
+    private def loadBucket(): Boolean = in.hasNext && {
+      buf(0) = in.next(); n = 1
+      while (n < cap && in.hasNext && sameBucket(in.head, buf(0))) {
+        if (n == buf.length)
+          buf = java.util.Arrays.copyOf(buf, math.min(cap.toLong, 2L * n).toInt)
+        buf(n) = in.next(); n += 1
+      }
+      star = in.hasNext && sameBucket(in.head, buf(0))
+      i = if (star) 1 else 0
+      j = 1
+      true
+    }
+
+    /** The current bucket's next pair, or null when it has none left. */
+    private def step(): Row =
+      if (!star) {
+        if (i >= n - 1) null
+        else {
+          val p = pair(buf(i), buf(j))
+          j += 1
+          if (j == n) { i += 1; j = i + 1 }
+          p
+        }
+      } else if (i < n) { i += 1; pair(buf(0), buf(i - 1)) }
+      else if (in.hasNext && sameBucket(in.head, buf(0))) pair(buf(0), in.next())
+      else null
+
+    override def hasNext: Boolean = {
+      while (nextOut == null && (n > 0 || loadBucket())) {
+        nextOut = step()
+        if (nextOut == null) n = 0
+      }
+      nextOut != null
+    }
+
+    override def next(): Row = {
+      if (!hasNext) throw new NoSuchElementException("no more pairs")
+      val r = nextOut; nextOut = null; r
+    }
   }
 
   /** documents → (doc_id, sh: array<string>) DISTINCT word-3-gram shingle
@@ -624,19 +699,19 @@ object Dedup {
   }
 
   /** BOTH verified candidate-pair indexes in ONE persisted frame
-    * (kind: 'm' | 's', da, db, metric): the two band-join DAGs share the
+    * (kind: 'm' | 's', da, db, metric): the two band-bucket kernels share the
     * cached sketch frame and materialize in a single job, so their stages
     * schedule concurrently instead of back-to-back — one cache entry, one
     * count action, roughly the wall-clock of the slower of the two.
     */
   /** MinHash band relation of a sketch frame: (doc_id, sig, band, key). */
-  private def mBandsOf(sk: DataFrame): DataFrame =
+  private[operators] def mBandsOf(sk: DataFrame): DataFrame =
     sk.select(col("doc_id"), col("sig"),
         explode(expr("sequence(0, 3)")).as("band"))
       .withColumn("key", expr("concat(sig[band * 2], sig[band * 2 + 1])"))
 
   /** SimHash band relation of a sketch frame: (doc_id, simhash, band, key). */
-  private def sBandsOf(sk: DataFrame): DataFrame =
+  private[operators] def sBandsOf(sk: DataFrame): DataFrame =
     sk.select(col("doc_id"), col("simhash"),
         explode(expr("sequence(0, 3)")).as("band"))
       .withColumn("key", expr("substr(simhash, 1 + band * 16, 16)"))
@@ -669,7 +744,7 @@ object Dedup {
       val sk = sketches(spark, dir)
       val p = pairsFromBands(mBandsOf(sk), sBandsOf(sk), cap)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      p.count() // materialize: the candidate join runs exactly once
+      p.count() // materialize: the candidate kernels run exactly once
       p
     }(SessionArtifacts.unpersist)
 
