@@ -1,83 +1,62 @@
 package graft
 
-/** Benchmark main (driver contract): runs the headline queries on
-  * SPARK_GRAFT_SF_DIR at local[N], prints ONE JSON line.
+import scala.collection.immutable.ListMap
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.JsonNode
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.operators.{CorpusPipeline, Curation, Dedup, Multimodal, Similarity}
+
+/** Benchmark main: times every bench row on one scale-factor directory,
+  * writes the full record to `bench_samples.json` in the working
+  * directory, and prints a one-line JSON summary as the last line of
+  * stdout.
   *
-  * Measurement notes:
-  *  - Results go to the `noop` sink — full materialization of every
-  *    column (a bare .count() would let Catalyst prune the work to a
-  *    row count). One tiny warmup action absorbs session/codegen
-  *    start-up.
-  *  - LOAD ROBUSTNESS: every query runs REPS (default 3) times and the
-  *    reported per-query number on stdout is the MIN of its reps; the
-  *    median and all raw samples land in bench_samples.json next to the
-  *    repo root (the stdout line itself is kept under ~2000 chars so
-  *    harnesses that keep only an output tail still capture it whole).
-  *    Min, not median: reps are INTERLEAVED — the whole suite runs
-  *    round-robin, REPS passes — so a transient load burst poisons at
-  *    most one pass, but the r7 artifact proved a SUSTAINED load window
-  *    can cover 2 of 3 passes, and then the median is poisoned too
-  *    (recorded headline 283 s vs 50 s judge-idle; the per-query mins in
-  *    the sidecar matched the idle rerun almost exactly). The min of
-  *    interleaved reps is the best load-free estimate computable from a
-  *    busy host, and the driver's 2×-of-baseline gate reads the
-  *    headline, so the headline must be the load-robust number. The
-  *    sidecar keeps per-rep samples + /proc/loadavg (1-min) before each
-  *    rep so a poisoned pass stays diagnosable from the artifact.
-  *    Since r17 (r16 judge #2) three more defenses close the gap between
-  *    the full-run headline and a quiet-host rerun: (a) the index-family
-  *    DAGs get one UNTIMED warmup build before the passes, so rep 1 no
-  *    longer pays the first-ever codegen+JIT constant (r16 measured:
-  *    dedup build 9.06 s cold vs 2.93 s warm on identical code); (b) each
-  *    pass runs the query rows in a deterministic per-pass PERMUTATION
-  *    (index rows and the two memo-builders keep their lead positions),
-  *    so a row's predecessor — and its GC/heap debris — differs every
-  *    pass and the min can escape positional contamination; (c) rows
-  *    whose samples still spread >1.3x after the passes get extra
-  *    TIEBREAK reps (worst spread first, SPARK_GRAFT_TIEBREAK_S wall
-  *    budget, default 150 s; the index family re-reps as a unit so the
-  *    composite row keeps whole triples).
-  *  - The Dedup signature/candidate index build is ingest-time cost,
-  *    not query cost, so it is its own "index_build" row and the dedup
-  *    query rows measure post-index query time. Since r8 it runs REPS
-  *    times through the same interleave (evicting the sketch + pair
-  *    caches before each rep, then rebuilding — placed FIRST in the
-  *    pass so the dedup/corpus rows that follow read a built index).
-  *    The r5→r7 "growth" (10.4 s → 18.6 s judge-idle) was a one-shot-
-  *    timing artifact, not an engine change: the first-ever execution
-  *    pays several seconds of whole-stage-codegen + JIT warmup for the
-  *    two band-join DAGs (measured idle: 9.2 s cold first run vs 4.3 s
-  *    per evicted-and-rebuilt rep at sf0.1), and a one-shot number
-  *    cannot separate that constant (or a load burst) from real cost.
-  *    Since r12 the row builds THREE indexes (Dedup signatures/pairs +
-  *    the Similarity IVF corpus index + the Multimodal dHash sketch —
-  *    the latter two moved here from the per-query rows so queries
-  *    measure post-ingest cost), so r12's ~7 s vs r10's ~3.2 s is a
-  *    scope change, not a regression: the dedup/sim/mm query rows got
-  *    correspondingly faster. Since r14 (r13 judge #2) the families are
-  *    TIMED SEPARATELY (`index_build_dedup` / `_ivf` / `_dhash`) and
-  *    `index_build` is emitted as their per-rep sum, so the next
-  *    build-time regression names its family.
-  *  - Persisted-index cold leg (r13 judge #3): after the timed passes,
-  *    the dedup + IVF indexes are written to parquet once, then per rep
-  *    the caches drop, `index_load` times the restore and
-  *    `dedup_minhash_lsh_cold` / `sim_ivf_ann_cold` time consumers over
-  *    the RELOADED artifact — proving restart-path query cost matches
-  *    the memoized path (no corpus re-shingle, no re-assignment).
-  *  - Queries that memoize their own result (corpus_clean) get that
-  *    memo evicted before every rep — each rep measures the pipeline,
-  *    not a cache read (the upstream signature index stays, it has its
-  *    own row).
-  *  - A failed rep is emitted as -1 in samples; a query with any failed
-  *    rep reports -1 and is listed in "failed" (never summed into
-  *    total) — a broken query must not read as a fast pass.
-  *  - "rss_mb" (driver VmRSS) and "gc_ms" (cumulative JVM GC time) are
-  *    emitted so a load-poisoned run is diagnosable from the artifact.
+  * Environment:
+  *  - `SPARK_GRAFT_SF_DIR`: the tables to read;
+  *  - `SPARK_GRAFT_CPUS`: the `local[N]` core count and the shuffle
+  *    partition count (default 32);
+  *  - `SPARK_GRAFT_BENCH_REPS`: timed passes over the suite (default 3);
+  *  - `SPARK_GRAFT_BENCH_ONLY`: a comma list of rows to run instead of
+  *    the whole suite; unknown names fail fast;
+  *  - `SPARK_GRAFT_TIEBREAK_S`: wall budget of the tiebreak reps
+  *    (default 150 s);
+  *  - `SPARK_GRAFT_SHUFFLE_BUDGET_S`: wall budget of the shuffle pass
+  *    (default 90 s).
   *
-  * When tools/oracle_times.json carries DuckDB wall-times for this sf
-  * (recorded on the same host via tools/time_oracle.py), the line also
-  * emits per-query "oracle" seconds and "spark_vs_duckdb" ratios — the
-  * single-node-baseline comparison made computable.
+  * Rows are the [[headline]] query keys and [[prodRows]], each written to
+  * the `noop` sink (which materializes every column), the index family
+  * builds ([[indexFamilyRows]]) with their per-rep sum [[indexBuildRow]],
+  * and the persisted-index rows ([[indexColdRows]]).
+  *
+  * How a run goes:
+  *  - A fixed CPU calibration ([[cpuCalibration]]) and one untimed build
+  *    of each index family absorb host drift and first-run code
+  *    generation.
+  *  - The timed passes are interleaved: each runs the whole suite once,
+  *    the index families first, then the two rows that build memos other
+  *    rows read, then every other row in a per-pass seeded permutation.
+  *    Rows that memoize their own result have it released before each
+  *    rep. A row's headline number is the minimum of its reps, the
+  *    estimate least touched by load bursts; the sidecar keeps the
+  *    median, every sample and the 1-minute load average before each.
+  *  - Rows whose samples spread more than 1.3x get tiebreak reps within
+  *    the tiebreak budget, widest spread first.
+  *  - A failed rep records -1. A row with a failed rep reports -1, is
+  *    listed in `failed`, and is left out of the total.
+  *  - Full runs time two index builds per family without the collection
+  *    that precedes a timed build (`index_nogc`). The persisted-index
+  *    leg runs unless a subset leaves out all of its rows.
+  *  - One untimed shuffle pass re-runs each row under a stage-metrics
+  *    listener, within its budget, for the sidecar's `shuffle_mb`.
+  *  - When `BASELINE_BENCH.json` records this scale factor, each row is
+  *    compared with it after dividing out the calibration ratio
+  *    (`vsb_*`), so host drift cancels. When `tools/oracle_times.json`
+  *    has DuckDB times for it, so are the DuckDB ratios (`svd_*`).
   */
 object Bench {
 
@@ -216,35 +195,25 @@ object Bench {
     "sim_ivf_incremental",
   )
 
-  /** Ingest-time rows: evict + rebuild each index FAMILY separately
-    * (r13 judge #2 — the former single `index_build` row covered 4+
-    * index families, so a regression was unattributable). They run FIRST
-    * in each interleaved pass, in this order, so every dedup/sim/mm row
-    * after them reads a freshly built index (their own timings stay
-    * post-index query cost, the thing a long-lived-corpus user
-    * observes). The composite `index_build` row is emitted as the
-    * per-rep SUM of the family rows — same scope as the old row, so the
-    * committed baseline stays comparable.
+  /** Ingest-time rows, one per index family. They lead every pass, in
+    * this order, so the rows after them read a built index; the
+    * composite [[indexBuildRow]] is emitted as their per-rep sum.
     */
   val indexBuildRow = "index_build"
   val indexFamilyRows: Seq[String] =
     Seq("index_build_dedup", "index_build_ivf", "index_build_dhash")
 
-  /** PRODUCTION approx rows (r14 judge #2): the sketch-only forms of the
-    * three 100 TB approx swaps. Their contract twins
-    * (`dq_uniqueness_approx` …) pay the exact side to prove the error
-    * bound and so read SLOWER than the exact twins; these rows price the
-    * path a deployment actually runs. Sketch outputs are
-    * engine-specific, so they are BENCH rows with Round15Spec envelopes,
-    * not oracle-hashed query keys (the driver contract requires every
-    * queries() key to be oracle-checkable).
+  /** Production forms of the three approx swaps. Their contract twins
+    * (`dq_uniqueness_approx` …) also pay the exact side to check the
+    * error bound; these rows price the sketch-only path. Sketch outputs
+    * are engine-specific, so these are bench rows, not oracle-hashed
+    * query keys.
     */
   val prodRows: Seq[String] = Seq("dq_uniqueness_approx_prod",
     "ev_rfm_approx_prod", "text_distinct_n_approx_prod")
 
   private[graft] val prodBodies
-      : Map[String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame] = Map(
+      : Map[String, (SparkSession, String) => DataFrame] = Map(
     "dq_uniqueness_approx_prod" ->
       ((s, d) => graft.operators.Profiling.dqUniquenessApproxProd(s, d)),
     "ev_rfm_approx_prod" ->
@@ -253,57 +222,125 @@ object Bench {
       ((s, d) => graft.operators.TextAnalysis.textDistinctNApproxProd(s, d)),
   )
 
-  /** Persisted-index COLD-path rows (r13 judge #3): after the timed
-    * passes, the dedup + IVF indexes are saved to parquet once, then per
-    * rep the session caches are dropped, `index_load` times the restore
-    * (read parquet + re-pin, zero corpus passes), and the two `_cold`
-    * rows time an LSH consumer and an ANN consumer against the RELOADED
-    * index — the number that proves nobody re-shingles a 100 TB corpus
-    * after a restart. Expected within noise of the memoized-path rows.
+  /** Persisted-index rows: after the timed passes the dedup and IVF
+    * indexes are saved once; each rep then releases them, `index_load`
+    * times the restore, and the two `_cold` rows time one consumer of
+    * each reloaded index.
     */
   val indexColdRows: Seq[String] =
     Seq("index_load", "dedup_minhash_lsh_cold", "sim_ivf_ann_cold")
 
-  /** Committed per-query baseline (BASELINE_BENCH.json at the repo root:
-    * r12-final mins + the CPU calibration they were measured under). The
-    * bench emits calibration-NORMALIZED ratios against it, so the 2×
-    * gate compares engine plans, not host drift — the r10→r12 lesson
-    * where identical binaries measured 1.8× apart on the same box
-    * (r12 judge #3). Returns (baseline cal_st_sec, per-query seconds);
-    * empty when the file is missing or records a different sf.
+  private val familyBuilds: Map[String, (SparkSession, String) => Unit] =
+    Map(
+      "index_build_dedup" -> ((s, d) => Dedup.buildIndexes(s, d)),
+      "index_build_ivf" -> ((s, d) => Similarity.buildIvfIndex(s, d)),
+      "index_build_dhash" -> ((s, d) => Multimodal.buildDhashSketch(s, d)))
+
+  /** Artifact owners released before each rep of a row that memoizes its
+    * own result, so that every rep does the row's work.
     */
-  private def baselineBench(sfDir: String): (Double, Map[String, Double]) = {
-    val f = new java.io.File("BASELINE_BENCH.json")
-    if (!f.exists()) return (0.0, Map.empty)
-    try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-      if (root.get("sf") == null ||
-          root.get("sf").asText != new java.io.File(sfDir).getName)
-        return (0.0, Map.empty)
-      val cal = root.get("cal_st_sec").asDouble
-      val qs = root.get("queries")
-      import scala.jdk.CollectionConverters._
-      (cal, qs.fieldNames().asScala
-        .map(k => k -> qs.get(k).asDouble).toMap)
-    } catch { case _: Exception => (0.0, Map.empty) }
+  private val resetOwners: Map[String, String] = Map(
+    "index_build_dedup" -> Dedup.Owner,
+    "index_build_ivf" -> Similarity.Owner,
+    "index_build_dhash" -> Multimodal.Owner,
+    "corpus_clean" -> CorpusPipeline.Owner,
+    // reps time the propagation loop, not a read of the memoized labels
+    "cur_dedup_clusters" -> Curation.Owner)
+
+  /** The frame of a query row: a production body or a query key. */
+  private[graft] def queryFrame(
+      name: String): (SparkSession, String) => DataFrame =
+    prodBodies.getOrElse(name, SparkEntry.queries(name))
+
+  /** The work of one row: its index family build, or its frame written
+    * to the `noop` sink.
+    */
+  private def runRow(spark: SparkSession, sfDir: String, name: String): Unit =
+    familyBuilds.get(name) match {
+      case Some(build) => build(spark, sfDir)
+      case None => queryFrame(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+    }
+
+  private def r2(v: Double): Double = math.round(v * 100) / 100.0
+  private def r3(v: Double): Double = math.round(v * 1e3) / 1e3
+  private def minOf(samples: Seq[Double]): Double =
+    if (samples.contains(-1.0)) -1.0 else samples.min
+  private def medianOf(samples: Seq[Double]): Double =
+    if (samples.contains(-1.0)) -1.0
+    else samples.sorted.apply(samples.length / 2)
+
+  /** Longest stdout summary line: a harness that keeps only the last
+    * 2,000 characters of stdout and stderr must capture it whole, with
+    * room for the build tool's footer after it.
+    */
+  private[graft] val LineLimit = 1850
+
+  /** The stdout summary line. `value` and `value_median` total the rows'
+    * minima and medians, failed rows and the index family rows (counted
+    * once, through the composite row) left out; `queries` holds each
+    * row's minimum and `failed` the failed rows. Returns the first of
+    * these rungs within [[LineLimit]], else the last: everything;
+    * without `diagnostics`; row times to two decimals without `reps` and
+    * `ratios`; only the 40 slowest rows and every failed row, with the
+    * count of the others as `queries_elided`.
+    */
+  private[graft] def summaryLine(results: Seq[(String, Seq[Double])],
+      reps: Int, diagnostics: ListMap[String, Any],
+      ratios: ListMap[String, Any], vsBaseline: ListMap[String, Any],
+      sf: String): String = {
+    val mins = results.map { case (k, ss) => k -> minOf(ss) }
+    def total(stat: Seq[Double] => Double): Double = r3(results
+      .collect { case (k, ss) if !familyBuilds.contains(k) => stat(ss) }
+      .filter(_ >= 0).sum)
+    val failed = mins.collect { case (k, v) if v < 0 => k }
+    def line(queries: Seq[(String, Double)], round: Double => Double,
+        middle: ListMap[String, Any], extras: ListMap[String, Any]) =
+      Json.mapper.writeValueAsString(ListMap[String, Any](
+        "metric" -> "total", "value" -> total(minOf),
+        "value_median" -> total(medianOf), "unit" -> "sec",
+        "queries" -> ListMap.from(queries.map { case (k, v) => k -> round(v) })) ++
+        middle ++ ListMap("failed" -> failed) ++ extras ++ ListMap("sf" -> sf))
+    val slowest = mins.filter(_._2 >= 0).sortBy(-_._2).take(40).map(_._1).toSet
+    val kept = mins.filter { case (k, v) => v < 0 || slowest(k) }
+    val withReps = ListMap[String, Any]("reps" -> reps)
+    val rungs = Seq(
+      line(mins, r3, withReps, diagnostics ++ ratios ++ vsBaseline),
+      line(mins, r3, withReps, ratios ++ vsBaseline),
+      line(mins, r2, ListMap.empty, vsBaseline),
+      line(kept, r2, ListMap("queries_elided" -> (mins.size - kept.size)),
+        vsBaseline))
+    rungs.find(_.length <= LineLimit).getOrElse(rungs.last)
   }
 
-  private def oracleTimes(sfDir: String): Map[String, Double] = {
-    val f = new java.io.File("tools/oracle_times.json")
-    if (!f.exists()) return Map.empty
-    try {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-      val sf = root.get(new java.io.File(sfDir).getName)
-      if (sf == null) Map.empty
-      else headline.flatMap { q =>
-        Option(sf.get(q)).map(n => q -> n.asDouble)
-      }.toMap
-    } catch { case _: Exception => Map.empty }
-  }
+  /** The tree of a JSON file, or None when it is missing or malformed. */
+  private def readJson(path: String): Option[JsonNode] =
+    scala.util.Try(Json.mapper.readTree(new java.io.File(path))).toOption
 
-  /** Accumulates stage-level shuffle/spill bytes across the whole app;
-    * the metrics pass diffs snapshots around each query. AtomicLongs —
-    * listener callbacks arrive on the bus thread.
+  private def numbers(node: JsonNode): Map[String, Double] =
+    node.properties().asScala.map(e => e.getKey -> e.getValue.asDouble).toMap
+
+  /** The committed per-row baseline (`BASELINE_BENCH.json` in the working
+    * directory) and the CPU calibration it was measured under:
+    * (baseline `cal_st_sec`, seconds per row), empty when the file is
+    * missing or records another scale factor.
+    */
+  private def baselineBench(sf: String): (Double, Map[String, Double]) =
+    readJson("BASELINE_BENCH.json").filter(_.path("sf").asText == sf)
+      .map(r => (r.path("cal_st_sec").asDouble, numbers(r.path("queries"))))
+      .getOrElse((0.0, Map.empty))
+
+  /** DuckDB seconds per headline row at this scale factor, recorded by
+    * `tools/time_oracle.py` in `tools/oracle_times.json`.
+    */
+  private def oracleTimes(sf: String): Map[String, Double] =
+    readJson("tools/oracle_times.json")
+      .map(r => numbers(r.path(sf)).filter(kv => headline.contains(kv._1)))
+      .getOrElse(Map.empty)
+
+  /** Accumulates stage-level shuffle and spill bytes across the whole
+    * app; the shuffle pass diffs snapshots around each row. Callbacks
+    * arrive on the listener bus thread.
     */
   private class StageMetricsListener
       extends org.apache.spark.scheduler.SparkListener {
@@ -322,6 +359,11 @@ object Bench {
     def snapshot: (Long, Long, Long) = (read.get, write.get, spill.get)
   }
 
+  private def loadavg1: Double =
+    try scala.io.Source.fromFile("/proc/loadavg").mkString
+      .split("\\s+")(0).toDouble
+    catch { case _: Exception => -1.0 }
+
   private def rssMb: Long =
     try {
       scala.io.Source.fromFile("/proc/self/status").getLines()
@@ -329,20 +371,16 @@ object Bench {
         .map(_.split("\\s+")(1).toLong / 1024).getOrElse(-1L)
     } catch { case _: Exception => -1L }
 
-  private def gcMs: Long = {
-    import scala.jdk.CollectionConverters._
+  private def gcMs: Long =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-  }
 
   /** Fixed CPU calibration: a deterministic xorshift64* reduction run
-    * single-threaded and on all `threads` at once. Same binary, same
-    * inputs, every round — so when ALL query times move together between
-    * rounds (r11→r12: the identical binary measured ~1.8× slower on a
-    * quiet box), the calibration pins it on the host, not the engine.
-    * st = single-thread seconds; mt = wall seconds for `threads`
-    * concurrent copies (mt/st >> 1 means the box is throttled or
-    * oversubscribed even when loadavg looks calm).
+    * single-threaded and on `threads` threads at once. When every row
+    * moves together between runs of the same binary, the calibration
+    * pins the move on the host. st = single-thread seconds; mt = wall
+    * seconds of `threads` concurrent copies (mt/st well above 1 means
+    * the host is throttled or oversubscribed).
     */
   private def cpuCalibration(threads: Int): (Double, Double) = {
     val iters = 800_000_000L
@@ -375,65 +413,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = GraftSession.local("graft-bench", cpus)
-
-    val (calSt, calMt) = cpuCalibration(
-      try cpus.toInt catch { case _: Exception => 32 })
-
-    spark.read.parquet(s"$sfDir/region.parquet").count() // warmup
-
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // per-family build bodies (run timed) and evictions (run untimed
-    // before each rep so every rep measures a real build)
-    val familyBuild: Map[String, () => Unit] = Map(
-      "index_build_dedup" -> (() =>
-        graft.operators.Dedup.buildIndexes(spark, sfDir)),
-      "index_build_ivf" -> (() =>
-        graft.operators.Similarity.buildIvfIndex(spark, sfDir)),
-      "index_build_dhash" -> (() =>
-        graft.operators.Multimodal.buildDhashSketch(spark, sfDir)),
-    )
-    // per-rep eviction for rows that memoize their own result
-    val resetBeforeRep: Map[String, () => Unit] = Map(
-      "index_build_dedup" -> (() =>
-        SessionArtifacts.release(spark, Some(sfDir),
-          Some(graft.operators.Dedup.Owner))),
-      "index_build_ivf" -> (() =>
-        SessionArtifacts.release(spark, Some(sfDir),
-          Some(graft.operators.Similarity.Owner))),
-      "index_build_dhash" -> (() =>
-        SessionArtifacts.release(spark, Some(sfDir),
-          Some(graft.operators.Multimodal.Owner))),
-      "corpus_clean" -> (() =>
-        SessionArtifacts.release(spark, Some(sfDir),
-          Some(graft.operators.CorpusPipeline.Owner))),
-      // each rep measures the propagation loop against the built pair
-      // index, not a read of the memoized converged labels
-      "cur_dedup_clusters" -> (() =>
-        SessionArtifacts.release(spark, Some(sfDir),
-          Some(graft.operators.Curation.Owner))),
-    )
-
-    def loadavg1: Double =
-      try scala.io.Source.fromFile("/proc/loadavg").mkString
-        .split("\\s+")(0).toDouble
-      catch { case _: Exception => -1.0 }
-
-    // Interleaved reps: pass 1 runs the ENTIRE suite, then pass 2, then
-    // pass 3 — adjacent samples of one query are minutes apart, so a
-    // transient load burst poisons at most one of its reps.
-    import scala.collection.mutable
-    // Quiet-leg subset flag (r12 judge #7): SPARK_GRAFT_BENCH_ONLY is a
-    // comma list of query names — rerun just those (e.g. the 10 slowest)
-    // on an idle host to confirm a headline without the full-suite cost.
-    // the index_build family rows always run first so subset rows still
-    // measure post-ingest query time; unknown names fail fast like
-    // Verify's subset arg does.
     val only: Option[Set[String]] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSet)
     only.foreach { names =>
@@ -443,109 +422,72 @@ object Bench {
         s"unknown bench row(s) in SPARK_GRAFT_BENCH_ONLY: " +
           unknown.toSeq.sorted.mkString(","))
     }
-    // Fail-fast validation of the shuffle-evidence budget (ADVICE r14): a
-    // malformed value used to throw inside the best-effort shuffle block,
-    // get swallowed, and silently drop the entire sidecar — on a scale leg
-    // the shuffle bytes ARE the artifact, so a typo'd "600s" must abort
-    // here, next to the SPARK_GRAFT_BENCH_ONLY validation, not downstream.
-    val shuffleBudgetS: Long = {
-      val raw = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_BUDGET_S", "90")
+    def budgetS(name: String, default: String): Long = {
+      val raw = sys.env.getOrElse(name, default)
       require(raw.matches("\\d+"),
-        s"SPARK_GRAFT_SHUFFLE_BUDGET_S must be a whole number of seconds, " +
-          s"got '$raw'")
+        s"$name must be a whole number of seconds, got '$raw'")
       raw.toLong
     }
+    val shuffleBudgetS = budgetS("SPARK_GRAFT_SHUFFLE_BUDGET_S", "90")
+    val tiebreakBudgetS = budgetS("SPARK_GRAFT_TIEBREAK_S", "150")
+    val threads = cpus.toIntOption.getOrElse(32)
+    val sfName = new java.io.File(sfDir).getName
+    val spark = GraftSession.local("graft-bench", cpus)
+    val (calSt, calMt) = cpuCalibration(threads)
+    spark.read.parquet(s"$sfDir/region.parquet").count() // warmup
+
+    def run(name: String): Unit = runRow(spark, sfDir, name)
+    def reset(name: String): Unit = resetOwners.get(name)
+      .foreach(o => SessionArtifacts.release(spark, Some(sfDir), Some(o)))
+    // seconds one run of `body` took, or -1 when it threw
+    def attempt(label: String)(body: => Unit): Double =
+      try {
+        val t0 = System.nanoTime()
+        body
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $label failed: ${e.getMessage}")
+        -1.0
+      }
+
     val allRows: Seq[String] = indexFamilyRows ++
       (headline ++ prodRows).filter(q => only.forall(_.contains(q)))
-    // the cold leg runs by default; a subset run includes it only when
-    // one of its rows is named explicitly
-    val runColdLeg = only.forall(_.exists(indexColdRows.contains))
-    val sampleBuf = mutable.LinkedHashMap(
-      allRows.map(n => n -> mutable.ArrayBuffer.empty[Double]): _*)
-    val loadBuf = mutable.LinkedHashMap(
-      allRows.map(n => n -> mutable.ArrayBuffer.empty[Double]): _*)
+    // per row and rep: (seconds, 1-minute load average before the rep)
+    val repBuf = mutable.LinkedHashMap(
+      allRows.map(n => n -> mutable.ArrayBuffer.empty[(Double, Double)]): _*)
+    def samples(n: String): Seq[Double] = repBuf(n).toSeq.map(_._1)
     // per row, summed over its timed reps: classes compiled (codegen
     // cache misses) and nanoseconds spent compiling them
     val codegenBuf = mutable.LinkedHashMap(allRows.map(n => n -> (0L, 0L)): _*)
     def codegenNow: (Long, Long) =
       (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
         org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
-    // One timed rep of one row — shared by the interleaved passes and the
-    // dispersion tiebreak below. `recordFailure=false` (tiebreak only)
-    // logs a throw without appending -1: the tiebreak refines timing, it
-    // must not turn a row whose gate reps all passed into a failure.
+    // One timed rep. The tiebreak passes recordFailure = false: it
+    // refines timing, and must not turn a row whose passes all succeeded
+    // into a failure.
     def runRep(name: String, recordFailure: Boolean = true): Unit = {
-      resetBeforeRep.get(name).foreach(_.apply())
-      val la = loadavg1 // sampled BEFORE the rep (diagnosable artifact)
+      reset(name)
+      val la = loadavg1
+      // a build row times the build, not the heap the rows before it left
+      if (familyBuilds.contains(name)) System.gc()
       val (compiles0, compileNs0) = codegenNow
-      val sample =
-        try {
-          familyBuild.get(name) match {
-            case Some(build) =>
-              // ingest rows measure the BUILD, not the ambient heap: one
-              // untimed collection pins every rep to the compacted
-              // condition a fresh ingest JVM would see. Evidence status
-              // (r18): the original r17 "6.9 vs 3.7 s on GC state" probe
-              // phase was mislabeled (gcFirst was never passed — ADVICE
-              // r17); the CORRECTED probe re-run on the
-              // post-ImageIO-fix build measures gc-before-build at
-              // PARITY with no-gc (B 2.468 vs C 2.500 min), so this
-              // System.gc() is kept as a harmless condition-pin, not a
-              // measured win — and every full run now records un-gc'd
-              // twins in the sidecar (index_nogc) so the choice stays
-              // auditable against the baseline's treatment.
-              System.gc()
-              time(build())
-            case None =>
-              val fn = prodBodies.getOrElse(name, SparkEntry.queries(name))
-              var df: org.apache.spark.sql.DataFrame = null
-              val t = time {
-                df = fn(spark, sfDir)
-                df.write.format("noop").mode("overwrite").save()
-              }
-              // caller-owned eager checkpoints pin one RDD per invocation
-              // (ADVICE r16) — free them untimed once consumed, or the
-              // rep loop accumulates one orphan block per rep
-              if (df != null && SparkEntry.callerOwnedCheckpoints(name))
-                graft.operators.Curation.freeCheckpoint(df)
-              t
-          }
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          -1.0
-        }
+      val sample = attempt(name)(run(name))
       val (compiles1, compileNs1) = codegenNow
       val (compiles, compileNs) = codegenBuf(name)
       codegenBuf(name) =
         (compiles + compiles1 - compiles0, compileNs + compileNs1 - compileNs0)
-      if (sample >= 0 || recordFailure) {
-        loadBuf(name) += la
-        sampleBuf(name) += sample
-      }
+      if (sample >= 0 || recordFailure) repBuf(name) += sample -> la
     }
-    // UNTIMED warmup of the index-family DAGs (r16 judge #1/#2): the
-    // first-ever execution pays several seconds of whole-stage-codegen +
-    // JIT that no later rep pays (measured r16: dedup rep1 9.06 s vs
-    // rep3 2.93 s on identical code), so without this, min-of-reps for
-    // the build rows chose between a JIT-cold pass 1 and passes 2..N
-    // that run after the full suite's heap debris. Build once, release,
-    // and every TIMED rep measures a steady-state rebuild.
+    // untimed: the first run of a DAG pays code generation and JIT that
+    // no later rep pays
     try {
-      indexFamilyRows.foreach(n => familyBuild(n)())
-      indexFamilyRows.foreach(n => resetBeforeRep(n)())
+      indexFamilyRows.foreach(run)
+      indexFamilyRows.foreach(reset)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] index warmup failed: ${e.getMessage}")
     }
-    // Per-pass SHUFFLED query order (r16 judge #2): with a fixed order,
-    // a row inherits the same predecessor's GC/heap debris in EVERY
-    // pass (the r16 full run read text_classifier_train 1.28x while the
-    // quiet leg read the same binary at 0.73x), so min-of-reps could not
-    // escape positional contamination. A deterministic per-pass
-    // permutation gives each row different neighbors each pass; the min
-    // then picks the least-contaminated context. Invariants preserved:
-    // the index-family rows keep their fixed lead position (rows after
-    // them must read a built index), and the two memo-builder rows run
-    // right after them so memo CONSUMERS never pay a rebuild in-rep.
+    // The memo builders run right after the index families, so the rows
+    // that read their memos never pay a rebuild inside a timed rep.
     val memoBuilders =
       Seq("corpus_clean", "cur_dedup_clusters").filter(allRows.contains)
     val shuffledRows: Seq[String] = allRows.filterNot(n =>
@@ -555,423 +497,197 @@ object Bench {
         new scala.util.Random(rep.toLong).shuffle(shuffledRows)
       order.foreach(n => runRep(n))
     }
-    // Dispersion TIEBREAK (r16 judge #2): a sustained load window can
-    // cover 2 of 3 passes and leave even the min contaminated (the r16
-    // artifact: loadavg 8.9/6.5/3.5 before the three index reps). Rows
-    // whose samples still disagree by >1.3x after the main passes get
-    // extra reps inside a wall budget, worst-relative-spread first, so
-    // the full-run headline converges toward the quiet-leg number
-    // without rerunning the whole suite. The index family re-reps as a
-    // unit: the composite index_build row sums per-rep triples, so a
-    // lone family sample could never reach it.
-    val tiebreakBudgetS: Long = {
-      val raw = sys.env.getOrElse("SPARK_GRAFT_TIEBREAK_S", "150")
-      require(raw.matches("\\d+"),
-        s"SPARK_GRAFT_TIEBREAK_S must be a whole number of seconds, got '$raw'")
-      raw.toLong
-    }
+
     val tiebroken = mutable.LinkedHashSet.empty[String]
     locally {
       val tbStart = System.nanoTime()
       def withinBudget: Boolean =
         System.nanoTime() - tbStart < tiebreakBudgetS * 1000L * 1000 * 1000
-      // relative spread gated by an ABSOLUTE floor (0.5 s): sub-second
-      // rows clear 1.3x on scheduler noise alone and would eat the whole
-      // budget at small sf without moving any number that matters
+      // relative spread, counted only above an absolute 0.5 s: sub-second
+      // rows pass 1.3x on scheduler noise alone
       def spread(n: String): Double = {
-        val ss = sampleBuf(n).toSeq
+        val ss = samples(n)
         if (ss.exists(_ < 0) || ss.isEmpty) 0.0
         else if (ss.max - ss.min < 0.5) 0.0
         else ss.max / math.max(ss.min, 1e-9)
       }
-      val familySet0 = indexFamilyRows.toSet
-      // An index-family tiebreak pass is ALL-OR-NONE (ADVICE r17): with
-      // recordFailure=false a thrown rep used to drop one row's sample
-      // while its siblings appended, desynchronizing the per-rep triples
-      // the composite index_build row sums — its min could then pair
-      // best-case components from DIFFERENT passes, biasing it below any
-      // observed triple. On any member failing to record, roll the whole
-      // family back to the pre-pass lengths.
+      // The index family reps as a unit, all or none: the composite row
+      // sums the family's samples pass by pass, so a pass in which one
+      // member failed to record is rolled back for all of them.
       def familyTiebreakPass(): Unit = {
-        val pre = indexFamilyRows.map(n => n -> sampleBuf(n).length).toMap
+        val pre = indexFamilyRows.map(n => n -> repBuf(n).length).toMap
         indexFamilyRows.foreach(n => runRep(n, recordFailure = false))
-        if (indexFamilyRows.forall(n => sampleBuf(n).length == pre(n) + 1))
+        if (indexFamilyRows.forall(n => repBuf(n).length == pre(n) + 1))
           tiebroken ++= indexFamilyRows
-        else indexFamilyRows.foreach { n =>
-          sampleBuf(n).takeInPlace(pre(n)); loadBuf(n).takeInPlace(pre(n))
-        }
+        else indexFamilyRows.foreach(n => repBuf(n).takeInPlace(pre(n)))
       }
-      // the index family ALWAYS gets tiebreak reps: the composite
-      // index_build row is a round-graded number whose components are
-      // small enough (0.4-3 s) that run-to-run variance below the 1.3x
-      // trigger still moves the composite's ratio by ±0.2 — two extra
-      // whole-family samples cost ~18 s and pin it
+      // the family always gets two more passes: its members are small
+      // enough that noise below the 1.3x trigger still moves the composite
       for (_ <- 1 to 2) {
         if (withinBudget &&
-            indexFamilyRows.forall(n => !sampleBuf(n).contains(-1.0)))
+            indexFamilyRows.forall(n => !samples(n).contains(-1.0)))
           familyTiebreakPass()
       }
-      var rounds = 0
+      // up to three rounds over the rows still unstable, widest first
       var progressed = true
-      while (progressed && rounds < 3 && withinBudget) {
-        rounds += 1
+      for (_ <- 1 to 3 if progressed && withinBudget) {
         progressed = false
-        val unstable = allRows.filter(spread(_) > 1.3)
-          .sortBy(n => -spread(n))
-        val asUnits: Seq[Seq[String]] = unstable.map { n =>
-          if (familySet0.contains(n)) indexFamilyRows else Seq(n)
-        }.distinct
-        asUnits.foreach { unit =>
-          if (withinBudget) {
-            if (unit == indexFamilyRows) familyTiebreakPass()
-            else unit.foreach { n =>
-              runRep(n, recordFailure = false); tiebroken += n
-            }
-            progressed = true
-          }
+        val units = allRows.filter(spread(_) > 1.3).sortBy(n => -spread(n))
+          .map(n => if (familyBuilds.contains(n)) indexFamilyRows else Seq(n))
+        units.distinct.iterator.takeWhile(_ => withinBudget).foreach { unit =>
+          if (unit == indexFamilyRows) familyTiebreakPass()
+          else { runRep(unit.head, recordFailure = false); tiebroken += unit.head }
+          progressed = true
         }
       }
     }
 
-    // GC-fairness audit (ADVICE r17): the headline's index-family reps
-    // run after an untimed System.gc(), which the committed baseline's
-    // measurement condition may not have had — so the sidecar must make
-    // the headline choice auditable. Record two UN-gc'd builds of each
-    // family row (identical body, System.gc() skipped) in a separate
-    // sidecar field; they never feed the headline or the composite.
-    // Skipped on SPARK_GRAFT_BENCH_ONLY subset probes.
-    val nogcSamples = mutable.LinkedHashMap.empty[String, Seq[Double]]
-    if (only.isEmpty) {
-      indexFamilyRows.foreach { n =>
-        nogcSamples(n) = (1 to 2).map { _ =>
-          resetBeforeRep.get(n).foreach(_.apply())
-          try time(familyBuild(n)()) catch { case e: Throwable =>
-            System.err.println(s"[bench] nogc $n failed: ${e.getMessage}")
-            -1.0
-          }
-        }
+    val nogcSamples: Seq[(String, Seq[Double])] =
+      if (only.isDefined) Nil
+      else indexFamilyRows.map { n =>
+        n -> (1 to 2).map { _ => reset(n); attempt(s"nogc $n")(run(n)) }
       }
-    }
 
-    // Persisted-index cold leg (r13 judge #3): save once from the built
-    // caches, then per rep drop the session caches, time the parquet
-    // restore, and time one LSH + one ANN consumer against the reloaded
-    // index. Runs AFTER the timed passes so the save reads memoized
-    // frames; the shuffle pass below rebuilds whatever it needs.
-    val coldSamples = mutable.LinkedHashMap(
-      indexColdRows.map(n => n -> mutable.ArrayBuffer.empty[Double]): _*)
-    val coldLoads = mutable.LinkedHashMap(
-      indexColdRows.map(n => n -> mutable.ArrayBuffer.empty[Double]): _*)
-    if (runColdLeg) {
-      val idxDir = s"target/bench_index/${new java.io.File(sfDir).getName}"
+    if (only.forall(_.exists(indexColdRows.contains))) {
+      val idxDir = s"target/bench_index/$sfName"
+      val coldRuns: Seq[(String, () => Unit)] = Seq(
+        "index_load" -> (() => GraftSession.loadIndexes(spark, sfDir,
+          s"$idxDir/dedup", s"$idxDir/ivf")),
+        "dedup_minhash_lsh_cold" -> (() => run("dedup_minhash_lsh")),
+        "sim_ivf_ann_cold" -> (() => run("sim_ivf_ann")))
       try {
-        graft.operators.Dedup.saveDedupIndex(spark, sfDir, s"$idxDir/dedup")
-        graft.operators.Similarity.saveIvfIndex(spark, sfDir, s"$idxDir/ivf")
+        Dedup.saveDedupIndex(spark, sfDir, s"$idxDir/dedup")
+        Similarity.saveIvfIndex(spark, sfDir, s"$idxDir/ivf")
         for (_ <- 1 to reps) {
-          // targeted eviction only (ADVICE r14): a blanket clearCache()
-          // here unpersisted EVERY session cache — other families' memo
-          // maps still held references to now-uncached frames, so later
-          // shuffle-evidence rows executed recompute-inflated plans.
-          // Releasing the two owners drops exactly the indexes this leg
-          // reloads.
-          for (owner <- Seq(graft.operators.Dedup.Owner,
-              graft.operators.Similarity.Owner))
+          // release only the two reloaded indexes: the rows of the
+          // shuffle pass still read every other artifact
+          for (owner <- Seq(Dedup.Owner, Similarity.Owner))
             SessionArtifacts.release(spark, Some(sfDir), Some(owner))
-          val steps: Seq[(String, () => Unit)] = Seq(
-            "index_load" -> (() =>
-              graft.GraftSession.loadIndexes(spark, sfDir,
-                s"$idxDir/dedup", s"$idxDir/ivf")),
-            "dedup_minhash_lsh_cold" -> (() =>
-              SparkEntry.queries("dedup_minhash_lsh")(spark, sfDir)
-                .write.format("noop").mode("overwrite").save()),
-            "sim_ivf_ann_cold" -> (() =>
-              SparkEntry.queries("sim_ivf_ann")(spark, sfDir)
-                .write.format("noop").mode("overwrite").save()))
-          steps.foreach { case (n, body) =>
-            coldLoads(n) += loadavg1
-            coldSamples(n) += (try time(body()) catch { case e: Throwable =>
-              System.err.println(s"[bench] $n failed: ${e.getMessage}")
-              -1.0
-            })
+          coldRuns.foreach { case (n, body) =>
+            val la = loadavg1
+            val secs = attempt(n)(body())
+            repBuf(n) = repBuf.getOrElse(n, mutable.ArrayBuffer.empty) += secs -> la
           }
         }
       } catch { case e: Throwable =>
         System.err.println(s"[bench] cold leg failed: ${e.getMessage}")
       }
-      indexColdRows.foreach { n =>
-        if (coldSamples(n).nonEmpty) {
-          sampleBuf(n) = coldSamples(n); loadBuf(n) = coldLoads(n)
-        }
-      }
     }
 
-    // composite index_build = per-rep SUM of the family rows (the old
-    // row's scope, kept so the committed baseline stays comparable)
-    val familySamples = indexFamilyRows.map(sampleBuf(_).toSeq)
+    val familySamples = indexFamilyRows.map(samples)
     if (familySamples.forall(_.nonEmpty)) {
       val n = familySamples.map(_.length).min
-      sampleBuf(indexBuildRow) = mutable.ArrayBuffer((0 until n).map { i =>
+      repBuf(indexBuildRow) = mutable.ArrayBuffer.tabulate(n) { i =>
         val xs = familySamples.map(_(i))
-        if (xs.contains(-1.0)) -1.0 else xs.sum
-      }: _*)
-      loadBuf(indexBuildRow) =
-        mutable.ArrayBuffer(loadBuf(indexFamilyRows.head).toSeq.take(n): _*)
+        (if (xs.contains(-1.0)) -1.0 else xs.sum,
+          repBuf(indexFamilyRows.head)(i)._2)
+      }
     }
-    val emittedRows: Seq[String] =
-      (if (sampleBuf.contains(indexBuildRow)) Seq(indexBuildRow) else Nil) ++
-        allRows ++ indexColdRows.filter(sampleBuf.contains)
     val results: Seq[(String, Seq[Double])] =
-      emittedRows.map(n => n -> sampleBuf(n).toSeq)
+      ((if (repBuf.contains(indexBuildRow)) Seq(indexBuildRow) else Nil) ++
+        allRows ++ indexColdRows.filter(repBuf.contains))
+        .map(n => n -> samples(n))
 
-    // Shuffle evidence pass (UNTIMED, after all timed reps): one extra
-    // execution per query with a stage-metrics listener attached, so the
-    // sidecar carries per-query shuffle-write bytes — the measured form
-    // of the "shuffle discipline" scale claims (a query whose shuffle
-    // grows superlinearly shows up here before it shows up in seconds).
-    // Listener events are async; a short stability poll after each query
-    // drains them. Best-effort: any failure leaves the map empty.
+    // Untimed: each row once more under a stage-metrics listener. The
+    // bus is drained before each snapshot, so a row's bytes never bleed
+    // into the next row's. Rows past the budget get no entry.
     val shuffleBytes: Seq[(String, (Long, Long, Long))] =
       try {
+        val sc = spark.sparkContext
         val lst = new StageMetricsListener
-        spark.sparkContext.addSparkListener(lst)
+        sc.addSparkListener(lst)
         try {
-        def stable(): (Long, Long, Long) = {
-          // drain async stage-completion events: require 3 consecutive
-          // calm polls and allow up to 5 s per query so one row's bytes
-          // never bleed into the next row's delta (ADVICE r12)
-          var prev = lst.snapshot
-          var calm = 0
-          var waited = 0
-          while (calm < 3 && waited < 5000) {
-            Thread.sleep(50); waited += 50
-            val cur = lst.snapshot
-            if (cur == prev) calm += 1 else { calm = 0; prev = cur }
+          def snapshot: (Long, Long, Long) = {
+            ListenerBusDrain.drain(sc)
+            lst.snapshot
           }
-          prev
-        }
-        // Hard wall-clock budget: the stdout headline line MUST print
-        // before any driver-side timeout; evidence is worth 90 s, never
-        // the round's bench artifact. Skipped rows simply have no entry.
-        // Scale legs (sf10) override via SPARK_GRAFT_SHUFFLE_BUDGET_S —
-        // there the shuffle bytes ARE the artifact (r13 judge #5).
-        val budgetNanos = shuffleBudgetS * 1000 * 1000 * 1000
-        val passStart = System.nanoTime()
-        // lazily: the budget predicate must be re-checked as each row runs
-        val out = allRows.iterator.takeWhile(_ =>
-          System.nanoTime() - passStart < budgetNanos).map { name =>
-          resetBeforeRep.get(name).foreach(_.apply())
-          val before = stable()
-          try {
-            familyBuild.get(name) match {
-              case Some(build) => build()
-              case None =>
-                val df = prodBodies.getOrElse(name, SparkEntry.queries(name))(
-                  spark, sfDir)
-                df.write.format("noop").mode("overwrite").save()
-                if (SparkEntry.callerOwnedCheckpoints(name))
-                  graft.operators.Curation.freeCheckpoint(df)
-            }
-            val after = stable()
-            name -> ((after._1 - before._1, after._2 - before._2,
-              after._3 - before._3))
-          } catch { case _: Throwable => name -> ((-1L, -1L, -1L)) }
-        }.toList // materialize BEFORE the listener detaches
-        out
-        // finally: the listener must detach even when the pass throws,
-        // or its deltas pollute every later measurement (ADVICE r12)
-        } finally spark.sparkContext.removeSparkListener(lst)
+          val passStart = System.nanoTime()
+          allRows.iterator.takeWhile(_ =>
+            System.nanoTime() - passStart < shuffleBudgetS * 1000L * 1000 * 1000)
+            .map { name =>
+              reset(name)
+              val before = snapshot
+              try {
+                run(name)
+                val after = snapshot
+                name -> ((after._1 - before._1, after._2 - before._2,
+                  after._3 - before._3))
+              } catch { case _: Throwable => name -> ((-1L, -1L, -1L)) }
+            }.toList
+        } finally sc.removeSparkListener(lst)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] shuffle metrics pass failed: ${e.getMessage}")
         Seq.empty
       }
 
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      s(s.length / 2)
+    val timed = results.map { case (k, ss) => k -> minOf(ss) }.filter(_._2 >= 0)
+    val oracle = oracleTimes(sfName)
+    val ratios = timed.collect { case (k, v) if oracle.contains(k) =>
+      k -> r2(v / oracle(k))
     }
-    def fmt(v: Double): String = (math.round(v * 1e3) / 1e3).toString
-
-    // stdout headline: MIN of the interleaved reps (load-robust — see the
-    // measurement notes); median + raw samples stay in the sidecar
-    val mins = results.map { case (name, samples) =>
-      name -> (if (samples.contains(-1.0)) -1.0 else samples.min)
-    }
-    val medians = results.map { case (name, samples) =>
-      name -> (if (samples.contains(-1.0)) -1.0 else median(samples))
-    }
-    val qs = mins
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val samplesJson = results
-      .map { case (k, ss) => "\"" + k + "\":" + ss.map(fmt).mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val mediansJson = medians
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    val loadJson = results
-      .map { case (k, _) =>
-        "\"" + k + "\":" + loadBuf(k).map(fmt).mkString("[", ",", "]")
-      }.mkString("{", ",", "}")
-    val failed = mins.collect { case (k, -1.0) => "\"" + k + "\"" }
-      .mkString("[", ",", "]")
-    // totals count ingest-time build ONCE via the composite row — the
-    // per-family rows are its attribution, not extra work
-    val familySet = indexFamilyRows.toSet
-    val total = mins.collect {
-      case (k, v) if v >= 0 && !familySet.contains(k) => v }.sum
-    val oracle = oracleTimes(sfDir)
-    // Calibration-normalized comparison against the COMMITTED baseline
-    // (r12 judge #3): divide current wall-clock by calSt_now/calSt_base
-    // before ratioing, so host slowdown (identical binaries, 1.8× apart
-    // across rounds) cancels and the ratio reads plan drift only.
-    val (baseCal, baseQ) = baselineBench(sfDir)
+    val (baseCal, baseQ) = baselineBench(sfName)
     val calRatio = if (baseCal > 0 && calSt > 0) calSt / baseCal else 1.0
-    val vsBase: Seq[(String, Double)] =
-      mins.collect { case (k, v) if v >= 0 && baseQ.getOrElse(k, 0.0) > 0 =>
-        k -> math.round(v / calRatio / baseQ(k) * 100) / 100.0
-      }
-    val vsbPart =
-      if (vsBase.isEmpty) ""
-      else {
-        // the composite already carries the families' seconds — keep the
-        // aggregate single-weighted even when the baseline has both
-        val common = mins.collect {
-          case (k, v) if v >= 0 && baseQ.getOrElse(k, 0.0) > 0 &&
-            !familySet.contains(k) => (k, v) }
-        val tot = math.round(common.map(_._2).sum / calRatio /
-          common.map(kv => baseQ(kv._1)).sum * 100) / 100.0
-        s""","vsb_total":$tot,"vsb_n":${vsBase.size},"vsb_cal_ratio":${
-          math.round(calRatio * 1000) / 1000.0}"""
-      }
-    val ratios: Seq[(String, Double)] =
-      mins.collect { case (k, v) if v >= 0 && oracle.contains(k) =>
-        k -> math.round(v / oracle(k) * 100) / 100.0
-      }
-    // The r6 artifact taught the hard lesson: the PER-QUERY ratio map on
-    // stdout pushed the line past the harness's 2000-char output-tail
-    // window, the line start was cut off, and the whole bench parsed as
-    // null. stdout now carries only the geomean summary ratio; the full
-    // per-query map lives in the sidecar.
-    val ratioPart =
-      if (ratios.isEmpty) ""
-      else {
-        val geo = math.exp(ratios.map(r => math.log(math.max(r._2, 1e-6))).sum /
-          ratios.size)
-        s""","svd_geomean":${math.round(geo * 100) / 100.0},"svd_n":${ratios.size}"""
-      }
-    // Full raw samples + oracle times + per-query ratios go to a sidecar
-    // (the stdout line must stay well under the 2000-char output-tail
-    // budget to be captured whole).
-    try {
-      val oraclePart =
-        if (oracle.isEmpty) ""
-        else "," + "\"oracle\":" + oracle.toSeq.sortBy(_._1)
-          .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val ratioMapPart =
-        if (ratios.isEmpty) ""
-        else "," + "\"spark_vs_duckdb\":" + ratios
-          .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val vsbMapPart =
-        if (vsBase.isEmpty) ""
-        else "," + "\"vs_baseline_normalized\":" + vsBase
-          .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}") +
-          s""","vsb_baseline_cal_st":$baseCal"""
-      val shufflePart =
-        if (shuffleBytes.isEmpty) ""
-        else "," + "\"shuffle_mb\":" + shuffleBytes.map { case (k, (r, w, sp)) =>
-          def mb(b: Long) =
-            if (b < 0) "-1" else (math.round(b / 1048576.0 * 100) / 100.0).toString
-          "\"" + k + "\":{\"read\":" + mb(r) + ",\"write\":" + mb(w) +
-            ",\"spill\":" + mb(sp) + "}"
-        }.mkString("{", ",", "}")
-      val codegenPart = "," + "\"codegen\":" + codegenBuf.map { case (k, (n, ns)) =>
-        "\"" + k + "\":{\"compiles\":" + n + ",\"compile_s\":" + fmt(ns / 1e9) + "}"
-      }.mkString("{", ",", "}")
-      val tiebreakPart = "\"tiebreak_rows\":" +
-        tiebroken.toSeq.map("\"" + _ + "\"").mkString("[", ",", "]")
-      // Sidecar self-description for the commit gate (r17 judge #2): a
-      // committed sidecar must come from a FULL run on a quiet host —
-      // HygieneGateSpec red-tests subset=true, a short row count, or a
-      // high loadavg_p90, so the bench_samples.json clobber trap (a
-      // local probe overwriting the committed full-run artifact) fails
-      // `sbt test` instead of slipping into the snapshot commit.
-      val allLoadSorted =
-        results.flatMap { case (k, _) => loadBuf(k).toSeq }.sorted
-      val loadP90 =
-        if (allLoadSorted.isEmpty) 0.0
-        else allLoadSorted(
-          math.min(allLoadSorted.length - 1, (allLoadSorted.length * 0.9).toInt))
-      val provenancePart =
-        s""","rows":${results.size},"subset":${only.isDefined},"loadavg_p90":${fmt(loadP90)}"""
-      val nogcPart =
-        if (nogcSamples.isEmpty) ""
-        else "," + "\"index_nogc\":" + nogcSamples
-          .map { case (k, ss) =>
-            "\"" + k + "\":" + ss.map(fmt).mkString("[", ",", "]") }
-          .mkString("{", ",", "}")
-      val side = s"""{"samples":$samplesJson,"medians":$mediansJson,"loadavg":$loadJson,"reps":$reps,"interleaved":true,"shuffled_passes":true,$tiebreakPart,"headline_stat":"min"$provenancePart$nogcPart,"cal_st_sec":${fmt(calSt)},"cal_mt_sec":${fmt(calMt)},"cal_threads":$cpus$oraclePart$ratioMapPart$vsbMapPart$shufflePart$codegenPart,"sf":"$sfDir"}"""
-      val w = new java.io.PrintWriter("bench_samples.json"); w.println(side); w.close()
-    } catch { case e: Exception =>
+    val vsBase = timed.collect { case (k, v) if baseQ.getOrElse(k, 0.0) > 0 =>
+      k -> r2(v / calRatio / baseQ(k))
+    }
+    def when(cond: Boolean)(kvs: (String, Any)*): ListMap[String, Any] =
+      if (cond) ListMap(kvs: _*) else ListMap.empty
+    val svdLine = when(ratios.nonEmpty)(
+      "svd_geomean" -> r2(math.exp(
+        ratios.map(r => math.log(math.max(r._2, 1e-6))).sum / ratios.size)),
+      "svd_n" -> ratios.size)
+    // the composite carries the families' seconds: count them once
+    val common = timed.filter { case (k, _) =>
+      baseQ.getOrElse(k, 0.0) > 0 && !familyBuilds.contains(k) }
+    val vsbLine = when(vsBase.nonEmpty)(
+      "vsb_total" -> r2(common.map(_._2).sum / calRatio /
+        common.map(kv => baseQ(kv._1)).sum),
+      "vsb_n" -> vsBase.size, "vsb_cal_ratio" -> r3(calRatio))
+
+    def loads(n: String): Seq[Double] = repBuf(n).toSeq.map(_._2)
+    val allLoads = results.flatMap { case (k, _) => loads(k) }.sorted
+    val loadP90 =
+      if (allLoads.isEmpty) 0.0
+      else allLoads(math.min(allLoads.length - 1, (allLoads.length * 0.9).toInt))
+    def mb(b: Long): Double = if (b < 0) -1.0 else r2(b / 1048576.0)
+    val sidecar = ListMap[String, Any](
+      "samples" -> ListMap.from(results.map { case (k, ss) => k -> ss.map(r3) }),
+      "medians" -> ListMap.from(results.map { case (k, ss) => k -> r3(medianOf(ss)) }),
+      "loadavg" -> ListMap.from(results.map { case (k, _) => k -> loads(k).map(r3) }),
+      "reps" -> reps, "interleaved" -> true, "shuffled_passes" -> true,
+      "tiebreak_rows" -> tiebroken.toSeq, "headline_stat" -> "min",
+      // HygieneGateSpec rejects a committed sidecar from a subset run,
+      // from fewer rows than the suite, or from a loaded host
+      "rows" -> results.size, "subset" -> only.isDefined,
+      "loadavg_p90" -> r3(loadP90)) ++
+      when(nogcSamples.nonEmpty)("index_nogc" ->
+        ListMap.from(nogcSamples.map { case (k, ss) => k -> ss.map(r3) })) ++
+      ListMap("cal_st_sec" -> r3(calSt), "cal_mt_sec" -> r3(calMt),
+        "cal_threads" -> threads) ++
+      when(oracle.nonEmpty)("oracle" -> ListMap.from(oracle.toSeq.sortBy(_._1))) ++
+      when(ratios.nonEmpty)("spark_vs_duckdb" -> ListMap.from(ratios)) ++
+      when(vsBase.nonEmpty)("vs_baseline_normalized" -> ListMap.from(vsBase),
+        "vsb_baseline_cal_st" -> baseCal) ++
+      when(shuffleBytes.nonEmpty)("shuffle_mb" -> ListMap.from(shuffleBytes.map {
+        case (k, (r, w, sp)) =>
+          k -> ListMap("read" -> mb(r), "write" -> mb(w), "spill" -> mb(sp))
+      })) ++
+      ListMap("codegen" -> ListMap.from(codegenBuf.toSeq.map { case (k, (n, ns)) =>
+        k -> ListMap[String, Any]("compiles" -> n, "compile_s" -> r3(ns / 1e9))
+      }), "sf" -> sfDir)
+    try Json.write("bench_samples.json", sidecar)
+    catch { case e: Exception =>
       System.err.println(s"[bench] sidecar write failed: ${e.getMessage}")
     }
-    // Both stats on stdout (round-8 judge #5): "value" (min — the
-    // load-robust headline) AND "value_median", so the driver's 2× gate
-    // and the judge can see load sensitivity without the sidecar. A
-    // real intermittent regression moves the median even when one fast
-    // rep keeps the min flattering.
-    val totalMedian = medians.collect {
-      case (k, v) if v >= 0 && !familySet.contains(k) => v }.sum
-    // The harness that captures this line keeps only the LAST ~2000 chars
-    // of merged stdout+stderr. r10/r11 proved the budget gets eaten by
-    // whatever trails the line (unpersist WARNs from release, sbt's
-    // [success] footer), cutting the LINE START and failing the parse
-    // ("parsed": null in both rounds' artifacts). Defenses: the sf dir
-    // prints as its basename; the minimal form drops "reps" (sidecar has
-    // it); and release/stop run BEFORE the println so the only text after
-    // the line is sbt's ~80-char footer.
-    val sfName = new java.io.File(sfDir).getName
-    def line(qsPart: String, extras: String): String =
-      s"""{"metric":"total","value":${fmt(total)},"value_median":${fmt(totalMedian)},"unit":"sec","queries":$qsPart,"reps":$reps,"failed":$failed$extras,"sf":"$sfName"}"""
-    // Progressive trimming keeps the line parseable whatever the suite
-    // grows to: full form → drop diagnostics → 2-decimal query times
-    // without the reps field.
-    val full = line(qs,
-      s""","rss_mb":$rssMb,"gc_ms":$gcMs,"cal_st":${fmt(calSt)},"cal_mt":${fmt(calMt)}$ratioPart$vsbPart""")
-    val out =
-      if (full.length <= 1500) full
-      else {
-        val noDiag = line(qs, ratioPart + vsbPart)
-        if (noDiag.length <= 1600) noDiag
-        else {
-          def fmt2(v: Double): String = (math.round(v * 100) / 100.0).toString
-          val qs2 = mins
-            .map { case (k, v) => "\"" + k + "\":" + fmt2(v) }
-            .mkString("{", ",", "}")
-          val compact =
-            s"""{"metric":"total","value":${fmt(total)},"value_median":${fmt(totalMedian)},"unit":"sec","queries":$qs2,"failed":$failed$vsbPart,"sf":"$sfName"}"""
-          if (compact.length <= 1850) compact
-          else {
-            // The suite has outgrown even the 2-decimal form (the r12
-            // 106-row suite hit 2.4k chars — past the harness's ~2000-char
-            // output-tail window, which would cut the LINE START and fail
-            // the parse). Final fallback: stdout carries the SLOWEST
-            // queries only (every failed row always included), the full
-            // per-query map lives in bench_samples.json, and the headline
-            // total the driver's 2x gate reads stays intact.
-            val slowest = mins.filter(_._2 >= 0).sortBy(-_._2).take(40)
-              .map(_._1).toSet
-            val included = mins.filter { case (k, v) =>
-              v < 0 || slowest.contains(k) }
-            val qs3 = included
-              .map { case (k, v) => "\"" + k + "\":" + fmt2(v) }
-              .mkString("{", ",", "}")
-            s"""{"metric":"total","value":${fmt(total)},"value_median":${fmt(totalMedian)},"unit":"sec","queries":$qs3,"queries_elided":${mins.size - included.size},"failed":$failed$vsbPart,"sf":"$sfName"}"""
-          }
-        }
-      }
-    if (out.length > 1850)
+    val out = summaryLine(results, reps,
+      ListMap("rss_mb" -> rssMb, "gc_ms" -> gcMs, "cal_st" -> r3(calSt),
+        "cal_mt" -> r3(calMt)),
+      svdLine, vsbLine, sfName)
+    if (out.length > LineLimit)
       System.err.println(s"[bench] WARNING stdout line ${out.length} chars")
     GraftSession.release(spark) // unpin operator caches before teardown
     spark.stop()
-    // the line is the FINAL output on purpose — see the tail-window note
+    // last on purpose: nothing after the line but the build tool's footer
     println(out)
   }
 }

@@ -14,10 +14,7 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")
-      // bench-only production rows (sketch-valued, not oracle keys)
-      // resolve through Bench.prodBodies like the bench itself does
-      Bench.prodBodies.getOrElse(name, SparkEntry.queries(name))(
-        spark, sfDir).explain("formatted")
+      Bench.queryFrame(name)(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -31,6 +31,9 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The driver owns this session, so the GraftSession conf contract is
     * applied here (once — the only entry point not constructed by us).
+    * Only [[GraftSession.tune]] reaches a session built elsewhere, not
+    * [[GraftSession.buildConf]], so a driver-owned session keeps Spark's
+    * 100-entry codegen cache and its full status store.
     */
   def entry(spark: SparkSession): DataFrame =
     operators.Relational.a3Standings(GraftSession.tune(spark),
@@ -44,14 +47,4 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     modules.iterator.map(_._2).reduce(_ ++ _)
-
-  /** Queries whose RETURNED frame is an eager localCheckpoint the CALLER
-    * owns (ADVICE r16): the checkpoint pins one RDD per invocation that
-    * GraftSession.release never sees (it is not in any operator cache),
-    * so harnesses that invoke these repeatedly (Bench's rep loop, the
-    * Verify dump) free it via Curation.freeCheckpoint after consuming
-    * the result — exactly what Round16Spec's hygiene tests do.
-    */
-  val callerOwnedCheckpoints: Set[String] =
-    Set("dq_k_anonymize")
 }

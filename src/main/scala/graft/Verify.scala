@@ -1,5 +1,4 @@
 package graft
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -25,35 +24,16 @@ object Verify {
     // that crashes (dir never written) must read as a FAILURE downstream,
     // not as "not dumped" (ADVICE r7 — check_oracle.py skips missing dirs
     // to support subset runs, which hid crashed queries in full runs).
-    Files.writeString(Paths.get(s"$outDir/manifest.json"),
-      attempted.map("\"" + _ + "\"").mkString("[", ",", "]"))
+    Json.write(s"$outDir/manifest.json", attempted)
     attempted.foreach { name =>
       try {
         val df = SparkEntry.queries(name)(spark, sfDir)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        // caller-owned eager checkpoints pin one RDD per invocation;
-        // free them once consumed (ADVICE r16)
-        if (SparkEntry.callerOwnedCheckpoints(name))
-          operators.Curation.freeCheckpoint(df)
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Json.write(s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
     GraftSession.release(spark) // unpin operator caches before teardown
     spark.stop()
   }

@@ -794,40 +794,32 @@ object Dedup {
   private[operators] val ContainmentTau = 0.9
   private[operators] val ContainmentDfCap = 64
 
-  /** SIZING (round-8 judge #6) — the materialized posting set is
-    * O(Σ_doc distinct shingles) ≈ tokens-per-doc × docs rows of
-    * (doc_id, shingle): ~40 bytes/row deserialized, so ~4 GB per 100 M
-    * postings. The capped (`rare`) index is strictly smaller. Default
-    * placement is `localCheckpoint` (MEMORY_AND_DISK — spills, but
-    * competes for executor storage); when the posting estimate exceeds
-    * the storage budget, pass `diskOnlyIndex = true` to pin BOTH
-    * indexes `DISK_ONLY` — they stream from local disk, no storage-pool
-    * pressure, identical results (ContainmentStorageSpec). At true
-    * 100 TB the posting set is a persisted table (ingest-time index,
-    * like `index_build`), not an in-job cache of any flavor.
+  /** SIZING — the materialized posting set is O(Σ_doc distinct
+    * shingles) ≈ tokens-per-doc × docs rows of (doc_id, shingle):
+    * ~40 bytes/row deserialized, so ~4 GB per 100 M postings. The capped
+    * (`rare`) index is strictly smaller. Both are `localCheckpoint`s
+    * (MEMORY_AND_DISK: they spill, but compete for executor storage)
+    * that the returned frame reads lazily. At true 100 TB the posting
+    * set is a persisted table (an ingest-time index, like
+    * `index_build`), not an in-job cache of any flavor.
     */
   def dedupContainment(spark: SparkSession, dir: String,
-      tau: Double = ContainmentTau, dfCap: Int = ContainmentDfCap,
-      diskOnlyIndex: Boolean = false): DataFrame = {
-    // Two materializations, each an index a production deployment would
+      tau: Double = ContainmentTau,
+      dfCap: Int = ContainmentDfCap): DataFrame = {
+    // Two localCheckpoints, each an index a production deployment would
     // persist anyway: the (doc, shingle) posting set feeds THREE consumers
     // (profile counts, document frequencies, the capped index) and the
     // capped index feeds BOTH self-join sides — without them the planner
     // re-runs the scan+explode+distinct subtree per consumer (10 fact
     // scans measured in the formatted plan).
-    def materialize(df: DataFrame): DataFrame =
-      if (diskOnlyIndex) {
-        val p = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        p.count() // eager, like localCheckpoint — consumers must hit the index
-        p
-      } else df.localCheckpoint()
-    val sh = materialize(docShingles(spark, dir)
-      .select(col("doc_id"), explode(col("sh")).as("s")).distinct())
+    val sh = docShingles(spark, dir)
+      .select(col("doc_id"), explode(col("sh")).as("s")).distinct()
+      .localCheckpoint()
     val cnt = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
-    val rare = materialize(sh.join(
+    val rare = sh.join(
       sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= dfCap).select(col("s")),
-      "s"))
+      "s").localCheckpoint()
     // r18 optimization round: the posting self-join picks SHUFFLED HASH
     // deliberately (guide §3.1). Un-hinted, AQE broadcasts the whole
     // capped posting index (it fits at bench scale) — measured SLOWER
@@ -846,26 +838,13 @@ object Dedup {
     // cnt is O(docs) — NOT forced broadcast (a 100 TB corpus' profile
     // table exceeds any broadcast budget); AQE broadcasts when it fits,
     // else both sides shuffle on the doc key the pair side already has
-    val result = inter
+    inter
       .join(cnt.withColumnRenamed("doc_id", "src")
         .withColumnRenamed("c", "c_src"), "src")
       .withColumn("containment", col("shared").cast("double") / col("c_src"))
       .filter(col("containment") >= tau)
       .select(col("src"), col("dst"),
         round(col("containment"), 6).as("containment"))
-    if (!diskOnlyIndex) result
-    else {
-      // ADVICE r9: the DISK_ONLY persists are NOT GC-cleanable the way
-      // the localCheckpoint default path is — the CacheManager would hold
-      // them for the session lifetime and repeated invocations (bench
-      // loops) would accumulate disk-cached entries. Materialize the
-      // (O(qualifying pairs), small) result eagerly, then drop both
-      // indexes deterministically before returning.
-      val out = result.localCheckpoint()
-      sh.unpersist(blocking = true)
-      rare.unpersist(blocking = true)
-      out
-    }
   }
 
   /** Verified SimHash candidate index: ALL candidate pairs with hamming

@@ -884,7 +884,8 @@ object Profiling {
     * residual fall-through, the level filters, the summary — is algebra
     * on the cell frame, bounded by the |QI|×|buckets| domain (~14k
     * cells here) regardless of row count. No row ever joins back; no
-    * window; output is ≤ 4 rows.
+    * window; output is ≤ 4 rows, returned as a local relation that pins
+    * no storage.
     */
   def dqKAnonymize(spark: SparkSession, dir: String,
       k: Int = KAnonK): DataFrame = {
@@ -922,9 +923,11 @@ object Profiling {
       .select(col("level"), col("granularity"), col("released"),
         lit(k).as("k"), col("n_rows"), col("n_cells"), col("min_cohort"))
       .orderBy(col("level"))
-      .localCheckpoint() // eager (4 rows): safe to free the cell frame
+    // at most 4 rows, one per level: collected into a local relation, so
+    // the cell frame is freed and nothing stays pinned after the call
+    val rows = out.collect()
     Curation.freeCheckpoint(l0)
-    out
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

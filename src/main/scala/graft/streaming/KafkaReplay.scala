@@ -164,13 +164,12 @@ object KafkaReplay {
 
 /** Per-partition next-offset vector; JSON array form for checkpoints. */
 private case class ReplayOffset(offs: IndexedSeq[Long]) extends Offset {
-  override def json(): String = offs.mkString("[", ",", "]")
+  override def json(): String = graft.Json.mapper.writeValueAsString(offs)
 }
 
 private object ReplayOffset {
   def parse(json: String): ReplayOffset = ReplayOffset(
-    json.trim.stripPrefix("[").stripSuffix("]").split(",")
-      .filter(_.nonEmpty).map(_.trim.toLong).toIndexedSeq)
+    graft.Json.mapper.readValue(json, classOf[Array[Long]]).toIndexedSeq)
 }
 
 private class ReplayTable(props: Map[String, String])

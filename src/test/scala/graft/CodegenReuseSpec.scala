@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Curation
 import graft.pipeline.BatchPipeline
 
 /** A long-lived session compiles each distinct generated class once:
@@ -49,9 +48,8 @@ class CodegenReuseSpec extends AnyFunSuite {
   private def corpusPass(): Unit = {
     GraftSession.release(spark, Some(dir))
     keys.foreach { k =>
-      val df = SparkEntry.queries(k)(spark, dir)
-      df.write.format("noop").mode("overwrite").save()
-      if (SparkEntry.callerOwnedCheckpoints(k)) Curation.freeCheckpoint(df)
+      SparkEntry.queries(k)(spark, dir)
+        .write.format("noop").mode("overwrite").save()
     }
     GraftSession.release(spark, Some(dir))
   }

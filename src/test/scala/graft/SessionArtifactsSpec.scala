@@ -141,20 +141,33 @@ class SessionArtifactsSpec extends AnyFunSuite {
     assert(SessionArtifacts.count(spark, "spec") == 0)
   }
 
-  test("no file under src/main but SessionArtifacts keeps its own cache") {
+  /** Each Scala file under src/main with its text. */
+  private def mainSources: Seq[(java.io.File, String)] = {
     val main = new java.io.File(RepoRoot.dir, "src/main")
     assume(main.isDirectory, s"$main absent")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val offenders = files(main)
-      .filter(f => f.getName.endsWith(".scala") &&
-        f.getName != "SessionArtifacts.scala")
-      .filter { f =>
-        val src = new String(java.nio.file.Files.readAllBytes(f.toPath),
-          "UTF-8")
-        src.contains("TrieMap") || src.contains("getOrElseUpdate")
-      }
+    files(main).filter(_.getName.endsWith(".scala")).map { f =>
+      f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    }
+  }
+
+  test("no file under src/main but SessionArtifacts keeps its own cache") {
+    val offenders = mainSources.collect {
+      case (f, src) if f.getName != "SessionArtifacts.scala" &&
+          (src.contains("TrieMap") || src.contains("getOrElseUpdate")) => f
+    }
     assert(offenders.isEmpty,
       s"memoize through SessionArtifacts instead: ${offenders.mkString(", ")}")
+  }
+
+  test("no file under src/main sleeps or hands its caller a checkpoint") {
+    val offenders = mainSources.collect {
+      case (f, src) if src.contains("Thread.sleep") ||
+          src.contains("callerOwnedCheckpoints") => f
+    }
+    assert(offenders.isEmpty,
+      "drain the listener bus (ListenerBusDrain) instead of sleeping, and " +
+        s"return frames that pin no storage: ${offenders.mkString(", ")}")
   }
 }

@@ -93,11 +93,8 @@ class Round16Spec extends AnyFunSuite {
     val before = live
     val df = Multimodal.mmAudioNeardup(spark, dir)
     df.count()
-    // the returned frame's own eager checkpoint is the only block the
-    // call may leave behind
-    assert(live <= before + 1,
+    assert(live <= before,
       s"fingerprint checkpoint leaked: $before -> $live cached RDDs")
-    Curation.freeCheckpoint(df)
   }
 
   test("checkpoint hygiene: dqKAnonymize frees its cell frame " +
@@ -107,8 +104,7 @@ class Round16Spec extends AnyFunSuite {
     val before = live
     val df = Profiling.dqKAnonymize(spark, dir)
     df.count()
-    assert(live <= before + 1,
+    assert(live <= before,
       s"cell-frame checkpoint leaked: $before -> $live cached RDDs")
-    Curation.freeCheckpoint(df)
   }
 }
