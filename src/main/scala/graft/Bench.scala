@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.JsonNode
 
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{CorpusPipeline, Curation, Dedup, Multimodal, Similarity}
+import graft.obs.Profile
+import graft.operators.{CorpusPipeline, Curation, Dedup, EventAnalytics,
+  Multimodal, Profiling, Similarity, TextAnalysis}
 
 /** Benchmark main: times every bench row on one scale-factor directory,
   * writes the full record to `bench_samples.json` in the working
@@ -24,9 +25,7 @@ import graft.operators.{CorpusPipeline, Curation, Dedup, Multimodal, Similarity}
   *  - `SPARK_GRAFT_BENCH_ONLY`: a comma list of rows to run instead of
   *    the whole suite; unknown names fail fast;
   *  - `SPARK_GRAFT_TIEBREAK_S`: wall budget of the tiebreak reps
-  *    (default 150 s);
-  *  - `SPARK_GRAFT_SHUFFLE_BUDGET_S`: wall budget of the shuffle pass
-  *    (default 90 s).
+  *    (default 150 s).
   *
   * Rows are the [[headline]] query keys and [[prodRows]], each written to
   * the `noop` sink (which materializes every column), the index family
@@ -44,6 +43,11 @@ import graft.operators.{CorpusPipeline, Curation, Dedup, Multimodal, Similarity}
   *    rep. A row's headline number is the minimum of its reps, the
   *    estimate least touched by load bursts; the sidecar keeps the
   *    median, every sample and the 1-minute load average before each.
+  *  - Every timed rep runs under [[graft.obs.Profile.run]], keyed by its
+  *    row, which times it. The sidecar keeps, per row, the shuffle and
+  *    spill bytes (`shuffle_mb`) and the jobs, stages, tasks and task
+  *    time (`profile`) of its fastest rep, and the classes compiled over
+  *    all its reps (`codegen`).
   *  - Rows whose samples spread more than 1.3x get tiebreak reps within
   *    the tiebreak budget, widest spread first.
   *  - A failed rep records -1. A row with a failed rep reports -1, is
@@ -51,8 +55,6 @@ import graft.operators.{CorpusPipeline, Curation, Dedup, Multimodal, Similarity}
   *  - Full runs time two index builds per family without the collection
   *    that precedes a timed build (`index_nogc`). The persisted-index
   *    leg runs unless a subset leaves out all of its rows.
-  *  - One untimed shuffle pass re-runs each row under a stage-metrics
-  *    listener, within its budget, for the sidecar's `shuffle_mb`.
   *  - When `BASELINE_BENCH.json` records this scale factor, each row is
   *    compared with it after dividing out the calibration ratio
   *    (`vsb_*`), so host drift cancels. When `tools/oracle_times.json`
@@ -214,13 +216,9 @@ object Bench {
 
   private[graft] val prodBodies
       : Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dq_uniqueness_approx_prod" ->
-      ((s, d) => graft.operators.Profiling.dqUniquenessApproxProd(s, d)),
-    "ev_rfm_approx_prod" ->
-      ((s, d) => graft.operators.EventAnalytics.evRfmApproxProd(s, d)),
-    "text_distinct_n_approx_prod" ->
-      ((s, d) => graft.operators.TextAnalysis.textDistinctNApproxProd(s, d)),
-  )
+    "dq_uniqueness_approx_prod" -> Profiling.dqUniquenessApproxProd,
+    "ev_rfm_approx_prod" -> EventAnalytics.evRfmApproxProd,
+    "text_distinct_n_approx_prod" -> TextAnalysis.textDistinctNApproxProd)
 
   /** Persisted-index rows: after the timed passes the dedup and IVF
     * indexes are saved once; each rep then releases them, `index_load`
@@ -230,11 +228,10 @@ object Bench {
   val indexColdRows: Seq[String] =
     Seq("index_load", "dedup_minhash_lsh_cold", "sim_ivf_ann_cold")
 
-  private val familyBuilds: Map[String, (SparkSession, String) => Unit] =
-    Map(
-      "index_build_dedup" -> ((s, d) => Dedup.buildIndexes(s, d)),
-      "index_build_ivf" -> ((s, d) => Similarity.buildIvfIndex(s, d)),
-      "index_build_dhash" -> ((s, d) => Multimodal.buildDhashSketch(s, d)))
+  private val familyBuilds: Map[String, (SparkSession, String) => Unit] = Map(
+    "index_build_dedup" -> ((s, d) => Dedup.buildIndexes(s, d)),
+    "index_build_ivf" -> ((s, d) => Similarity.buildIvfIndex(s, d)),
+    "index_build_dhash" -> ((s, d) => Multimodal.buildDhashSketch(s, d)))
 
   /** Artifact owners released before each rep of a row that memoizes its
     * own result, so that every rep does the row's work.
@@ -261,6 +258,12 @@ object Bench {
       case None => queryFrame(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
     }
+
+  /** One timed rep of a row: its seconds (-1 when it failed), the
+    * 1-minute load average before it, and its profile (none for a failed
+    * rep or the composite row).
+    */
+  private final case class Rep(secs: Double, load: Double, profile: Option[Profile])
 
   private def r2(v: Double): Double = math.round(v * 100) / 100.0
   private def r3(v: Double): Double = math.round(v * 1e3) / 1e3
@@ -338,38 +341,16 @@ object Bench {
       .map(r => numbers(r.path(sf)).filter(kv => headline.contains(kv._1)))
       .getOrElse(Map.empty)
 
-  /** Accumulates stage-level shuffle and spill bytes across the whole
-    * app; the shuffle pass diffs snapshots around each row. Callbacks
-    * arrive on the listener bus thread.
-    */
-  private class StageMetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    private val read = new java.util.concurrent.atomic.AtomicLong
-    private val write = new java.util.concurrent.atomic.AtomicLong
-    private val spill = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        write.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def snapshot: (Long, Long, Long) = (read.get, write.get, spill.get)
-  }
-
-  private def loadavg1: Double =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString
-      .split("\\s+")(0).toDouble
-    catch { case _: Exception => -1.0 }
-
+  // the first number after `prefix` in a /proc file, or -1 when it
+  // cannot be read
+  private def procField(file: String, prefix: String): Double =
+    scala.util.Try(scala.io.Source.fromFile(file).getLines()
+      .find(_.startsWith(prefix)).get.stripPrefix(prefix).trim
+      .split("\\s+")(0).toDouble).getOrElse(-1.0)
+  private def loadavg1: Double = procField("/proc/loadavg", "")
+  // floor keeps the -1 of an unreadable file
   private def rssMb: Long =
-    try {
-      scala.io.Source.fromFile("/proc/self/status").getLines()
-        .find(_.startsWith("VmRSS:"))
-        .map(_.split("\\s+")(1).toLong / 1024).getOrElse(-1L)
-    } catch { case _: Exception => -1L }
+    (procField("/proc/self/status", "VmRSS:") / 1024).floor.toLong
 
   private def gcMs: Long =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -413,23 +394,14 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSet)
-    only.foreach { names =>
-      val unknown = names -- headline.toSet - indexBuildRow --
-        indexFamilyRows.toSet -- indexColdRows.toSet -- prodRows.toSet
-      require(unknown.isEmpty,
-        s"unknown bench row(s) in SPARK_GRAFT_BENCH_ONLY: " +
-          unknown.toSeq.sorted.mkString(","))
-    }
-    def budgetS(name: String, default: String): Long = {
-      val raw = sys.env.getOrElse(name, default)
-      require(raw.matches("\\d+"),
-        s"$name must be a whole number of seconds, got '$raw'")
-      raw.toLong
-    }
-    val shuffleBudgetS = budgetS("SPARK_GRAFT_SHUFFLE_BUDGET_S", "90")
-    val tiebreakBudgetS = budgetS("SPARK_GRAFT_TIEBREAK_S", "150")
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').toSet)
+    val unknown = only.getOrElse(Set.empty) -- headline - indexBuildRow --
+      indexFamilyRows -- indexColdRows -- prodRows
+    require(unknown.isEmpty, "unknown bench row(s) in SPARK_GRAFT_BENCH_ONLY: " +
+      unknown.toSeq.sorted.mkString(","))
+    val tiebreakS = sys.env.getOrElse("SPARK_GRAFT_TIEBREAK_S", "150")
+    require(tiebreakS.matches("\\d+"), "SPARK_GRAFT_TIEBREAK_S must be a " +
+      s"whole number of seconds, got '$tiebreakS'")
     val threads = cpus.toIntOption.getOrElse(32)
     val sfName = new java.io.File(sfDir).getName
     val spark = GraftSession.local("graft-bench", cpus)
@@ -439,44 +411,35 @@ object Bench {
     def run(name: String): Unit = runRow(spark, sfDir, name)
     def reset(name: String): Unit = resetOwners.get(name)
       .foreach(o => SessionArtifacts.release(spark, Some(sfDir), Some(o)))
-    // seconds one run of `body` took, or -1 when it threw
-    def attempt(label: String)(body: => Unit): Double =
-      try {
-        val t0 = System.nanoTime()
-        body
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
+    // one profiled run of `body` under the job group `label`, or None
+    // when it threw
+    def attempt(label: String)(body: => Unit): Option[Profile] =
+      try Some(Profile.run(spark, label)(body)._2)
+      catch { case e: Throwable =>
         System.err.println(s"[bench] $label failed: ${e.getMessage}")
-        -1.0
+        None
       }
 
     val allRows: Seq[String] = indexFamilyRows ++
       (headline ++ prodRows).filter(q => only.forall(_.contains(q)))
-    // per row and rep: (seconds, 1-minute load average before the rep)
-    val repBuf = mutable.LinkedHashMap(
-      allRows.map(n => n -> mutable.ArrayBuffer.empty[(Double, Double)]): _*)
-    def samples(n: String): Seq[Double] = repBuf(n).toSeq.map(_._1)
-    // per row, summed over its timed reps: classes compiled (codegen
-    // cache misses) and nanoseconds spent compiling them
-    val codegenBuf = mutable.LinkedHashMap(allRows.map(n => n -> (0L, 0L)): _*)
-    def codegenNow: (Long, Long) =
-      (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
-        org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime)
-    // One timed rep. The tiebreak passes recordFailure = false: it
-    // refines timing, and must not turn a row whose passes all succeeded
-    // into a failure.
+    val repBuf = mutable.LinkedHashMap((allRows ++ indexColdRows)
+      .map(n => n -> mutable.ArrayBuffer.empty[Rep]): _*)
+    def samples(n: String): Seq[Double] = repBuf(n).toSeq.map(_.secs)
+    // One timed rep of `body` as row `name`. The tiebreak passes
+    // recordFailure = false: it refines timing, and must not turn a row
+    // whose passes all succeeded into a failure.
+    def timedRep(name: String, recordFailure: Boolean = true)(
+        body: => Unit): Unit = {
+      val la = loadavg1
+      val p = attempt(name)(body)
+      if (p.isDefined || recordFailure)
+        repBuf(name) += Rep(p.fold(-1.0)(_.wallS), la, p)
+    }
     def runRep(name: String, recordFailure: Boolean = true): Unit = {
       reset(name)
-      val la = loadavg1
       // a build row times the build, not the heap the rows before it left
       if (familyBuilds.contains(name)) System.gc()
-      val (compiles0, compileNs0) = codegenNow
-      val sample = attempt(name)(run(name))
-      val (compiles1, compileNs1) = codegenNow
-      val (compiles, compileNs) = codegenBuf(name)
-      codegenBuf(name) =
-        (compiles + compiles1 - compiles0, compileNs + compileNs1 - compileNs0)
-      if (sample >= 0 || recordFailure) repBuf(name) += sample -> la
+      timedRep(name, recordFailure)(run(name))
     }
     // untimed: the first run of a DAG pays code generation and JIT that
     // no later rep pays
@@ -502,7 +465,7 @@ object Bench {
     locally {
       val tbStart = System.nanoTime()
       def withinBudget: Boolean =
-        System.nanoTime() - tbStart < tiebreakBudgetS * 1000L * 1000 * 1000
+        System.nanoTime() - tbStart < tiebreakS.toLong * 1000L * 1000 * 1000
       // relative spread, counted only above an absolute 0.5 s: sub-second
       // rows pass 1.3x on scheduler noise alone
       def spread(n: String): Double = {
@@ -545,29 +508,24 @@ object Bench {
     val nogcSamples: Seq[(String, Seq[Double])] =
       if (only.isDefined) Nil
       else indexFamilyRows.map { n =>
-        n -> (1 to 2).map { _ => reset(n); attempt(s"nogc $n")(run(n)) }
+        n -> (1 to 2).map(_ => { reset(n); attempt(s"nogc $n")(run(n)) })
+          .map(_.fold(-1.0)(_.wallS))
       }
 
     if (only.forall(_.exists(indexColdRows.contains))) {
       val idxDir = s"target/bench_index/$sfName"
-      val coldRuns: Seq[(String, () => Unit)] = Seq(
-        "index_load" -> (() => GraftSession.loadIndexes(spark, sfDir,
-          s"$idxDir/dedup", s"$idxDir/ivf")),
-        "dedup_minhash_lsh_cold" -> (() => run("dedup_minhash_lsh")),
-        "sim_ivf_ann_cold" -> (() => run("sim_ivf_ann")))
       try {
         Dedup.saveDedupIndex(spark, sfDir, s"$idxDir/dedup")
         Similarity.saveIvfIndex(spark, sfDir, s"$idxDir/ivf")
         for (_ <- 1 to reps) {
-          // release only the two reloaded indexes: the rows of the
-          // shuffle pass still read every other artifact
+          // release only the two reloaded indexes: the cold rows read
+          // every other artifact as the timed passes left it
           for (owner <- Seq(Dedup.Owner, Similarity.Owner))
             SessionArtifacts.release(spark, Some(sfDir), Some(owner))
-          coldRuns.foreach { case (n, body) =>
-            val la = loadavg1
-            val secs = attempt(n)(body())
-            repBuf(n) = repBuf.getOrElse(n, mutable.ArrayBuffer.empty) += secs -> la
-          }
+          timedRep("index_load")(GraftSession.loadIndexes(spark, sfDir,
+            s"$idxDir/dedup", s"$idxDir/ivf"))
+          timedRep("dedup_minhash_lsh_cold")(run("dedup_minhash_lsh"))
+          timedRep("sim_ivf_ann_cold")(run("sim_ivf_ann"))
         }
       } catch { case e: Throwable =>
         System.err.println(s"[bench] cold leg failed: ${e.getMessage}")
@@ -579,46 +537,14 @@ object Bench {
       val n = familySamples.map(_.length).min
       repBuf(indexBuildRow) = mutable.ArrayBuffer.tabulate(n) { i =>
         val xs = familySamples.map(_(i))
-        (if (xs.contains(-1.0)) -1.0 else xs.sum,
-          repBuf(indexFamilyRows.head)(i)._2)
+        Rep(if (xs.contains(-1.0)) -1.0 else xs.sum,
+          repBuf(indexFamilyRows.head)(i).load, None)
       }
     }
     val results: Seq[(String, Seq[Double])] =
       ((if (repBuf.contains(indexBuildRow)) Seq(indexBuildRow) else Nil) ++
-        allRows ++ indexColdRows.filter(repBuf.contains))
+        allRows ++ indexColdRows.filter(repBuf(_).nonEmpty))
         .map(n => n -> samples(n))
-
-    // Untimed: each row once more under a stage-metrics listener. The
-    // bus is drained before each snapshot, so a row's bytes never bleed
-    // into the next row's. Rows past the budget get no entry.
-    val shuffleBytes: Seq[(String, (Long, Long, Long))] =
-      try {
-        val sc = spark.sparkContext
-        val lst = new StageMetricsListener
-        sc.addSparkListener(lst)
-        try {
-          def snapshot: (Long, Long, Long) = {
-            ListenerBusDrain.drain(sc)
-            lst.snapshot
-          }
-          val passStart = System.nanoTime()
-          allRows.iterator.takeWhile(_ =>
-            System.nanoTime() - passStart < shuffleBudgetS * 1000L * 1000 * 1000)
-            .map { name =>
-              reset(name)
-              val before = snapshot
-              try {
-                run(name)
-                val after = snapshot
-                name -> ((after._1 - before._1, after._2 - before._2,
-                  after._3 - before._3))
-              } catch { case _: Throwable => name -> ((-1L, -1L, -1L)) }
-            }.toList
-        } finally sc.removeSparkListener(lst)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] shuffle metrics pass failed: ${e.getMessage}")
-        Seq.empty
-      }
 
     val timed = results.map { case (k, ss) => k -> minOf(ss) }.filter(_._2 >= 0)
     val oracle = oracleTimes(sfName)
@@ -644,12 +570,16 @@ object Bench {
         common.map(kv => baseQ(kv._1)).sum),
       "vsb_n" -> vsBase.size, "vsb_cal_ratio" -> r3(calRatio))
 
-    def loads(n: String): Seq[Double] = repBuf(n).toSeq.map(_._2)
+    def loads(n: String): Seq[Double] = repBuf(n).toSeq.map(_.load)
     val allLoads = results.flatMap { case (k, _) => loads(k) }.sorted
     val loadP90 =
       if (allLoads.isEmpty) 0.0
       else allLoads(math.min(allLoads.length - 1, (allLoads.length * 0.9).toInt))
-    def mb(b: Long): Double = if (b < 0) -1.0 else r2(b / 1048576.0)
+    def mb(b: Long): Double = r2(b / 1048576.0)
+    // per row with a successful rep: `f` of the profiles of those reps
+    def perRow(f: Seq[Profile] => Any): ListMap[String, Any] = ListMap.from(
+      results.map { case (k, _) => k -> repBuf(k).toSeq.flatMap(_.profile) }
+        .collect { case (k, ps) if ps.nonEmpty => k -> f(ps) })
     val sidecar = ListMap[String, Any](
       "samples" -> ListMap.from(results.map { case (k, ss) => k -> ss.map(r3) }),
       "medians" -> ListMap.from(results.map { case (k, ss) => k -> r3(medianOf(ss)) }),
@@ -668,13 +598,19 @@ object Bench {
       when(ratios.nonEmpty)("spark_vs_duckdb" -> ListMap.from(ratios)) ++
       when(vsBase.nonEmpty)("vs_baseline_normalized" -> ListMap.from(vsBase),
         "vsb_baseline_cal_st" -> baseCal) ++
-      when(shuffleBytes.nonEmpty)("shuffle_mb" -> ListMap.from(shuffleBytes.map {
-        case (k, (r, w, sp)) =>
-          k -> ListMap("read" -> mb(r), "write" -> mb(w), "spill" -> mb(sp))
-      })) ++
-      ListMap("codegen" -> ListMap.from(codegenBuf.toSeq.map { case (k, (n, ns)) =>
-        k -> ListMap[String, Any]("compiles" -> n, "compile_s" -> r3(ns / 1e9))
-      }), "sf" -> sfDir)
+      ListMap("shuffle_mb" -> perRow { ps =>
+        val p = ps.minBy(_.wallS)
+        ListMap("read" -> mb(p.shuffleReadBytes),
+          "write" -> mb(p.shuffleWriteBytes), "spill" -> mb(p.spillBytes))
+      }, "codegen" -> perRow { ps =>
+        ListMap[String, Any]("compiles" -> ps.map(_.compiles).sum,
+          "compile_s" -> r3(ps.map(_.compileS).sum))
+      }, "profile" -> perRow { ps =>
+        val p = ps.minBy(_.wallS)
+        ListMap[String, Any]("jobs" -> p.jobs, "stages" -> p.stages.size,
+          "tasks" -> p.tasks, "task_run_s" -> r3(p.taskRunS),
+          "task_cpu_s" -> r3(p.taskCpuS))
+      }, "sf" -> sfDir)
     try Json.write("bench_samples.json", sidecar)
     catch { case e: Exception =>
       System.err.println(s"[bench] sidecar write failed: ${e.getMessage}")

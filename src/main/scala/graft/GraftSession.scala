@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.QueryStageThreads
 
 /** The library's session-configuration contract, applied ONCE at session
   * construction. graft query functions never mutate session conf themselves
@@ -140,9 +141,12 @@ object GraftSession {
   /** Apply the library conf contract to an existing session (idempotent),
     * and install the graft function/rule/strategy registry so SQL users
     * get `graft_*` functions and the custom operators without a separate
-    * registration call.
+    * registration call. AQE's callback threads are made to start without
+    * inherited local properties ([[QueryStageThreads]]), so no late job
+    * carries an ended SQL execution or another caller's job group.
     */
   def tune(spark: SparkSession): SparkSession = {
+    QueryStageThreads.isolate()
     spark.conf.set("spark.sql.ansi.enabled", "false")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the TIMESTAMP_NTZ → TIMESTAMP normalization (Tables.normalizeEventTs)
@@ -154,10 +158,12 @@ object GraftSession {
     spark
   }
 
-  /** Standard local session for the library's own mains. */
-  def local(appName: String, cpus: String): SparkSession = {
+  /** Standard local session for the library's own mains: `cpus` shuffle
+    * partitions, on `master` (default `local[cpus]`). */
+  def local(appName: String, cpus: String,
+      master: Option[String] = None): SparkSession = {
     val s = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master(master.getOrElse(s"local[$cpus]"))
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

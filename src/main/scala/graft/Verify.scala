@@ -8,13 +8,10 @@ object Verify {
     // comma-separated query keys — run just those. A typo'd name must
     // fail fast (ADVICE r7: a silently-empty filter made an all-skip run
     // look green).
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(',').toSet) else None
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown query name(s) in subset arg: ${unknown.toSeq.sorted.mkString(",")}")
-    }
+    val only = args.lift(2).map(_.split(',').toSet)
+    val unknown = only.getOrElse(Set.empty) -- SparkEntry.queries.keySet
+    require(unknown.isEmpty,
+      s"unknown query name(s) in subset arg: ${unknown.toSeq.sorted.mkString(",")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local("graft-verify", cpus)
     new java.io.File(outDir).mkdirs()
@@ -25,8 +22,10 @@ object Verify {
     // not as "not dumped" (ADVICE r7 — check_oracle.py skips missing dirs
     // to support subset runs, which hid crashed queries in full runs).
     Json.write(s"$outDir/manifest.json", attempted)
+    // each query runs under its key as job group and description, so
+    // Spark's own tooling names its jobs
     attempted.foreach { name =>
-      try {
+      try graft.obs.Profile.run(spark, name) {
         val df = SparkEntry.queries(name)(spark, sfDir)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       } catch { case e: Throwable =>

@@ -618,18 +618,6 @@ object EventConsumer {
     enrichAgg(ev, userFirstDay(ev))
   }
 
-  /** Streaming flavor over the file source; parity with the batch twin
-    * on closed windows is pinned in Round12cSpec.
-    */
-  def streamingEnrichAgg(spark: SparkSession, dir: String): DataFrame =
-    enrichAgg(
-      Tables.normalizeEventTs(
-        spark.readStream
-          .schema(Tables.eventsFileSchema(spark, dir))
-          .parquet(dir))
-        .withWatermark("ts", "1 day"),
-      userFirstDay(Tables.t(spark, dir, "events")))
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "st13_stream_enrich" -> (batchEnrichAgg _),
     "st12_user_profile" -> (batchUserProfile _),

@@ -3,20 +3,21 @@ package graft
 import java.nio.file.Files
 import java.time.LocalDate
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.Profile
 import graft.pipeline.BatchPipeline
 
 /** A long-lived session compiles each distinct generated class once:
   * Spark's codegen cache holds a corpus cycle's working set (sized in
   * `GraftSession.buildConf`), and per-run values such as the daily
   * pipeline's `asOf` stay out of generated code. Compiles are counted
-  * with Spark's own `CodegenMetrics`, whose compilation-time histogram
-  * records one sample per Janino compile (a cache miss).
+  * by [[graft.obs.Profile]] from Spark's own `CodegenMetrics`, whose
+  * compilation-time histogram records one sample per Janino compile (a
+  * cache miss).
   */
 class CodegenReuseSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -26,11 +27,8 @@ class CodegenReuseSpec extends AnyFunSuite {
     "graph_label_prop")
 
   /** Classes compiled while `body` runs. */
-  private def compiles(body: => Unit): Long = {
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    body
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-  }
+  private def compiles(body: => Unit): Long =
+    Profile.run(spark, "codegen_reuse")(body)._2.compiles
 
   /** Empty the JVM-wide codegen cache, so the next plans compile as in a
     * fresh JVM whatever earlier suites compiled. The session is built

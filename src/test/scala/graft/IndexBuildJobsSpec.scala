@@ -1,11 +1,8 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.Profile
 import graft.operators.Dedup
 
 /** The dedup index build runs a fixed, small number of Spark jobs: the
@@ -19,20 +16,8 @@ class IndexBuildJobsSpec extends AnyFunSuite {
 
   /** Jobs one index build starts, from released caches. */
   private def buildJobs(): Int = {
-    val sc = spark.sparkContext
     GraftSession.release(spark)
-    val jobs = new AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    ListenerBusDrain.drain(sc)
-    sc.addSparkListener(counter)
-    try {
-      Dedup.buildIndexes(spark, dir)
-      ListenerBusDrain.drain(sc)
-      jobs.get
-    } finally sc.removeSparkListener(counter)
+    Profile.run(spark, "index_build_dedup")(Dedup.buildIndexes(spark, dir))._2.jobs
   }
 
   test("Dedup.buildIndexes runs the same job count on every build, under " +

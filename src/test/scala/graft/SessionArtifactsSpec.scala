@@ -7,17 +7,16 @@ import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
 import scala.util.Try
 
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.Profile
 import graft.operators.{CorpusPipeline, Curation, Dedup}
 
 /** The session-artifact store under concurrent callers: one build per
   * key however many callers race for it, nested builds that neither
   * deadlock nor trip a recursive-update check, and failures that reach
-  * every waiter without being memoized. Also the guard that keeps every
-  * operator cache in the store.
+  * every waiter without being memoized. Also the guards that keep every
+  * operator cache in the store and every listener in [[graft.obs.Profile]].
   */
 class SessionArtifactsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -39,22 +38,12 @@ class SessionArtifactsSpec extends AnyFunSuite {
     } finally pool.shutdownNow()
   }
 
-  /** (jobs run, RDDs left persisted) by `body`. */
+  /** (jobs run, RDDs left persisted) by `body`. The racing threads are
+    * started inside `body`, so they inherit its job group. */
   private def footprint(body: => Unit): (Int, Set[Int]) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val counter = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    ListenerBusDrain.drain(sc)
     val base = persisted
-    sc.addSparkListener(counter)
-    try {
-      body
-      ListenerBusDrain.drain(sc)
-      (jobs.get, persisted -- base)
-    } finally sc.removeSparkListener(counter)
+    val (_, p) = Profile.run(spark, "footprint")(body)
+    (p.jobs, persisted -- base)
   }
 
   /** `threads` racing callers of `call` pin the RDDs of one caller, run
@@ -152,22 +141,27 @@ class SessionArtifactsSpec extends AnyFunSuite {
     }
   }
 
-  test("no file under src/main but SessionArtifacts keeps its own cache") {
-    val offenders = mainSources.collect {
-      case (f, src) if f.getName != "SessionArtifacts.scala" &&
-          (src.contains("TrieMap") || src.contains("getOrElseUpdate")) => f
+  /** Source scans: (test name, the one file allowed to match, what a
+    * file must not contain, what to do instead). */
+  for ((name, exempt, matches, advice) <- Seq[(String, String, String => Boolean, String)](
+      ("no file under src/main but SessionArtifacts keeps its own cache",
+        "graft/SessionArtifacts.scala",
+        src => src.contains("TrieMap") || src.contains("getOrElseUpdate"),
+        "memoize through SessionArtifacts instead"),
+      ("no file under src/main but graft/obs/Profile.scala declares a " +
+        "SparkListener", "graft/obs/Profile.scala",
+        src => """(extends|with|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener\b"""
+          .r.findFirstIn(src).isDefined,
+        "profile through graft.obs.Profile.run instead"),
+      ("no file under src/main sleeps or hands its caller a checkpoint", "",
+        src => src.contains("Thread.sleep") || src.contains("callerOwnedCheckpoints"),
+        "drain the listener bus (ListenerBusDrain) instead of sleeping, and " +
+          "return frames that pin no storage")))
+    test(name) {
+      val offenders = mainSources.collect {
+        case (f, src) if !(exempt.nonEmpty && f.getPath.endsWith(exempt)) &&
+            matches(src) => f
+      }
+      assert(offenders.isEmpty, s"$advice: ${offenders.mkString(", ")}")
     }
-    assert(offenders.isEmpty,
-      s"memoize through SessionArtifacts instead: ${offenders.mkString(", ")}")
-  }
-
-  test("no file under src/main sleeps or hands its caller a checkpoint") {
-    val offenders = mainSources.collect {
-      case (f, src) if src.contains("Thread.sleep") ||
-          src.contains("callerOwnedCheckpoints") => f
-    }
-    assert(offenders.isEmpty,
-      "drain the listener bus (ListenerBusDrain) instead of sleeping, and " +
-        s"return frames that pin no storage: ${offenders.mkString(", ")}")
-  }
 }

@@ -1,17 +1,11 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
-  SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{GraftSession, SparkTestSession}
 
-/** The shape of the round loops, seen by the spec's own listener: Catalyst
+/** The shape of the round loops, seen through [[graft.obs.Profile]]: Catalyst
   * plans each loop's input once and every round is at most one small RDD
   * job, so raising a loop's round parameter adds at most one job per
   * round and never a SQL execution. Each key's whole call also stays
@@ -22,17 +16,6 @@ class LoopShapeSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val dir = "/root/testdata/sf0.01"
 
-  private final class Counter extends SparkListener {
-    val jobs = new AtomicInteger
-    val sql = new AtomicInteger
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      jobs.incrementAndGet()
-    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-      case _: SparkListenerSQLExecutionStart => sql.incrementAndGet()
-      case _ =>
-    }
-  }
-
   private def persisted: Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
@@ -42,19 +25,14 @@ class LoopShapeSpec extends AnyFunSuite {
   /** (jobs, SQL executions) of `body` plus a noop write of its result,
     * asserting that nothing stays persisted once the result is freed. */
   private def shape(key: String)(body: => DataFrame): (Int, Int) = {
-    val sc = spark.sparkContext
-    ListenerBusDrain.drain(sc)
     val before = persisted
-    val c = new Counter
-    sc.addSparkListener(c)
-    try {
+    val (_, p) = graft.obs.Profile.run(spark, key) {
       val df = body
       df.write.format("noop").mode("overwrite").save()
       Curation.freeCheckpoint(df)
-      ListenerBusDrain.drain(sc)
-      assert(leaked(before).isEmpty, s"$key leaked RDDs ${leaked(before)}")
-      (c.jobs.get, c.sql.get)
-    } finally sc.removeSparkListener(c)
+    }
+    assert(leaked(before).isEmpty, s"$key leaked RDDs ${leaked(before)}")
+    (p.jobs, p.sqlExecutions)
   }
 
   /** Each loop with its round parameter, and the job ceiling of one call

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.obs.Profile
 
 /** Round-17 contracts (ADVICE r16): the curate stage's NULL-text admit
   * rule is PINNED rather than incidental, the two-level uniqueness
@@ -76,34 +77,13 @@ class Round17Spec extends AnyFunSuite {
     // table EVERY round, making total shuffle-write ~11x the largest
     // single stage. Assert total < 4x max — robust to AQE stage
     // shaping, independent of corpus size.
-    val write = new java.util.concurrent.atomic.AtomicLong
-    val maxW = new java.util.concurrent.atomic.AtomicLong
-    val lst = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = sc.stageInfo.taskMetrics
-        if (m != null) {
-          val w = m.shuffleWriteMetrics.bytesWritten
-          write.addAndGet(w)
-          maxW.accumulateAndGet(w, Math.max(_, _))
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(lst)
-    try {
-      TextAnalysis.textClassifierTrain(spark, dir).collect()
-      // drain async listener events
-      var prev = (-1L, -1L); var calm = 0; var waited = 0
-      while (calm < 3 && waited < 5000) {
-        Thread.sleep(50); waited += 50
-        val cur = (write.get, maxW.get)
-        if (cur == prev) calm += 1 else { calm = 0; prev = cur }
-      }
-    } finally spark.sparkContext.removeSparkListener(lst)
-    assert(maxW.get > 0, "training must shuffle the feature table once")
-    assert(write.get < 4 * maxW.get,
-      s"per-round re-shuffle detected: total ${write.get} B vs largest " +
-        s"stage ${maxW.get} B — the pre-partitioned persist is gone")
+    val (_, p) = Profile.run(spark, "text_classifier_train")(
+      TextAnalysis.textClassifierTrain(spark, dir).collect())
+    val maxW = p.stages.map(_.shuffleWriteBytes).maxOption.getOrElse(0L)
+    assert(maxW > 0, "training must shuffle the feature table once")
+    assert(p.shuffleWriteBytes < 4 * maxW, "per-round re-shuffle detected: " +
+      s"total ${p.shuffleWriteBytes} B vs largest stage $maxW B — the " +
+      "pre-partitioned persist is gone")
   }
 
   test("eval shingle artifact: memoized per (session, dir) and evicted " +
