@@ -229,9 +229,9 @@ object Bench {
     Seq("index_load", "dedup_minhash_lsh_cold", "sim_ivf_ann_cold")
 
   private val familyBuilds: Map[String, (SparkSession, String) => Unit] = Map(
-    "index_build_dedup" -> ((s, d) => Dedup.buildIndexes(s, d)),
-    "index_build_ivf" -> ((s, d) => Similarity.buildIvfIndex(s, d)),
-    "index_build_dhash" -> ((s, d) => Multimodal.buildDhashSketch(s, d)))
+    "index_build_dedup" -> (Dedup.buildIndexes _),
+    "index_build_ivf" -> (Similarity.buildIvfIndex _),
+    "index_build_dhash" -> (Multimodal.buildDhashSketch _))
 
   /** Artifact owners released before each rep of a row that memoizes its
     * own result, so that every rep does the row's work.

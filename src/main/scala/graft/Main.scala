@@ -27,8 +27,7 @@ import graft.sources.Sources
   * ingest-time index jobs and PERSISTS their artifacts (dedup signature
   * sketch + verified pairs, IVF codebook + assignment + radii) — the
   * nightly job after which no query session ever re-shingles or
-  * re-scans the corpus (load via Dedup.loadDedupIndex /
-  * Similarity.loadIvfIndex).
+  * re-scans the corpus (restore both with GraftSession.loadIndexes).
   */
 object Main {
   def main(args: Array[String]): Unit = {

@@ -33,6 +33,15 @@ object MatchExprs {
 
   private val monthsH1 = Seq("Jan", "Feb", "Mar", "Apr", "May", "Jun", "Jul")
 
+  /** X8 batch timestamp: `runTs` (UTC) rendered in Asia/Jakarta (ref
+    * dags/projectde_dag.py:120-122). It folds to a string literal, which
+    * generated code already reads through a reference, so `runTs` needs
+    * no bound value.
+    */
+  def createdAt(runTs: String): Column =
+    date_format(from_utc_timestamp(lit(runTs).cast("timestamp"),
+      "Asia/Jakarta"), "yyyy-MM-dd HH:mm:ss")
+
   /** Full cleaning pipeline: matches_raw → reference `matches` table shape
     * (column order per dags/projectde_dag.py:124 + derived results at
     * :128-129). Malformed dates and future matches are dropped; malformed
@@ -74,12 +83,7 @@ object MatchExprs {
         when(size(scoreArr) >= 2, expr("try_cast(trim(split(score, ' - ')[0]) AS INT)")))
       .withColumn("away_score",
         when(size(scoreArr) >= 2, expr("try_cast(trim(split(score, ' - ')[1]) AS INT)")))
-      // X8 batch timestamp rendered in Asia/Jakarta (ref :120-122). It
-      // folds to a string literal, which generated code already reads
-      // through a reference, so `runTs` needs no bound value.
-      .withColumn("created_at",
-        date_format(from_utc_timestamp(lit(runTs).cast("timestamp"),
-          "Asia/Jakarta"), "yyyy-MM-dd HH:mm:ss"))
+      .withColumn("created_at", createdAt(runTs))
       // X10 match points (ref :128-129)
       .withColumn("result_home",
         when(col("home_score") > col("away_score"), 3)

@@ -16,7 +16,7 @@ import graft.SessionArtifacts
   * the sketch is never recomputed here); the removal is a broadcastable
   * left-anti join against the (small) loser set. Nothing in this plan is
   * quadratic in corpus size. The cleaned corpus itself is memoized per
-  * (session, corpus, threshold) so downstream consumers — the summary
+  * (session, corpus) so downstream consumers — the summary
   * report here, sharding/tokenization in production — read it instead of
   * re-running the pipeline.
   */
@@ -25,10 +25,13 @@ object CorpusPipeline {
   /** Owner of the cleaned corpus in [[graft.SessionArtifacts]]. */
   private[graft] final val Owner = "corpus-pipeline"
 
-  def corpusClean(spark: SparkSession, dir: String,
-      minQuality: Double = 0.7): DataFrame =
+  /** Quality floor of the cleaned and the curated corpus, interpolated
+    * into the oracles. */
+  private[operators] val MinQuality = 0.7
+
+  def corpusClean(spark: SparkSession, dir: String): DataFrame =
     SessionArtifacts.getOrBuild(spark, dir,
-        SessionArtifacts.Kind(Owner, s"clean-$minQuality")) {
+        SessionArtifacts.Kind(Owner, "clean")) {
       val quality = TextAnalysis.textQuality(spark, dir)
         .select(col("doc_id"), col("quality"))
       val losers = Dedup.minhashPairs(spark, dir)
@@ -37,10 +40,10 @@ object CorpusPipeline {
       val cleaned = graft.Tables.t(spark, dir, "documents")
         .select(col("doc_id"), col("lang"))
         .join(quality, "doc_id")
-        .filter(col("quality") >= minQuality)
+        .filter(col("quality") >= MinQuality)
         .join(losers, Seq("doc_id"), "left_anti")
         .persist(StorageLevel.MEMORY_AND_DISK)
-      cleaned.count() // materialize once per (session, corpus, threshold)
+      cleaned.count() // materialize once per (session, corpus)
       cleaned
     }(SessionArtifacts.unpersist)
 
@@ -55,7 +58,7 @@ object CorpusPipeline {
         round(avg(col("quality")), 6).as("avg_quality"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "corpus_clean" -> ((s: SparkSession, d: String) => corpusClean(s, d)),
+    "corpus_clean" -> (corpusClean _),
     "corpus_clean_summary" -> (corpusCleanSummary _),
   )
 
@@ -95,7 +98,7 @@ object CorpusPipeline {
       SELECT d.doc_id, d.lang, q.quality
       FROM documents d
       JOIN qual q ON d.doc_id = q.doc_id
-      WHERE q.quality >= 0.7
+      WHERE q.quality >= $MinQuality
         AND NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = d.doc_id)""",
     "corpus_clean_summary" -> s"""
       WITH $losersCte,
@@ -103,7 +106,7 @@ object CorpusPipeline {
       SELECT d.lang, count(*) AS n_docs, round(avg(q.quality), 6) AS avg_quality
       FROM documents d
       JOIN qual q ON d.doc_id = q.doc_id
-      WHERE q.quality >= 0.7
+      WHERE q.quality >= $MinQuality
         AND NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = d.doc_id)
       GROUP BY 1""",
   )

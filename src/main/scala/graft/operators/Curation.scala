@@ -263,14 +263,14 @@ object Curation {
     * pattern); targets are an integer cross-multiply (`u·T div U`), never
     * a double product.
     */
-  def temperatureMix(spark: SparkSession, dir: String,
-      tau: Double = TemperatureTau): DataFrame = {
+  def temperatureMix(spark: SparkSession, dir: String): DataFrame = {
     val perSource = t(spark, dir, "documents")
       .select(col("source"), size(split(col("text"), " ")).as("n_toks"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_toks")).as("n_tokens"))
       .withColumn("u",
-        round(pow(col("n_tokens").cast("double"), tau) * 1e6).cast("long"))
+        round(pow(col("n_tokens").cast("double"), TemperatureTau) * 1e6)
+          .cast("long"))
     // pinned single partition over the |sources|-row aggregate (same
     // frame as the unpartitioned form, no WindowExec warning)
     val all = Window.partitionBy(Bounded.pinned(col("source")))
@@ -328,8 +328,7 @@ object Curation {
   private[operators] val PagerankDamping = 0.85
 
   def graphPagerank(spark: SparkSession, dir: String,
-      iters: Int = PagerankIters,
-      damping: Double = PagerankDamping): DataFrame =
+      iters: Int = PagerankIters): DataFrame =
     PairGraph.run(spark, dir) { g =>
       // state (rank, degree); a node's own message carries its degree
       // into the next round, each edge carries rank/deg to its dst
@@ -339,7 +338,8 @@ object Curation {
             { case (r, d) => Some((r / d, 0L)) })
           .reduceByKey(g.part, (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
           .mapValues { case (sum, d) =>
-            (PairGraph.roundHalfUp((1.0 - damping) + damping * sum, 9), d) }
+            (PairGraph.roundHalfUp(
+              (1.0 - PagerankDamping) + PagerankDamping * sum, 9), d) }
         g.advance(next)(next.count())
         ranks = next
       }
@@ -516,11 +516,11 @@ object Curation {
     * on the same partitioner keeps each node's first discovery.
     */
   def graphKhop(spark: SparkSession, dir: String,
-      iters: Int = KhopIters, nSeeds: Int = KhopSeeds): DataFrame =
+      iters: Int = KhopIters): DataFrame =
     PairGraph.run(spark, dir) { g =>
-      // seed = the nSeeds smallest node ids, a total order every engine
+      // seed = the KhopSeeds smallest node ids, a total order every engine
       // reproduces (takeOrdered: per-partition top-n, driver merge)
-      val seeds = g.degrees.keys.takeOrdered(nSeeds).toSet
+      val seeds = g.degrees.keys.takeOrdered(KhopSeeds).toSet
       var dist: RDD[(Long, Int)] = g.degrees
         .mapPartitions(_.collect { case (n, _) if seeds(n) => (n, 0) },
           preservesPartitioning = true)
@@ -574,7 +574,7 @@ object Curation {
     * one row per pair-graph node.
     */
   def graphKcore(spark: SparkSession, dir: String,
-      k: Int = KCoreK, rounds: Int = KCoreRounds): DataFrame =
+      rounds: Int = KCoreRounds): DataFrame =
     PairGraph.run(spark, dir) { g =>
       // state (degree, peel round; 0 = still alive). Edges are
       // symmetric, so the alive srcs messaging a node count exactly its
@@ -586,7 +586,7 @@ object Curation {
           .reduceByKey(g.part, (a, b) =>
             (math.max(a._1, b._1), math.max(a._2, b._2), a._3 + b._3))
           .mapValues { case (d, p, alive) =>
-            (d, if (p == 0 && alive < k) i else p) }
+            (d, if (p == 0 && alive < KCoreK) i else p) }
         g.advance(next)(next.count())
         st = next
       }
@@ -680,22 +680,29 @@ object Curation {
       .filter(hv.cast("double") / 256.0 < col("quality"))
   }
 
+  /** The held-out eval source every contamination check measures the
+    * training sources against, interpolated into the oracles. */
+  private[graft] val EvalSource = "src0"
+
+  /** [[decontaminate]]'s overlap threshold, also the leak-share ceiling
+    * of the streaming curate screen, interpolated into the oracles. */
+  private[graft] val DecontamTau = 0.8
+
   /** Benchmark decontamination: flag training documents (source <> the
     * eval source) whose distinct-3-gram overlap with the ENTIRE eval
     * source's shingle set is ≥ τ. Returns (doc_id, n_shared, overlap) —
     * the removal list a pipeline anti-joins against.
     */
-  def decontaminate(spark: SparkSession, dir: String,
-      evalSource: String = "src0", tau: Double = 0.8): DataFrame = {
+  def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftFunctions.register(spark)
     val sh = t(spark, dir, "documents")
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("doc_id"), col("source"), tokens(col("text")).as("w"))
       .select(col("doc_id"), col("source"),
         explode(call_function("graft_shingles3", col("w"))).as("s"))
-    val evalShingles = sh.filter(col("source") === evalSource)
+    val evalShingles = sh.filter(col("source") === EvalSource)
       .select(col("s")).distinct()
-    val train = sh.filter(col("source") =!= evalSource)
+    val train = sh.filter(col("source") =!= EvalSource)
       .select(col("doc_id"), col("s"))
     // per-doc totals are O(train docs) — shuffled join, not broadcast; the
     // hit side after the eval filter is tiny so AQE localizes it anyway
@@ -705,7 +712,7 @@ object Curation {
       .join(counts, "doc_id")
       .withColumn("overlap",
         round(col("n_shared").cast("double") / col("n_sh"), 6))
-      .filter(col("n_shared").cast("double") / col("n_sh") >= tau)
+      .filter(col("n_shared").cast("double") / col("n_sh") >= DecontamTau)
       .select(col("doc_id"), col("n_shared"), col("overlap"))
   }
 
@@ -739,7 +746,7 @@ object Curation {
     * cost on a real multi-row-group layout.
     */
   def contaminationReport(spark: SparkSession, dir: String,
-      evalSource: String = "src0"): DataFrame = {
+      evalSource: String = EvalSource): DataFrame = {
     graft.plans.GraftFunctions.register(spark)
     val sh = t(spark, dir, "documents")
       .repartition(spark.sparkContext.defaultParallelism)
@@ -773,47 +780,48 @@ object Curation {
     * standalone operators do), and all the row-level predicates are
     * map-side.
     */
-  def corpusCurate(spark: SparkSession, dir: String,
-      evalSource: String = "src0", minQuality: Double = 0.7): DataFrame = {
+  def corpusCurate(spark: SparkSession, dir: String): DataFrame = {
     val quality = TextAnalysis.textQuality(spark, dir)
       .select(col("doc_id"), col("quality"))
     val reps = clusterLabels(spark, dir)
       .filter(col("doc_id") === col("cluster_id"))
       .select(col("doc_id"))
-    val contaminated = decontaminate(spark, dir, evalSource)
+    val contaminated = decontaminate(spark, dir)
       .select(col("doc_id"))
     t(spark, dir, "documents")
-      .filter(col("source") =!= evalSource)
+      .filter(col("source") =!= EvalSource)
       .filter(sampleKeep)
       .join(quality, "doc_id")
-      .filter(col("quality") >= minQuality)
+      .filter(col("quality") >= CorpusPipeline.MinQuality)
       .join(contaminated, Seq("doc_id"), "left_anti")
       .join(reps, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("lang"), col("source"), col("quality"))
   }
+
+  /** Export shards of the curated corpus and of [[globalShuffle]],
+    * interpolated into the oracles. */
+  private[operators] val ShardCount = 8
 
   /** Deterministic shard id from md5 hex chars 3–4 (independent of the
     * sampling window, chars 1–2): the export layout is content-addressed,
     * so re-running the export on any engine or partitioning lands every
     * doc in the same shard file.
     */
-  private def shardOf(nShards: Int): org.apache.spark.sql.Column =
+  private def shardOf: org.apache.spark.sql.Column =
     (conv(substring(md5(col("doc_id").cast("string")), 3, 2), 16, 10)
-      .cast("int") % nShards).as("shard")
+      .cast("int") % ShardCount).as("shard")
 
   /** Curated corpus with its export shard assignment — what the writer
     * partitions by (see graft.Main --curate).
     */
-  def curatedShards(spark: SparkSession, dir: String,
-      nShards: Int = 8): DataFrame =
-    corpusCurate(spark, dir).withColumn("shard", shardOf(nShards))
+  def curatedShards(spark: SparkSession, dir: String): DataFrame =
+    corpusCurate(spark, dir).withColumn("shard", shardOf)
 
   /** The export plan: per-shard doc counts and byte totals over the
     * CURATED corpus — the balance check run before a training export.
     */
-  def shardPlan(spark: SparkSession, dir: String,
-      nShards: Int = 8): DataFrame =
-    curatedShards(spark, dir, nShards)
+  def shardPlan(spark: SparkSession, dir: String): DataFrame =
+    curatedShards(spark, dir)
       .join(t(spark, dir, "documents").select(col("doc_id"), col("n_chars")),
         "doc_id")
       .groupBy(col("shard"))
@@ -871,18 +879,22 @@ object Curation {
       }.toDF()
   }
 
+  /** Token budget and document separator of the curated packs,
+    * interpolated into the oracles. */
+  private[operators] val PackBudget = 256
+  private[operators] val PackSep = " <|doc|> "
+
   /** The curated corpus packed for training: shard assignment from
     * [[curatedShards]], token counts from the whitespace tokenizer, packs
     * from [[packSequences]].
     */
-  def packCurated(spark: SparkSession, dir: String, budget: Int = 256,
-      nShards: Int = 8): DataFrame = {
+  def packCurated(spark: SparkSession, dir: String): DataFrame = {
     val toks = t(spark, dir, "documents")
       .select(col("doc_id"), size(tokens(col("text"))).as("n_tokens"))
     packSequences(
-      curatedShards(spark, dir, nShards)
+      curatedShards(spark, dir)
         .select(col("doc_id"), col("shard")).join(toks, "doc_id"),
-      budget)
+      PackBudget)
   }
 
   /** Pack ASSEMBLY — the materialized training rows: per (shard, pack_id),
@@ -896,9 +908,8 @@ object Curation {
     * the size of one training row. The in-group sort is over ≤ pack_size
     * elements (array_sort on collected structs), never a global sort.
     */
-  def assemblePacks(spark: SparkSession, dir: String, budget: Int = 256,
-      nShards: Int = 8, sep: String = " <|doc|> "): DataFrame =
-    packCurated(spark, dir, budget, nShards)
+  def assemblePacks(spark: SparkSession, dir: String): DataFrame =
+    packCurated(spark, dir)
       .join(t(spark, dir, "documents").select(col("doc_id"), col("text")),
         "doc_id")
       .groupBy(col("shard"), col("pack_id"))
@@ -908,7 +919,7 @@ object Curation {
           transform(
             array_sort(collect_list(struct(col("pack_pos"), col("text")))),
             s => s.getField("text")),
-          sep).as("text"))
+          PackSep).as("text"))
 
   /** Deterministic per-stratum top-N sampling: keep the N docs with the
     * SMALLEST content-addressed hash per source — exact per-stratum row
@@ -930,6 +941,10 @@ object Curation {
         col("hv"), lit("asc"), col("doc_id"), col("source")))
   }
 
+  /** Per-source token budget of [[mixtureSample]], interpolated into the
+    * oracle. */
+  private[operators] val MixtureBudget = 600L
+
   /** Data-mixture sampling by TOKEN budget: per source, keep the prefix of
     * docs — in content-addressed md5(doc_id) order — whose running token
     * count stays ≤ the source's budget. Real pipelines mix corpora by
@@ -946,7 +961,7 @@ object Curation {
     * 1/256th of a source each — no per-source global sort anywhere, skew
     * bounded by bucket width.
     */
-  def mixtureSample(spark: SparkSession, dir: String, budget: Long = 600,
+  def mixtureSample(spark: SparkSession, dir: String,
       budgets: Map[String, Long] = Map.empty): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = t(spark, dir, "documents")
@@ -961,8 +976,8 @@ object Curation {
           Window.partitionBy(col("source")).orderBy(col("bucket"))
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .select(col("source"), col("bucket"), col("off"))
-    val budgetCol = budgets.foldLeft(lit(budget)) { case (acc, (s, b)) =>
-      when(col("source") === s, lit(b)).otherwise(acc)
+    val budgetCol = budgets.foldLeft(lit(MixtureBudget)) {
+      case (acc, (s, b)) => when(col("source") === s, lit(b)).otherwise(acc)
     }
     docs.join(offs, Seq("source", "bucket"))
       .withColumn("cum_tokens", col("off") + sum(col("n_tokens")).over(
@@ -1020,13 +1035,16 @@ object Curation {
         col("doc_share"), col("token_share"))
   }
 
-  def topQualityPerSource(spark: SparkSession, dir: String,
-      k: Int = 5): DataFrame = {
+  /** Documents per source [[topQualityPerSource]] keeps, interpolated
+    * into the oracle. */
+  private[operators] val TopQualityK = 5
+
+  def topQualityPerSource(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftFunctions.register(spark)
     t(spark, dir, "documents").select(col("doc_id"), col("source"))
       .join(TextAnalysis.textQuality(spark, dir)
         .select(col("doc_id"), col("quality")), "doc_id")
-      .filter(call_function("graft_topk", lit(k),
+      .filter(call_function("graft_topk", lit(TopQualityK),
         col("quality"), col("doc_id"), col("source")))
   }
 
@@ -1057,12 +1075,16 @@ object Curation {
         sum(when(col("is_dup").isNotNull, 1L).otherwise(0L)).as("n_dup_docs"))
   }
 
+  /** [[globalShuffle]]'s seed, interpolated into the oracle. */
+  private[operators] val ShuffleSeed = 42L
+
   /** Deterministic GLOBAL TRAINING-ORDER SHUFFLE — the reproducible
     * permutation + balanced sharding a training pipeline needs before
     * writing epoch data: identical (seed, corpus) always yields the
     * identical order, on any cluster, any partitioning, any engine.
-    * Every doc gets a pseudorandom sort key (md5 of "seed:doc_id"), a
-    * shard (first 4 hex chars of the key mod `shards` — key-derived, so
+    * Every doc gets a pseudorandom sort key (md5 of "seed:doc_id", seed
+    * [[ShuffleSeed]]), a shard (first 4 hex chars of the key mod
+    * [[ShardCount]] — key-derived, so
     * shards are balanced by md5 uniformity), and a dense within-shard
     * position.
     *
@@ -1072,10 +1094,8 @@ object Curation {
     * anyway (repartition by shard, sort within). No global sort, no
     * single-partition stage.
     */
-  def globalShuffle(spark: SparkSession, dir: String,
-      seed: Long = 42L, shards: Int = 8): DataFrame = {
+  def globalShuffle(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    require(shards > 0, "shards must be positive")
     // hex→int via instr arithmetic: portable to the oracle verbatim
     // (DuckDB instr == Spark instr), no engine-specific hash involved
     val hex4 =
@@ -1085,8 +1105,8 @@ object Curation {
          (instr('0123456789abcdef', substr(skey, 4, 1)) - 1)"""
     t(spark, dir, "documents")
       .select(col("doc_id"),
-        md5(concat_ws(":", lit(seed), col("doc_id"))).as("skey"))
-      .withColumn("shard", expr(s"CAST(($hex4) % $shards AS INT)"))
+        md5(concat_ws(":", lit(ShuffleSeed), col("doc_id"))).as("skey"))
+      .withColumn("shard", expr(s"CAST(($hex4) % $ShardCount AS INT)"))
       .withColumn("pos", row_number().over(
         Window.partitionBy(col("shard"))
           .orderBy(col("skey"), col("doc_id"))))
@@ -1258,8 +1278,7 @@ object Curation {
     * representable inputs, rounded once. Scale: one scan, map-side key
     * computation, TakeOrdered top-N — no shuffle of un-reduced rows.
     */
-  def sampleEsTopN(spark: SparkSession, dir: String,
-      n: Int = EsSampleN): DataFrame = {
+  def sampleEsTopN(spark: SparkSession, dir: String): DataFrame = {
     val d = t(spark, dir, "documents")
       .withColumn("wAll", tokens(col("text")))
       // quality inline on the same scan (the dsirSelect convention)
@@ -1279,7 +1298,7 @@ object Curation {
       .select(col("doc_id"), col("lang"), col("source"), col("quality"),
         col("key_micro"))
       .orderBy(col("key_micro").desc, col("doc_id").asc)
-      .limit(n)
+      .limit(EsSampleN)
     // rank stamp over the post-limit ≤n-row frame, WindowExec-free
     Bounded.rankBounded(sel, Seq(-col("key_micro"), col("doc_id")), "rank")
   }
@@ -1325,8 +1344,7 @@ object Curation {
     * global sort. At 100 TB the bucket table is still 64 rows; the whole
     * operator is two scans, one 64-row exchange, and a top-N.
     */
-  def dsirSelect(spark: SparkSession, dir: String,
-      topN: Int = DsirTopN): DataFrame = {
+  def dsirSelect(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
       .withColumn("wAll", tokens(col("text")))
       .withColumn("w", filter(col("wAll"), x => length(x) > 0))
@@ -1386,7 +1404,7 @@ object Curation {
       scored
         .select(col("doc_id"), col("n_tokens"), col("score_micro"))
         .orderBy(col("score_micro").desc, col("doc_id").asc)
-        .limit(topN),
+        .limit(DsirTopN),
       Seq(coalesce(-col("score_micro"), lit(Long.MaxValue)),
         col("doc_id")), "rank")
   }
@@ -1685,38 +1703,38 @@ object Curation {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cur_keep_best" -> ((s, d) => keepBestPerCluster(s, d)),
-    "cur_split_leakfree" -> ((s, d) => splitLeakfree(s, d)),
-    "cur_curriculum" -> ((s, d) => curriculum(s, d)),
-    "cur_temperature_mix" -> ((s, d) => temperatureMix(s, d)),
-    "cur_token_budget" -> ((s, d) => tokenBudgetReport(s, d)),
-    "cur_token_budget_bpe" -> ((s, d) => tokenBudgetReportBpe(s, d)),
-    "cur_epoch_plan" -> ((s, d) => epochPlan(s, d)),
-    "cur_global_shuffle" -> ((s, d) => globalShuffle(s, d)),
-    "cur_top_quality" -> ((s, d) => topQualityPerSource(s, d)),
-    "cur_filter_sweep" -> ((s, d) => curFilterSweep(s, d)),
-    "cur_data_card" -> ((s, d) => corpusDataCard(s, d)),
-    "cur_shard_plan" -> ((s, d) => shardPlan(s, d)),
-    "cur_dedup_clusters" -> ((s, d) => dedupClusters(s, d)),
+    "cur_keep_best" -> (keepBestPerCluster _),
+    "cur_split_leakfree" -> (splitLeakfree _),
+    "cur_curriculum" -> (curriculum _),
+    "cur_temperature_mix" -> (temperatureMix _),
+    "cur_token_budget" -> (tokenBudgetReport _),
+    "cur_token_budget_bpe" -> (tokenBudgetReportBpe _),
+    "cur_epoch_plan" -> (epochPlan _),
+    "cur_global_shuffle" -> (globalShuffle _),
+    "cur_top_quality" -> (topQualityPerSource _),
+    "cur_filter_sweep" -> (curFilterSweep _),
+    "cur_data_card" -> (corpusDataCard _),
+    "cur_shard_plan" -> (shardPlan _),
+    "cur_dedup_clusters" -> (dedupClusters _),
     "graph_pagerank" -> ((s, d) => graphPagerank(s, d)),
-    "graph_triangles" -> ((s, d) => graphTriangles(s, d)),
+    "graph_triangles" -> (graphTriangles _),
     "graph_label_prop" -> ((s, d) => graphLabelProp(s, d)),
     "graph_khop" -> ((s, d) => graphKhop(s, d)),
     "graph_kcore" -> ((s, d) => graphKcore(s, d)),
-    "cur_soft_dedup" -> ((s, d) => softDedup(s, d)),
-    "cur_sample_stratified" -> ((s, d) => sampleStratified(s, d)),
-    "cur_decontaminate" -> ((s, d) => decontaminate(s, d)),
+    "cur_soft_dedup" -> (softDedup _),
+    "cur_sample_stratified" -> (sampleStratified _),
+    "cur_decontaminate" -> (decontaminate _),
     "cur_contamination_report" -> ((s, d) => contaminationReport(s, d)),
-    "cur_corpus_curate" -> ((s, d) => corpusCurate(s, d)),
-    "cur_pack_sequences" -> ((s, d) => packCurated(s, d)),
-    "cur_pack_assemble" -> ((s, d) => assemblePacks(s, d)),
+    "cur_corpus_curate" -> (corpusCurate _),
+    "cur_pack_sequences" -> (packCurated _),
+    "cur_pack_assemble" -> (assemblePacks _),
     "cur_mixture_sample" -> ((s, d) => mixtureSample(s, d)),
     "cur_sample_topn" -> ((s, d) => sampleTopNPerSource(s, d)),
-    "cur_sample_weighted" -> ((s, d) => sampleWeighted(s, d)),
-    "cur_dsir_select" -> ((s, d) => dsirSelect(s, d)),
+    "cur_sample_weighted" -> (sampleWeighted _),
+    "cur_dsir_select" -> (dsirSelect _),
     "cur_doremi_mix" -> ((s, d) => curDoremiMix(s, d)),
-    "dedup_cluster_stats" -> ((s, d) => dedupClusterStats(s, d)),
-    "cur_sample_es" -> ((s, d) => sampleEsTopN(s, d)),
+    "dedup_cluster_stats" -> (dedupClusterStats _),
+    "cur_sample_es" -> (sampleEsTopN _),
   )
 
   /** The curation funnel as DuckDB CTEs ending in `curated(doc_id, lang,
@@ -1733,27 +1751,27 @@ object Curation {
                  FROM walk GROUP BY node),
       ${CorpusPipeline.qualityCte},
       evs AS (SELECT DISTINCT s.s FROM sh s JOIN documents d
-                ON s.doc_id = d.doc_id WHERE d.source = 'src0'),
+                ON s.doc_id = d.doc_id WHERE d.source = '$EvalSource'),
       tr AS (SELECT s.doc_id, s.s FROM sh s JOIN documents d
-               ON s.doc_id = d.doc_id WHERE d.source <> 'src0'),
+               ON s.doc_id = d.doc_id WHERE d.source <> '$EvalSource'),
       cnt AS (SELECT doc_id, count(*) AS n_sh FROM tr GROUP BY 1),
       hit AS (SELECT t.doc_id, count(*) AS n_shared
               FROM tr t JOIN evs e ON t.s = e.s GROUP BY 1),
       contaminated AS (SELECT h.doc_id FROM hit h JOIN cnt c
                          ON h.doc_id = c.doc_id
-                       WHERE CAST(h.n_shared AS DOUBLE) / c.n_sh >= 0.8),
+                       WHERE CAST(h.n_shared AS DOUBLE) / c.n_sh >= $DecontamTau),
       curated AS (
         SELECT d.doc_id, d.lang, d.source, q.quality
         FROM documents d
         JOIN qual q ON d.doc_id = q.doc_id
         JOIN labels l ON d.doc_id = l.doc_id
-        WHERE d.source <> 'src0'
+        WHERE d.source <> '$EvalSource'
           AND (strpos('0123456789abcdef',
                  substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 1)) - 1) * 16
             + (strpos('0123456789abcdef',
                  substr(md5(CAST(d.doc_id AS VARCHAR)), 2, 1)) - 1)
             < CASE WHEN d.lang = 'en' THEN 128 ELSE 64 END
-          AND q.quality >= 0.7
+          AND q.quality >= ${CorpusPipeline.MinQuality}
           AND l.cluster_id = d.doc_id
           AND NOT EXISTS (SELECT 1 FROM contaminated c
                           WHERE c.doc_id = d.doc_id))"""
@@ -1957,15 +1975,15 @@ object Curation {
       WHERE epoch <= floor(epochs_target)
          OR $epochHashByte / 256.0
             < epochs_target - floor(epochs_target)""",
-    "cur_global_shuffle" -> """
+    "cur_global_shuffle" -> s"""
       WITH keyed AS (SELECT doc_id,
-               md5('42:' || CAST(doc_id AS VARCHAR)) AS skey
+               md5('$ShuffleSeed:' || CAST(doc_id AS VARCHAR)) AS skey
              FROM documents),
       sharded AS (SELECT doc_id, skey,
                CAST(((instr('0123456789abcdef', substr(skey, 1, 1)) - 1) * 4096 +
                      (instr('0123456789abcdef', substr(skey, 2, 1)) - 1) * 256 +
                      (instr('0123456789abcdef', substr(skey, 3, 1)) - 1) * 16 +
-                     (instr('0123456789abcdef', substr(skey, 4, 1)) - 1)) % 8
+                     (instr('0123456789abcdef', substr(skey, 4, 1)) - 1)) % $ShardCount
                  AS INT) AS shard
              FROM keyed)
       SELECT doc_id, shard,
@@ -2004,7 +2022,7 @@ object Curation {
           row_number() OVER (PARTITION BY d.source
             ORDER BY q.quality DESC, d.doc_id ASC) AS rn
         FROM documents d JOIN qual q ON d.doc_id = q.doc_id)
-      WHERE rn <= 5""",
+      WHERE rn <= $TopQualityK""",
     "cur_shard_plan" -> s"""
       WITH RECURSIVE $curateCtes,
       assigned AS (
@@ -2012,7 +2030,7 @@ object Curation {
           ((strpos('0123456789abcdef',
               substr(md5(CAST(c.doc_id AS VARCHAR)), 3, 1)) - 1) * 16
            + (strpos('0123456789abcdef',
-              substr(md5(CAST(c.doc_id AS VARCHAR)), 4, 1)) - 1)) % 8
+              substr(md5(CAST(c.doc_id AS VARCHAR)), 4, 1)) - 1)) % $ShardCount
             AS shard
         FROM curated c)
       SELECT CAST(a.shard AS INT) AS shard,
@@ -2242,7 +2260,7 @@ object Curation {
           ((strpos('0123456789abcdef',
               substr(md5(CAST(c.doc_id AS VARCHAR)), 3, 1)) - 1) * 16
            + (strpos('0123456789abcdef',
-              substr(md5(CAST(c.doc_id AS VARCHAR)), 4, 1)) - 1)) % 8
+              substr(md5(CAST(c.doc_id AS VARCHAR)), 4, 1)) - 1)) % $ShardCount
             AS shard
         FROM curated c),
       toks AS (SELECT doc_id, len(string_split(text, ' ')) AS n_tokens
@@ -2256,11 +2274,11 @@ object Curation {
         FROM ordered WHERE rn = 1
         UNION ALL
         SELECT r.shard, r.rn, r.doc_id, r.n_tokens,
-          CASE WHEN p.acc + r.n_tokens <= 256
+          CASE WHEN p.acc + r.n_tokens <= $PackBudget
                THEN p.pack_id ELSE p.pack_id + 1 END,
-          CASE WHEN p.acc + r.n_tokens <= 256
+          CASE WHEN p.acc + r.n_tokens <= $PackBudget
                THEN p.pack_pos + 1 ELSE 0 END,
-          CASE WHEN p.acc + r.n_tokens <= 256
+          CASE WHEN p.acc + r.n_tokens <= $PackBudget
                THEN p.acc + r.n_tokens ELSE r.n_tokens END
         FROM pack p JOIN ordered r
           ON r.shard = p.shard AND r.rn = p.rn + 1)
@@ -2276,7 +2294,7 @@ object Curation {
           ((strpos('0123456789abcdef',
               substr(md5(CAST(c.doc_id AS VARCHAR)), 3, 1)) - 1) * 16
            + (strpos('0123456789abcdef',
-              substr(md5(CAST(c.doc_id AS VARCHAR)), 4, 1)) - 1)) % 8
+              substr(md5(CAST(c.doc_id AS VARCHAR)), 4, 1)) - 1)) % $ShardCount
             AS shard
         FROM curated c),
       toks AS (SELECT doc_id, len(string_split(text, ' ')) AS n_tokens
@@ -2290,18 +2308,18 @@ object Curation {
         FROM ordered WHERE rn = 1
         UNION ALL
         SELECT r.shard, r.rn, r.doc_id, r.n_tokens,
-          CASE WHEN p.acc + r.n_tokens <= 256
+          CASE WHEN p.acc + r.n_tokens <= $PackBudget
                THEN p.pack_id ELSE p.pack_id + 1 END,
-          CASE WHEN p.acc + r.n_tokens <= 256
+          CASE WHEN p.acc + r.n_tokens <= $PackBudget
                THEN p.pack_pos + 1 ELSE 0 END,
-          CASE WHEN p.acc + r.n_tokens <= 256
+          CASE WHEN p.acc + r.n_tokens <= $PackBudget
                THEN p.acc + r.n_tokens ELSE r.n_tokens END
         FROM pack p JOIN ordered r
           ON r.shard = p.shard AND r.rn = p.rn + 1)
       SELECT CAST(p.shard AS INT) AS shard, CAST(p.pack_id AS INT) AS pack_id,
              count(*) AS n_docs,
              CAST(sum(p.n_tokens) AS BIGINT) AS pack_tokens,
-             string_agg(d.text, ' <|doc|> ' ORDER BY p.pack_pos) AS text
+             string_agg(d.text, '$PackSep' ORDER BY p.pack_pos) AS text
       FROM pack p JOIN documents d ON p.doc_id = d.doc_id
       GROUP BY 1, 2""",
     "cur_sample_topn" -> """
@@ -2316,7 +2334,7 @@ object Curation {
             ORDER BY hv ASC, doc_id ASC) AS rn
         FROM hv)
       WHERE rn <= 10""",
-    "cur_mixture_sample" -> """
+    "cur_mixture_sample" -> s"""
       WITH toks AS (
         SELECT doc_id, source, len(string_split(text, ' ')) AS n_tokens,
                md5(CAST(doc_id AS VARCHAR)) AS hv
@@ -2328,7 +2346,7 @@ object Curation {
         FROM toks)
       SELECT doc_id, source, CAST(n_tokens AS INT) AS n_tokens,
              CAST(cum_tokens AS BIGINT) AS cum_tokens
-      FROM run WHERE cum_tokens <= 600""",
+      FROM run WHERE cum_tokens <= $MixtureBudget""",
     "cur_contamination_report" -> s"""
       WITH tok AS (SELECT doc_id, source, string_split(text, ' ') AS w
                    FROM documents),
@@ -2339,10 +2357,10 @@ object Curation {
                   ELSE [] END AS sh
               FROM tok),
       sh AS (SELECT DISTINCT doc_id, source, unnest(sh) AS s FROM shn),
-      ev AS (SELECT doc_id, s FROM sh WHERE source = 'src0'),
+      ev AS (SELECT doc_id, s FROM sh WHERE source = '$EvalSource'),
       evs AS (SELECT DISTINCT s FROM ev),
       lk AS (SELECT DISTINCT t.s FROM sh t JOIN evs e ON t.s = e.s
-             WHERE t.source <> 'src0'),
+             WHERE t.source <> '$EvalSource'),
       tot AS (SELECT doc_id, count(*) AS n_sh FROM ev GROUP BY 1),
       hit AS (SELECT ev.doc_id, count(*) AS n_leaked
               FROM ev JOIN lk ON ev.s = lk.s GROUP BY 1)
@@ -2354,7 +2372,7 @@ object Curation {
           // CAST(t.n_sh AS BIGINT) >= $ContamLeakPpm AS compromised
       FROM tot t LEFT JOIN hit h ON t.doc_id = h.doc_id
       ORDER BY t.doc_id""",
-    "cur_decontaminate" -> """
+    "cur_decontaminate" -> s"""
       WITH tok AS (SELECT doc_id, source, string_split(text, ' ') AS w
                    FROM documents),
       shn AS (SELECT doc_id, source,
@@ -2364,14 +2382,14 @@ object Curation {
                   ELSE [] END AS sh
               FROM tok),
       sh AS (SELECT DISTINCT doc_id, source, unnest(sh) AS s FROM shn),
-      evs AS (SELECT DISTINCT s FROM sh WHERE source = 'src0'),
-      tr  AS (SELECT doc_id, s FROM sh WHERE source <> 'src0'),
+      evs AS (SELECT DISTINCT s FROM sh WHERE source = '$EvalSource'),
+      tr  AS (SELECT doc_id, s FROM sh WHERE source <> '$EvalSource'),
       cnt AS (SELECT doc_id, count(*) AS n_sh FROM tr GROUP BY 1),
       hit AS (SELECT t.doc_id, count(*) AS n_shared
               FROM tr t JOIN evs e ON t.s = e.s GROUP BY 1)
       SELECT h.doc_id, CAST(h.n_shared AS BIGINT) AS n_shared,
              round(CAST(h.n_shared AS DOUBLE) / c.n_sh, 6) AS overlap
       FROM hit h JOIN cnt c ON h.doc_id = c.doc_id
-      WHERE CAST(h.n_shared AS DOUBLE) / c.n_sh >= 0.8""",
+      WHERE CAST(h.n_shared AS DOUBLE) / c.n_sh >= $DecontamTau""",
   )
 }

@@ -139,10 +139,15 @@ object Dedup {
     } finally sk.unpersist(blocking = true)
   }
 
+  /** The documents of the new batch that [[dedupIncremental]] and
+    * [[updateDedupIndex]] admit: `doc_id % 7 == 3` stands in for today's
+    * crawl. */
+  private def inNewBatch(docId: Column): Column = docId % 7 === 3
+
   /** Incremental dedup-index maintenance (r18 — the persisted-artifact
     * face of [[dedupIncremental]], and the dedup twin of
     * [[graft.operators.Similarity.updateIvfIndex]]): admit the documents
-    * whose doc_id satisfies `isNew` into the index at `path` WITHOUT
+    * of the new batch ([[inNewBatch]]) into the index at `path` WITHOUT
     * re-shingling the indexed corpus. Steps, none of which re-reads base
     * TEXT:
     *
@@ -165,14 +170,13 @@ object Dedup {
     * them — a candidate SUPERSET (more verification work, never lost
     * recall), the same conservative direction as the prefix-join cap.
     */
-  def updateDedupIndex(spark: SparkSession, dir: String, path: String,
-      isNew: Column => Column = c => c % 7 === 3): Unit = {
-    val batch = sketchesOf(spark, dir, isNew(col("doc_id")))
+  def updateDedupIndex(spark: SparkSession, dir: String, path: String): Unit = {
+    val batch = sketchesOf(spark, dir, inNewBatch(col("doc_id")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       batch.write.mode("append").parquet(s"$path/sketches")
       val base = spark.read.parquet(s"$path/sketches")
-        .filter(!isNew(col("doc_id")))
+        .filter(!inNewBatch(col("doc_id")))
       def touched(baseBands: DataFrame, batchBands: DataFrame): DataFrame =
         baseBands.join(batchBands.select(col("band"), col("key")).distinct(),
             Seq("band", "key"), "left_semi")
@@ -181,7 +185,7 @@ object Dedup {
       val sNew = sBandsOf(batch)
       pairsFromBands(touched(mBandsOf(base), mNew),
           touched(sBandsOf(base), sNew), 64)
-        .filter(isNew(col("da")) || isNew(col("db")))
+        .filter(inNewBatch(col("da")) || inNewBatch(col("db")))
         .write.mode("append").parquet(s"$path/pairs")
     } finally batch.unpersist(blocking = true)
   }
@@ -618,12 +622,10 @@ object Dedup {
     * baseline, so the same input-size cap guards it (the
     * dedup_lsh_recall rule — this key also stays unbenched).
     */
-  def dedupPrefixRecall(spark: SparkSession, dir: String,
-      maxRows: Long = EvalBaselineMaxRows,
-      caps: Seq[Int] = PrefixRecallCaps): DataFrame = {
-    val exact = dedupNgramJaccard(spark, dir, maxRows, tau = PrefixJoinTau)
+  def dedupPrefixRecall(spark: SparkSession, dir: String): DataFrame = {
+    val exact = dedupNgramJaccard(spark, dir, tau = PrefixJoinTau)
       .select(col("da"), col("db"), lit(1).as("e"))
-    caps.map { cap =>
+    PrefixRecallCaps.map { cap =>
       val found = dedupPrefixJoin(spark, dir, PrefixJoinTau, cap)
         .select(col("da"), col("db"), lit(1).as("f"))
       exact.join(found, Seq("da", "db"), "full_outer")
@@ -663,12 +665,10 @@ object Dedup {
     * baseline, so the same input-size cap guards it (the
     * dedup_lsh_recall rule — unbenched, plan-gate allowlisted).
     */
-  def dedupLshParamSweep(spark: SparkSession, dir: String,
-      maxRows: Long = EvalBaselineMaxRows,
-      configs: Seq[(Int, Int)] = LshSweepConfigs): DataFrame = {
-    val exact = dedupNgramJaccard(spark, dir, maxRows, tau = RecallTau)
+  def dedupLshParamSweep(spark: SparkSession, dir: String): DataFrame = {
+    val exact = dedupNgramJaccard(spark, dir, tau = RecallTau)
       .select(col("da"), col("db"), lit(1).as("e"))
-    configs.map { case (nb, r) =>
+    LshSweepConfigs.map { case (nb, r) =>
       val bands = sketches(spark, dir)
         .select(col("doc_id"), col("sig"),
           explode(expr(s"sequence(0, ${nb - 1})")).as("band"))
@@ -777,18 +777,19 @@ object Dedup {
     *
     * Scale shape: an inverted-index join, NOT an all-pairs pass —
     * documents meet only through shared shingles, and STOP-SHINGLES
-    * (document frequency > `dfCap`) are dropped from the index first,
-    * the same posting-cap idea as `textInvertedIndex`: a boilerplate
-    * phrase pairs everything with everything, so its posting list is
-    * exactly the quadratic term the cap removes. Join volume is then
-    * bounded by Σ_rare df² ≤ dfCap · Σ df (linear in corpus shingles).
+    * (document frequency > [[ContainmentDfCap]]) are dropped from the
+    * index first, the same posting-cap idea as `textInvertedIndex`: a
+    * boilerplate phrase pairs everything with everything, so its posting
+    * list is exactly the quadratic term the cap removes. Join volume is
+    * then bounded by Σ_rare df² ≤ dfCap · Σ df (linear in corpus
+    * shingles).
     * Excluded stop-shingles also leave the NUMERATOR (evidence must be
     * rare to count) while the denominator stays the full profile — so
     * boilerplate can never manufacture a high containment score; the
     * trade-off is a conservative (under-) estimate for docs that are
     * mostly boilerplate, stated here as the contract.
     */
-  /** Containment defaults, interpolated into the oracle SQL so the pair
+  /** Containment constants, interpolated into the oracle SQL so the pair
     * cannot drift (ADVICE r7 pattern).
     */
   private[operators] val ContainmentTau = 0.9
@@ -803,9 +804,7 @@ object Dedup {
     * set is a persisted table (an ingest-time index, like
     * `index_build`), not an in-job cache of any flavor.
     */
-  def dedupContainment(spark: SparkSession, dir: String,
-      tau: Double = ContainmentTau,
-      dfCap: Int = ContainmentDfCap): DataFrame = {
+  def dedupContainment(spark: SparkSession, dir: String): DataFrame = {
     // Two localCheckpoints, each an index a production deployment would
     // persist anyway: the (doc, shingle) posting set feeds THREE consumers
     // (profile counts, document frequencies, the capped index) and the
@@ -818,7 +817,7 @@ object Dedup {
     val cnt = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
     val rare = sh.join(
       sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= dfCap).select(col("s")),
+        .filter(col("df") <= ContainmentDfCap).select(col("s")),
       "s").localCheckpoint()
     // r18 optimization round: the posting self-join picks SHUFFLED HASH
     // deliberately (guide §3.1). Un-hinted, AQE broadcasts the whole
@@ -842,7 +841,7 @@ object Dedup {
       .join(cnt.withColumnRenamed("doc_id", "src")
         .withColumnRenamed("c", "c_src"), "src")
       .withColumn("containment", col("shared").cast("double") / col("c_src"))
-      .filter(col("containment") >= tau)
+      .filter(col("containment") >= ContainmentTau)
       .select(col("src"), col("dst"),
         round(col("containment"), 6).as("containment"))
   }
@@ -850,9 +849,9 @@ object Dedup {
   /** Verified SimHash candidate index: ALL candidate pairs with hamming
     * distance (no threshold), memoized per (session, corpus).
     */
-  private[operators] def simhashPairs(spark: SparkSession, dir: String,
-      cap: Int = 64): DataFrame =
-    combinedPairs(spark, dir, cap)
+  private[operators] def simhashPairs(spark: SparkSession,
+      dir: String): DataFrame =
+    combinedPairs(spark, dir, 64)
       .filter(col("kind") === "s")
       .select(col("da"), col("db"), col("metric").cast("int").as("dist"))
 
@@ -888,7 +887,8 @@ object Dedup {
   }
 
   /** INCREMENTAL near-dup admission — the shape of dedup in a LIVE corpus:
-    * a new batch (docs with `doc_id % 7 == 3` stand in for today's crawl)
+    * a new batch ([[inNewBatch]]: docs with `doc_id % 7 == 3` stand in for
+    * today's crawl)
     * is admitted against the existing corpus (the rest). A batch doc is
     * rejected when the MinHash index flags it as a near-dup (sim ≥ 0.5) of
     * ANY existing doc, or of a smaller-id doc in its own batch (greedy
@@ -905,25 +905,24 @@ object Dedup {
     val partners = pairs.select(col("da").as("doc_id"), col("db").as("p"))
       .unionByName(pairs.select(col("db").as("doc_id"), col("da").as("p")))
     val rejected = partners
-      .filter(col("doc_id") % 7 === 3 &&
-        (col("p") % 7 =!= 3 || col("p") < col("doc_id")))
+      .filter(inNewBatch(col("doc_id")) &&
+        (!inNewBatch(col("p")) || col("p") < col("doc_id")))
       .select(col("doc_id")).distinct()
     t(spark, dir, "documents")
-      .filter(col("doc_id") % 7 === 3)
+      .filter(inNewBatch(col("doc_id")))
       .join(rejected, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), md5(col("text")).as("digest"))
   }
 
-  /** Defaults shared by the operator signatures and their oracle SQL so
-    * the pairs cannot drift (ADVICE r7): non-default args are honored by
-    * the Scala side and the oracle interpolates the same constants.
+  /** Constants shared by the operators and their oracle SQL so the pairs
+    * cannot drift (ADVICE r7).
     */
   val SpanTokens: Int = 16
   val FuzzyVerifyTau: Double = 0.6
 
   /** Span-level dedup signal (C4-style): cut each doc into NON-overlapping
-    * `span`-token windows, hash each window, and count per doc how many of
-    * its spans occur elsewhere in the corpus — the "remove repeated
+    * [[SpanTokens]]-token windows, hash each window, and count per doc how
+    * many of its spans occur elsewhere in the corpus — the "remove repeated
     * boilerplate spans" stage of a web-scale cleaning pipeline, which
     * catches shared paragraphs that document-level dedup (different docs,
     * common span) never sees.
@@ -933,14 +932,13 @@ object Dedup {
     * and the rejoin keys on the digest again — the same
     * digest-only-movement contract as [[dedupExact]].
     */
-  def dedupSpan(spark: SparkSession, dir: String,
-      span: Int = SpanTokens): DataFrame = {
-    require(span > 0, "span must be positive")
+  def dedupSpan(spark: SparkSession, dir: String): DataFrame = {
     val spans = t(spark, dir, "documents")
       .withColumn("w", tokens(col("text")))
       .select(col("doc_id"), explode(
-        transform(sequence(lit(1), size(col("w")), lit(span)),
-          s => md5(array_join(slice(col("w"), s, lit(span)), " ")))).as("h"))
+        transform(sequence(lit(1), size(col("w")), lit(SpanTokens)),
+          s => md5(array_join(slice(col("w"), s, lit(SpanTokens)), " "))))
+          .as("h"))
     val freq = spans.groupBy(col("h")).agg(count(lit(1)).as("n"))
     spans.join(freq, "h")
       .groupBy(col("doc_id"))
@@ -950,25 +948,29 @@ object Dedup {
         round(col("n_dup_spans").cast("double") / col("n_spans"), 6))
   }
 
+  /** [[dedupWinnowPairs]]' pair and stop-fingerprint thresholds,
+    * interpolated into the oracle. */
+  private[operators] val WinnowMinShared = 3
+  private[operators] val WinnowMaxBucket = 20
+
   /** Winnowing-fingerprint pair finding — span-level near-dup candidates
     * from the MOSS scheme ([[graft.plans.WinnowFingerprints]], see
     * TextAnalysis.textWinnowing): two documents sharing any substring of
     * length ≥ k+w−1 chars share a selected fingerprint, so joining on the
     * selected set surfaces position-robust LOCAL overlap that tiled spans
     * (dedupSpan) and global sketches (minhash) both miss. Pairs must share
-    * ≥ `minShared` fingerprints; fingerprints selected in more than
-    * `maxBucket` documents are "stop-fingerprints" (boilerplate spans) and
-    * are dropped before pairing — the same hot-bucket bound as the
+    * ≥ [[WinnowMinShared]] fingerprints; fingerprints selected in more
+    * than [[WinnowMaxBucket]] documents are "stop-fingerprints"
+    * (boilerplate spans) and are dropped before pairing — the same hot-bucket bound as the
     * containment index, which is what keeps the self-join linear-ish in
     * corpus size instead of quadratic in the hottest span.
     *
     * Scale shape: fingerprints are computed map-side (native expression),
     * only (doc_id, fp) pairs shuffle, the bucket-size prefilter caps every
-    * join group at `maxBucket`, and the pair aggregate is partial+final on
-    * (da, db).
+    * join group at [[WinnowMaxBucket]], and the pair aggregate is
+    * partial+final on (da, db).
     */
-  def dedupWinnowPairs(spark: SparkSession, dir: String,
-      minShared: Int = 3, maxBucket: Int = 20): DataFrame = {
+  def dedupWinnowPairs(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftFunctions.register(spark)
     val fps = t(spark, dir, "documents")
       .select(col("doc_id"), explode(winnow(col("text"))).as("fp"))
@@ -978,7 +980,7 @@ object Dedup {
     val kept = fps
       .withColumn("nd", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))))
-      .filter(col("nd") > 1 && col("nd") <= maxBucket)
+      .filter(col("nd") > 1 && col("nd") <= WinnowMaxBucket)
       .select(col("doc_id"), col("fp"))
     // merge-hint the self-join: both sides then need the SAME
     // hashpartitioning(fp) exchange the window already produced, so
@@ -991,7 +993,7 @@ object Dedup {
         && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
       .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared)
+      .filter(col("n_shared") >= WinnowMinShared)
   }
 
   /** URL dedup — the cheapest dedup tier a crawl pipeline runs BEFORE any
@@ -1027,13 +1029,12 @@ object Dedup {
   /** Edit-distance VERIFICATION of the LSH candidates: a near-dup
     * pipeline's final exactness stage — sketch similarity is an estimate,
     * Levenshtein on the candidate pair is ground truth (normalized by the
-    * longer text; kept when ≥ `tau`). The quadratic edit-distance cost is
-    * paid ONLY on the LSH candidate set (O(pairs), never O(n²) — the
+    * longer text; kept when ≥ [[FuzzyVerifyTau]]). The quadratic
+    * edit-distance cost is paid ONLY on the LSH candidate set (O(pairs), never O(n²) — the
     * whole point of sketching first); texts join back to the pair ids by
     * doc_id, so the corpus shuffles once per side.
     */
-  def dedupFuzzyVerify(spark: SparkSession, dir: String,
-      tau: Double = FuzzyVerifyTau): DataFrame = {
+  def dedupFuzzyVerify(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents").select(col("doc_id"), col("text"))
     minhashPairs(spark, dir)
       .filter(col("sim_est") >= 0.5) // the dedupMinhashLsh pair contract
@@ -1042,7 +1043,7 @@ object Dedup {
       .withColumn("edit_sim",
         round(lit(1.0) - levenshtein(col("ta"), col("tb")).cast("double") /
           greatest(length(col("ta")), length(col("tb"))), 6))
-      .filter(col("edit_sim") >= tau)
+      .filter(col("edit_sim") >= FuzzyVerifyTau)
       .select(col("da"), col("db"), col("sim_est"), col("edit_sim"))
   }
 
@@ -1095,30 +1096,22 @@ object Dedup {
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_source_overlap" ->
-      ((s: SparkSession, d: String) => dedupSourceOverlap(s, d)),
+    "dedup_source_overlap" -> (dedupSourceOverlap _),
     "dedup_exact" -> (dedupExact _),
-    "dedup_fuzzy_verify" -> ((s: SparkSession, d: String) => dedupFuzzyVerify(s, d)),
-    "dedup_ngram_jaccard" ->
-      ((s: SparkSession, d: String) => dedupNgramJaccard(s, d)),
-    "dedup_lsh_recall" ->
-      ((s: SparkSession, d: String) => dedupLshRecall(s, d)),
+    "dedup_fuzzy_verify" -> (dedupFuzzyVerify _),
+    "dedup_ngram_jaccard" -> ((s, d) => dedupNgramJaccard(s, d)),
+    "dedup_lsh_recall" -> ((s, d) => dedupLshRecall(s, d)),
     "dedup_minhash_lsh" -> (dedupMinhashLsh _),
     "dedup_simhash" -> (dedupSimhash _),
-    "dedup_embedding_cosine" ->
-      ((s: SparkSession, d: String) => dedupEmbeddingCosine(s, d)),
+    "dedup_embedding_cosine" -> ((s, d) => dedupEmbeddingCosine(s, d)),
     "dedup_incremental" -> (dedupIncremental _),
-    "dedup_span" -> ((s: SparkSession, d: String) => dedupSpan(s, d)),
-    "dedup_winnow_pairs" ->
-      ((s: SparkSession, d: String) => dedupWinnowPairs(s, d)),
+    "dedup_span" -> (dedupSpan _),
+    "dedup_winnow_pairs" -> (dedupWinnowPairs _),
     "dedup_url" -> (dedupUrl _),
-    "dedup_containment" -> ((s: SparkSession, d: String) => dedupContainment(s, d)),
-    "dedup_prefix_join" ->
-      ((s: SparkSession, d: String) => dedupPrefixJoin(s, d)),
-    "dedup_prefix_recall" ->
-      ((s: SparkSession, d: String) => dedupPrefixRecall(s, d)),
-    "dedup_lsh_param_sweep" ->
-      ((s: SparkSession, d: String) => dedupLshParamSweep(s, d)),
+    "dedup_containment" -> (dedupContainment _),
+    "dedup_prefix_join" -> ((s, d) => dedupPrefixJoin(s, d)),
+    "dedup_prefix_recall" -> (dedupPrefixRecall _),
+    "dedup_lsh_param_sweep" -> (dedupLshParamSweep _),
   )
 
   private[operators] val shinglesCte = """
@@ -1330,7 +1323,7 @@ object Dedup {
       SELECT url_canon, count(*) AS n_dups,
         min(doc_id) AS keeper_doc_id
       FROM canon GROUP BY 1 HAVING count(*) > 1""",
-    "dedup_winnow_pairs" -> """
+    "dedup_winnow_pairs" -> s"""
       WITH g AS (SELECT doc_id, text, length(text) AS l FROM documents),
       h AS (SELECT doc_id,
               CASE WHEN l >= 8 THEN list_transform(generate_series(1, l - 7),
@@ -1347,12 +1340,12 @@ object Dedup {
               FROM h),
       f AS (SELECT doc_id, unnest(fp) AS fp FROM sel),
       sz AS (SELECT fp, count(*) AS nd FROM f GROUP BY 1
-             HAVING count(*) > 1 AND count(*) <= 20),
+             HAVING count(*) > 1 AND count(*) <= $WinnowMaxBucket),
       kept AS (SELECT f.doc_id, f.fp FROM f JOIN sz ON f.fp = sz.fp)
       SELECT a.doc_id AS da, b.doc_id AS db,
         CAST(count(*) AS BIGINT) AS n_shared
       FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-      GROUP BY 1, 2 HAVING count(*) >= 3""",
+      GROUP BY 1, 2 HAVING count(*) >= $WinnowMinShared""",
     "dedup_exact" -> """
       SELECT md5(text) AS text_md5, min(doc_id) AS canonical_id,
              count(*) AS n_copies

@@ -556,14 +556,19 @@ object EventAnalytics {
         col("o.value").as("open"), col("high"), col("low"),
         col("c.value").as("close"), col("n"))
 
+  /** Top-k sizes of [[evTransitions]] and [[evPathTopk]] and the robust-z
+    * alarm threshold of [[tsAnomaly]], interpolated into their oracles. */
+  private[operators] val TransitionsTopK = 20
+  private[operators] val PathTopK = 15
+  private[operators] val RobustZCut = 2.0
+
   /** Event-type transition matrix (path analysis): top (from → to)
     * consecutive-event pairs across users — where journeys actually go
     * next. One lead() window per user (bounded state, one shuffle on
     * user_id), then a partial+final count on the tiny type-pair key and
     * a TakeOrderedAndProject top-k.
     */
-  def evTransitions(spark: SparkSession, dir: String,
-      k: Int = 20): DataFrame = {
+  def evTransitions(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").asc, col("event_id").asc)
     Tables.t(spark, dir, "events")
@@ -573,12 +578,12 @@ object EventAnalytics {
       .groupBy(col("event_type").as("from_type"), col("to_type"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("from_type").asc, col("to_type").asc)
-      .limit(k)
+      .limit(TransitionsTopK)
   }
 
   /** Top-k 3-step event PATHS — the length-3 generalization of
     * [[evTransitions]]: per user, every consecutive (t1 → t2 → t3)
-    * event-type window, globally counted, top `k` with a deterministic
+    * event-type window, globally counted, top [[PathTopK]] with a deterministic
     * (count desc, path asc) tiebreak. The path-analysis staple behind
     * "what do users do right before purchasing?".
     *
@@ -587,7 +592,7 @@ object EventAnalytics {
     * map-side-partial group-count on the low-cardinality path string and a
     * TakeOrderedAndProject for the top-k — no global sort at any size.
     */
-  def evPathTopk(spark: SparkSession, dir: String, k: Int = 15): DataFrame = {
+  def evPathTopk(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts").asc, col("event_id").asc)
     Tables.t(spark, dir, "events")
@@ -599,7 +604,7 @@ object EventAnalytics {
         .as("path"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("path").asc)
-      .limit(k)
+      .limit(PathTopK)
   }
 
   /** EWMA smoothing of the per-type daily value series — the trend line a
@@ -656,8 +661,7 @@ object EventAnalytics {
     * exact binary fractions — every derived double is bit-identical
     * cross-engine, so the z threshold cannot flip.
     */
-  def tsAnomaly(spark: SparkSession, dir: String,
-      z: Double = 2.0): DataFrame = {
+  def tsAnomaly(spark: SparkSession, dir: String): DataFrame = {
     val daily = Tables.t(spark, dir, "events")
       .groupBy(col("event_type"), col("ts").cast("date").as("day"))
       .agg(count(lit(1)).as("c"))
@@ -669,7 +673,7 @@ object EventAnalytics {
     withMed.join(broadcast(mad), "event_type")
       .withColumn("robust_z",
         (col("c") - col("med")) / (lit(1.4826) * col("mad")))
-      .filter(abs(col("robust_z")) > z)
+      .filter(abs(col("robust_z")) > RobustZCut)
       .select(col("event_type"), col("day"), col("c").as("n_events"),
         col("med"), col("mad"), round(col("robust_z"), 4).as("robust_z"))
   }
@@ -1012,14 +1016,14 @@ object EventAnalytics {
     "ev_rfm_approx" -> (evRfmApprox _),
     "ev_window_funnel" -> (evWindowFunnel _),
     "ev_ab_test" -> (evAbTest _),
-    "ts_anomaly" -> ((s: SparkSession, d: String) => tsAnomaly(s, d)),
+    "ts_anomaly" -> (tsAnomaly _),
     "ev_cohort_value" -> (evCohortValue _),
-    "ev_path_topk" -> ((s: SparkSession, d: String) => evPathTopk(s, d)),
+    "ev_path_topk" -> (evPathTopk _),
     "ts_ewma" -> (tsEwma _),
     "ts_linreg" -> (tsLinreg _),
     "ev_stickiness" -> (evStickiness _),
     "ts_resample" -> (tsResample _),
-    "ev_transitions" -> ((s: SparkSession, d: String) => evTransitions(s, d)),
+    "ev_transitions" -> (evTransitions _),
     "ev_conversions" -> (evConversions _),
     "ev_conversions_outer" -> (evConversionsOuter _),
     "ev_funnel" -> (evFunnel _),
@@ -1154,7 +1158,7 @@ object EventAnalytics {
         (count(DISTINCT CASE WHEN event_type = 'purchase' THEN user_id END)
           * 10000) // count(DISTINCT user_id) AS conv_rate_bp
       FROM t GROUP BY 1""",
-    "ts_anomaly" -> """
+    "ts_anomaly" -> s"""
       WITH daily AS (
         SELECT event_type, CAST(ts AS DATE) AS day, count(*) AS c
         FROM events GROUP BY 1, 2),
@@ -1167,7 +1171,7 @@ object EventAnalytics {
              wm.med, mad.mad,
              round((wm.c - wm.med) / (1.4826 * mad.mad), 4) AS robust_z
       FROM wm JOIN mad USING (event_type)
-      WHERE abs((wm.c - wm.med) / (1.4826 * mad.mad)) > 2.0""",
+      WHERE abs((wm.c - wm.med) / (1.4826 * mad.mad)) > $RobustZCut""",
     "ev_cohort_value" -> """
       WITH first_seen AS (
         SELECT user_id,
@@ -1181,7 +1185,7 @@ object EventAnalytics {
         CAST(sum(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
       FROM events e JOIN first_seen f ON e.user_id = f.user_id
       GROUP BY 1, 2""",
-    "ev_path_topk" -> """
+    "ev_path_topk" -> s"""
       WITH t AS (SELECT user_id, event_type,
                    lead(event_type, 1) OVER w AS t2,
                    lead(event_type, 2) OVER w AS t3
@@ -1191,7 +1195,7 @@ object EventAnalytics {
       SELECT event_type || ' > ' || t2 || ' > ' || t3 AS path,
              count(*) AS n
       FROM t WHERE t3 IS NOT NULL
-      GROUP BY 1 ORDER BY n DESC, path ASC LIMIT 15""",
+      GROUP BY 1 ORDER BY n DESC, path ASC LIMIT $PathTopK""",
     "ts_ewma" -> """
       WITH daily AS (
         SELECT event_type, CAST(ts AS DATE) AS day,
@@ -1275,7 +1279,7 @@ object EventAnalytics {
         max(CASE WHEN rn_d = 1 THEN value END) AS close,
         count(*) AS n
       FROM r GROUP BY 1""",
-    "ev_transitions" -> """
+    "ev_transitions" -> s"""
       WITH t AS (SELECT user_id, event_type,
                    lead(event_type) OVER (PARTITION BY user_id
                      ORDER BY ts ASC, event_id ASC) AS to_type
@@ -1283,7 +1287,7 @@ object EventAnalytics {
       SELECT event_type AS from_type, to_type, count(*) AS n
       FROM t WHERE to_type IS NOT NULL
       GROUP BY 1, 2
-      ORDER BY n DESC, from_type ASC, to_type ASC LIMIT 20""",
+      ORDER BY n DESC, from_type ASC, to_type ASC LIMIT $TransitionsTopK""",
     "ev_conversions" -> """
       SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
              p.value AS purchase_value

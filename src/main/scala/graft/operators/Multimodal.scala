@@ -488,15 +488,15 @@ object Multimodal {
     * is paid on candidates only, and pairs dedupe on the tiny
     * (da, db, dist) projection. Within a planted group the members'
     * hashes differ only where the inverted pixel residue lands on the
-    * sample grid, so the group's pairs pass `maxDist`; cross-group
+    * sample grid, so the group's pairs pass [[DhashMaxDist]]; cross-group
     * hashes are md5-random (expected hamming 32) and rarely even share a
     * band.
     *
     * RECALL BOUND (ADVICE r8): 4 bands over 64 bits GUARANTEE a shared
     * band only for pairs at hamming distance ≤ 3 (pigeonhole — 4+ bit
-    * differences can land one per band). Pairs at dist 4..`maxDist` are
+    * differences can land one per band). Pairs at dist 4..[[DhashMaxDist]] are
     * recalled only probabilistically (all differences must miss one
-    * band), so `maxDist` = 20 is a FILTER bound on reported pairs, not
+    * band), so [[DhashMaxDist]] = 20 is a FILTER bound on reported pairs, not
     * a recall guarantee. The DuckDB oracle mirrors the banding AND the
     * anchor-star cap exactly (both interpolated from shared constants),
     * so engine parity holds at any corpus size and bucket skew — both
@@ -556,8 +556,7 @@ object Multimodal {
         explode(expr("sequence(0, 3)")).as("band"))
       .withColumn("key", expr("substr(dhash, 1 + band * 16, 16)"))
 
-  def mmDhashNeardup(spark: SparkSession, dir: String,
-      maxDist: Int = DhashMaxDist): DataFrame = {
+  def mmDhashNeardup(spark: SparkSession, dir: String): DataFrame = {
     // Reading the session-memoized sketch means the render+decode
     // subtree runs zero times here (post-ingest query cost — the thing a
     // user of a long-lived image corpus observes).
@@ -567,7 +566,7 @@ object Multimodal {
         graft.functions.TextFunctions.hammingDist(col("sa"), col("sb"))
           .cast("int").as("dist"))
       .distinct()
-      .filter(col("dist") <= maxDist)
+      .filter(col("dist") <= DhashMaxDist)
   }
 
   // ----------------------------------------------------------------- audio
@@ -937,7 +936,6 @@ object Multimodal {
     * payload in the dedupe shuffle.
     */
   def mmAudioNeardup(spark: SparkSession, dir: String,
-      maxDist: Int = AudioMaxDist,
       cap: Int = Dedup.BandBucketCap): DataFrame = {
     // the kernel reads the bands once, so the codec kernel under them
     // runs once without a checkpoint
@@ -945,13 +943,12 @@ object Multimodal {
       .select(col("da"), col("db"),
         expr("cast(bit_count(sa ^ sb) as int)").as("dist"))
       .distinct()
-      .filter(col("dist") <= maxDist)
+      .filter(col("dist") <= AudioMaxDist)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "mm_audio_fingerprint" -> (mmAudioFingerprint _),
-    "mm_audio_neardup" ->
-      ((s: SparkSession, d: String) => mmAudioNeardup(s, d)),
+    "mm_audio_neardup" -> ((s, d) => mmAudioNeardup(s, d)),
     "mm_shot_boundary" -> (mmShotBoundary _),
     "mm_audio_stats" -> (mmAudioStats _),
     "mm_audio_segments" -> (mmAudioSegments _),
@@ -959,8 +956,7 @@ object Multimodal {
     "mm_decode_real" -> (mmDecodeReal _),
     "mm_dhash" -> (mmDhash _),
     "mm_phash" -> (mmPhash _),
-    "mm_dhash_neardup" ->
-      ((s: SparkSession, d: String) => mmDhashNeardup(s, d)),
+    "mm_dhash_neardup" -> (mmDhashNeardup _),
     "mm_frame_sample" -> (mmFrameSample _),
     "mm_feature_extract" -> (mmFeatureExtract _),
     "mm_resize" -> (mmResize _),

@@ -77,17 +77,19 @@ object Profiling {
       .withColumn("passed", col("n_violations") === 0L)
   }
 
-  /** Z-score anomaly report: rows whose value sits more than `z` pooled
-    * standard deviations above their group mean — the data-quality alarm
-    * a pipeline pages on. Group stats are one partial+final aggregate
-    * (|groups| rows) broadcast back over the fact; the fact streams
-    * through map-side, nothing but the stats relation is ever smaller
-    * than the input. The z threshold (1.6) sits ≥5e-4 z-units from every
-    * value in the test corpora, so engine ulp differences in avg/stddev
-    * can never flip membership.
+  /** [[dqAnomaly]]'s z threshold, interpolated into the oracle. */
+  private[operators] val ZScoreCut = 1.6
+
+  /** Z-score anomaly report: rows whose value sits more than
+    * [[ZScoreCut]] pooled standard deviations above their group mean —
+    * the data-quality alarm a pipeline pages on. Group stats are one
+    * partial+final aggregate (|groups| rows) broadcast back over the
+    * fact; the fact streams through map-side, nothing but the stats
+    * relation is ever smaller than the input. The z threshold (1.6) sits
+    * ≥5e-4 z-units from every value in the test corpora, so engine ulp
+    * differences in avg/stddev can never flip membership.
     */
-  def dqAnomaly(spark: SparkSession, dir: String,
-      z: Double = 1.6): DataFrame = {
+  def dqAnomaly(spark: SparkSession, dir: String): DataFrame = {
     val stats = t(spark, dir, "orders")
       .groupBy(col("o_orderpriority"))
       .agg(avg(col("o_totalprice")).as("mu"),
@@ -95,7 +97,7 @@ object Profiling {
     t(spark, dir, "orders")
       .join(broadcast(stats), "o_orderpriority")
       .withColumn("zscore", (col("o_totalprice") - col("mu")) / col("sd"))
-      .filter(col("zscore") > z)
+      .filter(col("zscore") > ZScoreCut)
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice"), round(col("zscore"), 6).as("zscore"))
   }
@@ -123,8 +125,7 @@ object Profiling {
   /** Heavy-hitter sketch size, interpolated into the oracle (no drift). */
   private[operators] val HeavyHitterK = 8
 
-  def dqHeavyHitters(spark: SparkSession, dir: String,
-      k: Int = HeavyHitterK): DataFrame = {
+  def dqHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftFunctions.register(spark)
     val ev = t(spark, dir, "events")
     // localCheckpoint pins pass 1 to ONE execution: the frame feeds both
@@ -132,7 +133,7 @@ object Profiling {
     // re-runs the sketch scan (the result is a single row, so the
     // materialization is bytes)
     val pass1 = ev.agg(
-      call_function("graft_mg_candidates", lit(k), col("event_type"))
+      call_function("graft_mg_candidates", lit(HeavyHitterK), col("event_type"))
         .as("cands"),
       count(lit(1)).as("total"))
       .localCheckpoint()
@@ -141,7 +142,7 @@ object Profiling {
       .join(broadcast(cand), Seq("event_type"), "left_semi")
       .groupBy(col("event_type")).agg(count(lit(1)).as("n_events"))
     counts.join(broadcast(pass1.select(col("total"))))
-      .filter(col("n_events") * k > col("total"))
+      .filter(col("n_events") * HeavyHitterK > col("total"))
       .select(col("event_type"), col("n_events"),
         round(col("n_events").cast("double") / col("total"), 6).as("share"))
       .orderBy(col("n_events").desc, col("event_type").asc)
@@ -679,19 +680,18 @@ object Profiling {
     * windows, no joins. Exact integer outputs (ppm via `div`), oracle
     * hash-exact.
     */
-  def dqKAnonymity(spark: SparkSession, dir: String,
-      k: Int = KAnonK): DataFrame = {
+  def dqKAnonymity(spark: SparkSession, dir: String): DataFrame = {
     def audit(label: String, df: DataFrame, qiNames: String,
         qi: Seq[org.apache.spark.sql.Column]): DataFrame =
       df.groupBy(qi: _*).agg(count(lit(1)).as("g"))
         .agg(sum(col("g")).as("n_rows"), count(lit(1)).as("n_groups"),
           min(col("g")).as("min_group_size"),
-          sum(when(col("g") < k, 1L).otherwise(0L))
+          sum(when(col("g") < KAnonK, 1L).otherwise(0L))
             .as("violating_groups"),
-          sum(when(col("g") < k, col("g")).otherwise(0L))
+          sum(when(col("g") < KAnonK, col("g")).otherwise(0L))
             .as("violating_rows"))
         .select(lit(label).as("audit"), lit(qiNames).as("quasi_identifiers"),
-          lit(k).as("k"), col("n_rows"), col("n_groups"),
+          lit(KAnonK).as("k"), col("n_rows"), col("n_groups"),
           col("min_group_size"), col("violating_groups"),
           col("violating_rows"),
           expr("(violating_rows * 1000000) div n_rows").as("risk_ppm"))
@@ -733,8 +733,7 @@ object Profiling {
     * roll-up emits one row per audit. No windows, no joins. Exact
     * integer outputs (ppm via `div`), oracle hash-exact.
     */
-  def dqLDiversity(spark: SparkSession, dir: String,
-      l: Int = LDivL): DataFrame = {
+  def dqLDiversity(spark: SparkSession, dir: String): DataFrame = {
     def audit(label: String, df: DataFrame, qiNames: String,
         sensName: String, qi: Seq[Column], sens: Column): DataFrame =
       // deliberately NOT the r16 two-level Expand rewrite: the sensitive
@@ -746,12 +745,12 @@ object Profiling {
           countDistinct(sens).as("lv"))
         .agg(sum(col("g")).as("n_rows"), count(lit(1)).as("n_groups"),
           min(col("lv")).as("min_l"),
-          sum(when(col("lv") < l, 1L).otherwise(0L))
+          sum(when(col("lv") < LDivL, 1L).otherwise(0L))
             .as("violating_groups"),
-          sum(when(col("lv") < l, col("g")).otherwise(0L))
+          sum(when(col("lv") < LDivL, col("g")).otherwise(0L))
             .as("violating_rows"))
         .select(lit(label).as("audit"), lit(qiNames).as("quasi_identifiers"),
-          lit(sensName).as("sensitive"), lit(l).as("l"), col("n_rows"),
+          lit(sensName).as("sensitive"), lit(LDivL).as("l"), col("n_rows"),
           col("n_groups"), col("min_l"), col("violating_groups"),
           col("violating_rows"),
           expr("(violating_rows * 1000000) div n_rows").as("risk_ppm"))
@@ -803,8 +802,7 @@ object Profiling {
     * cumulative window partitions by group over exactly m bucket rows.
     * Every exchange carries aggregation-space tuples, never payload.
     */
-  def dqTCloseness(spark: SparkSession, dir: String,
-      tPpm: Long = TCloseTPpm): DataFrame = {
+  def dqTCloseness(spark: SparkSession, dir: String): DataFrame = {
     def audit(label: String, base0: DataFrame, qiNames: String,
         sensName: String, qi: Seq[Column], sens: Column): DataFrame = {
       val base = base0.select(qi.zipWithIndex.map { case (c, i) =>
@@ -836,12 +834,12 @@ object Profiling {
       emd.agg(sum(col("g")).as("n_rows"), count(lit(1)).as("n_groups"),
           min(col("emd_ppm")).as("min_emd_ppm"),
           max(col("emd_ppm")).as("max_emd_ppm"),
-          sum(when(col("emd_ppm") > tPpm, 1L).otherwise(0L))
+          sum(when(col("emd_ppm") > TCloseTPpm, 1L).otherwise(0L))
             .as("violating_groups"),
-          sum(when(col("emd_ppm") > tPpm, col("g")).otherwise(0L))
+          sum(when(col("emd_ppm") > TCloseTPpm, col("g")).otherwise(0L))
             .as("violating_rows"))
         .select(lit(label).as("audit"), lit(qiNames).as("quasi_identifiers"),
-          lit(sensName).as("sensitive"), lit(tPpm).as("t_ppm"),
+          lit(sensName).as("sensitive"), lit(TCloseTPpm).as("t_ppm"),
           col("n_rows"), col("n_groups"), col("min_emd_ppm"),
           col("max_emd_ppm"), col("violating_groups"), col("violating_rows"),
           expr("(violating_rows * 1000000) div n_rows").as("risk_ppm"))
@@ -887,8 +885,7 @@ object Profiling {
     * window; output is ≤ 4 rows, returned as a local relation that pins
     * no storage.
     */
-  def dqKAnonymize(spark: SparkSession, dir: String,
-      k: Int = KAnonK): DataFrame = {
+  def dqKAnonymize(spark: SparkSession, dir: String): DataFrame = {
     val base = t(spark, dir, "customer").select(
       col("c_nationkey").as("q1"), col("c_mktsegment").as("q2"),
       floor(col("c_acctbal") / 1000).as("b1k"),
@@ -901,27 +898,27 @@ object Profiling {
     val l0 = base.groupBy(col("q1"), col("q2"), col("b1k"), col("b100"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint()
-    val r1 = l0.where(col("c") < k)
+    val r1 = l0.where(col("c") < KAnonK)
       .groupBy(col("q1"), col("q2"), col("b1k"))
       .agg(sum(col("c")).as("c"))
-    val r2 = r1.where(col("c") < k)
+    val r2 = r1.where(col("c") < KAnonK)
       .groupBy(col("q1"), col("q2")).agg(sum(col("c")).as("c"))
     def lvl(df: DataFrame, level: Int, gran: String, released: Boolean) =
       df.select(lit(level).as("level"), lit(gran).as("granularity"),
         lit(released).as("released"), col("c"))
-    val out = lvl(l0.where(col("c") >= k), 0,
+    val out = lvl(l0.where(col("c") >= KAnonK), 0,
         "nation,segment,bal_1k,bal_100", released = true)
-      .unionByName(lvl(r1.where(col("c") >= k), 1,
+      .unionByName(lvl(r1.where(col("c") >= KAnonK), 1,
         "nation,segment,bal_1k", released = true))
-      .unionByName(lvl(r2.where(col("c") >= k), 2,
+      .unionByName(lvl(r2.where(col("c") >= KAnonK), 2,
         "nation,segment", released = true))
-      .unionByName(lvl(r2.where(col("c") < k), 3,
+      .unionByName(lvl(r2.where(col("c") < KAnonK), 3,
         "suppressed", released = false))
       .groupBy(col("level"), col("granularity"), col("released"))
       .agg(sum(col("c")).as("n_rows"),
         count(lit(1)).as("n_cells"), min(col("c")).as("min_cohort"))
       .select(col("level"), col("granularity"), col("released"),
-        lit(k).as("k"), col("n_rows"), col("n_cells"), col("min_cohort"))
+        lit(KAnonK).as("k"), col("n_rows"), col("n_cells"), col("min_cohort"))
       .orderBy(col("level"))
     // at most 4 rows, one per level: collected into a local relation, so
     // the cell frame is freed and nothing stays pinned after the call
@@ -932,13 +929,13 @@ object Profiling {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dq_k_anonymize" ->
-      ((s: SparkSession, d: String) => dqKAnonymize(s, d)),
+      (dqKAnonymize _),
     "dq_k_anonymity" ->
-      ((s: SparkSession, d: String) => dqKAnonymity(s, d)),
+      (dqKAnonymity _),
     "dq_l_diversity" ->
-      ((s: SparkSession, d: String) => dqLDiversity(s, d)),
+      (dqLDiversity _),
     "dq_t_closeness" ->
-      ((s: SparkSession, d: String) => dqTCloseness(s, d)),
+      (dqTCloseness _),
     "dq_correlation" -> (dqCorrelation _),
     "dq_join_cardinality" -> (dqJoinCardinality _),
     "dq_benford" -> (dqBenford _),
@@ -947,10 +944,10 @@ object Profiling {
     "dq_referential" -> (dqReferential _),
     "dq_freshness" -> (dqFreshness _),
     "dq_drift" -> (dqDrift _),
-    "dq_anomaly" -> ((s: SparkSession, d: String) => dqAnomaly(s, d)),
+    "dq_anomaly" -> (dqAnomaly _),
     "dq_profile" -> (dqProfile _),
     "dq_expectations" -> (dqExpectations _),
-    "dq_heavy_hitters" -> ((s: SparkSession, d: String) => dqHeavyHitters(s, d)),
+    "dq_heavy_hitters" -> (dqHeavyHitters _),
     "dq_skew_report" -> (dqSkewReport _),
   )
 
@@ -1265,14 +1262,14 @@ object Profiling {
       FROM events, tot
       GROUP BY 1, total HAVING count(*) * $HeavyHitterK > total
       ORDER BY n_events DESC, event_type ASC""",
-    "dq_anomaly" -> """
+    "dq_anomaly" -> s"""
       WITH s AS (SELECT o_orderpriority, avg(o_totalprice) AS mu,
                    stddev_pop(o_totalprice) AS sd
                  FROM orders GROUP BY 1)
       SELECT o.o_orderkey, o.o_orderpriority, o.o_totalprice,
              round((o.o_totalprice - s.mu) / s.sd, 6) AS zscore
       FROM orders o JOIN s USING (o_orderpriority)
-      WHERE (o.o_totalprice - s.mu) / s.sd > 1.6""",
+      WHERE (o.o_totalprice - s.mu) / s.sd > $ZScoreCut""",
     "dq_profile" -> """
       WITH b AS (
         SELECT count(*) AS n_rows,

@@ -51,17 +51,19 @@ object Projections {
       .filter(col("p_name").rlike("^(red|blue) "))
       .select(col("p_partkey"), col("p_name"))
 
-  /** F3 — date-window filter with injectable as-of (ref
+  /** F3's as-of date, interpolated into the oracle. */
+  private[operators] val WindowAsOf = "1996-01-01"
+
+  /** F3 — date-window filter with a fixed as-of (ref
     * dags/projectde_dag.py:63-64,96-97; determinism contract (a): the wall
-    * clock is a parameter, fixed here for the oracle). The upper bound is
+    * clock is an input, never ambient: [[WindowAsOf]]). The upper bound is
     * `< asOf` — the reference's daily 09:00 run drops rows dated
     * `>= now-1day`, which KEEPS yesterday's date-at-midnight; `< asOf-1day`
     * would silently omit the most recent full day.
     */
-  def f3DateWindow(spark: SparkSession, dir: String,
-      asOf: String = "1996-01-01"): DataFrame =
+  def f3DateWindow(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "lineitem")
-      .filter(col("l_shipdate") < lit(asOf).cast("timestamp") &&
+      .filter(col("l_shipdate") < lit(WindowAsOf).cast("timestamp") &&
         col("l_shipdate") >= lit("1995-06-01").cast("timestamp"))
       .select(col("l_orderkey"), col("l_linenumber"), col("l_shipdate"))
 
@@ -95,7 +97,7 @@ object Projections {
     "p3_derived_column" -> (p3DerivedColumn _),
     "f1_notin_filter" -> (f1NotInFilter _),
     "f2_regex_filter" -> (f2RegexFilter _),
-    "f3_date_window" -> ((s: SparkSession, d: String) => f3DateWindow(s, d)),
+    "f3_date_window" -> (f3DateWindow _),
     "f4_arity_guard" -> (f4ArityGuard _),
     "f5_parse_guard" -> (f5ParseGuard _),
   )
@@ -116,9 +118,9 @@ object Projections {
     "f2_regex_filter" -> """
       SELECT p_partkey, p_name FROM part
       WHERE regexp_matches(p_name, '^(red|blue) ')""",
-    "f3_date_window" -> """
+    "f3_date_window" -> s"""
       SELECT l_orderkey, l_linenumber, l_shipdate FROM lineitem
-      WHERE l_shipdate < TIMESTAMP '1996-01-01'
+      WHERE l_shipdate < TIMESTAMP '$WindowAsOf'
         AND l_shipdate >= TIMESTAMP '1995-06-01'""",
     "f4_arity_guard" -> """
       SELECT doc_id, len(string_split(text, ' ')) AS n_tokens FROM documents

@@ -207,7 +207,7 @@ object Relational {
     * on the leading column share a bucket, so bucket order composes with
     * the full tiebreak ordering. (2) row_number within each bucket (the
     * window is partitioned — parallel), then add broadcast per-bucket
-    * offsets (a prefix sum over ≤`buckets` rows). Costs one extra
+    * offsets (a prefix sum over ≤32 bucket rows). Costs one extra
     * column-pruned pass for the quantile estimate and one for the counts;
     * no stage ever holds more than ~1/buckets of the data.
     *
@@ -233,13 +233,12 @@ object Relational {
   }
 
   private[operators] def scalableRowNumber(df: DataFrame, leading: String,
-      descending: Boolean, sortCols: Seq[Column], outCol: String,
-      buckets: Int = 32): DataFrame = {
-    val bucketed = bucketAssign(df, leading, descending, buckets)
+      descending: Boolean, sortCols: Seq[Column], outCol: String): DataFrame = {
+    val bucketed = bucketAssign(df, leading, descending, 32)
     val local = bucketed.withColumn("__lp",
       row_number().over(Window.partitionBy(col("__bk")).orderBy(sortCols: _*)))
     val counts = bucketed.groupBy(col("__bk")).agg(count(lit(1)).as("__cnt"))
-    // prefix-sum window over ≤`buckets` aggregated rows — never base
+    // prefix-sum window over ≤32 aggregated rows — never base
     // data; pinned single partition (same frame, warning-free)
     val offs = counts.withColumn("__off",
       coalesce(sum(col("__cnt")).over(
@@ -647,22 +646,29 @@ object Relational {
         centSum(col("o_totalprice")).as("total_price"),
         grouping_id().as("gid"))
 
+  /** A15 bin width and top bin id, interpolated into the oracle. */
+  private[operators] val HistogramWidth = 25000.0
+  private[operators] val HistogramTop = 11
+
   /** A15 — fixed-bin histogram (width_bucket semantics): equal-width
     * bins with the top bin absorbing the tail. The bucket id is a per-row
     * map-side expression, so the plan is exactly a group-count on a
     * small integer key — partial aggregation collapses each partition to
-    * ≤ nbins rows before the (tiny) shuffle; bin edges are published so
+    * ≤ 12 rows before the (tiny) shuffle; bin edges are published so
     * the result is self-describing.
     */
-  def a15Histogram(spark: SparkSession, dir: String, width: Double = 25000.0,
-      nbins: Int = 12): DataFrame =
+  def a15Histogram(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "orders")
-      .select(least(floor(col("o_totalprice") / width), lit(nbins - 1.0))
+      .select(least(floor(col("o_totalprice") / HistogramWidth),
+        lit(HistogramTop.toDouble))
         .cast("int").as("bucket"), col("o_totalprice"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_orders"),
         centSum(col("o_totalprice")).as("total_price"))
-      .withColumn("lo", col("bucket") * width)
+      .withColumn("lo", col("bucket") * HistogramWidth)
+
+  /** O8 page size, interpolated into the oracle. */
+  private[operators] val KeysetPageSize = 100
 
   /** O8 — keyset (cursor) pagination: the page AFTER a (date, key) cursor
     * under a total order on (o_orderdate, o_orderkey). The scale point vs
@@ -670,18 +676,17 @@ object Relational {
     * 10,000 of a 100 TB scan sorts and skips half the table — while the
     * keyset predicate is a pushable range filter (parquet row groups
     * before the cursor date never leave the scan) and the page itself is
-    * TakeOrderedAndProject: per-partition heaps of `pageSize` rows, never
-    * a global sort.
+    * TakeOrderedAndProject: per-partition heaps of [[KeysetPageSize]]
+    * rows, never a global sort.
     */
-  def o8KeysetPagination(spark: SparkSession, dir: String,
-      pageSize: Int = 100): DataFrame = {
+  def o8KeysetPagination(spark: SparkSession, dir: String): DataFrame = {
     val curDate = expr("TIMESTAMP '1997-03-15 00:00:00'")
     val curKey = 1000L
     t(spark, dir, "orders")
       .filter(col("o_orderdate") > curDate ||
         (col("o_orderdate") === curDate && col("o_orderkey") > curKey))
       .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      .limit(pageSize)
+      .limit(KeysetPageSize)
   }
 
   /** O7 — rolling window frame (ROWS BETWEEN 2 PRECEDING AND CURRENT
@@ -732,14 +737,14 @@ object Relational {
     *
     * Pass `expectedNumItems` when the dim cardinality is already known
     * (or cheaply estimable) to skip the sizing pass over the dim side;
-    * the default `-1` counts it. The value is trusted: the requested
-    * `fpp` only holds when `expectedNumItems >=` the true key
+    * the default `-1` counts it. The value is trusted: the sketch's 1%
+    * false-positive rate only holds when `expectedNumItems >=` the true key
     * cardinality — an underestimate degrades the prefilter's selectivity
     * (never correctness; the trailing semi-join is exact), an
     * overestimate just allocates a bigger sketch.
     */
   def bloomPrunedSemiJoin(fact: DataFrame, dim: DataFrame,
-      factKey: String, dimKey: String, fpp: Double = 0.01,
+      factKey: String, dimKey: String,
       expectedNumItems: Long = -1L): DataFrame = {
     require(expectedNumItems != 0L,
       "bloomPrunedSemiJoin: expectedNumItems must be positive (or -1 to count the dim side)")
@@ -770,7 +775,7 @@ object Relational {
       fact.filter(lit(false))
     } else {
       val bloom = keys.select(xxhash64(col(dimKey).cast(common)).as("h"))
-        .stat.bloomFilter("h", nKeys, fpp)
+        .stat.bloomFilter("h", nKeys, 0.01)
       val bytes = {
         val bos = new java.io.ByteArrayOutputStream()
         bloom.writeTo(bos)
@@ -829,9 +834,8 @@ object Relational {
     * .batchUserProfile]]-style last-event election); applying a
     * multi-version batch here would make the result depend on row order.
     */
-  def cdcApply(base: DataFrame, delta: DataFrame, key: String,
-      opCol: String = "_op"): DataFrame =
-    delta.filter(col(opCol) =!= "D").drop(opCol)
+  def cdcApply(base: DataFrame, delta: DataFrame, key: String): DataFrame =
+    delta.filter(col("_op") =!= "D").drop("_op")
       .unionByName(base.join(delta.select(key), Seq(key), "left_anti"))
 
   def u6CdcApply(spark: SparkSession, dir: String): DataFrame = {
@@ -1016,7 +1020,7 @@ object Relational {
 
   /** J6 — salted skew join: when one fact key floods a partition and the
     * dim side is too big to broadcast, salt the fact (deterministic
-    * spread: hash of a high-cardinality sibling column mod R) and
+    * spread: hash of a high-cardinality sibling column mod R = 8) and
     * replicate each dim row R ways — the hot key's rows now land on R
     * partitions instead of one. AQE's skew-join split is the automatic
     * form (it splits oversized partitions at runtime); this is the
@@ -1024,11 +1028,9 @@ object Relational {
     * shape. R multiplies only the DIM side (small), never the fact.
     */
   def saltedJoin(fact: DataFrame, dim: DataFrame, factKey: String,
-      dimKey: String, spreadCol: String, r: Int = 8): DataFrame = {
-    val saltedFact = fact.withColumn("salt",
-      pmod(hash(col(spreadCol)), lit(r)))
-    val saltedDim = dim.withColumn("salt",
-      explode(expr(s"sequence(0, ${r - 1})")))
+      dimKey: String, spreadCol: String): DataFrame = {
+    val saltedFact = fact.withColumn("salt", pmod(hash(col(spreadCol)), lit(8)))
+    val saltedDim = dim.withColumn("salt", explode(expr("sequence(0, 7)")))
     saltedFact.join(saltedDim,
       saltedFact(factKey) === saltedDim(dimKey) &&
         saltedFact("salt") === saltedDim("salt"))
@@ -1319,7 +1321,8 @@ object Relational {
   }
 
   /** Q10 — the TPC-H Q18 "large volume customer" shape: orders whose
-    * lineitems total more than `minQty` units, with their customer.
+    * lineitems total more than [[LargeOrderMinQty]] units, with their
+    * customer.
     * The HAVING-on-grouped-fact classic: lineitem collapses to
     * (orderkey, total_qty) FIRST (map-side partial sums make this the
     * cheap pass over the big fact), the >minQty filter drops ~99.9% of
@@ -1332,12 +1335,11 @@ object Relational {
   /** Q10 threshold, interpolated into the oracle so the pair can't drift. */
   private[operators] val LargeOrderMinQty = 250.0
 
-  def q10LargeOrders(spark: SparkSession, dir: String,
-      minQty: Double = LargeOrderMinQty): DataFrame = {
+  def q10LargeOrders(spark: SparkSession, dir: String): DataFrame = {
     val big = t(spark, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(sum(col("l_quantity")).as("total_qty"))
-      .filter(col("total_qty") > minQty)
+      .filter(col("total_qty") > LargeOrderMinQty)
     t(spark, dir, "orders")
       .join(big, col("o_orderkey") === col("l_orderkey"))
       .join(t(spark, dir, "customer"),
@@ -1577,7 +1579,7 @@ object Relational {
     "q7_shipping_priority" -> (q7ShippingPriority _),
     "q8_exists_agg" -> (q8ExistsAgg _),
     "q9_custdist" -> (q9Custdist _),
-    "q10_large_orders" -> ((s: SparkSession, d: String) => q10LargeOrders(s, d)),
+    "q10_large_orders" -> (q10LargeOrders _),
     "q11_sales_opportunity" -> (q11SalesOpportunity _),
     "o10_percent_change" -> (o10PercentChange _),
     "u5_scd2_merge" -> (u5Scd2Merge _),
@@ -1594,8 +1596,8 @@ object Relational {
     "a11_cube" -> (a11Cube _),
     "o7_rolling_frame" -> (o7RollingFrame _),
     "a14_grouping_sets" -> (a14GroupingSets _),
-    "a15_histogram" -> ((s: SparkSession, d: String) => a15Histogram(s, d)),
-    "o8_keyset_page" -> ((s: SparkSession, d: String) => o8KeysetPagination(s, d)),
+    "a15_histogram" -> (a15Histogram _),
+    "o8_keyset_page" -> (o8KeysetPagination _),
     "j5_bloom_join" -> (j5BloomJoin _),
     "u4_upsert" -> (u4Upsert _),
     "o6_window_extras" -> (o6WindowExtras _),
@@ -1953,21 +1955,21 @@ object Relational {
       FROM orders
       GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
         (o_orderstatus), (o_orderpriority))""",
-    "a15_histogram" -> """
-      SELECT CAST(least(floor(o_totalprice / 25000.0), 11) AS INT) AS bucket,
+    "a15_histogram" -> s"""
+      SELECT CAST(least(floor(o_totalprice / $HistogramWidth), $HistogramTop) AS INT) AS bucket,
         count(*) AS n_orders,
         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100.0
           AS total_price,
-        CAST(least(floor(o_totalprice / 25000.0), 11) AS INT) * 25000.0 AS lo
+        CAST(least(floor(o_totalprice / $HistogramWidth), $HistogramTop) AS INT) * $HistogramWidth AS lo
       FROM orders
       GROUP BY 1""",
-    "o8_keyset_page" -> """
+    "o8_keyset_page" -> s"""
       SELECT * FROM orders
       WHERE o_orderdate > TIMESTAMP '1997-03-15 00:00:00'
          OR (o_orderdate = TIMESTAMP '1997-03-15 00:00:00'
              AND o_orderkey > 1000)
       ORDER BY o_orderdate ASC, o_orderkey ASC
-      LIMIT 100""",
+      LIMIT $KeysetPageSize""",
     "j5_bloom_join" -> """
       SELECT o_orderpriority, count(*) AS n_orders,
         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE) / 100.0

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables.t
+import graft.expr.MatchExprs
 
 /** Scalar-function inventory (SURVEY §2.3, X1-X13): string split/index/cast,
   * trim, map lookup with default, conditional year inference, concat/format,
@@ -75,17 +76,17 @@ object Scalars {
         to_date(date_format(col("o_orderdate"), "d MMM yyyy"), "d MMM yyyy")
           .as("parsed"))
 
+  /** X8's wall clock, interpolated into the oracle. */
+  private[operators] val RunTs = "2025-02-24 12:00:00"
+
   /** X8 — timestamp in timezone + format (ref
-    * dags/projectde_dag.py:120-122, Asia/Jakarta render). The wall clock is
-    * injectable (determinism contract (a)); fixed literal here.
+    * dags/projectde_dag.py:120-122, Asia/Jakarta render): the daily
+    * pipeline's `created_at` at a fixed wall clock (determinism contract
+    * (a)), [[RunTs]].
     */
-  def x8TzFormat(spark: SparkSession, dir: String,
-      runTs: String = "2025-02-24 12:00:00"): DataFrame =
+  def x8TzFormat(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "region")
-      .select(col("r_regionkey"),
-        date_format(
-          from_utc_timestamp(lit(runTs).cast("timestamp"), "Asia/Jakarta"),
-          "yyyy-MM-dd HH:mm:ss").as("created_at"))
+      .select(col("r_regionkey"), MatchExprs.createdAt(RunTs).as("created_at"))
 
   /** X9 — date interval arithmetic (ref today - timedelta(days=1),
     * dags/projectde_dag.py:64).
@@ -228,7 +229,7 @@ object Scalars {
     "x5_conditional_year" -> (x5ConditionalYear _),
     "x6_concat_format" -> (x6ConcatFormat _),
     "x7_date_parse" -> (x7DateParse _),
-    "x8_tz_format" -> ((s: SparkSession, d: String) => x8TzFormat(s, d)),
+    "x8_tz_format" -> (x8TzFormat _),
     "x9_date_arith" -> (x9DateArith _),
     "x10_case_3way" -> (x10Case3Way _),
     "x11_arith" -> (x11Arith _),
@@ -321,10 +322,10 @@ object Scalars {
              strptime(strftime(o_orderdate, '%-d %b %Y'), '%-d %b %Y')::DATE
                AS parsed
       FROM orders""",
-    "x8_tz_format" -> """
+    "x8_tz_format" -> s"""
       SELECT r_regionkey,
         strftime(timezone('Asia/Jakarta',
-          TIMESTAMP '2025-02-24 12:00:00+00'::TIMESTAMPTZ),
+          TIMESTAMP '$RunTs+00'::TIMESTAMPTZ),
           '%Y-%m-%d %H:%M:%S') AS created_at
       FROM region""",
     "x9_date_arith" -> """

@@ -48,6 +48,10 @@ object Similarity {
          x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)),
          CAST(0 AS DOUBLE), (a, v) -> a + v))"""))
 
+  /** Rank cap of [[rankTopK]]: the k of every ANN variant's top-k and
+    * the kNN-eval vote size, interpolated into the oracles (no drift). */
+  private[operators] val AnnK = 5
+
   /** Rerank idiom for every ANN variant: the native TopKPerKey operator
     * (plans/TopK.scala) caps the scored relation at k rows per qid with
     * bounded heaps — partial pass before the shuffle, NO sort of the
@@ -60,10 +64,10 @@ object Similarity {
     * exactly, so results are identical; SimilaritySpec pins the plan shape
     * (TopKPerKeyExec present, no Sort below it).
     */
-  private def rankTopK(scored: DataFrame, ordCol: String, desc: Boolean,
-      k: Int = 5): DataFrame = {
+  private def rankTopK(scored: DataFrame, ordCol: String,
+      desc: Boolean): DataFrame = {
     graft.plans.GraftFunctions.register(scored.sparkSession)
-    val capped = scored.filter(call_function("graft_topk", lit(k),
+    val capped = scored.filter(call_function("graft_topk", lit(AnnK),
       col(ordCol), lit(if (desc) "desc" else "asc"),
       col("vec_id"), col("qid")))
     val w = Window.partitionBy(col("qid")).orderBy(
@@ -157,6 +161,9 @@ object Similarity {
         round(col("cos"), 6).as("cos_sim"))
   }
 
+  /** [[simRangeSearch]]'s radius τ, interpolated into the oracle. */
+  private[operators] val RangeTau = 0.25
+
   /** RANGE (radius) similarity search: every corpus neighbor with
     * cosine ≥ τ of each panel query — the "find ALL near matches"
     * semantics top-k cannot express (dedup sweeps, policy screens,
@@ -171,8 +178,7 @@ object Similarity {
     * (candidate volume is probes × bucket occupancy, never all-pairs);
     * the refine is one codegen'd expression per candidate row.
     */
-  def simRangeSearch(spark: SparkSession, dir: String,
-      tau: Double = 0.25): DataFrame = {
+  def simRangeSearch(spark: SparkSession, dir: String): DataFrame = {
     val emb = withNorm(t(spark, dir, "embeddings"))
       .withColumn("bucket", bucketCol)
     val q = emb.filter(col("vec_id") < 10)
@@ -186,7 +192,7 @@ object Similarity {
           col("a.vec_id") =!= col("b.vec_id"))
       .withColumn("cos_sim",
         round(cosAB(col("a.embedding"), col("b.embedding")), 6))
-      .filter(col("cos_sim") >= tau)
+      .filter(col("cos_sim") >= RangeTau)
       .select(col("a.vec_id").as("qid"), col("b.vec_id").as("vec_id"),
         col("cos_sim"))
   }
@@ -737,8 +743,6 @@ object Similarity {
     * TopKPerKey cap, never O(q×N) pairs in one stage. Cost: three linear
     * map-side scans (assign ×2, radii) + two hash joins.
     */
-  /** kNN-eval vote size, interpolated into the oracle (no drift). */
-  private[operators] val KnnEvalK = 5
 
   /** The eval panel is the FIXED stratum `vec_id % 20 == 0 AND
     * vec_id < KnnEvalPanelCap` — 1-in-20 of the first 2000 ids, i.e. at
@@ -809,10 +813,9 @@ object Similarity {
     s1.unionByName(s2)
   }
 
-  def simKnnLabelEval(spark: SparkSession, dir: String,
-      k: Int = KnnEvalK): DataFrame = {
-    val scored = knnExactScored(spark, dir, k)
-    val votes = rankTopK(scored, "cos", desc = true, k = k)
+  def simKnnLabelEval(spark: SparkSession, dir: String): DataFrame = {
+    val scored = knnExactScored(spark, dir, AnnK)
+    val votes = rankTopK(scored, "cos", desc = true)
       .groupBy(col("qid"), col("true_label"), col("nbr_label"))
       .agg(count(lit(1)).as("v"))
     val pred = votes.groupBy(col("qid"), col("true_label"))
@@ -1170,6 +1173,10 @@ object Similarity {
         col("vec_id"), col("approx_d2"))
   }
 
+  /** Negatives drawn per anchor by [[simNegatives]], interpolated into
+    * the oracle. */
+  private[operators] val NegativesPerAnchor = 4
+
   /** Contrastive negative sampling: for each anchor vector, k pseudo-random
     * candidate ids drawn by a deterministic affine hash over the id space
     * (`((vec_id mod 2^31−1)·2654435761 + slot·40503 + 17) mod N` — the
@@ -1190,13 +1197,14 @@ object Similarity {
     * enters the hash as a broadcast 1-row aggregate — never a driver-side
     * count.
     */
-  def simNegatives(spark: SparkSession, dir: String, k: Int = 4): DataFrame = {
+  def simNegatives(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftFunctions.register(spark)
     val emb = t(spark, dir, "embeddings")
     val nTotal = emb.agg(count(lit(1)).as("n_total"))
     val cand = emb.select(col("vec_id"), col("label"), col("embedding"))
       .crossJoin(broadcast(nTotal))
-      .withColumn("slot", explode(sequence(lit(0), lit(k - 1))))
+      .withColumn("slot",
+        explode(sequence(lit(0), lit(NegativesPerAnchor - 1))))
       .withColumn("cand_id",
         pmod(pmod(col("vec_id"), lit(2147483647L)) * lit(2654435761L)
           + col("slot") * lit(40503L) + lit(17L), col("n_total")))
@@ -1257,8 +1265,7 @@ object Similarity {
     * on summation order. Scale: moments are a |codebook|-row broadcast;
     * scoring is map-side; top-k plans as TakeOrderedAndProject.
     */
-  def simOutliers(spark: SparkSession, dir: String,
-      k: Int = OutlierTopK): DataFrame = {
+  def simOutliers(spark: SparkSession, dir: String): DataFrame = {
     val (_, assigned, _) = ivfIndex(spark, dir)
     val cc = assigned.select(col("vec_id"), col("cid"),
       round(col("ccos") * 1e6).cast("long").as("cc_u"))
@@ -1285,33 +1292,33 @@ object Similarity {
         .select(col("vec_id"), col("cid"),
           round(col("cc_u") / 1e6, 6).as("cos_centroid"), col("z"))
         .orderBy(col("z").desc, col("vec_id").asc)
-        .limit(k),
+        .limit(OutlierTopK),
       Seq(-col("z"), col("vec_id")), "rank")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "sim_outliers" -> ((s: SparkSession, d: String) => simOutliers(s, d)),
-    "sim_negatives" -> ((s: SparkSession, d: String) => simNegatives(s, d)),
+    "sim_outliers" -> (simOutliers _),
+    "sim_negatives" -> (simNegatives _),
     "sim_negatives_hard" ->
-      ((s: SparkSession, d: String) => simNegativesHard(s, d)),
+      (simNegativesHard _),
     "sim_topk_bruteforce" -> (simTopkBruteforce _),
-    "sim_knn_label_eval" -> ((s: SparkSession, d: String) => simKnnLabelEval(s, d)),
+    "sim_knn_label_eval" -> (simKnnLabelEval _),
     "sim_lsh_ann" -> (simLshAnn _),
     "sim_lsh_multiprobe" -> (simLshMultiprobe _),
-    "sim_range_search" -> ((s: SparkSession, d: String) => simRangeSearch(s, d)),
+    "sim_range_search" -> (simRangeSearch _),
     "sim_ivf_ann" -> (simIvfAnn _),
     "sim_ivf_kmeans" -> ((s, d) => simIvfKmeansAnn(s, d)),
     "sim_lsh_join" -> (simLshJoin _),
     "sim_centroid" -> (simCentroid _),
     "sim_recall_at_k" -> (simRecallAtK _),
     "sim_ivfpq_recall" -> (simIvfPqRecall _),
-    "sim_pca_power" -> ((s: SparkSession, d: String) => simPcaPower(s, d)),
+    "sim_pca_power" -> ((s, d) => simPcaPower(s, d)),
     "sim_l2_normalize" -> (simL2Normalize _),
     "sim_jl_audit" -> (simJlAudit _),
     "sim_quantize_int8" -> (simQuantizeInt8 _),
     "sim_pq_ann" -> (simPqAnn _),
     "sim_ivfpq_ann" -> (simIvfPqAnn _),
-    "sim_semantic_prune" -> ((s: SparkSession, d: String) => simSemanticPrune(s, d)),
+    "sim_semantic_prune" -> ((s, d) => simSemanticPrune(s, d)),
     "sim_ivf_incremental" -> (simIvfIncremental _),
   )
 
@@ -1391,7 +1398,7 @@ object Similarity {
                  ((a.vec_id % 2147483647) * 2654435761
                    + g.slot * 40503 + 17) % t.n_total AS cand_id
                FROM lab a CROSS JOIN nn t,
-                    UNNEST(generate_series(0, 3)) AS g(slot))
+                    UNNEST(generate_series(0, ${NegativesPerAnchor - 1})) AS g(slot))
       SELECT a.vec_id AS anchor_id, CAST(a.slot AS INT) AS slot,
         b.vec_id AS neg_id, b.label AS neg_label,
         round($cosAB, 6) AS cos_sim
@@ -1405,7 +1412,7 @@ object Similarity {
       FROM (SELECT qid, vec_id, cos, row_number() OVER
               (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rank
             FROM scored)
-      WHERE rank <= 5""",
+      WHERE rank <= $AnnK""",
     "sim_knn_label_eval" -> s"""
       WITH $normCte,
       nl AS (SELECT n.vec_id, e.label, n.embedding, n.nrm
@@ -1418,7 +1425,7 @@ object Similarity {
       top AS (SELECT * FROM
                 (SELECT *, row_number() OVER (PARTITION BY qid
                    ORDER BY cos DESC, vec_id ASC) AS rn FROM scored)
-              WHERE rn <= $KnnEvalK),
+              WHERE rn <= $AnnK),
       votes AS (SELECT qid, true_label, nbr_label, count(*) AS v
                 FROM top GROUP BY 1, 2, 3),
       pred AS (SELECT qid, true_label, nbr_label AS pred_label FROM
@@ -1452,7 +1459,7 @@ object Similarity {
       FROM (SELECT qid, vec_id, neg_label, cos, row_number() OVER
               (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rank
             FROM scored)
-      WHERE rank <= 5""",
+      WHERE rank <= $AnnK""",
     "sim_lsh_ann" -> s"""
       WITH $normCte,
       bk AS (SELECT vec_id, embedding, nrm,
@@ -1469,7 +1476,7 @@ object Similarity {
       FROM (SELECT qid, vec_id, cos, row_number() OVER
               (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rank
             FROM scored)
-      WHERE rank <= 5""",
+      WHERE rank <= $AnnK""",
     "sim_range_search" -> s"""
       WITH $normCte,
       bk AS (SELECT vec_id, embedding, nrm,
@@ -1490,7 +1497,7 @@ object Similarity {
              round($cosAB, 6) AS cos_sim
       FROM probes a JOIN bk b ON a.probe = b.bucket
         AND a.vec_id <> b.vec_id
-      WHERE round($cosAB, 6) >= 0.25""",
+      WHERE round($cosAB, 6) >= $RangeTau""",
     "sim_lsh_multiprobe" -> s"""
       WITH $normCte,
       bk AS (SELECT vec_id, embedding, nrm,
@@ -1514,7 +1521,7 @@ object Similarity {
       FROM (SELECT qid, vec_id, cos, row_number() OVER
               (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rank
             FROM scored)
-      WHERE rank <= 5""",
+      WHERE rank <= $AnnK""",
     "sim_ivf_incremental" -> s"""
       WITH $normCte,
       c AS (SELECT vec_id AS cid, embedding, nrm FROM n WHERE vec_id < 16),
@@ -1567,7 +1574,7 @@ object Similarity {
       FROM (SELECT qid, vec_id, cos, row_number() OVER
               (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rank
             FROM scored)
-      WHERE rank <= 5""",
+      WHERE rank <= $AnnK""",
     "sim_ivf_kmeans" -> s"""
       WITH $normCte,
       e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS emb,
@@ -1600,7 +1607,7 @@ object Similarity {
       FROM (SELECT qid, vec_id, cos, row_number() OVER
               (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rank
             FROM scored)
-      WHERE rank <= 5""",
+      WHERE rank <= $AnnK""",
     "sim_lsh_join" -> """
       WITH bk AS (SELECT vec_id, embedding,
                array_to_string(list_transform(generate_series(0, 3), p ->
@@ -1663,7 +1670,7 @@ object Similarity {
                (SELECT qid, vec_id, row_number() OVER
                   (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rank
                 FROM bf_scored)
-             WHERE rank <= 5),
+             WHERE rank <= $AnnK),
       l_scored AS (SELECT a.vec_id AS qid, b.vec_id AS vec_id, $cosAB AS cos
                    FROM bk a JOIN bk b ON a.bucket = b.bucket
                      AND a.vec_id < 10 AND a.vec_id <> b.vec_id),
@@ -1671,7 +1678,7 @@ object Similarity {
                 (SELECT qid, vec_id, row_number() OVER
                    (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rank
                  FROM l_scored)
-              WHERE rank <= 5)
+              WHERE rank <= $AnnK)
       SELECT bf.qid, CAST(count(l.vec_id) AS BIGINT) AS n_hits,
         round(CAST(count(l.vec_id) AS DOUBLE) / count(*), 6) AS recall
       FROM bf LEFT JOIN lsh l
@@ -1729,7 +1736,7 @@ object Similarity {
           i -> pow(embedding[i]::DOUBLE - (mn + q[i]::DOUBLE * scale), 2)))
           / len(embedding)), 6) AS dq_err
       FROM qq""",
-    "sim_pq_ann" -> """
+    "sim_pq_ann" -> s"""
       WITH sd AS (SELECT vec_id AS cid, embedding FROM embeddings
                   WHERE vec_id < 16),
       sub AS (SELECT v.vec_id, s.s, sd.cid,
@@ -1753,14 +1760,14 @@ object Similarity {
       SELECT qid, CAST(rank AS INT) AS rank, vec_id, approx_d2 FROM
         (SELECT *, row_number() OVER (PARTITION BY qid
            ORDER BY approx_d2 ASC, vec_id ASC) AS rank FROM approx)
-      WHERE rank <= 5""",
+      WHERE rank <= $AnnK""",
     "sim_ivfpq_ann" -> s"""
       WITH $normCte,
       $ivfpqCtes
       SELECT qid, CAST(rank AS INT) AS rank, vec_id, approx_d2 FROM
         (SELECT *, row_number() OVER (PARTITION BY qid
            ORDER BY approx_d2 ASC, vec_id ASC) AS rank FROM approx)
-      WHERE rank <= 5""",
+      WHERE rank <= $AnnK""",
     // the power schedule replays as chained CTEs (the graph_label_prop
     // convention): per-row dot products are ordered list folds, every
     // cross-row sum is per-row micro-rounded then summed as exact longs,
@@ -1814,14 +1821,14 @@ object Similarity {
       ap AS (SELECT qid, vec_id FROM
                (SELECT *, row_number() OVER (PARTITION BY qid
                   ORDER BY approx_d2 ASC, vec_id ASC) AS rank FROM approx)
-             WHERE rank <= 5),
+             WHERE rank <= $AnnK),
       bf_scored AS (SELECT a.vec_id AS qid, b.vec_id AS vec_id, $cosAB AS cos
                     FROM n a JOIN n b ON a.vec_id < 10 AND a.vec_id <> b.vec_id),
       bf AS (SELECT qid, vec_id FROM
                (SELECT qid, vec_id, row_number() OVER
                   (PARTITION BY qid ORDER BY cos DESC, vec_id ASC) AS rank
                 FROM bf_scored)
-             WHERE rank <= 5)
+             WHERE rank <= $AnnK)
       SELECT bf.qid, CAST(count(a.vec_id) AS BIGINT) AS n_hits,
         round(CAST(count(a.vec_id) AS DOUBLE) / count(*), 6) AS recall
       FROM bf LEFT JOIN ap a

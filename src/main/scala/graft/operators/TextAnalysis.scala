@@ -243,9 +243,8 @@ object TextAnalysis {
     * scores exactly n_pos_label correct, so n_correct > n_pos_label IS
     * the measured learning margin.
     */
-  def textClassifierEval(spark: SparkSession, dir: String,
-      rounds: Int = ClassifierTrainRounds): DataFrame = {
-    val wm = classifierWeights(spark, dir, rounds)
+  def textClassifierEval(spark: SparkSession, dir: String): DataFrame = {
+    val wm = classifierWeights(spark, dir, ClassifierTrainRounds)
     val wmap = typedLit(wm.zipWithIndex.map { case (v, i) => i -> v }.toMap)
     classifierFeatures(spark, dir)
       .withColumn("wmc", coalesce(element_at(wmap, col("b")), lit(0L)))
@@ -426,6 +425,9 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
             col("n_distinct").cast("double") / col("n_shingles"), 6)))
   }
 
+  /** [[textTokenTopk]]'s k, interpolated into the oracle. */
+  private[operators] val TokenTopK = 20
+
   /** Corpus-wide token frequencies, top-k — the word-count classic at its
     * scale-correct shape: explode is map-side (no shuffle until the
     * count), the aggregation is partial+final on the token key, and the
@@ -433,14 +435,17 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
     * merge of k rows — never a global sort). Deterministic tie-break on
     * the token makes top-k a well-defined set.
     */
-  def textTokenTopk(spark: SparkSession, dir: String, k: Int = 20): DataFrame =
+  def textTokenTopk(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "documents")
       .select(explode(split(col("text"), " ")).as("tok"))
       .filter(col("tok") =!= "")
       .groupBy(col("tok"))
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("tok").asc)
-      .limit(k)
+      .limit(TokenTopK)
+
+  /** Head size of [[textZipf]]'s fit, interpolated into the oracle. */
+  private[operators] val ZipfHead = 100
 
   /** Corpus-law report: Zipf slope over the head of the frequency
     * distribution plus the vocabulary summary (types, hapax legomena,
@@ -463,7 +468,7 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
     * idiom), so Σx, Σy, Σxy, Σxx are exact longs in any partition
     * order and the slope is one IEEE division on identical integers.
     */
-  def textZipf(spark: SparkSession, dir: String, topN: Int = 100): DataFrame = {
+  def textZipf(spark: SparkSession, dir: String): DataFrame = {
     val counts = t(spark, dir, "documents")
       .select(explode(split(col("text"), " ")).as("tok"))
       .filter(col("tok") =!= "")
@@ -473,7 +478,7 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
       count(lit(1)).as("n_types"),
       sum(when(col("n") === 1, 1L).otherwise(0L)).as("n_hapax"))
     val top = Bounded.rankBounded(
-      counts.orderBy(col("n").desc, col("tok").asc).limit(topN),
+      counts.orderBy(col("n").desc, col("tok").asc).limit(ZipfHead),
       Seq(-col("n"), col("tok")), "rank")
     val pts = top.select(
       round(log(col("rank").cast("double")) * 1e6).cast("long").as("xu"),
@@ -521,7 +526,10 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
         regexp_replace(regexp_replace(col("text"), EmailRe, "<EMAIL>"),
           Ipv4Re, "<IP>").as("scrubbed"))
 
-  /** Vocabulary build + OOV rate: top-`vocabSize` tokens by corpus
+  /** [[textVocabOov]]'s vocabulary size, interpolated into the oracle. */
+  private[operators] val OovVocabSize = 20
+
+  /** Vocabulary build + OOV rate: top-[[OovVocabSize]] tokens by corpus
     * frequency (count desc, token asc — a well-defined set), then each
     * doc's out-of-vocabulary token count/rate against it. The tokenizer-
     * coverage signal a data pipeline computes before committing to a
@@ -530,12 +538,11 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
     * BROADCASTs back against the token stream — the corpus shuffles only
     * for the per-doc count aggregation on doc_id.
     */
-  def textVocabOov(spark: SparkSession, dir: String,
-      vocabSize: Int = 20): DataFrame = {
+  def textVocabOov(spark: SparkSession, dir: String): DataFrame = {
     val tok = t(spark, dir, "documents")
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
     val vocab = tok.groupBy(col("tok")).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("tok").asc).limit(vocabSize)
+      .orderBy(col("n").desc, col("tok").asc).limit(OovVocabSize)
       .select(col("tok"), lit(1).as("in_vocab"))
     tok.join(broadcast(vocab), Seq("tok"), "left_outer")
       .groupBy(col("doc_id"))
@@ -571,32 +578,34 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
         (col("messy") =!= lower(trim(regexp_replace(col("messy"), " +", " "))))
           .as("changed"))
 
-  /** Defaults shared by [[textChunk]]'s signature and its oracle SQL
+  /** Chunk size and stride of [[textChunk]], shared with its oracle SQL
     * (ADVICE r7: keep the pair from drifting). */
   val ChunkSize: Int = 32
   val ChunkStride: Int = 24
 
-  /** Sliding-window chunking: split each doc into `size`-token chunks
-    * every `stride` tokens (overlap = size − stride) — the shape a RAG
+  /** Sliding-window chunking: split each doc into [[ChunkSize]]-token chunks
+    * every [[ChunkStride]] tokens (overlap = size − stride) — the shape a RAG
     * indexer or a fixed-context trainer consumes. Chunk starts cover the
     * whole doc (tail chunks may be shorter than `size`; no token is ever
-    * dropped). Per-row `sequence` + `transform` + `posexplode` — the
-    * explode is map-side, zero shuffle, and each output row carries only
-    * its own chunk (never the full doc), so memory per task is bounded by
-    * the longest single document at any corpus size.
+    * dropped). Per-row `sequence` + `transform` + `posexplode` — the explode
+    * is map-side, zero shuffle, and each output row carries only its own
+    * chunk (never the full doc), so memory per task is bounded by the longest
+    * single document at any corpus size.
     */
-  def textChunk(spark: SparkSession, dir: String,
-      chunkSize: Int = ChunkSize, stride: Int = ChunkStride): DataFrame = {
-    require(chunkSize > 0 && stride > 0, "chunk size and stride must be positive")
+  def textChunk(spark: SparkSession, dir: String): DataFrame = {
     t(spark, dir, "documents")
       .withColumn("w", tokens(col("text")))
       .select(col("doc_id"),
-        posexplode(transform(sequence(lit(1), size(col("w")), lit(stride)),
-          s => array_join(slice(col("w"), s, lit(chunkSize)), " "))))
+        posexplode(transform(sequence(lit(1), size(col("w")), lit(ChunkStride)),
+          s => array_join(slice(col("w"), s, lit(ChunkSize)), " "))))
       .select(col("doc_id"), col("pos").cast("int").as("chunk_id"),
         col("col").as("chunk_text"))
       .withColumn("chunk_tokens", size(split(col("chunk_text"), " ")))
   }
+
+  /** Terms per document [[textTfidf]] keeps, interpolated into the
+    * oracle. */
+  private[operators] val TfidfTopK = 5
 
   /** TF-IDF top terms per document — the per-doc keyword signal a corpus
     * browser or relevance filter reads. tf = in-doc term count, idf =
@@ -609,7 +618,7 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
     * distinct terms, bounded by document length at any corpus size.
     * N arrives as a broadcast 1-row aggregate, never a driver collect.
     */
-  def textTfidf(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def textTfidf(spark: SparkSession, dir: String): DataFrame = {
     val tf = t(spark, dir, "documents")
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term"))
@@ -626,12 +635,13 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
       .select(col("doc_id"), col("term"),
         round(col("tf") * col("idf"), 6).as("tfidf"))
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      .filter(col("rn") <= TfidfTopK)
       .select(col("doc_id"), col("term"), col("tfidf"),
         col("rn").cast("int").as("rank"))
   }
 
-  /** Defaults shared by [[textBm25]]'s signature and its oracle SQL, so
+  /** Query, k and the k1/b defaults of [[textBm25]], shared with its
+    * oracle SQL, so
     * the operator/oracle pair cannot drift (ADVICE r7: the oracle used to
     * bake the same numbers as unlabeled constants).
     */
@@ -650,9 +660,8 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
     * TakeOrderedAndProject. Pure double math with one rounding at emit —
     * engine-exact.
     */
-  def textBm25(spark: SparkSession, dir: String,
-      query: Seq[String] = Bm25Query,
-      k: Int = Bm25K, k1: Double = Bm25K1, b: Double = Bm25B): DataFrame = {
+  def textBm25(spark: SparkSession, dir: String, k1: Double = Bm25K1,
+      b: Double = Bm25B): DataFrame = {
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("w"))
       .select(col("doc_id"), col("w"), size(col("w")).cast("double").as("dl"))
@@ -660,7 +669,7 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
       avg(col("dl")).as("avgdl"))
     val tf = docs
       .select(col("doc_id"), col("dl"), explode(col("w")).as("term"))
-      .filter(col("term").isin(query: _*))
+      .filter(col("term").isin(Bm25Query: _*))
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).cast("double").as("tf"))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).cast("double").as("df"))
@@ -674,7 +683,7 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
       .groupBy(col("doc_id"))
       .agg(round(sum(col("s")), 6).as("bm25"))
       .orderBy(col("bm25").desc, col("doc_id").asc)
-      .limit(k)
+      .limit(Bm25K)
   }
 
   /** Number of top-drift terms [[textVocabDrift]] emits, shared with its
@@ -708,8 +717,7 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
     * (identical in both engines) with term as tiebreak, so the top-k
     * set cannot flip on a last-ulp log difference.
     */
-  def textVocabDrift(spark: SparkSession, dir: String,
-      k: Int = VocabDriftK): DataFrame = {
+  def textVocabDrift(spark: SparkSession, dir: String): DataFrame = {
     val half = (conv(substring(md5(col("doc_id").cast("string")), 1, 1),
       16, 10).cast("int") < 8).cast("int")
     val cnt = t(spark, dir, "documents")
@@ -739,11 +747,15 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
     Bounded.rankBounded(
       scored
         .orderBy(col("js_contrib_micro").desc, col("term").asc)
-        .limit(k),
+        .limit(VocabDriftK),
       Seq(-col("js_contrib_micro"), col("term")), "rank")
       .select(col("term"), col("n_a"), col("n_b"), col("pa_ppm"),
         col("pb_ppm"), col("js_contrib_micro"), col("rank"))
   }
+
+  /** Postings head length of [[textInvertedIndex]], interpolated into the
+    * oracle. */
+  private[operators] val PostingsCap = 10
 
   /** Inverted-index build: term → document frequency + the first `cap`
     * postings (smallest doc_ids). Hot terms — stopwords — would make a
@@ -754,21 +766,25 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
     * from a plain count over the same distinct (doc, term) pairs. Real
     * indexes shard full postings; this surface materializes the head.
     */
-  def textInvertedIndex(spark: SparkSession, dir: String,
-      cap: Int = 10): DataFrame = {
+  def textInvertedIndex(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftFunctions.register(spark)
     val pairs = t(spark, dir, "documents")
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .distinct()
     val dfreq = pairs.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val head = pairs
-      .filter(call_function("graft_topk", lit(cap),
+      .filter(call_function("graft_topk", lit(PostingsCap),
         col("doc_id"), lit("asc"), col("doc_id"), col("term")))
       .groupBy(col("term"))
       .agg(concat_ws(",", array_sort(collect_list(col("doc_id"))))
         .as("postings_head"))
     dfreq.join(head, "term")
   }
+
+  /** [[textBigramPmi]]'s minimum bigram count and k, interpolated into
+    * the oracle. */
+  private[operators] val PmiMinCount = 5
+  private[operators] val PmiTopK = 30
 
   /** Bigram PMI — pointwise mutual information of adjacent token pairs,
     * the classic collocation detector (and the signal behind merge rules
@@ -778,8 +794,7 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
     * TakeOrderedAndProject. The PMI expression multiplies in the same
     * left-to-right order in both engines and rounds once at emit.
     */
-  def textBigramPmi(spark: SparkSession, dir: String,
-      minCount: Int = 5, k: Int = 30): DataFrame = {
+  def textBigramPmi(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
       .withColumn("w", tokens(col("text")))
     val bg = docs.select(explode(expr(
@@ -794,7 +809,7 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
       .groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val tot = bg.agg(sum(col("cxy")).cast("double").as("tb"))
       .join(uni.agg(sum(col("c")).cast("double").as("tu")))
-    bg.filter(col("cxy") >= minCount)
+    bg.filter(col("cxy") >= PmiMinCount)
       .join(uni.select(col("tok").as("w1"), col("c").as("c1")), "w1")
       .join(uni.select(col("tok").as("w2"), col("c").as("c2")), "w2")
       .join(broadcast(tot))
@@ -802,7 +817,7 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
         round(log((col("cxy").cast("double") * col("tu") * col("tu")) /
           (col("tb") * col("c1") * col("c2"))), 6).as("pmi"))
       .orderBy(col("pmi").desc, col("w1").asc, col("w2").asc)
-      .limit(k)
+      .limit(PmiTopK)
   }
 
   /** N-gram LANGUAGE-MODEL quality score — the KenLM-ish perplexity
@@ -894,8 +909,7 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
     * exact long arithmetic under any partitioning; per-source means use
     * the integer-micro round-then-divide idiom.
     */
-  def textLmHeldout(spark: SparkSession, dir: String,
-      lambda: Double = LmLambda): DataFrame = {
+  def textLmHeldout(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
       .select(col("doc_id"), col("source"), tokens(col("text")).as("w"))
     val train = docs.filter(col("doc_id") % 2 === 0)
@@ -922,10 +936,10 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
       .join(broadcast(tot))
       .withColumn("p",
         greatest(
-          lit(lambda) *
+          lit(LmLambda) *
             (coalesce(col("cb"), lit(0L)).cast("double") /
               coalesce(col("c1"), lit(1L))) +
-          lit(1 - lambda) *
+          lit(1 - LmLambda) *
             (coalesce(col("c2"), lit(0L)).cast("double") /
               col("t_tokens")),
           lit(LmFloor)))
@@ -981,6 +995,9 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
           .otherwise(0.0), 4).as("entropy_norm"))
   }
 
+  /** [[textBpePairs]]'s k, interpolated into the oracle. */
+  private[operators] val BpePairsTopK = 20
+
   /** BPE-style pair statistics — the distributed half of tokenizer
     * training: the top-k adjacent CHARACTER pairs across the corpus,
     * weighted by word frequency, i.e. exactly the candidate table a BPE
@@ -995,7 +1012,7 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
     * over the 100 TB of raw text. Final top-k is a TakeOrderedAndProject,
     * no global sort.
     */
-  def textBpePairs(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
+  def textBpePairs(spark: SparkSession, dir: String): DataFrame = {
     val wc = t(spark, dir, "documents")
       .select(explode(tokens(col("text"))).as("w"))
       .filter(length(col("w")) >= 2)
@@ -1005,7 +1022,7 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
         .as("pair"))
       .groupBy(col("pair")).agg(sum(col("c")).as("cnt"))
       .orderBy(col("cnt").desc, col("pair").asc)
-      .limit(k)
+      .limit(BpePairsTopK)
   }
 
   /** Merge-round count shared by [[textBpeTrain]] and its oracle (the
@@ -1200,9 +1217,8 @@ ${if (eval) evalTail(rounds) else trainTail(rounds)}"""
     * vocabulary-scale merge training, map-side encode, |langs|-row
     * aggregate.
     */
-  def textFertility(spark: SparkSession, dir: String,
-      nMerges: Int = BpeMerges): DataFrame =
-    bpeEncodedDocs(spark, dir, nMerges)
+  def textFertility(spark: SparkSession, dir: String): DataFrame =
+    bpeEncodedDocs(spark, dir, BpeMerges)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_ws_tokens")).as("n_words"),
@@ -1533,29 +1549,21 @@ $docRounds,
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "text_distinct_n" ->
-      ((s: SparkSession, d: String) => textDistinctN(s, d)),
-    "text_distinct_n_approx" ->
-      ((s: SparkSession, d: String) => textDistinctNApprox(s, d)),
-    "text_fertility" ->
-      ((s: SparkSession, d: String) => textFertility(s, d)),
-    "text_gopher_rules" ->
-      ((s: SparkSession, d: String) => textGopherRules(s, d)),
-    "text_keywords" -> ((s: SparkSession, d: String) => textKeywords(s, d)),
-    "text_bpe_train" -> ((s: SparkSession, d: String) => textBpeTrain(s, d)),
-    "text_classifier_train" ->
-      ((s: SparkSession, d: String) => textClassifierTrain(s, d)),
-    "text_classifier_eval" ->
-      ((s: SparkSession, d: String) => textClassifierEval(s, d)),
-    "text_bpe_encode" ->
-      ((s: SparkSession, d: String) => textBpeEncode(s, d)),
-    "text_bpe_pairs" -> ((s: SparkSession, d: String) => textBpePairs(s, d)),
+    "text_distinct_n" -> (textDistinctN _),
+    "text_distinct_n_approx" -> (textDistinctNApprox _),
+    "text_fertility" -> (textFertility _),
+    "text_gopher_rules" -> (textGopherRules _),
+    "text_keywords" -> (textKeywords _),
+    "text_bpe_train" -> ((s, d) => textBpeTrain(s, d)),
+    "text_classifier_train" -> ((s, d) => textClassifierTrain(s, d)),
+    "text_classifier_eval" -> (textClassifierEval _),
+    "text_bpe_encode" -> ((s, d) => textBpeEncode(s, d)),
+    "text_bpe_pairs" -> (textBpePairs _),
     "text_entropy" -> (textEntropy _),
     "text_lm_score" -> (textLmScore _),
-    "text_lm_heldout" ->
-      ((s: SparkSession, d: String) => textLmHeldout(s, d)),
-    "text_token_topk" -> ((s: SparkSession, d: String) => textTokenTopk(s, d)),
-    "text_zipf" -> ((s: SparkSession, d: String) => textZipf(s, d)),
+    "text_lm_heldout" -> (textLmHeldout _),
+    "text_token_topk" -> (textTokenTopk _),
+    "text_zipf" -> (textZipf _),
     "text_tokens" -> (textTokens _),
     "text_classifier_score" -> (textClassifierScore _),
     "text_winnowing" -> (textWinnowing _),
@@ -1564,16 +1572,14 @@ $docRounds,
     "text_fingerprint" -> (textFingerprint _),
     "text_repetition" -> (textRepetition _),
     "text_pii_scrub" -> (textPiiScrub _),
-    "text_vocab_oov" -> ((s: SparkSession, d: String) => textVocabOov(s, d)),
+    "text_vocab_oov" -> (textVocabOov _),
     "text_normalize" -> (textNormalize _),
-    "text_chunk" -> ((s: SparkSession, d: String) => textChunk(s, d)),
-    "text_tfidf" -> ((s: SparkSession, d: String) => textTfidf(s, d)),
-    "text_vocab_drift" -> ((s: SparkSession, d: String) =>
-      textVocabDrift(s, d)),
-    "text_bm25" -> ((s: SparkSession, d: String) => textBm25(s, d)),
-    "text_inverted_index" ->
-      ((s: SparkSession, d: String) => textInvertedIndex(s, d)),
-    "text_bigram_pmi" -> ((s: SparkSession, d: String) => textBigramPmi(s, d)),
+    "text_chunk" -> (textChunk _),
+    "text_tfidf" -> (textTfidf _),
+    "text_vocab_drift" -> (textVocabDrift _),
+    "text_bm25" -> ((s, d) => textBm25(s, d)),
+    "text_inverted_index" -> (textInvertedIndex _),
+    "text_bigram_pmi" -> (textBigramPmi _),
   )
 
   val oracle: Map[String, String] = Map(
@@ -1703,7 +1709,7 @@ $docRounds,
     "text_classifier_train" -> classifierTrainOracle(ClassifierTrainRounds),
     "text_classifier_eval" -> classifierEvalOracle(ClassifierTrainRounds),
     "text_bpe_encode" -> bpeEncodeOracle(BpeMerges),
-    "text_bpe_pairs" -> """
+    "text_bpe_pairs" -> s"""
       WITH toks AS (SELECT unnest(string_split(text, ' ')) AS w
                     FROM documents),
       wc AS MATERIALIZED (SELECT w, count(*) AS c FROM toks
@@ -1712,7 +1718,7 @@ $docRounds,
                 FROM wc, UNNEST(generate_series(1, length(w) - 1)) AS g(i))
       SELECT pair, CAST(sum(c) AS BIGINT) AS cnt
       FROM pairs GROUP BY 1
-      ORDER BY cnt DESC, pair ASC LIMIT 20""",
+      ORDER BY cnt DESC, pair ASC LIMIT $BpePairsTopK""",
     "text_entropy" -> """
       WITH cnt AS (
         SELECT doc_id, tok, count(*) AS c
@@ -1789,12 +1795,12 @@ $docRounds,
       SELECT d.doc_id, COALESCE(g.n_bigrams, 0) AS n_bigrams,
         g.avg_ll AS avg_ll, round(exp(-g.avg_ll), 6) AS ppl
       FROM documents d LEFT JOIN g USING (doc_id)""",
-    "text_token_topk" -> """
+    "text_token_topk" -> s"""
       SELECT tok, count(*) AS n
       FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
       WHERE tok <> ''
-      GROUP BY 1 ORDER BY n DESC, tok ASC LIMIT 20""",
-    "text_zipf" -> """
+      GROUP BY 1 ORDER BY n DESC, tok ASC LIMIT $TokenTopK""",
+    "text_zipf" -> s"""
       WITH c AS (
         SELECT tok, count(*) AS n
         FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
@@ -1805,7 +1811,7 @@ $docRounds,
                 AS n_hapax
             FROM c),
       top AS (SELECT n, row_number() OVER (ORDER BY n DESC, tok ASC) AS rank
-              FROM (SELECT n, tok FROM c ORDER BY n DESC, tok ASC LIMIT 100)),
+              FROM (SELECT n, tok FROM c ORDER BY n DESC, tok ASC LIMIT $ZipfHead)),
       pts AS (SELECT
                 CAST(round(ln(CAST(rank AS DOUBLE)) * 1e6) AS BIGINT) AS xu,
                 CAST(round(ln(CAST(n AS DOUBLE)) * 1e6) AS BIGINT) AS yu
@@ -1935,11 +1941,11 @@ $docRounds,
           '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
           '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS scrubbed
       FROM pii""",
-    "text_vocab_oov" -> """
+    "text_vocab_oov" -> s"""
       WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
                    FROM documents),
       vc AS (SELECT tok, count(*) AS n FROM tok GROUP BY 1),
-      v AS (SELECT tok FROM vc ORDER BY n DESC, tok ASC LIMIT 20)
+      v AS (SELECT tok FROM vc ORDER BY n DESC, tok ASC LIMIT $OovVocabSize)
       SELECT t.doc_id, count(*) AS n_tokens,
         CAST(sum(CASE WHEN v.tok IS NULL THEN 1 ELSE 0 END) AS BIGINT)
           AS n_oov,
@@ -2009,7 +2015,7 @@ $docRounds,
           (ORDER BY js_contrib_micro DESC, term ASC) AS INT) AS rank
       FROM sc
       ORDER BY js_contrib_micro DESC, term ASC LIMIT $VocabDriftK""",
-    "text_tfidf" -> """
+    "text_tfidf" -> s"""
       WITH tf AS (
         SELECT doc_id, term, count(*) AS tf
         FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
@@ -2024,7 +2030,7 @@ $docRounds,
       r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
               ORDER BY tfidf DESC, term ASC) AS rank FROM s)
       SELECT doc_id, term, tfidf, CAST(rank AS INT) AS rank
-      FROM r WHERE rank <= 5""",
+      FROM r WHERE rank <= $TfidfTopK""",
     "text_bm25" -> s"""
       WITH dl AS (SELECT doc_id, len(string_split(text, ' '))::DOUBLE AS dl
                   FROM documents),
@@ -2043,16 +2049,16 @@ $docRounds,
                + $Bm25B * tf.dl / st.avgdl))), 6) AS bm25
       FROM tf JOIN df USING (term) CROSS JOIN st
       GROUP BY 1 ORDER BY bm25 DESC, doc_id ASC LIMIT $Bm25K""",
-    "text_inverted_index" -> """
+    "text_inverted_index" -> s"""
       WITH pairs AS (
         SELECT DISTINCT doc_id, term
         FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term
               FROM documents))
       SELECT term, count(*) AS df,
-        array_to_string(list_slice(list_sort(list(doc_id)), 1, 10), ',')
+        array_to_string(list_slice(list_sort(list(doc_id)), 1, $PostingsCap), ',')
           AS postings_head
       FROM pairs GROUP BY 1""",
-    "text_bigram_pmi" -> """
+    "text_bigram_pmi" -> s"""
       WITH tok AS (SELECT doc_id, string_split(text, ' ') AS w
                    FROM documents),
       bg AS (SELECT w[i] AS w1, w[i + 1] AS w2, count(*) AS cxy
@@ -2071,7 +2077,7 @@ $docRounds,
       JOIN uni u1 ON b.w1 = u1.tok
       JOIN uni u2 ON b.w2 = u2.tok
       CROSS JOIN tot t
-      WHERE b.cxy >= 5
-      ORDER BY pmi DESC, w1 ASC, w2 ASC LIMIT 30""",
+      WHERE b.cxy >= $PmiMinCount
+      ORDER BY pmi DESC, w1 ASC, w2 ASC LIMIT $PmiTopK""",
   )
 }

@@ -65,9 +65,7 @@ object BatchPipeline {
         col("home_team").as("home"), col("away_team").as("away"),
         col("home_score").as("hs"), col("away_score").as("as_"))
       val standings = Relational.standingsOf(asMatches, keys = Seq("league"))
-        .withColumn("created_at",
-          date_format(from_utc_timestamp(lit(runTs).cast("timestamp"),
-            "Asia/Jakarta"), "yyyy-MM-dd HH:mm:ss"))
+        .withColumn("created_at", MatchExprs.createdAt(runTs))
       standings.write.mode(SaveMode.Overwrite)
         .partitionBy("league").parquet(s"$outDir/standings")
     } finally matches.unpersist()

@@ -27,6 +27,6 @@ object RetailPipeline {
   }
 
   /** The ingest sanity check (ref sql/ingest-retail.sql:2). */
-  def preview(retail: DataFrame, n: Int = 5): Array[org.apache.spark.sql.Row] =
-    retail.orderBy("InvoiceNo", "StockCode").limit(n).collect()
+  def preview(retail: DataFrame): Array[org.apache.spark.sql.Row] =
+    retail.orderBy("InvoiceNo", "StockCode").limit(5).collect()
 }

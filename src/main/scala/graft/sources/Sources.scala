@@ -202,7 +202,7 @@ object Sources {
     * code. Built as a static fold of shift/mask Columns (one codegen'd
     * expression, no HOF lambda, no UDF).
     */
-  def zValue(a: Column, b: Column, bits: Int = 16): Column =
+  def zValue(a: Column, b: Column, bits: Int): Column =
     (0 until bits).foldLeft(lit(0L)) { (acc, i) =>
       acc
         .bitwiseOR(shiftleft(shiftright(a, i).bitwiseAND(lit(1L)), 2 * i + 1))
@@ -218,7 +218,7 @@ object Sources {
     * layouts (Delta/Iceberg Z-ordering) buy for multi-dimension query
     * mixes.
     *
-    * Both keys are min/max-normalized to `bits` bits BEFORE interleaving —
+    * Both keys are min/max-normalized to 13 bits BEFORE interleaving —
     * without that, the wider-ranged key owns all the high z bits and the
     * narrow key degenerates to no pruning at all (Delta solves the same
     * problem with per-column range-partition ids). Linear normalization
@@ -229,7 +229,7 @@ object Sources {
     * balanced.
     */
   def zorderLayoutWrite(df: DataFrame, colA: String, colB: String,
-      outDir: String, partitions: Int, bits: Int = 13): Unit = {
+      outDir: String, partitions: Int): Unit = {
     val st = df.agg(
       min(col(colA)).cast("long"), max(col(colA)).cast("long"),
       min(col(colB)).cast("long"), max(col(colB)).cast("long")).collect()(0)
@@ -247,6 +247,7 @@ object Sources {
           "non-empty input — a layout key column is entirely NULL; " +
           "filter or fill NULL keys before laying out")
     }
+    val bits = 13
     val scale = (1L << bits) - 1
     def norm(c: Column, lo: Long, hi: Long): Column =
       floor((c.cast("long") - lo).cast("double") /

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.SessionArtifacts
+import graft.operators.Curation.{DecontamTau, EvalSource}
 
 /** Document-ingest streaming: stateful exact dedup — the streaming twin of
   * [[graft.operators.Dedup.dedupExact]], for the pipeline that ingests a
@@ -12,10 +13,11 @@ import graft.SessionArtifacts
   *
   * Scale shape: state is keyed by the md5 digest (32 bytes/entry, never
   * the document body), so the state store holds one marker per DISTINCT
-  * document ever seen inside the TTL window. A processing-time TTL bounds
-  * state growth — the standard streaming-dedup trade-off: a duplicate
-  * arriving after the TTL re-emits. Within a micro-batch the minimum
-  * doc_id wins, so replaying the same feed gives identical output.
+  * document ever seen. For an unbounded feed the event-time TTL flavor
+  * ([[dedupStreamEventTtl]]) bounds state growth — the standard
+  * streaming-dedup trade-off: a duplicate arriving after the TTL
+  * re-emits. Within a micro-batch the minimum doc_id wins, so replaying
+  * the same feed gives identical output.
   */
 object DocStream {
 
@@ -35,50 +37,35 @@ object DocStream {
 
   /** Streaming flavor: emit the first arrival per digest, drop the rest.
     * The digest is computed by the engine's own md5 Column (bit-identical
-    * to the batch twin); state is a presence marker.
-    *
-    * `stateTtl = Some(duration)` switches on processing-time state expiry
-    * — the production configuration for an unbounded feed, where a
-    * duplicate arriving after the TTL re-emits (the standard trade-off
-    * that bounds the store to one 32-byte digest per distinct doc seen
-    * inside the window). With a TTL the engine self-triggers batches to
-    * fire timeouts, so tests (and any finite replay) use the default
-    * NoTimeout and bound state by the corpus' distinct count instead.
+    * to the batch twin); state is a presence marker per distinct digest,
+    * kept for the life of the query, so a finite replay's state is
+    * bounded by the corpus' distinct count. An unbounded feed uses
+    * [[dedupStreamEventTtl]], whose watermark-driven TTL ages state out.
     */
-  def dedupStream(docs: Dataset[DocIn],
-      stateTtl: Option[String] = None): Dataset[FirstSeen] = {
+  def dedupStream(docs: Dataset[DocIn]): Dataset[FirstSeen] = {
     import docs.sparkSession.implicits._
     firstSeenByDigest(
       docs.select(col("doc_id"), md5(col("text")).as("text_md5"))
-        .as[(Long, String)], stateTtl)
+        .as[(Long, String)])
   }
 
   /** Stateful first-seen tail shared by [[dedupStream]] and
     * [[curateStream]]: emit the min doc_id per digest on first arrival,
     * drop later arrivals. State is one presence marker per distinct
-    * digest, TTL-bounded when configured.
+    * digest, with no timeout.
     */
-  private def firstSeenByDigest(pairs: Dataset[(Long, String)],
-      stateTtl: Option[String]): Dataset[FirstSeen] = {
+  private def firstSeenByDigest(
+      pairs: Dataset[(Long, String)]): Dataset[FirstSeen] = {
     import pairs.sparkSession.implicits._
-    val timeoutConf = if (stateTtl.isDefined)
-      GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
     pairs
       .groupByKey(_._2)
       .flatMapGroupsWithState[Boolean, FirstSeen](
-        OutputMode.Append, timeoutConf) {
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (digest: String, rows: Iterator[(Long, String)],
          state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else if (state.exists) {
-            // seen inside the TTL → everything in this batch is a dup
-            stateTtl.foreach(state.setTimeoutDuration)
-            Iterator.empty
-          } else {
+          if (state.exists) Iterator.empty
+          else {
             state.update(true)
-            stateTtl.foreach(state.setTimeoutDuration)
             Iterator.single(FirstSeen(digest, rows.map(_._1).min))
           }
       }
@@ -102,11 +89,11 @@ object DocStream {
     * within the TTL refreshes last-seen and is suppressed.
     *
     * State stays one 40-byte (digest, last-seen) entry per distinct doc
-    * inside the TTL horizon; the watermark bounds it at scale exactly as
-    * the processing-time flavor's TTL does, minus the wall-clock skew.
+    * inside the TTL horizon; the watermark bounds it at scale, on the
+    * data's clock rather than an executor's wall clock.
     */
   def dedupStreamEventTtl(docs: Dataset[DocEvent], ttlMs: Long,
-      watermarkDelay: String = "10 seconds"): Dataset[FirstSeen] = {
+      watermarkDelay: String): Dataset[FirstSeen] = {
     import docs.sparkSession.implicits._
     firstSeenByDigestEventTtl(
       docs.select(col("doc_id"), md5(col("text")).as("text_md5"),
@@ -155,12 +142,6 @@ object DocStream {
 
   case class DocCur(doc_id: Long, source: String, text: String)
 
-  /** Decontamination screen's leak-share ceiling — the
-    * [[graft.operators.Curation.decontaminate]] tau, shared with the
-    * oracle.
-    */
-  private[graft] val CurateTau = 0.8
-
   /** Owner of the eval shingle artifacts in [[graft.SessionArtifacts]]. */
   private[graft] final val Owner = "doc-stream"
 
@@ -175,7 +156,7 @@ object DocStream {
     * it too (ADVICE r17: that cache does not self-clean via GC).
     */
   def evalShingleSet(spark: SparkSession, dir: String,
-      evalSource: String = "src0"): Array[String] =
+      evalSource: String = EvalSource): Array[String] =
     SessionArtifacts.getOrBuild(spark, dir,
         SessionArtifacts.Kind(Owner, s"eval-shingles-$evalSource")) {
       graft.plans.GraftFunctions.register(spark)
@@ -212,8 +193,7 @@ object DocStream {
     * admitted, matching the standalone decontaminate's join semantics.
     */
   private def curateStage(df: DataFrame, evalSh: Array[String],
-      evalSource: String, tau: Double,
-      keep: Seq[String] = Nil): DataFrame = {
+      evalSource: String, keep: Seq[String] = Nil): DataFrame = {
     import graft.operators.TextAnalysis.{EmailRe, Ipv4Re}
     // NULL text is pinned to the empty document, not dropped (ADVICE
     // r16): without the coalesce both admit disjuncts evaluate NULL and
@@ -232,7 +212,7 @@ object DocStream {
       .filter(col("n_sh") === 0 ||
         graft.plans.SetMemberCountBc.column(df.sparkSession, col("sh"),
             evalSh)
-          .cast("double") / col("n_sh") < tau)
+          .cast("double") / col("n_sh") < DecontamTau)
       .select(col("doc_id") +: md5(col("scrubbed")).as("text_md5") +:
         keep.map(col): _*)
   }
@@ -244,14 +224,12 @@ object DocStream {
     * StreamingSpec pins stream == [[batchCurateIngest]] on the real
     * corpus fed in doc_id order.
     */
-  def curateStream(docs: Dataset[DocCur], evalSh: Array[String],
-      evalSource: String = "src0",
-      tau: Double = CurateTau): Dataset[FirstSeen] = {
+  def curateStream(docs: Dataset[DocCur],
+      evalSh: Array[String]): Dataset[FirstSeen] = {
     import docs.sparkSession.implicits._
     graft.plans.GraftFunctions.register(docs.sparkSession)
     firstSeenByDigest(
-      curateStage(docs.toDF(), evalSh, evalSource, tau).as[(Long, String)],
-      None)
+      curateStage(docs.toDF(), evalSh, EvalSource).as[(Long, String)])
   }
 
   case class DocCurEvent(doc_id: Long, source: String, text: String,
@@ -269,13 +247,11 @@ object DocStream {
     * forever on a 100 TB/day feed.
     */
   def curateStreamEventTtl(docs: Dataset[DocCurEvent],
-      evalSh: Array[String], ttlMs: Long, evalSource: String = "src0",
-      tau: Double = CurateTau,
+      evalSh: Array[String], ttlMs: Long,
       watermarkDelay: String = "10 seconds"): Dataset[FirstSeen] = {
     graft.plans.GraftFunctions.register(docs.sparkSession)
     firstSeenByDigestEventTtl(
-      curateStage(docs.toDF(), evalSh, evalSource, tau,
-        keep = Seq("event_ts")),
+      curateStage(docs.toDF(), evalSh, EvalSource, keep = Seq("event_ts")),
       ttlMs, watermarkDelay)
   }
 
@@ -314,10 +290,10 @@ object DocStream {
     * surviving scrubbed-text digest.
     */
   def batchCurateIngest(spark: SparkSession, dir: String,
-      evalSource: String = "src0", tau: Double = CurateTau): DataFrame = {
+      evalSource: String = EvalSource): DataFrame = {
     graft.plans.GraftFunctions.register(spark)
     curateStage(graft.Tables.t(spark, dir, "documents"),
-        evalShingleSet(spark, dir, evalSource), evalSource, tau)
+        evalShingleSet(spark, dir, evalSource), evalSource)
       .groupBy(col("text_md5")).agg(min(col("doc_id")).as("doc_id"))
   }
 
@@ -337,9 +313,9 @@ object DocStream {
               regexp_replace(regexp_replace(coalesce(text, ''),
                 '$EmailRe', '<EMAIL>', 'g'),
                 '$Ipv4Re', '<IP>', 'g') AS text
-            FROM documents WHERE source <> 'src0'),
+            FROM documents WHERE source <> '$EvalSource'),
       evt AS (SELECT string_split(text, ' ') AS w FROM documents
-              WHERE source = 'src0'),
+              WHERE source = '$EvalSource'),
       evn AS (SELECT CASE WHEN len(w) >= 3
                 THEN list_transform(generate_series(1, len(w) - 2),
                        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])
@@ -359,7 +335,7 @@ object DocStream {
                LEFT JOIN hit h ON a.doc_id = h.doc_id
                WHERE c.n_sh IS NULL
                   OR CAST(coalesce(h.n_shared, 0) AS DOUBLE) / c.n_sh
-                       < $CurateTau)
+                       < $DecontamTau)
       SELECT md5(text) AS text_md5, CAST(min(doc_id) AS BIGINT) AS doc_id
       FROM keep GROUP BY 1"""
     },

@@ -135,14 +135,10 @@ object EventConsumer {
     * shared verbatim. StreamingSpec runs the ST3/ST5/ST8/ST9 transforms
     * through this source and pins them to their batch twins.
     */
-  def kafkaReplaySource(spark: SparkSession, dir: String,
-      partitions: Int = 4, rowsPerBatch: Long = 0L): DataFrame =
+  def kafkaReplaySource(spark: SparkSession, dir: String): DataFrame =
     decodeKafkaEvents(
       spark.readStream.format("graft.streaming.KafkaReplayProvider")
         .option("path", dir)
-        .option("topic", "events")
-        .option("partitions", partitions)
-        .option("rowsPerBatch", rowsPerBatch)
         .load())
 
   def kafkaSink(df: DataFrame, bootstrap: String, topic: String,
@@ -386,10 +382,9 @@ object EventConsumer {
     * `n·k > total` filter makes the result independent of sketch
     * internals. Per-window totals ride the sketch row, so no third pass.
     */
-  def batchWindowHeavyHitters(spark: SparkSession, dir: String,
-      k: Int = WindowHhK): DataFrame = {
+  def batchWindowHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.t(spark, dir, "events")
-    val sketch = windowHeavyHitterSketch(ev, k)
+    val sketch = windowHeavyHitterSketch(ev)
     val cand = sketch.select(col("window_start"), col("total"),
       explode(col("cands")).as("event_type"))
     ev.select(window(col("ts"), "1 hour").getField("start")
@@ -397,7 +392,7 @@ object EventConsumer {
       .join(broadcast(cand), Seq("window_start", "event_type"))
       .groupBy(col("window_start"), col("event_type"), col("total"))
       .agg(count(lit(1)).as("n_events"))
-      .filter(col("n_events") * k > col("total"))
+      .filter(col("n_events") * WindowHhK > col("total"))
       .select(col("window_start"), col("event_type"), col("n_events"),
         round(col("n_events").cast("double") / col("total"), 6).as("share"))
   }
@@ -627,8 +622,7 @@ object EventConsumer {
     "st4_sessionize" -> (batchSessionize _),
     "st6_sliding_window" -> (batchSlidingWindow _),
     "st7_session_window" -> (batchSessionWindow _),
-    "st8_window_heavy_hitters" ->
-      ((s: SparkSession, d: String) => batchWindowHeavyHitters(s, d)),
+    "st8_window_heavy_hitters" -> (batchWindowHeavyHitters _),
     "st9_window_distinct_users" -> (batchWindowDistinctUsers _),
   )
 

@@ -164,4 +164,64 @@ class SessionArtifactsSpec extends AnyFunSuite {
       }
       assert(offenders.isEmpty, s"$advice: ${offenders.mkString(", ")}")
     }
+
+  /** Default-valued parameters of the `def`s in one source file. The rule:
+    * comments, string and char literals are blanked; each `def`'s
+    * parameter lists, on one line or many, are split at their top-level
+    * commas; a parameter counts when its text outside nested brackets
+    * holds a lone `=`, one that is not part of `=>` (by-name `=> T` and
+    * function types), `==`, `<=`, `>=` or `!=`.
+    */
+  private def defaultParams(src: String): Int = {
+    val code = ("""(?s)/\*.*?\*/|//[^\n]*|"{3}.*?"{3}|"(?:\\.|[^"\\\n])*"""" +
+      """|'(?:\\.|[^'\\])'""").r.replaceAllIn(src, "_")
+    def skip(i: Int): Int = {
+      var j = i
+      while (j < code.length && code(j).isWhitespace) j += 1
+      j
+    }
+    // the list from code(open) to its closing bracket, nested ones blanked
+    def list(open: Int): (String, Int) = {
+      val top = new StringBuilder
+      var (i, depth) = (open, 0)
+      do {
+        val c = code(i)
+        if ("([{".contains(c)) depth += 1
+        if (depth == 1 && !"([{".contains(c)) top += c else top += ' '
+        if (")]}".contains(c)) depth -= 1
+        i += 1
+      } while (depth > 0)
+      (top.toString, i)
+    }
+    val lone = """(?<![=<>!:])=(?![=>])""".r
+    """\bdef\s+[^\s(\[:=]+""".r.findAllMatchIn(code).map { m =>
+      var i = skip(m.end)
+      if (i < code.length && code(i) == '[') i = skip(list(i)._2)
+      var n = 0
+      while (i < code.length && code(i) == '(') {
+        val (params, end) = list(i)
+        n += params.split(',').count(lone.findFirstIn(_).isDefined)
+        i = skip(end)
+      }
+      n
+    }.sum
+  }
+
+  test("src/main/scala/graft declares no more default-valued parameters " +
+      "than callers set") {
+    // Every remaining default is set to another value by some caller in
+    // src/main, src/test or perfbench. A new option raises this ceiling,
+    // and CHANGES.md says why.
+    val ceiling = 47
+    val counts = mainSources.collect {
+      case (f, src) if f.getPath.contains("src/main/scala/graft/") =>
+        f.getName -> defaultParams(src)
+    }
+    val total = counts.map(_._2).sum
+    assert(total <= ceiling, s"$total default-valued parameters, ceiling " +
+      s"$ceiling; per file: " +
+      counts.filter(_._2 > 0).sortBy(-_._2).mkString(", ") +
+      ". Read a named constant that the oracle shares instead of adding " +
+      "an option no caller sets")
+  }
 }

@@ -2,18 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (sbt forks a single test JVM). */
+/** One shared local session for all suites (sbt forks a single test JVM),
+  * built by the product's own session contract on 4 cores. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(GraftSession.buildConf)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(s)
-  }
+  lazy val spark: SparkSession = GraftSession.local("graft-test", "4")
 }

@@ -128,8 +128,8 @@ class PackingSpec extends AnyFunSuite {
 
   test("mixture: kept set is the maximal budget prefix per source") {
     import org.apache.spark.sql.expressions.Window
-    val budget = 600L
-    val kept = Curation.mixtureSample(spark, dir, budget).cache()
+    val budget = Curation.MixtureBudget
+    val kept = Curation.mixtureSample(spark, dir).cache()
     try {
       // every kept cumsum within budget
       assert(kept.filter(col("cum_tokens") > budget).isEmpty)
@@ -148,7 +148,7 @@ class PackingSpec extends AnyFunSuite {
   }
 
   test("mixture: per-source budget override is honored") {
-    val got = Curation.mixtureSample(spark, dir, budget = 600,
+    val got = Curation.mixtureSample(spark, dir,
       budgets = Map("src0" -> 0L))
     assert(got.filter(col("source") === "src0").isEmpty)
     assert(got.filter(col("source") =!= "src0").count() > 0)
