@@ -167,7 +167,6 @@ object GraftSession {
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config(buildConf)
       .getOrCreate()

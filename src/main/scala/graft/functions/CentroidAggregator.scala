@@ -9,7 +9,9 @@ import org.apache.spark.sql.functions.udaf
 case class CentroidBuf(sums: Array[Double], var n: Long)
 
 /** Typed custom aggregate (SURVEY §2.10's planned `Aggregator` surface):
-  * per-group element-wise mean of `array<float>` embeddings.
+  * per-group element-wise mean of `array<float>` embeddings. Every
+  * vector must have exactly `dim` elements; any other length fails the
+  * aggregate rather than being padded or truncated.
   *
   * Scale notes: the buffer is a fixed-size double array — partial
   * aggregation runs map-side, so the shuffle carries one (dim·8)-byte
@@ -24,8 +26,10 @@ class CentroidAggregator(dim: Int)
   override def zero: CentroidBuf = CentroidBuf(Array.fill(dim)(0.0), 0L)
 
   override def reduce(b: CentroidBuf, v: Seq[Float]): CentroidBuf = {
+    require(v.length == dim,
+      s"centroid of $dim-dim embeddings got a vector of length ${v.length}")
     var i = 0
-    while (i < dim && i < v.length) { b.sums(i) += v(i); i += 1 }
+    while (i < dim) { b.sums(i) += v(i); i += 1 }
     b.n += 1
     b
   }

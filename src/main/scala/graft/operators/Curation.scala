@@ -294,6 +294,15 @@ object Curation {
 
   private[operators] val TemperatureTau = 0.7
 
+  /** PageRank defaults; the oracle's unrolled CTE chain is GENERATED from
+    * these (ADVICE r7 pattern), so iteration count and damping cannot
+    * drift between the Spark plan and the SQL — including the
+    * `1 - damping` teleport constant, which is interpolated as the same
+    * IEEE double Spark computes rather than a hand-typed decimal.
+    */
+  private[operators] val PagerankIters = 3
+  private[operators] val PagerankDamping = 0.85
+
   /** PageRank (power iteration, fixed `iters` rounds, GraphX's
     * unnormalized `(1-d) + d·Σ rank/deg` formulation) over the near-dup
     * pair graph — "which documents sit at the center of a duplication
@@ -318,15 +327,6 @@ object Curation {
     * Undirected doubling gives every node an out-edge, so no dangling
     * mass correction is needed.
     */
-  /** PageRank defaults; the oracle's unrolled CTE chain is GENERATED from
-    * these (ADVICE r7 pattern), so iteration count and damping cannot
-    * drift between the Spark plan and the SQL — including the
-    * `1 - damping` teleport constant, which is interpolated as the same
-    * IEEE double Spark computes rather than a hand-typed decimal.
-    */
-  private[operators] val PagerankIters = 3
-  private[operators] val PagerankDamping = 0.85
-
   def graphPagerank(spark: SparkSession, dir: String,
       iters: Int = PagerankIters): DataFrame =
     PairGraph.run(spark, dir) { g =>
@@ -988,10 +988,6 @@ object Curation {
         col("cum_tokens"))
   }
 
-  /** Top-k quality docs per source via the native TopKPerKey operator —
-    * the custom plan stack (marker → rewrite → bounded-heap exec, no sort,
-    * no window) doing real work inside the curation family.
-    */
   /** Quality-filter THRESHOLD SWEEP — the ablation table a curation
     * decision actually reads ("if we cut at 0.6 we keep 71% of docs but
     * 83% of tokens") instead of committing to one threshold blind: for
@@ -1039,6 +1035,10 @@ object Curation {
     * into the oracle. */
   private[operators] val TopQualityK = 5
 
+  /** Top-k quality docs per source via the native TopKPerKey operator —
+    * the custom plan stack (marker → rewrite → bounded-heap exec, no sort,
+    * no window) doing real work inside the curation family.
+    */
   def topQualityPerSource(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftFunctions.register(spark)
     t(spark, dir, "documents").select(col("doc_id"), col("source"))

@@ -379,6 +379,11 @@ object Dedup {
         "intentional small-sample evaluation.")
   }
 
+  /** Default τ for the registered eval query; [[dedupLshRecall]] calls
+    * with [[RecallTau]] to match the LSH index's own admission threshold.
+    */
+  private[operators] val NgramTau = 0.8
+
   /** N-gram Jaccard near-dup pairs (exact, all candidate pairs via shared
     * shingles). τ = 0.8. Baseline/oracle for the LSH variants — EVAL
     * ONLY, guarded by an input-size cap (quadratic in hot-shingle
@@ -386,11 +391,6 @@ object Dedup {
     * count table is O(docs) rows, the same convention
     * [[dedupContainment]] documents.
     */
-  /** Default τ for the registered eval query; [[dedupLshRecall]] calls
-    * with [[RecallTau]] to match the LSH index's own admission threshold.
-    */
-  private[operators] val NgramTau = 0.8
-
   def dedupNgramJaccard(spark: SparkSession, dir: String,
       maxRows: Long = EvalBaselineMaxRows,
       tau: Double = NgramTau): DataFrame = {
@@ -698,12 +698,6 @@ object Dedup {
     }.reduce(_ unionByName _).orderBy(col("n_bands"))
   }
 
-  /** BOTH verified candidate-pair indexes in ONE persisted frame
-    * (kind: 'm' | 's', da, db, metric): the two band-bucket kernels share the
-    * cached sketch frame and materialize in a single job, so their stages
-    * schedule concurrently instead of back-to-back — one cache entry, one
-    * count action, roughly the wall-clock of the slower of the two.
-    */
   /** MinHash band relation of a sketch frame: (doc_id, sig, band, key). */
   private[operators] def mBandsOf(sk: DataFrame): DataFrame =
     sk.select(col("doc_id"), col("sig"),
@@ -738,6 +732,12 @@ object Dedup {
     m.unionByName(s)
   }
 
+  /** BOTH verified candidate-pair indexes in ONE persisted frame
+    * (kind: 'm' | 's', da, db, metric): the two band-bucket kernels share the
+    * cached sketch frame and materialize in a single job, so their stages
+    * schedule concurrently instead of back-to-back — one cache entry, one
+    * count action, roughly the wall-clock of the slower of the two.
+    */
   private def combinedPairs(spark: SparkSession, dir: String,
       cap: Int): DataFrame =
     SessionArtifacts.getOrBuild(spark, dir, pairsKind(cap)) {
@@ -766,6 +766,12 @@ object Dedup {
       .filter(col("sim_est") >= 0.5)
       .select(col("da"), col("db"), col("sim_est"))
 
+  /** Containment constants, interpolated into the oracle SQL so the pair
+    * cannot drift (ADVICE r7 pattern).
+    */
+  private[operators] val ContainmentTau = 0.9
+  private[operators] val ContainmentDfCap = 64
+
   /** ASYMMETRIC containment dedup — catches what symmetric Jaccard
     * structurally misses: a short document wholly quoted inside a long
     * one scores containment ≈ 1 in the short→long direction while its
@@ -788,14 +794,8 @@ object Dedup {
     * boilerplate can never manufacture a high containment score; the
     * trade-off is a conservative (under-) estimate for docs that are
     * mostly boilerplate, stated here as the contract.
-    */
-  /** Containment constants, interpolated into the oracle SQL so the pair
-    * cannot drift (ADVICE r7 pattern).
-    */
-  private[operators] val ContainmentTau = 0.9
-  private[operators] val ContainmentDfCap = 64
-
-  /** SIZING — the materialized posting set is O(Σ_doc distinct
+    *
+    * SIZING — the materialized posting set is O(Σ_doc distinct
     * shingles) ≈ tokens-per-doc × docs rows of (doc_id, shingle):
     * ~40 bytes/row deserialized, so ~4 GB per 100 M postings. The capped
     * (`rare`) index is strictly smaller. Both are `localCheckpoint`s

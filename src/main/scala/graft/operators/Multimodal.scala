@@ -481,28 +481,6 @@ object Multimodal {
       .toDF("doc_id", "phash")
   }
 
-  /** Hamming-banded near-dup IMAGE join — [[mmDhash]] composed with the
-    * SimHash banding machinery (Dedup.bandedCandidates): 4×16-bit band
-    * buckets make candidate generation one shuffle and a walk over each
-    * bucket (hot buckets guarded by the anchor-star cap), exact hamming
-    * is paid on candidates only, and pairs dedupe on the tiny
-    * (da, db, dist) projection. Within a planted group the members'
-    * hashes differ only where the inverted pixel residue lands on the
-    * sample grid, so the group's pairs pass [[DhashMaxDist]]; cross-group
-    * hashes are md5-random (expected hamming 32) and rarely even share a
-    * band.
-    *
-    * RECALL BOUND (ADVICE r8): 4 bands over 64 bits GUARANTEE a shared
-    * band only for pairs at hamming distance ≤ 3 (pigeonhole — 4+ bit
-    * differences can land one per band). Pairs at dist 4..[[DhashMaxDist]] are
-    * recalled only probabilistically (all differences must miss one
-    * band), so [[DhashMaxDist]] = 20 is a FILTER bound on reported pairs, not
-    * a recall guarantee. The DuckDB oracle mirrors the banding AND the
-    * anchor-star cap exactly (both interpolated from shared constants),
-    * so engine parity holds at any corpus size and bucket skew — both
-    * engines see the identical candidate set and miss the identical
-    * far pairs.
-    */
   /** Session-memoized dHash SKETCH per (session, corpus dir): (doc_id,
     * dhash), persisted MEMORY_AND_DISK. An image pipeline computes the
     * perceptual hash at INGEST — nobody re-decodes a 100 TB image corpus
@@ -556,6 +534,28 @@ object Multimodal {
         explode(expr("sequence(0, 3)")).as("band"))
       .withColumn("key", expr("substr(dhash, 1 + band * 16, 16)"))
 
+  /** Hamming-banded near-dup IMAGE join — [[mmDhash]] composed with the
+    * SimHash banding machinery (Dedup.bandedCandidates): 4×16-bit band
+    * buckets make candidate generation one shuffle and a walk over each
+    * bucket (hot buckets guarded by the anchor-star cap), exact hamming
+    * is paid on candidates only, and pairs dedupe on the tiny
+    * (da, db, dist) projection. Within a planted group the members'
+    * hashes differ only where the inverted pixel residue lands on the
+    * sample grid, so the group's pairs pass [[DhashMaxDist]]; cross-group
+    * hashes are md5-random (expected hamming 32) and rarely even share a
+    * band.
+    *
+    * RECALL BOUND (ADVICE r8): 4 bands over 64 bits GUARANTEE a shared
+    * band only for pairs at hamming distance ≤ 3 (pigeonhole — 4+ bit
+    * differences can land one per band). Pairs at dist 4..[[DhashMaxDist]] are
+    * recalled only probabilistically (all differences must miss one
+    * band), so [[DhashMaxDist]] = 20 is a FILTER bound on reported pairs, not
+    * a recall guarantee. The DuckDB oracle mirrors the banding AND the
+    * anchor-star cap exactly (both interpolated from shared constants),
+    * so engine parity holds at any corpus size and bucket skew — both
+    * engines see the identical candidate set and miss the identical
+    * far pairs.
+    */
   def mmDhashNeardup(spark: SparkSession, dir: String): DataFrame = {
     // Reading the session-memoized sketch means the render+decode
     // subtree runs zero times here (post-ingest query cost — the thing a

@@ -102,6 +102,9 @@ object Profiling {
         col("o_totalprice"), round(col("zscore"), 6).as("zscore"))
   }
 
+  /** Heavy-hitter sketch size, interpolated into the oracle (no drift). */
+  private[operators] val HeavyHitterK = 8
+
   /** DQ4 — exact heavy hitters via a two-pass sketch-then-verify: pass 1
     * is ONE scan computing the native Misra–Gries candidate sketch
     * ([[graft.plans.MisraGriesCandidates]]) and the exact row count in
@@ -122,9 +125,6 @@ object Profiling {
     * reach the result. The threshold compare is integer (`n·k > total`),
     * immune to division ulps.
     */
-  /** Heavy-hitter sketch size, interpolated into the oracle (no drift). */
-  private[operators] val HeavyHitterK = 8
-
   def dqHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     graft.plans.GraftFunctions.register(spark)
     val ev = t(spark, dir, "events")
@@ -346,6 +346,23 @@ object Profiling {
   private def rawKey(key: Seq[String]): org.apache.spark.sql.Column =
     if (key.size == 1) col(key.head) else struct(key.map(col): _*)
 
+  /** The (table, key columns) pairs every uniqueness audit checks, in
+    * union order (the oracles' `uniquenessCte` lists the same six). */
+  private val UniquenessTargets: Seq[(String, Seq[String])] = Seq(
+    "orders" -> Seq("o_orderkey"),
+    "customer" -> Seq("c_custkey"),
+    "lineitem" -> Seq("l_orderkey", "l_linenumber"),
+    "events" -> Seq("event_id"),
+    "documents" -> Seq("doc_id"),
+    "embeddings" -> Seq("vec_id"))
+
+  /** `audit` over every [[UniquenessTargets]] pair, unioned in order. */
+  private def uniquenessAudits(spark: SparkSession, dir: String)(
+      audit: (String, DataFrame, Seq[String]) => DataFrame): DataFrame =
+    UniquenessTargets
+      .map { case (table, key) => audit(table, t(spark, dir, table), key) }
+      .reduce(_ unionByName _)
+
   private[graft] def keyUniquenessAudit(table: String, df: DataFrame,
       key: Seq[String]): DataFrame = {
     // two-level aggregate, NOT count + countDistinct in one agg: mixing
@@ -373,21 +390,8 @@ object Profiling {
           .as("uniqueness"))
   }
 
-  def dqUniqueness(spark: SparkSession, dir: String): DataFrame = {
-    def audit(table: String, df: DataFrame, key: Seq[String]): DataFrame =
-      keyUniquenessAudit(table, df, key)
-    audit("orders", t(spark, dir, "orders"), Seq("o_orderkey"))
-      .unionByName(audit("customer", t(spark, dir, "customer"),
-        Seq("c_custkey")))
-      .unionByName(audit("lineitem", t(spark, dir, "lineitem"),
-        Seq("l_orderkey", "l_linenumber")))
-      .unionByName(audit("events", t(spark, dir, "events"),
-        Seq("event_id")))
-      .unionByName(audit("documents", t(spark, dir, "documents"),
-        Seq("doc_id")))
-      .unionByName(audit("embeddings", t(spark, dir, "embeddings"),
-        Seq("vec_id")))
-  }
+  def dqUniqueness(spark: SparkSession, dir: String): DataFrame =
+    uniquenessAudits(spark, dir)(keyUniquenessAudit)
 
   /** DQ9a — the 100 TB swap of [[dqUniqueness]], executable (r13 judge
     * #4): the production path estimates distinct keys with the one-pass
@@ -428,21 +432,8 @@ object Profiling {
           col("n_keys") <= 0.05).as("hll_ok"))
   }
 
-  def dqUniquenessApprox(spark: SparkSession, dir: String): DataFrame = {
-    def audit(table: String, df: DataFrame, key: Seq[String]): DataFrame =
-      keyUniquenessAuditApprox(table, df, key)
-    audit("orders", t(spark, dir, "orders"), Seq("o_orderkey"))
-      .unionByName(audit("customer", t(spark, dir, "customer"),
-        Seq("c_custkey")))
-      .unionByName(audit("lineitem", t(spark, dir, "lineitem"),
-        Seq("l_orderkey", "l_linenumber")))
-      .unionByName(audit("events", t(spark, dir, "events"),
-        Seq("event_id")))
-      .unionByName(audit("documents", t(spark, dir, "documents"),
-        Seq("doc_id")))
-      .unionByName(audit("embeddings", t(spark, dir, "embeddings"),
-        Seq("vec_id")))
-  }
+  def dqUniquenessApprox(spark: SparkSession, dir: String): DataFrame =
+    uniquenessAudits(spark, dir)(keyUniquenessAuditApprox)
 
   /** The PRODUCTION form of [[dqUniquenessApprox]] (r14 judge #2): the
     * sketch pass ALONE — no exact count-distinct side anywhere in the
@@ -469,21 +460,8 @@ object Profiling {
         round(col("n_keys_est").cast("double") / col("n_rows"), 6)
           .as("uniqueness_est"))
 
-  def dqUniquenessApproxProd(spark: SparkSession, dir: String): DataFrame = {
-    def audit(table: String, df: DataFrame, key: Seq[String]): DataFrame =
-      keyUniquenessAuditProd(table, df, key)
-    audit("orders", t(spark, dir, "orders"), Seq("o_orderkey"))
-      .unionByName(audit("customer", t(spark, dir, "customer"),
-        Seq("c_custkey")))
-      .unionByName(audit("lineitem", t(spark, dir, "lineitem"),
-        Seq("l_orderkey", "l_linenumber")))
-      .unionByName(audit("events", t(spark, dir, "events"),
-        Seq("event_id")))
-      .unionByName(audit("documents", t(spark, dir, "documents"),
-        Seq("doc_id")))
-      .unionByName(audit("embeddings", t(spark, dir, "embeddings"),
-        Seq("vec_id")))
-  }
+  def dqUniquenessApproxProd(spark: SparkSession, dir: String): DataFrame =
+    uniquenessAudits(spark, dir)(keyUniquenessAuditProd)
 
   /** Benford first-digit audit over the money column — the forensic DQ
     * check for FABRICATED or system-generated numeric data: organically
@@ -656,6 +634,39 @@ object Profiling {
         SELECT 'embeddings', 'vec_id', count(*),
           count(DISTINCT CAST(vec_id AS VARCHAR)) FROM embeddings)"""
 
+  /** One privacy-triad audit target: a quasi-identifier set over a table
+    * and the sensitive attribute audited against it. */
+  private final case class QiTarget(label: String, table: String,
+      qiNames: String, qi: Seq[Column], sensName: String, sens: Column)
+
+  /** The three targets [[dqKAnonymity]] (QI side only), [[dqLDiversity]]
+    * and [[dqTCloseness]] audit, in union order: customer coarse, the
+    * same QI refined by the thousand-unit balance bucket, and the
+    * corpus's release metadata. */
+  private val QiTargets: Seq[QiTarget] = Seq(
+    QiTarget("customer_coarse", "customer", "c_nationkey,c_mktsegment",
+      Seq(col("c_nationkey"), col("c_mktsegment")),
+      "acctbal_bucket_1k", floor(col("c_acctbal") / 1000)),
+    QiTarget("customer_fine", "customer",
+      "c_nationkey,c_mktsegment,acctbal_bucket_1k",
+      Seq(col("c_nationkey"), col("c_mktsegment"),
+        floor(col("c_acctbal") / 1000)),
+      "acctbal_bucket_100", floor(col("c_acctbal") / 100)),
+    QiTarget("documents", "documents", "lang,source",
+      Seq(col("lang"), col("source")),
+      "n_chars_bucket_100", floor(col("n_chars") / 100)))
+
+  /** `audit` over every [[QiTargets]] entry, each table read once,
+    * unioned in order and sorted by audit label. */
+  private def qiAudits(spark: SparkSession, dir: String)(
+      audit: (QiTarget, DataFrame) => DataFrame): DataFrame = {
+    val tables = QiTargets.map(_.table).distinct
+      .map(name => name -> t(spark, dir, name)).toMap
+    QiTargets.map(q => audit(q, tables(q.table)))
+      .reduce(_ unionByName _)
+      .orderBy(col("audit"))
+  }
+
   /** k threshold for [[dqKAnonymity]], shared with the oracle. k = 5 is
     * the conventional floor in the k-anonymity literature.
     */
@@ -681,30 +692,20 @@ object Profiling {
     * hash-exact.
     */
   def dqKAnonymity(spark: SparkSession, dir: String): DataFrame = {
-    def audit(label: String, df: DataFrame, qiNames: String,
-        qi: Seq[org.apache.spark.sql.Column]): DataFrame =
-      df.groupBy(qi: _*).agg(count(lit(1)).as("g"))
+    def audit(q: QiTarget, df: DataFrame): DataFrame =
+      df.groupBy(q.qi: _*).agg(count(lit(1)).as("g"))
         .agg(sum(col("g")).as("n_rows"), count(lit(1)).as("n_groups"),
           min(col("g")).as("min_group_size"),
           sum(when(col("g") < KAnonK, 1L).otherwise(0L))
             .as("violating_groups"),
           sum(when(col("g") < KAnonK, col("g")).otherwise(0L))
             .as("violating_rows"))
-        .select(lit(label).as("audit"), lit(qiNames).as("quasi_identifiers"),
-          lit(KAnonK).as("k"), col("n_rows"), col("n_groups"),
+        .select(lit(q.label).as("audit"),
+          lit(q.qiNames).as("quasi_identifiers"), lit(KAnonK).as("k"), col("n_rows"), col("n_groups"),
           col("min_group_size"), col("violating_groups"),
           col("violating_rows"),
           expr("(violating_rows * 1000000) div n_rows").as("risk_ppm"))
-    val cust = t(spark, dir, "customer")
-    audit("customer_coarse", cust, "c_nationkey,c_mktsegment",
-        Seq(col("c_nationkey"), col("c_mktsegment")))
-      .unionByName(audit("customer_fine", cust,
-        "c_nationkey,c_mktsegment,acctbal_bucket_1k",
-        Seq(col("c_nationkey"), col("c_mktsegment"),
-          floor(col("c_acctbal") / 1000))))
-      .unionByName(audit("documents", t(spark, dir, "documents"),
-        "lang,source", Seq(col("lang"), col("source"))))
-      .orderBy(col("audit"))
+    qiAudits(spark, dir)(audit)
   }
 
   /** l threshold for [[dqLDiversity]], shared with the oracle. l = 3 is
@@ -734,39 +735,27 @@ object Profiling {
     * integer outputs (ppm via `div`), oracle hash-exact.
     */
   def dqLDiversity(spark: SparkSession, dir: String): DataFrame = {
-    def audit(label: String, df: DataFrame, qiNames: String,
-        sensName: String, qi: Seq[Column], sens: Column): DataFrame =
+    def audit(q: QiTarget, df: DataFrame): DataFrame =
       // deliberately NOT the r16 two-level Expand rewrite: the sensitive
       // column is LOW-cardinality, so the distinct-rewrite's doubled rows
       // collapse map-side to the |QI|x|buckets| domain anyway, and the
       // two-level form's extra stage measured 1.33x slower at sf1
       // (0.42 vs 0.57 s same-session A/B) with ~flat growth per decade
-      df.groupBy(qi: _*).agg(count(lit(1)).as("g"),
-          countDistinct(sens).as("lv"))
+      df.groupBy(q.qi: _*).agg(count(lit(1)).as("g"),
+          countDistinct(q.sens).as("lv"))
         .agg(sum(col("g")).as("n_rows"), count(lit(1)).as("n_groups"),
           min(col("lv")).as("min_l"),
           sum(when(col("lv") < LDivL, 1L).otherwise(0L))
             .as("violating_groups"),
           sum(when(col("lv") < LDivL, col("g")).otherwise(0L))
             .as("violating_rows"))
-        .select(lit(label).as("audit"), lit(qiNames).as("quasi_identifiers"),
-          lit(sensName).as("sensitive"), lit(LDivL).as("l"), col("n_rows"),
+        .select(lit(q.label).as("audit"),
+          lit(q.qiNames).as("quasi_identifiers"),
+          lit(q.sensName).as("sensitive"), lit(LDivL).as("l"), col("n_rows"),
           col("n_groups"), col("min_l"), col("violating_groups"),
           col("violating_rows"),
           expr("(violating_rows * 1000000) div n_rows").as("risk_ppm"))
-    val cust = t(spark, dir, "customer")
-    audit("customer_coarse", cust, "c_nationkey,c_mktsegment",
-        "acctbal_bucket_1k", Seq(col("c_nationkey"), col("c_mktsegment")),
-        floor(col("c_acctbal") / 1000))
-      .unionByName(audit("customer_fine", cust,
-        "c_nationkey,c_mktsegment,acctbal_bucket_1k", "acctbal_bucket_100",
-        Seq(col("c_nationkey"), col("c_mktsegment"),
-          floor(col("c_acctbal") / 1000)),
-        floor(col("c_acctbal") / 100)))
-      .unionByName(audit("documents", t(spark, dir, "documents"),
-        "lang,source", "n_chars_bucket_100", Seq(col("lang"), col("source")),
-        floor(col("n_chars") / 100)))
-      .orderBy(col("audit"))
+    qiAudits(spark, dir)(audit)
   }
 
   /** t threshold (ppm) for [[dqTCloseness]], shared with the oracle.
@@ -803,17 +792,16 @@ object Profiling {
     * Every exchange carries aggregation-space tuples, never payload.
     */
   def dqTCloseness(spark: SparkSession, dir: String): DataFrame = {
-    def audit(label: String, base0: DataFrame, qiNames: String,
-        sensName: String, qi: Seq[Column], sens: Column): DataFrame = {
-      val base = base0.select(qi.zipWithIndex.map { case (c, i) =>
-        c.as(s"q$i") } :+ sens.as("b"): _*)
-      val qs = qi.indices.map(i => col(s"q$i"))
+    def audit(q: QiTarget, df: DataFrame): DataFrame = {
+      val base = df.select(q.qi.zipWithIndex.map { case (c, i) =>
+        c.as(s"q$i") } :+ q.sens.as("b"): _*)
+      val qs = q.qi.indices.map(i => col(s"q$i"))
       val gl = base.groupBy(col("b")).agg(count(lit(1)).as("cg"))
       val nm = gl.agg(sum(col("cg")).as("n"), count(lit(1)).as("m"))
       val grp = base.groupBy(qs: _*).agg(count(lit(1)).as("g"))
       val gb = base.groupBy(qs :+ col("b"): _*).agg(count(lit(1)).as("c"))
       val dom = grp.crossJoin(broadcast(gl))
-        .join(gb, qi.indices.map(i => s"q$i") :+ "b", "left")
+        .join(gb, q.qi.indices.map(i => s"q$i") :+ "b", "left")
         .na.fill(0L, Seq("c"))
         .crossJoin(broadcast(nm))
       val w = Window.partitionBy(qs: _*).orderBy(col("b"))
@@ -838,25 +826,14 @@ object Profiling {
             .as("violating_groups"),
           sum(when(col("emd_ppm") > TCloseTPpm, col("g")).otherwise(0L))
             .as("violating_rows"))
-        .select(lit(label).as("audit"), lit(qiNames).as("quasi_identifiers"),
-          lit(sensName).as("sensitive"), lit(TCloseTPpm).as("t_ppm"),
+        .select(lit(q.label).as("audit"),
+          lit(q.qiNames).as("quasi_identifiers"),
+          lit(q.sensName).as("sensitive"), lit(TCloseTPpm).as("t_ppm"),
           col("n_rows"), col("n_groups"), col("min_emd_ppm"),
           col("max_emd_ppm"), col("violating_groups"), col("violating_rows"),
           expr("(violating_rows * 1000000) div n_rows").as("risk_ppm"))
     }
-    val cust = t(spark, dir, "customer")
-    audit("customer_coarse", cust, "c_nationkey,c_mktsegment",
-        "acctbal_bucket_1k", Seq(col("c_nationkey"), col("c_mktsegment")),
-        floor(col("c_acctbal") / 1000))
-      .unionByName(audit("customer_fine", cust,
-        "c_nationkey,c_mktsegment,acctbal_bucket_1k", "acctbal_bucket_100",
-        Seq(col("c_nationkey"), col("c_mktsegment"),
-          floor(col("c_acctbal") / 1000)),
-        floor(col("c_acctbal") / 100)))
-      .unionByName(audit("documents", t(spark, dir, "documents"),
-        "lang,source", "n_chars_bucket_100", Seq(col("lang"), col("source")),
-        floor(col("n_chars") / 100)))
-      .orderBy(col("audit"))
+    qiAudits(spark, dir)(audit)
   }
 
   /** K-ANONYMIZATION release ladder — the ENFORCEMENT counterpart of the

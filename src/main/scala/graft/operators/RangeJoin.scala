@@ -50,6 +50,29 @@ object RangeJoin {
       .select(col("o_orderkey"), col("o_totalprice"), col("tier"))
   }
 
+  /** J9's bucket width, DERIVED FROM THE DATA (r9 judge #6): the p99
+    * session duration, floored at one minute. Rationale: per-session
+    * fan-out is duration/W + 1, and the within-bucket pair count is the
+    * quadratic-ish term at high concurrency — W ≈ p99 duration keeps
+    * fan-out ≤ ~2 for 99% of sessions (bounded explode) while making
+    * buckets as NARROW as that allows (bounded per-bucket membership).
+    * A fixed 1-hour constant is wrong in both directions at 100×: a
+    * corpus of minute-long sessions packs thousands of sessions per
+    * hour-bucket (pair blowup), a corpus of day-long ones explodes 24
+    * buckets per row. One tiny agg over the already-materialized session
+    * frame, collected as a plan literal (broadcast-equivalent).
+    *
+    * Correctness is W-INVARIANT: the first-shared-bucket guard emits
+    * each overlapping pair exactly once for ANY width, so this knob
+    * moves performance only (Round8Spec pins equality with the
+    * bucket-free brute force; J9WidthSpec pins the width policy).
+    */
+  private[operators] def j9BucketWidthMicros(sess: DataFrame): Long = {
+    val MinW = 60L * 1000000L // 1-minute floor (all-point-session corpora)
+    val r = sess.agg(expr("percentile(en - st, 0.99)").cast("long")).head()
+    if (r.isNullAt(0)) MinW else math.max(r.getLong(0), MinW)
+  }
+
   /** J9 — INTERVAL-OVERLAP self-join: which user sessions were live at
     * the same time (concurrency analysis — ad-slot collision, capacity
     * sizing, co-presence). Distinct from [[j4RangeJoin]]'s point-in-band
@@ -75,29 +98,6 @@ object RangeJoin {
     * twice; on a cluster the same role is played by reliable
     * checkpointing or a staging write.
     */
-  /** J9's bucket width, DERIVED FROM THE DATA (r9 judge #6): the p99
-    * session duration, floored at one minute. Rationale: per-session
-    * fan-out is duration/W + 1, and the within-bucket pair count is the
-    * quadratic-ish term at high concurrency — W ≈ p99 duration keeps
-    * fan-out ≤ ~2 for 99% of sessions (bounded explode) while making
-    * buckets as NARROW as that allows (bounded per-bucket membership).
-    * A fixed 1-hour constant is wrong in both directions at 100×: a
-    * corpus of minute-long sessions packs thousands of sessions per
-    * hour-bucket (pair blowup), a corpus of day-long ones explodes 24
-    * buckets per row. One tiny agg over the already-materialized session
-    * frame, collected as a plan literal (broadcast-equivalent).
-    *
-    * Correctness is W-INVARIANT: the first-shared-bucket guard emits
-    * each overlapping pair exactly once for ANY width, so this knob
-    * moves performance only (Round8Spec pins equality with the
-    * bucket-free brute force; J9WidthSpec pins the width policy).
-    */
-  private[operators] def j9BucketWidthMicros(sess: DataFrame): Long = {
-    val MinW = 60L * 1000000L // 1-minute floor (all-point-session corpora)
-    val r = sess.agg(expr("percentile(en - st, 0.99)").cast("long")).head()
-    if (r.isNullAt(0)) MinW else math.max(r.getLong(0), MinW)
-  }
-
   def j9IntervalOverlap(spark: SparkSession, dir: String): DataFrame = {
     val sess = graft.streaming.EventConsumer.batchSessionize(spark, dir)
       .select(col("user_id"), col("session_id"),

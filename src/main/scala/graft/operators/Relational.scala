@@ -196,24 +196,6 @@ object Relational {
       .select(col("c_custkey"), col("c_nationkey"))
   }
 
-  /** Dense global row_number over an arbitrary base relation WITHOUT a
-    * single-partition window (`Window.orderBy` with no partitionBy funnels
-    * the whole table through one task — the classic non-scalable rank).
-    *
-    * Two-phase rank: (1) bucket rows by driver-estimated quantile
-    * boundaries of the leading sort column — the boundaries become plan
-    * LITERALS, so every subtree sees the same assignment and the result
-    * is deterministic regardless of how the estimate sampled; rows tied
-    * on the leading column share a bucket, so bucket order composes with
-    * the full tiebreak ordering. (2) row_number within each bucket (the
-    * window is partitioned — parallel), then add broadcast per-bucket
-    * offsets (a prefix sum over ≤32 bucket rows). Costs one extra
-    * column-pruned pass for the quantile estimate and one for the counts;
-    * no stage ever holds more than ~1/buckets of the data.
-    *
-    * Requires a non-null numeric leading column. Degenerates to a single
-    * bucket (the old global window) only if the column is constant.
-    */
   /** Range-bucket assignment for the two-phase rank: approxQuantile cut
     * points on the leading sort column → a `__bk` column ordered the same
     * way as the final sort (bucket 0 holds the first rows). Factored out so
@@ -232,6 +214,24 @@ object Relational {
     }
   }
 
+  /** Dense global row_number over an arbitrary base relation WITHOUT a
+    * single-partition window (`Window.orderBy` with no partitionBy funnels
+    * the whole table through one task — the classic non-scalable rank).
+    *
+    * Two-phase rank: (1) bucket rows by driver-estimated quantile
+    * boundaries of the leading sort column — the boundaries become plan
+    * LITERALS, so every subtree sees the same assignment and the result
+    * is deterministic regardless of how the estimate sampled; rows tied
+    * on the leading column share a bucket, so bucket order composes with
+    * the full tiebreak ordering. (2) row_number within each bucket (the
+    * window is partitioned — parallel), then add broadcast per-bucket
+    * offsets (a prefix sum over ≤32 bucket rows). Costs one extra
+    * column-pruned pass for the quantile estimate and one for the counts;
+    * no stage ever holds more than ~1/buckets of the data.
+    *
+    * Requires a non-null numeric leading column. Degenerates to a single
+    * bucket (the old global window) only if the column is constant.
+    */
   private[operators] def scalableRowNumber(df: DataFrame, leading: String,
       descending: Boolean, sortCols: Seq[Column], outCol: String): DataFrame = {
     val bucketed = bucketAssign(df, leading, descending, 32)
@@ -1320,6 +1320,9 @@ object Relational {
       .orderBy(col("custdist").desc, col("c_count").desc)
   }
 
+  /** Q10 threshold, interpolated into the oracle so the pair can't drift. */
+  private[operators] val LargeOrderMinQty = 250.0
+
   /** Q10 — the TPC-H Q18 "large volume customer" shape: orders whose
     * lineitems total more than [[LargeOrderMinQty]] units, with their
     * customer.
@@ -1332,9 +1335,6 @@ object Relational {
     * integer-valued doubles, so the sum is exact in any partial-agg
     * order (no centSum needed).
     */
-  /** Q10 threshold, interpolated into the oracle so the pair can't drift. */
-  private[operators] val LargeOrderMinQty = 250.0
-
   def q10LargeOrders(spark: SparkSession, dir: String): DataFrame = {
     val big = t(spark, dir, "lineitem")
       .groupBy(col("l_orderkey"))

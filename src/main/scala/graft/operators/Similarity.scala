@@ -197,24 +197,6 @@ object Similarity {
         col("cos_sim"))
   }
 
-  /** IVF-FLAT ANN — the inverted-file scale path next to sign-LSH. The
-    * coarse quantizer here is SEEDED (centroids = the 16 vectors with
-    * vec_id < 16) so the whole structure is deterministic and
-    * oracle-checkable; production would train it with k-means over
-    * CentroidAggregator — quantizer quality moves RECALL, never
-    * correctness of the in-list search.
-    *
-    * Scale shape: the codebook is collected once (16 rows — the same
-    * driver hop a broadcast does) and burned into plan literals, so LIST
-    * ASSIGNMENT IS MAP-SIDE (one HOF expression per row, argmax over 16
-    * rounded cosines, zero shuffle — this is the step that touches all
-    * N vectors). Queries probe their top-4 centroid lists; the probe
-    * relation (queries × 4) broadcasts into an equi-join against the
-    * assigned corpus, and only in-list candidates are scored exactly.
-    * Cosines are rounded to 6 dp BEFORE every argmax/rank so the discrete
-    * choices (list membership, probe set) cannot flip on engine ulp
-    * differences.
-    */
   /** Driver-held coarse codebook: (cid, centroid as doubles, L2 norm) —
     * tens of rows, burned into plan literals (broadcast-equivalent).
     */
@@ -286,12 +268,6 @@ object Similarity {
     radii.write.mode("overwrite").parquet(s"$path/radii")
   }
 
-  /** LOAD a persisted IVF index and install it as `dir`'s session index:
-    * every ANN/semantic-prune/kNN query then reads the restored artifact
-    * — provably identical results to the freshly-built index (spec-
-    * pinned), with zero corpus passes. The restart story the memoized
-    * in-session cache alone cannot give.
-    */
   /** The persisted codebook — a bounded collect (≤ [[MaxIvfK]] rows by
     * the build-side cap), never a corpus read.
     */
@@ -303,6 +279,12 @@ object Similarity {
         r.getAs[Double]("cnorm")))
       .sortBy(_._1).toSeq
 
+  /** LOAD a persisted IVF index and install it as `dir`'s session index:
+    * every ANN/semantic-prune/kNN query then reads the restored artifact
+    * — provably identical results to the freshly-built index (spec-
+    * pinned), with zero corpus passes. The restart story the memoized
+    * in-session cache alone cannot give.
+    */
   def loadIvfIndex(spark: SparkSession, dir: String, path: String): Unit = {
     SessionArtifacts.install(spark, dir, IvfKind) {
       val assigned = spark.read.parquet(s"$path/assigned")
@@ -431,7 +413,8 @@ object Similarity {
   }
 
   /** The list-assignment kernel shared by the index build, the persisted
-    * backfill, and incremental batch admission: cid = argmax of ROUNDED
+    * backfill, incremental batch admission, and the k-means rounds and
+    * search of [[simIvfKmeansAnn]]: cid = argmax of ROUNDED
     * cosine (ties to the lowest cid, the family's discrete-choice
     * convention); ccos = UNROUNDED cosine to the chosen centroid (the
     * bounds need full precision). Map-side only — k cosines per row
@@ -472,16 +455,6 @@ object Similarity {
       (sorted, assigned, radii)
     }(freeIvf)
 
-  /** The IVF search stage over a given codebook: map-side list assignment
-    * (argmax of rounded cosine, ties to the lowest cid), 4-list probing
-    * for queries vec_id < 10, exact rerank within probed lists. Rounding
-    * BEFORE every argmax/rank keeps discrete choices stable across
-    * engines. Shared by the seeded and k-means-trained variants.
-    */
-  /** Coarse IVF stage shared by the exact-rerank and PQ-rerank variants:
-    * map-side list assignment (argmax of rounded cosine, ties to the
-    * lowest cid) plus the 4-probe set for queries vec_id < 10.
-    */
   /** The 4-nearest-centroid probe relation for queries vec_id < 10 —
     * rounded cos desc, cid asc, computed map-side on the (tiny) query
     * side only. `assigned` may be the session-memoized index or a
@@ -503,25 +476,6 @@ object Similarity {
         s => element_at(cIds, s.getField("p") + 1))))
       .select(col("vec_id").as("qid"), col("embedding").as("q_emb"),
         col("nrm").as("q_nrm"), col("probe"))
-  }
-
-  private def ivfAssign(emb: DataFrame, code: Codebook)
-      : (DataFrame, DataFrame) = {
-    val sorted = code.sortBy(_._1)
-    val cIds = typedLit(sorted.map(_._1))
-    val dists = transform(udistsOf(sorted)(col("embedding"), col("nrm")),
-      d => round(d, 6))
-    val assigned = emb
-      .withColumn("dists", dists)
-      .withColumn("cid", element_at(cIds,
-        array_position(col("dists"), array_max(col("dists"))).cast("int")))
-      .drop("dists")
-    (assigned, ivfProbes(assigned, code))
-  }
-
-  private def ivfSearch(emb: DataFrame, code: Codebook): DataFrame = {
-    val (assigned, probes) = ivfAssign(emb, code)
-    ivfSearchFrom(assigned, probes)
   }
 
   /** Exact in-list rerank over an already-assigned corpus. */
@@ -548,28 +502,53 @@ object Similarity {
         r.getAs[Double]("nrm")))
       .toSeq
 
+  /** IVF-FLAT ANN — the inverted-file scale path next to sign-LSH. The
+    * coarse quantizer here is SEEDED (centroids = the 16 vectors with
+    * vec_id < 16) so the whole structure is deterministic and
+    * oracle-checkable; [[simIvfKmeansAnn]] trains it with k-means over
+    * CentroidAggregator — quantizer quality moves RECALL, never
+    * correctness of the in-list search.
+    *
+    * Scale shape: the codebook is collected once (16 rows — the same
+    * driver hop a broadcast does) and burned into plan literals, so LIST
+    * ASSIGNMENT IS MAP-SIDE (one HOF expression per row, argmax over 16
+    * rounded cosines, zero shuffle — this is the step that touches all
+    * N vectors). Queries probe their top-4 centroid lists; the probe
+    * relation (queries × 4) broadcasts into an equi-join against the
+    * assigned corpus, and only in-list candidates are scored exactly.
+    * Cosines are rounded to 6 dp BEFORE every argmax/rank so the discrete
+    * choices (list membership, probe set) cannot flip on engine ulp
+    * differences.
+    */
   def simIvfAnn(spark: SparkSession, dir: String): DataFrame = {
     val (code, assigned, _) = ivfIndex(spark, dir)
     ivfSearchFrom(assigned, ivfProbes(assigned, code))
   }
 
   /** IVF with a k-means-TRAINED codebook: `iters` Lloyd rounds from the
-    * seeded init. Per round, one distributed pass assigns every vector to
-    * its nearest centroid (map-side against plan literals, same as search)
-    * and per-dimension means stream back as k×dim tiny rows — the only
-    * driver traffic is the codebook itself, exactly like production IVF
-    * training where the coarse quantizer is small by construction. Means
-    * are rounded to 6 decimals so the trained codebook (and therefore
-    * every downstream discrete choice) is bit-reproducible across engines
-    * and partitionings; empty lists drop out, matching the oracle's
-    * GROUP BY. Cosine k-means (argmax of rounded cos) with plain
-    * coordinate means — the standard spherical-ish simplification.
+    * seeded init. Each round is one k-row aggregate: [[assignSeeded]]
+    * (the index's own map-side list assignment) feeds a `groupBy(cid)`
+    * whose [[CentroidAggregator]] partial-aggregates one dim-sized
+    * double buffer per (partition, list), and the k means come back to
+    * the driver — the only driver traffic is the codebook itself, exactly
+    * like production IVF training where the coarse quantizer is small by
+    * construction. Means are rounded to 6 decimals (HALF_UP) so the
+    * trained codebook (and therefore every downstream discrete choice) is
+    * bit-reproducible across engines and partitionings; empty lists drop
+    * out, matching the oracle's GROUP BY. Cosine k-means (argmax of
+    * rounded cos) with plain coordinate means — the standard
+    * spherical-ish simplification. The trained codebook then drives the
+    * same probe and exact in-list rerank as [[simIvfAnn]].
     *
-    * Scaling: each round collects k×dim mean rows to the driver — the
-    * codebook itself, not the corpus. At dim≈1536 doubles that shape
-    * holds to k≈64k (~100 MB/round), the realistic ceiling for an IVF
-    * coarse quantizer; beyond that the codebook should be trained
-    * hierarchically instead, so `k` is capped with a descriptive error.
+    * A round stays a small planned aggregate rather than a Scala
+    * `treeAggregate`: the latter would need a second, hand-written
+    * assignment kernel next to the index's Catalyst one.
+    *
+    * Scaling: each round collects k rows of dim doubles — the codebook,
+    * not the corpus. At dim≈1536 that holds to k≈64k (~100 MB/round),
+    * the realistic ceiling for an IVF coarse quantizer; beyond that the
+    * codebook should be trained hierarchically instead, so `k` is capped
+    * with a descriptive error.
     */
   val MaxIvfK: Int = 65536
 
@@ -577,34 +556,26 @@ object Similarity {
       iters: Int = 2): DataFrame = {
     val emb = withNorm(t(spark, dir, "embeddings"))
     var code = seededCodebook(emb)
+    val centroid =
+      CentroidAggregator.centroid(code.headOption.fold(0)(_._2.length))
     for (_ <- 1 to iters) {
       require(code.length <= MaxIvfK,
         s"IVF codebook size ${code.length} exceeds $MaxIvfK: driver-side " +
           "per-round means no longer fit the coarse-quantizer budget; " +
           "train hierarchically (coarse book over sub-books) instead")
-      val sorted = code.sortBy(_._1)
-      val cVecs = typedLit(sorted.map(_._2))
-      val cNrms = typedLit(sorted.map(_._3))
-      val cIds = typedLit(sorted.map(_._1))
-      val k = sorted.length
-      val dists = transform(sequence(lit(0), lit(k - 1)), p =>
-        round(
-          call_function("graft_dot_fd",
-            col("embedding"), element_at(cVecs, p + 1)) /
-            (col("nrm") * element_at(cNrms, p + 1)), 6))
-      val means = emb
-        .withColumn("cid", element_at(cIds,
-          array_position(dists, array_max(dists)).cast("int")))
-        .select(col("cid"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(round(avg(col("x").cast("double")), 6).as("m"))
+      code = assignSeeded(emb, code)
+        .groupBy(col("cid"))
+        .agg(transform(centroid(col("embedding")), m => round(m, 6)).as("m"))
         .collect()
-      code = means.groupBy(_.getAs[Long]("cid")).map { case (cid, rows) =>
-        val vec = rows.sortBy(_.getAs[Int]("pos")).map(_.getAs[Double]("m")).toSeq
-        (cid, vec, math.sqrt(vec.foldLeft(0.0)((a, x) => a + x * x)))
-      }.toSeq
+        .map { r =>
+          val vec = r.getSeq[Double](1).toVector
+          (r.getLong(0), vec: Seq[Double],
+            math.sqrt(vec.foldLeft(0.0)((a, x) => a + x * x)))
+        }
+        .sortBy(_._1).toSeq
     }
-    ivfSearch(emb, code)
+    val assigned = assignSeeded(emb, code)
+    ivfSearchFrom(assigned, ivfProbes(assigned, code))
   }
 
   /** Tau for [[simSemanticPrune]] — aligned with Dedup's embedding-cosine
@@ -695,55 +666,6 @@ object Similarity {
       .select(col("label"), col("dim"), round(col("v"), 6).as("val"))
   }
 
-  /** ANN QUALITY EVAL — recall@k of the LSH index against the exact
-    * brute-force answer, per query. The metric every ANN deployment
-    * monitors before trusting an index: recall = |approx top-k ∩ exact
-    * top-k| / k. At evaluation scale the exact side runs over a SAMPLE of
-    * queries (here: the same 10-query panel both operators already use),
-    * so the brute-force cost is bounded while the index serves the full
-    * corpus. One broadcast-sized join of two k×queries frames — the eval
-    * is free next to either search.
-    */
-  /** k-NN label evaluation — the standard embedding-quality probe a
-    * training-data pipeline runs before trusting vectors for retrieval
-    * or clustering: classify each query vector by MAJORITY VOTE of its
-    * k nearest neighbors' labels and report per-label accuracy. A label
-    * whose accuracy is near 1/|labels| has embeddings no better than
-    * chance for that class.
-    *
-    * The query set is a fixed deterministic panel (`vec_id % 20 == 0 AND
-    * vec_id < KnnEvalPanelCap` — ≤100 queries at any corpus size); eval
-    * protocols pin their query set, and a panel that grew with the
-    * corpus would re-quadratify the eval (see [[KnnEvalPanelCap]]). The
-    * corpus side is the full table. Vote ties break to the smallest
-    * label (deterministic in both engines); accuracy is one small-int
-    * division rounded at emit.
-    *
-    * CANDIDATE GENERATION is the IVF index with EXACT BOUNDED PROBING —
-    * never a query×corpus cross join. Two static passes over the
-    * cid-assigned corpus (the same map-side assignment [[simIvfAnn]]
-    * burns into plan literals):
-    *
-    *  1. score the query exactly against its 4 nearest lists (equi-join
-    *     on cid) and take τ_q = the current k-th best cosine;
-    *  2. probe ONLY the remaining lists whose best-achievable cosine
-    *     beats τ_q. The bound is the triangle inequality on angles: for
-    *     any member x of list i, angle(q,x) ≥ angle(q,c_i) − r_i where
-    *     r_i = max member angle to c_i (one 16-row agg), so
-    *     cos(q,x) ≤ cos(max(0, angle(q,c_i) − r_i)). A list whose bound
-    *     is below τ_q provably cannot change the top-k.
-    *
-    * The result is EXACT — identical to brute force on ANY corpus, which
-    * is why the DuckDB brute-force oracle stays valid (KnnExactSpec
-    * asserts equality against an in-engine brute twin; bounds use
-    * unrounded cosines with 1e-9 slack so ties are never pruned). On
-    * clustered production corpora pass 2 touches few lists; on this
-    * corpus (random unit vectors — worst case) it degenerates toward
-    * scoring most lists, but always through cid equi-joins with the
-    * TopKPerKey cap, never O(q×N) pairs in one stage. Cost: three linear
-    * map-side scans (assign ×2, radii) + two hash joins.
-    */
-
   /** The eval panel is the FIXED stratum `vec_id % 20 == 0 AND
     * vec_id < KnnEvalPanelCap` — 1-in-20 of the first 2000 ids, i.e. at
     * most 100 queries at ANY corpus size. "Eval protocols pin their
@@ -813,6 +735,45 @@ object Similarity {
     s1.unionByName(s2)
   }
 
+  /** k-NN label evaluation — the standard embedding-quality probe a
+    * training-data pipeline runs before trusting vectors for retrieval
+    * or clustering: classify each query vector by MAJORITY VOTE of its
+    * k nearest neighbors' labels and report per-label accuracy. A label
+    * whose accuracy is near 1/|labels| has embeddings no better than
+    * chance for that class.
+    *
+    * The query set is a fixed deterministic panel (`vec_id % 20 == 0 AND
+    * vec_id < KnnEvalPanelCap` — ≤100 queries at any corpus size); eval
+    * protocols pin their query set, and a panel that grew with the
+    * corpus would re-quadratify the eval (see [[KnnEvalPanelCap]]). The
+    * corpus side is the full table. Vote ties break to the smallest
+    * label (deterministic in both engines); accuracy is one small-int
+    * division rounded at emit.
+    *
+    * CANDIDATE GENERATION is the IVF index with EXACT BOUNDED PROBING —
+    * never a query×corpus cross join. Two static passes over the
+    * cid-assigned corpus (the same map-side assignment [[simIvfAnn]]
+    * burns into plan literals):
+    *
+    *  1. score the query exactly against its 4 nearest lists (equi-join
+    *     on cid) and take τ_q = the current k-th best cosine;
+    *  2. probe ONLY the remaining lists whose best-achievable cosine
+    *     beats τ_q. The bound is the triangle inequality on angles: for
+    *     any member x of list i, angle(q,x) ≥ angle(q,c_i) − r_i where
+    *     r_i = max member angle to c_i (one 16-row agg), so
+    *     cos(q,x) ≤ cos(max(0, angle(q,c_i) − r_i)). A list whose bound
+    *     is below τ_q provably cannot change the top-k.
+    *
+    * The result is EXACT — identical to brute force on ANY corpus, which
+    * is why the DuckDB brute-force oracle stays valid (KnnExactSpec
+    * asserts equality against an in-engine brute twin; bounds use
+    * unrounded cosines with 1e-9 slack so ties are never pruned). On
+    * clustered production corpora pass 2 touches few lists; on this
+    * corpus (random unit vectors — worst case) it degenerates toward
+    * scoring most lists, but always through cid equi-joins with the
+    * TopKPerKey cap, never O(q×N) pairs in one stage. Cost: three linear
+    * map-side scans (assign ×2, radii) + two hash joins.
+    */
   def simKnnLabelEval(spark: SparkSession, dir: String): DataFrame = {
     val scored = knnExactScored(spark, dir, AnnK)
     val votes = rankTopK(scored, "cos", desc = true)
@@ -833,6 +794,15 @@ object Similarity {
       .orderBy(col("label").asc)
   }
 
+  /** ANN QUALITY EVAL — recall@k of the LSH index against the exact
+    * brute-force answer, per query. The metric every ANN deployment
+    * monitors before trusting an index: recall = |approx top-k ∩ exact
+    * top-k| / k. At evaluation scale the exact side runs over a SAMPLE of
+    * queries (here: the same 10-query panel both operators already use),
+    * so the brute-force cost is bounded while the index serves the full
+    * corpus. One broadcast-sized join of two k×queries frames — the eval
+    * is free next to either search.
+    */
   def simRecallAtK(spark: SparkSession, dir: String): DataFrame = {
     val bf = simTopkBruteforce(spark, dir).select(col("qid"), col("vec_id"))
     val approx = simLshAnn(spark, dir)
@@ -861,89 +831,86 @@ object Similarity {
     * the eigenvalue estimate and its explained-variance share measured
     * alongside.
     *
-    * Scale shape — the MapReduce power-method standard: each round is
-    * ONE pass over the corpus (a per-row fold for s = x̃·v, then 64
-    * partial-aggregated per-dimension sums — the shuffle carries 64 rows
-    * per partition, never data); the driver holds only the 64-value
-    * iterate between rounds (the k-means codebook convention). Mean and
-    * variance passes are the same shape. Total: k+2 corpus passes,
-    * driver state O(dims).
+    * Scale shape — the MapReduce power-method standard: the corpus is
+    * read once into a persisted RDD of float arrays, and every pass over
+    * it — the mean pass, the second-moment pass and each power round — is
+    * ONE `treeAggregate` of a 65-slot `Long` array (slots 0..63 the
+    * per-dimension micro-unit sums, slot 64 the row count, so no separate
+    * count job), with the current iterate in the closure: no per-round
+    * DataFrame, no per-round Catalyst, no shuffle of rows (the classifier
+    * loop's pattern). The driver holds only the 64-value iterate between
+    * rounds. Total: k+2 passes over the cached rows, driver state
+    * O(dims).
     *
     * Cross-engine determinism: per-row dot products are ordered folds
     * (identical IEEE sequences both engines); every cross-ROW sum is
-    * rounded to integer micro-units per row first and summed as exact
-    * longs, so partition order cannot perturb any iterate; the driver
+    * rounded to integer micro-units per row first (Spark's HALF_UP
+    * `round`, [[PairGraph.roundHalfUp]]) and summed as exact longs, so
+    * partition order cannot perturb any iterate; the driver
     * normalization walks dimensions in ascending order exactly like the
     * oracle's list folds.
     */
   def simPcaPower(spark: SparkSession, dir: String,
       iters: Int = PcaIters): DataFrame = {
-    val emb = t(spark, dir, "embeddings")
-    val n = emb.count()
-    require(n > 0, "simPcaPower: empty corpus")
     val dims = 64
-    def collectByDim(df: DataFrame): Array[Long] = {
-      val m = df.collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      Array.tabulate(dims)(m(_))
-    }
-    // pass 1: exact per-dim micro means
-    val muU = collectByDim(emb
-      .select(posexplode(col("embedding")))
-      .select(col("pos").cast("int").as("d"),
-        round(col("col").cast("double") * 1e6).cast("long").as("xu"))
-      .groupBy(col("d")).agg(sum(col("xu")).as("su"))
-      .select(col("d"), round(col("su").cast("double") / n).cast("long")))
-    val mu = muU.map(_ / 1e6)
-    val muL = typedLit(mu.toSeq)
-    // pass 2: exact per-dim micro second moments (for the trace)
-    val s2U = collectByDim(emb
-      .select(posexplode(col("embedding")))
-      .select(col("pos").cast("int").as("d"),
-        col("col").cast("double").as("x"))
-      .withColumn("cu", round((col("x") - element_at(muL, col("d") + 1)) *
-        (col("x") - element_at(muL, col("d") + 1)) * 1e6).cast("long"))
-      .groupBy(col("d")).agg(sum(col("cu")).as("su"))
-      .select(col("d"), col("su")))
-    var traceMicro = 0L
-    s2U.foreach(traceMicro += _)
-    val trace = traceMicro / 1e6 / n
-    // power rounds: each is one corpus pass + a 64-long driver fold
-    var v = Array.fill(dims)(1.0)
-    var lambda = 0.0
-    for (_ <- 1 to iters) {
-      val vL = typedLit(v.toSeq)
-      val s = aggregate(sequence(lit(0), lit(dims - 1)), lit(0.0),
-        (acc, d) => acc +
-          (element_at(col("embedding"), d + 1).cast("double") -
-            element_at(muL, d + 1)) * element_at(vL, d + 1))
-      val wU = collectByDim(emb
-        .withColumn("s", s)
-        .select(posexplode(col("embedding")), col("s"))
-        .select(col("pos").cast("int").as("d"),
-          round((col("col").cast("double") -
-            element_at(muL, col("pos").cast("int") + 1)) * col("s") * 1e6)
-            .cast("long").as("cu"))
-        .groupBy(col("d")).agg(sum(col("cu")).as("su"))
-        .select(col("d"), col("su")))
-      // ascending-dim sequential fold — the oracle's list_sum order
-      val u = wU.map(_ / 1e6)
-      var nrm2 = 0.0
-      var d = 0
-      while (d < dims) { nrm2 += u(d) * u(d); d += 1 }
-      val nrm = math.sqrt(nrm2)
-      v = u.map(_ / nrm)
-      lambda = nrm / n
-    }
-    import spark.implicits._
-    val rows = (0 until dims).map { d =>
-      (d, mu(d), v(d), lambda, lambda / trace)
-    }
-    rows.toDF("dim", "mu_raw", "loading_raw", "lambda_raw", "share_raw")
-      .select(col("dim"),
-        round(col("mu_raw"), 6).as("mu"),
-        round(col("loading_raw"), 6).as("loading"),
-        round(col("lambda_raw"), 6).as("lambda"),
-        round(col("share_raw"), 6).as("explained_share"))
+    val vecs = t(spark, dir, "embeddings").select(col("embedding")).rdd
+      .map(_.getSeq[Float](0).toArray)
+      .persist()
+    // one pass: slot d sums the row's term(d) in micro-units, slot 64
+    // counts rows
+    def pass(term: Array[Float] => Int => Double): Array[Long] =
+      vecs.treeAggregate(new Array[Long](dims + 1))(
+        (acc, x) => {
+          val f = term(x)
+          var d = 0
+          while (d < dims) {
+            acc(d) += PairGraph.roundHalfUp(f(d) * 1e6, 0).toLong
+            d += 1
+          }
+          acc(dims) += 1
+          acc
+        },
+        (a, b) => { for (i <- a.indices) a(i) += b(i); a })
+    try {
+      // pass 1: exact per-dim micro means
+      val sumU = pass(x => d => x(d).toDouble)
+      val n = sumU(dims)
+      require(n > 0, "simPcaPower: empty corpus")
+      val mu = Array.tabulate(dims)(d =>
+        PairGraph.roundHalfUp(sumU(d).toDouble / n, 0).toLong / 1e6)
+      // pass 2: exact per-dim micro second moments (for the trace)
+      val s2U = pass(x => d => (x(d) - mu(d)) * (x(d) - mu(d)))
+      val trace = s2U.take(dims).sum / 1e6 / n
+      // power rounds: each is one pass + a 64-long driver fold
+      var v = Array.fill(dims)(1.0)
+      var lambda = 0.0
+      for (_ <- 1 to iters) {
+        val vr = v
+        val wU = pass { x =>
+          val s = (0 until dims)
+            .foldLeft(0.0)((acc, d) => acc + (x(d) - mu(d)) * vr(d))
+          d => (x(d) - mu(d)) * s
+        }
+        // ascending-dim sequential fold — the oracle's list_sum order
+        val u = wU.take(dims).map(_ / 1e6)
+        var nrm2 = 0.0
+        var d = 0
+        while (d < dims) { nrm2 += u(d) * u(d); d += 1 }
+        val nrm = math.sqrt(nrm2)
+        v = u.map(_ / nrm)
+        lambda = nrm / n
+      }
+      import spark.implicits._
+      val rows = (0 until dims).map { d =>
+        (d, mu(d), v(d), lambda, lambda / trace)
+      }
+      rows.toDF("dim", "mu_raw", "loading_raw", "lambda_raw", "share_raw")
+        .select(col("dim"),
+          round(col("mu_raw"), 6).as("mu"),
+          round(col("loading_raw"), 6).as("loading"),
+          round(col("lambda_raw"), 6).as("lambda"),
+          round(col("share_raw"), 6).as("explained_share"))
+    } finally vecs.unpersist()
   }
 
   /** Recall@5 of the COMPOSED IVF-PQ pipeline against the brute-force
@@ -1064,25 +1031,11 @@ object Similarity {
              CAST(0 AS DOUBLE), (a, v) -> a + v)""") /
           size(col("embedding")).cast("double")), 6).as("dq_err"))
 
-  /** Product-quantization ANN (PQ/ADC, the industrial workhorse behind
-    * FAISS-style billion-vector indexes): vectors split into 8 subspaces
-    * of 8 dims; each subspace encodes to its nearest of 16 seeded
-    * sub-centroids (codes: 8 small ints — a 32× compression of the
-    * 64-float vector); queries score candidates by ASYMMETRIC DISTANCE —
-    * a per-query 8×16 lookup table of exact subspace distances, summed by
-    * code index, never touching the original corpus floats.
-    *
-    * Scale shape: the codebook is plan literals (seeded, like
-    * [[simIvfAnn]]; [[simIvfKmeansAnn]] shows how training would refine
-    * it); encoding is map-side; the scored scan reads only (vec_id,
-    * codes) rows with the tiny query tables broadcast — the linear ADC
-    * scan over compressed codes IS the PQ search, and composing with the
-    * IVF list assignment (both are here) gives IVF-PQ, the standard
-    * billion-scale layout. Distances are rounded to 6 dp BEFORE the
-    * argmin/rank so discrete choices never flip on engine ulps.
+  /** PQ sub-centroid literals: cent(s)(c) = seed c's dims [s·8, s·8+8),
+    * cut from the 16-vector seeded codebook ([[seededCodebook]]).
     */
-  /** PQ sub-centroid literals: cent(s)(c) = seed c's dims [s·8, s·8+8). */
-  private def pqCentLitFrom(seeds: Seq[Seq[Double]]): Column = {
+  private def pqSubCentroids(code: Codebook): Column = {
+    val seeds = code.sortBy(_._1).map(_._2)
     // ADVICE r7: a thin corpus (fewer than 16 seed vectors, or short
     // vectors) would make element_at past the centroid list yield NULLs
     // and the argmin codes silently null — fail loudly instead.
@@ -1094,37 +1047,32 @@ object Similarity {
     typedLit((0 until 8).map(s => seeds.map(_.slice(s * 8, s * 8 + 8)).toSeq))
   }
 
-  private def pqCentLit(emb: DataFrame): Column =
-    pqCentLitFrom(emb.filter(col("vec_id") < 16)
-      .select(col("vec_id"), col("embedding")).collect()
-      .sortBy(_.getLong(0))
-      .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq)
-
-  /** Per-row 8×16 subspace-distance lookup table (rounded to 6 dp before
-    * every downstream argmin/rank — discrete choices never flip on ulps).
+  /** The PQ encode shared by both PQ queries: adds `dtab`, the row's 8×16
+    * subspace-distance lookup table (rounded to 6 dp before every
+    * downstream argmin/rank — discrete choices never flip on ulps), and
+    * `codes`, its per-subspace argmin (ties to the lowest sub-centroid).
     */
-  private def pqDtab(centLit: Column)(e: Column): Column =
-    transform(sequence(lit(0), lit(7)), s =>
-      transform(sequence(lit(0), lit(15)), c =>
-        round(aggregate(
-          zip_with(slice(e, s * 8 + 1, lit(8)),
-            element_at(element_at(centLit, s + 1), c + 1),
-            (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
-          lit(0.0), (a, v) => a + v), 6)))
-
-  def simPqAnn(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir, "embeddings")
-    val centLit = pqCentLit(emb)
-    def dtab(e: Column): Column = pqDtab(centLit)(e)
-    val withTab = emb.withColumn("dtab", dtab(col("embedding")))
-    val encoded = withTab
+  private def pqEncode(df: DataFrame, cent: Column): DataFrame =
+    df.withColumn("dtab", transform(sequence(lit(0), lit(7)), s =>
+        transform(sequence(lit(0), lit(15)), c =>
+          round(aggregate(
+            zip_with(slice(col("embedding"), s * 8 + 1, lit(8)),
+              element_at(element_at(cent, s + 1), c + 1),
+              (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
+            lit(0.0), (a, v) => a + v), 6))))
       .withColumn("codes", transform(col("dtab"), ds =>
         (array_position(ds, array_min(ds)) - 1).cast("int")))
-      .select(col("vec_id"), col("codes"))
-    val queries = withTab.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("dtab"))
+
+  /** The ADC scorer shared by both PQ queries: the broadcast query
+    * tables `a` (qid, dtab) join the encoded candidates `b` (vec_id,
+    * codes) on `on`; each pair's asymmetric distance is its code-indexed
+    * table entries summed and rounded to 6 dp, and the top-k ascending
+    * distances per query are kept.
+    */
+  private def pqAdcTopK(queries: DataFrame, encoded: DataFrame,
+      on: Column): DataFrame = {
     val scored = broadcast(queries).as("a")
-      .join(encoded.as("b"), col("a.qid") =!= col("b.vec_id"))
+      .join(encoded.as("b"), on)
       .withColumn("approx_d2", round(aggregate(
         zip_with(col("b.codes"), col("a.dtab"),
           (c, tab) => element_at(tab, c + 1)),
@@ -1134,14 +1082,41 @@ object Similarity {
         col("vec_id"), col("approx_d2"))
   }
 
+  /** Product-quantization ANN (PQ/ADC, the industrial workhorse behind
+    * FAISS-style billion-vector indexes): vectors split into 8 subspaces
+    * of 8 dims; each subspace encodes to its nearest of 16 seeded
+    * sub-centroids (codes: 8 small ints — a 32× compression of the
+    * 64-float vector); queries score candidates by ASYMMETRIC DISTANCE —
+    * a per-query 8×16 lookup table of exact subspace distances, summed by
+    * code index, never touching the original corpus floats.
+    *
+    * Scale shape: the sub-centroids are plan literals cut from the same
+    * seeded codebook as [[simIvfAnn]] ([[simIvfKmeansAnn]] shows how
+    * training would refine it); [[pqEncode]] is map-side; [[pqAdcTopK]]
+    * scans only (vec_id, codes) rows with the tiny query tables
+    * broadcast — the linear ADC scan over compressed codes IS the PQ
+    * search, and composing with the IVF list assignment gives IVF-PQ
+    * ([[simIvfPqAnn]]), the standard billion-scale layout.
+    */
+  def simPqAnn(spark: SparkSession, dir: String): DataFrame = {
+    val emb = t(spark, dir, "embeddings")
+    val encoded = pqEncode(emb, pqSubCentroids(seededCodebook(withNorm(emb))))
+    pqAdcTopK(
+      encoded.filter(col("vec_id") < 10)
+        .select(col("vec_id").as("qid"), col("dtab")),
+      encoded.select(col("vec_id"), col("codes")),
+      col("a.qid") =!= col("b.vec_id"))
+  }
+
   /** IVF-PQ — the standard billion-scale ANN layout, composed from the
     * two stages above: the seeded coarse quantizer ([[simIvfAnn]]) prunes
     * the corpus to 4 probed lists per query, then PQ codes score ONLY
-    * those candidates by asymmetric distance ([[simPqAnn]]). At scale the
-    * scored volume drops from |corpus| to |corpus|·(probed/k) AND each
-    * candidate costs an 8-int lookup instead of a 64-float dot — the two
-    * compressions multiply. Probe relation broadcasts; candidates come
-    * from an equi-join on the list id; corpus floats never shuffle.
+    * those candidates by asymmetric distance ([[simPqAnn]]'s encode and
+    * ADC scorer). At scale the scored volume drops from |corpus| to
+    * |corpus|·(probed/k) AND each candidate costs an 8-int lookup instead
+    * of a 64-float dot — the two compressions multiply. Probe relation
+    * broadcasts; candidates come from an equi-join on the list id; corpus
+    * floats never shuffle.
     */
   def simIvfPqAnn(spark: SparkSession, dir: String): DataFrame = {
     // The coarse stage reads the session-memoized assigned corpus; the PQ
@@ -1149,28 +1124,14 @@ object Similarity {
     // seed vectors), so the only full-corpus work left is the map-side
     // encode over cached blocks.
     val (code, assigned, _) = ivfIndex(spark, dir)
-    val probes = ivfProbes(assigned, code)
-    val centLit = pqCentLitFrom(code.sortBy(_._1).map(_._2))
-    val encoded = assigned
-      .withColumn("dtab", pqDtab(centLit)(col("embedding")))
-      .withColumn("codes", transform(col("dtab"), ds =>
-        (array_position(ds, array_min(ds)) - 1).cast("int")))
-      .select(col("vec_id"), col("cid"), col("codes"))
-    val qtab = assigned.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"),
-        pqDtab(centLit)(col("embedding")).as("dtab"))
-    val qprobes = probes.select(col("qid"), col("probe"))
-      .join(qtab, "qid")
-    val scored = broadcast(qprobes).as("a")
-      .join(encoded.as("b"),
-        col("a.probe") === col("b.cid") && col("a.qid") =!= col("b.vec_id"))
-      .withColumn("approx_d2", round(aggregate(
-        zip_with(col("b.codes"), col("a.dtab"),
-          (c, tab) => element_at(tab, c + 1)),
-        lit(0.0), (acc, v) => acc + v), 6))
-    rankTopK(scored, "approx_d2", desc = false)
-      .select(col("qid"), col("rank").cast("int").as("rank"),
-        col("vec_id"), col("approx_d2"))
+    val cent = pqSubCentroids(code)
+    val qtab = pqEncode(assigned.filter(col("vec_id") < 10), cent)
+      .select(col("vec_id").as("qid"), col("dtab"))
+    pqAdcTopK(
+      ivfProbes(assigned, code).select(col("qid"), col("probe"))
+        .join(qtab, "qid"),
+      pqEncode(assigned, cent).select(col("vec_id"), col("cid"), col("codes")),
+      col("a.probe") === col("b.cid") && col("a.qid") =!= col("b.vec_id"))
   }
 
   /** Negatives drawn per anchor by [[simNegatives]], interpolated into

@@ -1270,9 +1270,6 @@ $rounds"""
       FROM m ORDER BY merge_rank"""
   }
 
-  /** [[textBpeEncode]]'s oracle: recompute the merges (same CTEs), then
-    * replay the per-doc wrap + replace chain and count chr(1) markers.
-    */
   /** The encode chain through the per-doc `enc` CTE — shared with the
     * Curation budget oracle that consumes subword counts.
     */
@@ -1302,6 +1299,9 @@ $docRounds,
       FROM d$n)"""
   }
 
+  /** [[textBpeEncode]]'s oracle: recompute the merges (same CTEs), then
+    * replay the per-doc wrap + replace chain and count chr(1) markers.
+    */
   private def bpeEncodeOracle(n: Int): String =
     s"""${bpeEncodeCtes(n)}
       SELECT doc_id, n_ws_tokens, n_bpe_tokens, n_chars,

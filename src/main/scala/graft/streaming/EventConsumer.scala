@@ -349,6 +349,9 @@ object EventConsumer {
         col("session_window.end").as("session_end"),
         col("n_events"), col("total_value"))
 
+  /** Per-window sketch size, interpolated into the st8 oracle (no drift). */
+  private[graft] val WindowHhK = 8
+
   /** The per-window Misra–Gries sketch pass of [[batchWindowHeavyHitters]]
     * as a standalone transform: tumbling 1-hour windows, each carrying
     * its ≤k candidate list and exact total. The SAME expression runs
@@ -359,9 +362,6 @@ object EventConsumer {
     * (foreachBatch or a daily batch); StreamingSpec pins the streaming
     * flavor's guarantee.
     */
-  /** Per-window sketch size, interpolated into the st8 oracle (no drift). */
-  private[graft] val WindowHhK = 8
-
   def windowHeavyHitterSketch(events: DataFrame, k: Int = WindowHhK): DataFrame = {
     graft.plans.GraftFunctions.register(events.sparkSession)
     events

@@ -156,7 +156,14 @@ class SessionArtifactsSpec extends AnyFunSuite {
       ("no file under src/main sleeps or hands its caller a checkpoint", "",
         src => src.contains("Thread.sleep") || src.contains("callerOwnedCheckpoints"),
         "drain the listener bus (ListenerBusDrain) instead of sleeping, and " +
-          "return frames that pin no storage")))
+          "return frames that pin no storage"),
+      ("no doc comment under src/main opens on the line after another " +
+        "closes", "",
+        // Scaladoc keeps only the block nearest a definition, so the first
+        // of two stacked blocks documents nothing
+        src => """\*/[ \t]*\r?\n[ \t]*/\*\*""".r.findFirstIn(src).isDefined,
+        "move the first block onto the definition it describes, or delete " +
+          "it")))
     test(name) {
       val offenders = mainSources.collect {
         case (f, src) if !(exempt.nonEmpty && f.getPath.endsWith(exempt)) &&

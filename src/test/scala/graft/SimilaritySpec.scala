@@ -71,16 +71,30 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
-  test("centroid aggregator: per-label element-wise mean, 64 dims") {
+  test("centroid aggregator: per-label mean of 2-dim vectors; other " +
+      "lengths fail") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val got = Seq((0, Seq(1.0f, 3.0f)), (0, Seq(3.0f, 5.0f)), (1, Seq(2.0f, 2.0f)))
-      .toDF("label", "embedding")
-      .groupBy(col("label"))
-      .agg(graft.functions.CentroidAggregator.centroid(2)(col("embedding")).as("c"))
-      .collect().map(r => r.getAs[Int]("label") -> r.getSeq[Double](1).toSeq).toMap
+    def centroids(rows: Seq[(Int, Seq[Float])]): Map[Int, Seq[Double]] =
+      rows.toDF("label", "embedding")
+        .groupBy(col("label"))
+        .agg(graft.functions.CentroidAggregator.centroid(2)(col("embedding"))
+          .as("c"))
+        .collect().map(r => r.getAs[Int]("label") -> r.getSeq[Double](1).toSeq)
+        .toMap
+    val got = centroids(Seq((0, Seq(1.0f, 3.0f)), (0, Seq(3.0f, 5.0f)),
+      (1, Seq(2.0f, 2.0f))))
     assert(got(0) == Seq(2.0, 4.0))
     assert(got(1) == Seq(2.0, 2.0))
+    for (bad <- Seq(Seq(1.0f), Seq(1.0f, 2.0f, 3.0f))) {
+      val e = intercept[Exception](
+        centroids(Seq((0, Seq(1.0f, 3.0f)), (0, bad))))
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(x => String.valueOf(x.getMessage)).toSeq
+      assert(msgs.exists(_.contains(
+          s"2-dim embeddings got a vector of length ${bad.length}")),
+        msgs.mkString(" / "))
+    }
   }
 
   test("mapPartitions decode agrees with the column-expression twin") {

@@ -54,7 +54,8 @@ class LoopGoldenSpec extends AnyFunSuite {
       .map(a => a(0) -> ((a(1), a(2).toLong, a(3)))).toMap
 
   /** Every key reaching a rewritten loop, directly or through
-    * dedupClusters / corpusCurate / the BPE encoder. */
+    * dedupClusters / corpusCurate / the BPE encoder, plus the k-means and
+    * PCA power-iteration loops of Similarity. */
   private val keys = Seq(
     "text_classifier_train", "text_classifier_eval",
     "text_bpe_train", "text_bpe_encode", "text_fertility",
@@ -62,7 +63,8 @@ class LoopGoldenSpec extends AnyFunSuite {
     "graph_pagerank", "graph_label_prop", "graph_kcore", "graph_khop",
     "cur_dedup_clusters", "cur_keep_best", "cur_split_leakfree",
     "cur_soft_dedup", "cur_corpus_curate", "dedup_cluster_stats",
-    "cur_shard_plan", "cur_pack_sequences", "cur_pack_assemble")
+    "cur_shard_plan", "cur_pack_sequences", "cur_pack_assemble",
+    "sim_ivf_kmeans", "sim_pca_power")
 
   test("round-loop keys: schema and sorted-row SHA-256 equal the pinned " +
       "golden values at sf0.01") {

@@ -52,7 +52,9 @@ class LoopShapeSpec extends AnyFunSuite {
     ("graph_kcore", r => Curation.graphKcore(spark, dir, rounds = r),
       Curation.KCoreRounds, 8),
     ("graph_khop", i => Curation.graphKhop(spark, dir, iters = i),
-      Curation.KhopIters, 9))
+      Curation.KhopIters, 9),
+    ("sim_pca_power", i => Similarity.simPcaPower(spark, dir, i),
+      Similarity.PcaIters, 8))
 
   private def warm(): Unit = {
     assume(new java.io.File(dir).isDirectory, s"$dir absent")
